@@ -36,6 +36,15 @@ def test_path_graph_converges_logarithmically(spark):
     assert len(rows) == n + 1
 
 
+def test_unconverged_components_raise(spark):
+    # one round cannot settle a 64-edge path: the operator must fail loudly
+    # instead of returning labels that split the path into clusters
+    edges = [(i, i + 1) for i in range(64)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iterations=1)
+
+
 def test_transitive_collapse_without_direct_pair(spark):
     # A~B, B~C but never A~C: one cluster, representative = min id
     got = _components(spark, [(5, 9), (9, 7)])

@@ -39,9 +39,10 @@ def test_flagship_entry(spark):
 
 def test_driver_priority_window_integrity():
     """Every _DRIVER_PRIORITY name must exist (a typo would silently drop
-    a query from the driver's 50-query correctness window), the whole
-    priority list must fit inside the window, and every registered query
-    except the iterative BPE trainer must carry an oracle."""
+    a query from the driver's 50-query correctness window) and appear
+    once, the whole priority list must fit inside the window, and every
+    registered query except the iterative BPE trainer must carry an
+    oracle."""
     from vectordb_data_ingestion_spark.queries_catalog import (
         _DRIVER_PRIORITY,
         ORACLE_SQL,
@@ -49,6 +50,8 @@ def test_driver_priority_window_integrity():
     )
 
     assert [n for n in _DRIVER_PRIORITY if n not in SPARK_QUERIES] == []
+    # a repeated name would silently evict one verification slot
+    assert len(set(_DRIVER_PRIORITY)) == len(_DRIVER_PRIORITY)
     # The priority list may carry a deferred tail past the cap (documented
     # next-round rotation), but its first 50 entries ARE the driver window.
     first50 = list(SPARK_QUERIES)[:50]

@@ -22,7 +22,7 @@ from vectordb_data_ingestion_spark.operators.enrichment import (
     deterministic_fake_transport,
     embed_via_api,
 )
-from vectordb_data_ingestion_spark.sinks.vector_store import ParquetVectorSink
+from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
 from vectordb_data_ingestion_spark.sources.files import (
     parse_documents,
     read_binary_catalog,
@@ -72,7 +72,7 @@ def test_batch_pipeline_e1_then_incremental_e2(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     _write_docs(src, version=1)
-    sink = ParquetVectorSink(spark, str(tmp_path / "vectors"), partition_col=None)
+    sink = ManifestVectorSink(spark, str(tmp_path / "vectors"), partition_col=None)
 
     # ---- E1: full ingest --------------------------------------------------
     _ingest(spark, str(src), sink)
@@ -163,7 +163,7 @@ def test_multiformat_ingestion_spine_real_decoders(spark, tmp_path):
         "plain text notes about hardware requests " * 8
     )
 
-    sink = ParquetVectorSink(
+    sink = ManifestVectorSink(
         spark, str(tmp_path / "vectors"), partition_col=None
     )
     _ingest(spark, str(src), sink)

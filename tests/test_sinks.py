@@ -1,6 +1,6 @@
-"""Sinks: parquet vector substrate (upsert/read/delete_where) and the
-batched external-client sink (foreachPartition, batching, backoff retry,
-predicate delete) against a file-backed fake client."""
+"""Sinks: the manifest parquet vector sink (upsert/read/delete_where) and
+the batched external-client sink (foreachPartition, batching, backoff
+retry, predicate delete) against a file-backed fake client."""
 
 import glob
 import os
@@ -8,11 +8,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from vectordb_data_ingestion_spark.sinks import manifest_sink
 from vectordb_data_ingestion_spark.sinks.fake_client import FileBackedClient
-from vectordb_data_ingestion_spark.sinks.vector_store import (
-    BatchingClientSink,
-    ParquetVectorSink,
-)
+from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
+from vectordb_data_ingestion_spark.sinks.vector_store import BatchingClientSink
 
 
 def _chunk_df(spark, n=10):
@@ -27,7 +26,8 @@ def _chunk_df(spark, n=10):
 
 
 def test_parquet_sink_roundtrip_and_delete(spark, tmp_path):
-    sink = ParquetVectorSink(spark, str(tmp_path / "vectors"))
+    # default load_dt partitioning: a non-partition delete is an anti-join
+    sink = ManifestVectorSink(spark, str(tmp_path / "vectors"))
     sink.upsert(_chunk_df(spark))
     assert sink.read().count() == 10
 
@@ -71,6 +71,32 @@ def test_batching_sink_retries_transient_failures(spark, tmp_path):
     )
     sink.upsert(_chunk_df(spark).coalesce(1), property_cols=["url"])
     assert len(FileBackedClient.read_objects(base)) == 10
+
+
+@pytest.mark.parametrize("extra_failures,loads", [(0, True), (1, False)])
+def test_batching_sink_retry_boundary(spark, tmp_path, extra_failures, loads):
+    """``max_retries`` counts retries after the first attempt: a batch that
+    fails exactly ``max_retries`` times still lands, one more failure
+    surfaces to the caller."""
+    base = str(tmp_path / f"edge{extra_failures}")
+    os.makedirs(base)
+    max_retries = 2
+    sink = BatchingClientSink(
+        lambda: FileBackedClient(
+            base, fail_first=max_retries + extra_failures
+        ),
+        "Chunks",
+        batch_size=100,
+        max_retries=max_retries,
+    )
+    df = _chunk_df(spark).coalesce(1)
+    if loads:
+        sink.upsert(df, property_cols=["url"])
+        assert len(FileBackedClient.read_objects(base)) == 10
+    else:
+        with pytest.raises(Exception, match="transient store failure"):
+            sink.upsert(df, property_cols=["url"])
+        assert FileBackedClient.read_objects(base) == []
 
 
 def test_batching_sink_delete_where(spark, tmp_path):
@@ -249,15 +275,11 @@ def test_delete_where_df_matches_list_form(spark, tmp_path):
     same rows as the driver-list form — the streaming refresh can swap
     one for the other when a micro-batch carries too many keys to
     collect."""
-    from vectordb_data_ingestion_spark.sinks.vector_store import (
-        ParquetVectorSink,
-    )
-
     rows = [(i, f"text {i}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    a = ParquetVectorSink(spark, str(tmp_path / "a"), partition_col=None)
-    b = ParquetVectorSink(spark, str(tmp_path / "b"), partition_col=None)
+    a = ManifestVectorSink(spark, str(tmp_path / "a"), partition_col=None)
+    b = ManifestVectorSink(spark, str(tmp_path / "b"), partition_col=None)
     a.upsert(df)
     b.upsert(df)
 
@@ -271,216 +293,58 @@ def test_delete_where_df_matches_list_form(spark, tmp_path):
     assert got_a == got_b == [i for i in range(40) if i not in kill]
 
     # before the sink exists: both forms are no-ops, not errors
-    fresh = ParquetVectorSink(spark, str(tmp_path / "c"), partition_col=None)
+    fresh = ManifestVectorSink(spark, str(tmp_path / "c"), partition_col=None)
     fresh.delete_where("doc_id", [1])
     fresh.delete_where_df(
         "doc_id", spark.createDataFrame([(1,)], "k long")
     )
 
 
-def test_parquet_sink_rewrite_crash_recovery(spark, tmp_path):
-    """Review r5: the old rmtree-then-move rewrite had a crash window as
-    wide as the delete itself — a replaying micro-batch would then
-    silently rebuild the sink from only the latest batch. Pin the three
-    recoverable crash states of the new write/rename/rename/delete swap."""
-    import shutil
-
-    base = str(tmp_path / "v")
-    sink = ParquetVectorSink(spark, base, partition_col=None)
-    df = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(6)], "chunk_id long, url string"
-    )
-    sink.upsert(df)
-
-    # state 1: crash between the two renames — base gone, completed
-    # rewrite stranded in __rewrite. Recovery must finish the swap.
-    shutil.move(base, base + "__rewrite")
-    assert ParquetVectorSink(spark, base, partition_col=None).read().count() == 6
-
-    # state 2: crash mid-write — partial __rewrite next to an intact
-    # base. Recovery must discard the partial and keep base.
-    import os
-
-    os.makedirs(base + "__rewrite")
-    with open(base + "__rewrite/part-partial.parquet", "w") as fh:
-        fh.write("garbage")
-    s2 = ParquetVectorSink(spark, base, partition_col=None)
-    assert not os.path.exists(base + "__rewrite")
-    assert s2.read().count() == 6
-
-    # state 3: crash after the swap, before old-copy cleanup — __old
-    # lingers. Recovery must retire it and keep base.
-    shutil.copytree(base, base + "__old")
-    s3 = ParquetVectorSink(spark, base, partition_col=None)
-    assert not os.path.exists(base + "__old")
-    assert s3.read().count() == 6
-
-    # NULL-keyed rows survive a list-form delete (parity with the
-    # anti-join form)
-    withnull = spark.createDataFrame(
-        [(100, None)], "chunk_id long, url string"
-    )
-    s3.upsert(withnull)
-    s3.delete_where("url", ["u0", "u1"])
-    left = s3.read()
-    assert left.count() == 5  # 6 - 2 deleted + 1 null-keyed kept
-    assert left.filter(F.col("url").isNull()).count() == 1
-
-
-def _bucketed(spark, tmp_path, name="bk", n=8):
-    return ParquetVectorSink(
-        spark, str(tmp_path / name), partition_col=None,
-        key_col="chunk_id", n_buckets=n,
-    )
-
-
 def test_bucketed_sink_roundtrip_and_pruned_delete(spark, tmp_path):
-    """Bucketed layout: rows land under pbucket=hash(key)%N, read() hides
-    the layout column, and a key delete rewrites ONLY the buckets its keys
-    hash into — verified by mtime: untouched bucket dirs keep their files.
-    Both delete forms (list and DataFrame) share the bucketed path."""
-    import os
-
-    sink = _bucketed(spark, tmp_path)
+    """Bucketed layout: read() hides the layout column, both delete forms
+    (list and DataFrame) take the bucket-pruned path, and deleting EVERY
+    row empties the sink until a fresh upsert refills it. Reference-level
+    pruning is pinned by test_manifest_sink_bucketed_prunes_by_reference."""
+    sink = ManifestVectorSink(
+        spark, str(tmp_path / "bk"), partition_col=None,
+        key_col="chunk_id", n_buckets=8,
+    )
     rows = [(f"c{i}", f"text {i}", [float(i)]) for i in range(40)]
     df = spark.createDataFrame(
         rows, "chunk_id string, text string, vector array<float>"
     )
     sink.upsert(df)
-    base = str(tmp_path / "bk")
-    dirs = sorted(d for d in os.listdir(base) if d.startswith("pbucket="))
-    assert len(dirs) > 1
     assert sorted(sink.read().columns) == ["chunk_id", "text", "vector"]
     assert sink.read().count() == 40
 
-    from pyspark.sql import functions as F
-
-    victim = "c7"
-    vb = df.filter(F.col("chunk_id") == victim).select(
-        F.pmod(F.xxhash64("chunk_id"), F.lit(8)).cast("int")
-    ).first()[0]
-    before = {
-        d: sorted(os.listdir(os.path.join(base, d))) for d in dirs
-    }
-    sink.delete_where("chunk_id", [victim])
+    sink.delete_where("chunk_id", ["c7"])
     after_rows = sink.read()
     assert after_rows.count() == 39
-    assert after_rows.filter(F.col("chunk_id") == victim).count() == 0
-    for d in dirs:
-        bucket = int(d.split("=")[1])
-        if bucket != vb:
-            assert sorted(
-                os.listdir(os.path.join(base, d))
-            ) == before[d], f"untouched bucket {d} was rewritten"
+    assert after_rows.filter(F.col("chunk_id") == "c7").count() == 0
 
-    # DataFrame form: deleting EVERY row retires the base dir entirely (an
-    # emptied sink returns to the not-yet-created state) and a fresh
-    # upsert recreates it
     all_keys = spark.createDataFrame([(k,) for k, _t, _v in rows], ["chunk_id"])
     sink.delete_where_df("chunk_id", all_keys)
-    assert not os.path.exists(base)
+    with pytest.raises(FileNotFoundError):
+        sink.read()
     sink.upsert(df.limit(3))
     assert sink.read().count() == 3
 
 
-def test_bucketed_delete_crash_recovery(spark, tmp_path):
-    """The _BUCKET_SWAP manifest is the commit point: an uncommitted
-    staging dir is discarded (delete never happened), a committed one
-    rolls forward from any rename crash point — including the
-    staged-but-not-yet-swapped and half-swapped states."""
-    import os
-    import shutil
-
-    sink = _bucketed(spark, tmp_path, name="ck")
-    df = spark.createDataFrame(
-        [(f"c{i}", i) for i in range(30)], "chunk_id string, v long"
-    )
-    sink.upsert(df)
-    base = str(tmp_path / "ck")
-    staging = base + "__rewrite"
-
-    # crash BEFORE the manifest: staging exists, no commit -> discarded
-    os.makedirs(staging, exist_ok=True)
-    with open(os.path.join(staging, "_partial"), "w") as fh:
-        fh.write("junk")
-    s2 = _bucketed(spark, tmp_path, name="ck")
-    assert not os.path.exists(staging)
-    assert s2.read().count() == 30
-
-    # committed manifest, crash before ANY rename: reopen rolls forward
-    s2.delete_where_df(
-        "chunk_id", spark.createDataFrame([("c3",), ("c4",)], ["chunk_id"])
-    )
-    assert s2.read().count() == 28
-
-    # simulate the mid-swap crash: re-create a committed staging whose
-    # keep-bucket was already swapped (staging dir gone) and whose drop
-    # bucket still exists in base — roll-forward must be idempotent and
-    # must NOT delete the already-swapped keep bucket's new data
-    from pyspark.sql import functions as F
-
-    vb = spark.createDataFrame([("c5",)], ["chunk_id"]).select(
-        F.pmod(F.xxhash64("chunk_id"), F.lit(8)).cast("int")
-    ).first()[0]
-    os.makedirs(staging, exist_ok=True)
-    with open(os.path.join(staging, "_BUCKET_SWAP"), "w") as fh:
-        fh.write(f"{vb} keep")  # keep-bucket, staging dir already consumed
-    kept_dir = os.path.join(base, f"pbucket={vb}")
-    kept_before = sorted(os.listdir(kept_dir)) if os.path.isdir(kept_dir) else None
-    s3 = _bucketed(spark, tmp_path, name="ck")
-    assert not os.path.exists(staging)
-    if kept_before is not None:
-        assert sorted(os.listdir(kept_dir)) == kept_before
-    assert s3.read().count() == 28
-    shutil.rmtree(base)
-
-
 def test_bucketed_delete_refuses_unbucketed_layout(spark, tmp_path):
-    plain = ParquetVectorSink(
+    """An unbucketed store reopened as bucketed would prune deletes to
+    buckets that do not exist: the recorded layout refuses the open."""
+    plain = ManifestVectorSink(
         spark, str(tmp_path / "flat"), partition_col=None
     )
     plain.upsert(
         spark.createDataFrame([("a", 1)], "chunk_id string, v long")
     )
-    bucketed = ParquetVectorSink(
-        spark, str(tmp_path / "flat"), partition_col=None,
-        key_col="chunk_id", n_buckets=4,
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="unbucketed"):
-        bucketed.delete_where_df(
-            "chunk_id", spark.createDataFrame([("a",)], ["chunk_id"])
+    with pytest.raises(RuntimeError, match="layout"):
+        ManifestVectorSink(
+            spark, str(tmp_path / "flat"), partition_col=None,
+            key_col="chunk_id", n_buckets=4,
         )
-
-
-def test_sink_mutations_serialize_on_flock(spark, tmp_path):
-    """Two writers on one sink path must serialize: while one holds the
-    mutation lock, another's delete blocks instead of racing the shared
-    __rewrite staging (the lost-commit class the datasource writer's
-    flock closes)."""
-    import threading
-    import time
-
-    sink = ParquetVectorSink(spark, str(tmp_path / "locked"), partition_col=None)
-    sink.upsert(
-        spark.createDataFrame([("a", 1), ("b", 2)], "chunk_id string, v long")
-    )
-    order = []
-
-    def contender():
-        order.append("contender-start")
-        sink.delete_where("chunk_id", ["a"])
-        order.append("contender-done")
-
-    with sink._locked():
-        t = threading.Thread(target=contender)
-        t.start()
-        time.sleep(1.5)  # the delete must still be blocked on the flock
-        order.append("holder-release")
-    t.join(60)
-    assert order == ["contender-start", "holder-release", "contender-done"]
-    assert {r["chunk_id"] for r in sink.read().collect()} == {"b"}
+    assert plain.read().count() == 1
 
 
 def test_bucketed_delete_casts_key_type_to_stored(spark, tmp_path):
@@ -489,7 +353,7 @@ def test_bucketed_delete_casts_key_type_to_stored(spark, tmp_path):
     (createDataFrame infers LongType), used to prune the WRONG buckets
     and silently delete nothing. The key set must be cast to the stored
     key type before bucket pruning (ADVICE r6)."""
-    sink = ParquetVectorSink(
+    sink = ManifestVectorSink(
         spark, str(tmp_path / "intkey"), partition_col=None,
         key_col="doc_id", n_buckets=8,
     )
@@ -514,76 +378,34 @@ def test_bucketed_delete_casts_key_type_to_stored(spark, tmp_path):
 
 
 def test_upsert_refuses_mismatched_bucket_layout(spark, tmp_path):
-    """A bucketed-configured sink must not append pbucket= files into an
-    existing unbucketed store (mixed partition layouts break every later
-    read), and vice versa — the same error delete raises, but at WRITE
-    time (ADVICE r6)."""
+    """Two handles opened on one empty path with different layouts: the
+    first upsert records its layout, and the other handle's upsert must
+    refuse to commit (mixed layouts break every later read and prune),
+    drop its staged segment, and leave the store intact — both ways."""
     df = spark.createDataFrame([("a", 1)], "chunk_id string, v long")
-
-    plain = ParquetVectorSink(spark, str(tmp_path / "mix"), partition_col=None)
-    plain.upsert(df)
-    bucketed = ParquetVectorSink(
-        spark, str(tmp_path / "mix"), partition_col=None,
-        key_col="chunk_id", n_buckets=4,
-    )
-    with pytest.raises(RuntimeError, match="unbucketed"):
-        bucketed.upsert(df)
-
-    bsink = ParquetVectorSink(
-        spark, str(tmp_path / "mix2"), partition_col=None,
-        key_col="chunk_id", n_buckets=4,
-    )
-    bsink.upsert(df)
-    plain2 = ParquetVectorSink(
-        spark, str(tmp_path / "mix2"), partition_col=None
-    )
-    with pytest.raises(RuntimeError, match="hash-bucketed"):
-        plain2.upsert(df)
-
-    # the original stores are intact after the refused writes
-    assert plain.read().count() == 1
-    assert bsink.read().count() == 1
-
-
-def test_unbucketed_open_delete_preserves_bucket_layout(spark, tmp_path):
-    """The documented inspection hatch (open a bucketed store with
-    n_buckets=0) must not let a non-key delete's rewrite FLATTEN the
-    pbucket layout: the rewrite partitions by whatever layout columns the
-    data carries, so a later bucketed open still prunes correctly."""
-    import os
-
-    bucketed = _bucketed(spark, tmp_path, name="keep")
-    bucketed.upsert(
-        spark.createDataFrame(
-            [(f"c{i}", "old" if i < 10 else "new") for i in range(20)],
-            "chunk_id string, tag string",
-        )
-    )
-    plain = ParquetVectorSink(
-        spark, str(tmp_path / "keep"), partition_col=None
-    )
-    plain.delete_where("tag", ["old"])
-    base = str(tmp_path / "keep")
-    assert any(d.startswith("pbucket=") for d in os.listdir(base)), (
-        "layout flattened by the unbucketed rewrite"
-    )
-    # bucketed reopen still works end-to-end, including a pruned delete
-    again = _bucketed(spark, tmp_path, name="keep")
-    assert again.read().count() == 10
-    again.delete_where("chunk_id", ["c15"])
-    assert again.read().count() == 9
+    bucketed_kw = {"key_col": "chunk_id", "n_buckets": 4}
+    for name, first_kw, second_kw in (
+        ("mix", {}, bucketed_kw),
+        ("mix2", bucketed_kw, {}),
+    ):
+        path = str(tmp_path / name)
+        first = ManifestVectorSink(spark, path, partition_col=None, **first_kw)
+        second = ManifestVectorSink(spark, path, partition_col=None, **second_kw)
+        first.upsert(df)
+        with pytest.raises(RuntimeError, match="layout changed"):
+            second.upsert(df)
+        assert first.vacuum() == 0  # the refused segment is already gone
+        assert first.read().count() == 1
 
 
 def test_partition_drop_fast_path(spark, tmp_path):
     """delete_where on the partition column drops the matching load_dt
-    dirs directly (rename-to-trash + remove) — no scan, no rewrite: the
-    untouched partitions' files are bit-identical afterwards. Works
-    through the bucketed layout too, sweeps stranded trash on reopen,
-    and retires an emptied sink."""
-    import os
-
-    base = str(tmp_path / "ret")
-    sink = ParquetVectorSink(spark, base)  # partition_col="load_dt" default
+    partitions (NULL values skipped); dropping every partition empties the
+    sink until the next upsert refills it. The manifest-only commit and
+    the bucketed composition are pinned by
+    test_manifest_sink_partition_drop_is_manifest_only and
+    test_manifest_sink_partition_drop_under_buckets."""
+    sink = ManifestVectorSink(spark, str(tmp_path / "ret"))
     df = spark.createDataFrame(
         [
             ("a", "2024-01-01"), ("b", "2024-01-01"),
@@ -592,47 +414,28 @@ def test_partition_drop_fast_path(spark, tmp_path):
         "chunk_id string, load_dt string",
     )
     sink.upsert(df)
-    kept_dir = os.path.join(base, "load_dt=2024-01-02")
-    before = sorted(os.listdir(kept_dir))
     sink.delete_where("load_dt", ["2024-01-01", None])
     got = {(r["chunk_id"], str(r["load_dt"])) for r in sink.read().collect()}
     assert got == {("c", "2024-01-02"), ("d", "2024-01-03")}
-    assert sorted(os.listdir(kept_dir)) == before  # untouched bytes
 
-    # stranded trash from a simulated crash is swept on reopen
-    os.makedirs(base + "__trash_deadbeef")
-    ParquetVectorSink(spark, base)
-    assert not os.path.exists(base + "__trash_deadbeef")
-
-    # dropping everything retires the sink (husk rule)
     sink.delete_where("load_dt", ["2024-01-02", "2024-01-03"])
-    assert not os.path.exists(base)
+    with pytest.raises(FileNotFoundError):
+        sink.read()
     sink.upsert(df.limit(1))
     assert sink.read().count() == 1
 
-    # composed with buckets: load_dt dirs live one level down
-    bsink = ParquetVectorSink(
-        spark, str(tmp_path / "retbk"), partition_col="load_dt",
-        key_col="chunk_id", n_buckets=4,
-    )
-    bsink.upsert(df)
-    bsink.delete_where("load_dt", ["2024-01-01"])
-    got = {r["chunk_id"] for r in bsink.read().collect()}
-    assert got == {"c", "d"}
-    bsink.delete_where("chunk_id", ["c"])  # key pruning still works after
-    assert {r["chunk_id"] for r in bsink.read().collect()} == {"d"}
-
 
 def test_parquet_sink_randomized_against_model(spark, tmp_path):
-    """Model-based drill, rename-protocol edition (the manifest sink has
-    its own in test_manifest_sink.py): a seeded random mutation sequence
-    against the bucketed parquet sink and an in-memory multiset model in
-    lockstep — upserts, key deletes (list + DataFrame forms), partition
-    drops — visible rows must equal the model after every step."""
+    """Model-based drill, partitioned + bucketed edition: a seeded random
+    mutation sequence against a load_dt-partitioned, bucketed sink and an
+    in-memory multiset model in lockstep — upserts, key deletes (list +
+    DataFrame forms), partition drops — visible rows must equal the model
+    after every step. test_manifest_sink_randomized_against_model covers
+    compaction, vacuum and snapshot reads on an unpartitioned sink."""
     import random
 
     rng = random.Random(20260817)
-    sink = ParquetVectorSink(
+    sink = ManifestVectorSink(
         spark, str(tmp_path / "model"), partition_col="load_dt",
         key_col="k", n_buckets=4,
     )
@@ -669,32 +472,6 @@ def test_parquet_sink_randomized_against_model(spark, tmp_path):
                 (r["k"], str(r["load_dt"])) for r in sink.read().collect()
             )
             assert got == sorted(model), f"diverged at step {step} ({op})"
-
-
-def test_partition_drop_fast_path_checks_layout(spark, tmp_path):
-    """ADVICE r7: the partition-delete fast path must run the same layout
-    gate as upsert — a bucketed sink opened over an unbucketed store
-    would otherwise scan only (nonexistent) pbucket= parents and silently
-    delete nothing."""
-    plain = ParquetVectorSink(
-        spark, str(tmp_path / "flat"), partition_col="load_dt"
-    )
-    plain.upsert(
-        spark.createDataFrame(
-            [("a", "2024-01-01"), ("b", "2024-01-02")],
-            "chunk_id string, load_dt string",
-        )
-    )
-    bucketed = ParquetVectorSink(
-        spark, str(tmp_path / "flat"), partition_col="load_dt",
-        key_col="chunk_id", n_buckets=4,
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="unbucketed"):
-        bucketed.delete_where("load_dt", ["2024-01-01"])
-    # nothing was silently dropped
-    assert plain.read().count() == 2
 
 
 @pytest.mark.parametrize(
@@ -744,46 +521,28 @@ def test_partition_drop_fast_path_type_faithful(
     dir 'pcol=true' (and Decimal('1.5') vs a scale-2 '1.50' dir) used to
     make the fast path a silent no-op on non-canonically-rendered types.
     Values now render through the stored column type, pinning fast-path
-    ≡ rewrite-path on bool, date, timestamp and decimal partition
-    columns — on BOTH sinks."""
-    from vectordb_data_ingestion_spark.sinks.manifest_sink import (
-        ManifestVectorSink,
-    )
-
+    ≡ anti-join path on bool, date, timestamp and decimal partition
+    columns."""
     df = spark.createDataFrame(rows, schema)
 
-    # POSIX sink: fast path (public API) vs the anti-join rewrite (twin)
-    fast = ParquetVectorSink(spark, str(tmp_path / "fast"), partition_col="pcol")
+    # fast path (manifest edit) vs delete_where_df
+    fast = ManifestVectorSink(
+        spark, str(tmp_path / "fast"), partition_col="pcol"
+    )
     fast.upsert(df)
     fast.delete_where("pcol", kill)
     got_fast = {r["chunk_id"] for r in fast.read().collect()}
     assert got_fast == keep_ids
 
-    twin = ParquetVectorSink(spark, str(tmp_path / "twin"), partition_col="pcol")
+    twin = ManifestVectorSink(
+        spark, str(tmp_path / "twin"), partition_col="pcol"
+    )
     twin.upsert(df)
-    with twin._locked():
-        twin._delete_where_unbucketed("pcol", kill)
-    got_twin = {r["chunk_id"] for r in twin.read().collect()}
-    assert got_fast == got_twin
-
-    # manifest sink: fast path (manifest edit) vs delete_where_df
-    mfast = ManifestVectorSink(
-        spark, str(tmp_path / "mfast"), partition_col="pcol"
-    )
-    mfast.upsert(df)
-    mfast.delete_where("pcol", kill)
-    got_mfast = {r["chunk_id"] for r in mfast.read().collect()}
-    assert got_mfast == keep_ids
-
-    mtwin = ManifestVectorSink(
-        spark, str(tmp_path / "mtwin"), partition_col="pcol"
-    )
-    mtwin.upsert(df)
-    mtwin.delete_where_df(
+    twin.delete_where_df(
         "pcol", spark.createDataFrame([(v,) for v in kill], ["pcol"])
     )
-    got_mtwin = {r["chunk_id"] for r in mtwin.read().collect()}
-    assert got_mfast == got_mtwin
+    got_twin = {r["chunk_id"] for r in twin.read().collect()}
+    assert got_fast == got_twin
 
 
 def test_partition_drop_fallback_is_rewrite_not_str_compare(
@@ -796,11 +555,7 @@ def test_partition_drop_fallback_is_rewrite_not_str_compare(
     r8 fix retired, which silently no-ops bool partition deletes
     (str(True)='True' vs the 'pcol=true' dir). Forces the exception
     branch on a bool-typed partition column and asserts the rows are
-    actually deleted, on BOTH sinks, with a diagnosable warning."""
-    from vectordb_data_ingestion_spark.sinks import vector_store as vs_mod
-    from vectordb_data_ingestion_spark.sinks.manifest_sink import (
-        ManifestVectorSink,
-    )
+    actually deleted, with a diagnosable warning."""
 
     def boom(*a, **kw):
         raise RuntimeError("simulated transient matching failure")
@@ -810,25 +565,14 @@ def test_partition_drop_fallback_is_rewrite_not_str_compare(
         "chunk_id string, pcol boolean",
     )
 
-    # POSIX sink: _drop_partition_dirs resolves the name at module level
-    monkeypatch.setattr(vs_mod, "match_partition_dir_values", boom)
-    sink = ParquetVectorSink(
-        spark, str(tmp_path / "posix"), partition_col="pcol"
+    monkeypatch.setattr(manifest_sink, "match_partition_dir_values", boom)
+    sink = ManifestVectorSink(
+        spark, str(tmp_path / "fallback"), partition_col="pcol"
     )
     sink.upsert(df)
     with pytest.warns(RuntimeWarning, match="falling back"):
         sink.delete_where("pcol", [True])
     assert {r["chunk_id"] for r in sink.read().collect()} == {"b"}
-
-    # manifest sink: _drop_partitions imports the same helper from
-    # vector_store inside the function body — already patched above
-    msink = ManifestVectorSink(
-        spark, str(tmp_path / "manifest"), partition_col="pcol"
-    )
-    msink.upsert(df)
-    with pytest.warns(RuntimeWarning, match="falling back"):
-        msink.delete_where("pcol", [True])
-    assert {r["chunk_id"] for r in msink.read().collect()} == {"b"}
 
 
 def test_none_in_delete_values_never_mass_deletes(
@@ -839,51 +583,34 @@ def test_none_in_delete_values_never_mass_deletes(
     EVERY path. The dangerous path is ~isin(): `x IN (a, NULL)` is NULL
     — not false — for every x != a, so the rewrite filter
     `~isin | isNull` drops ALL non-matching non-null rows, a mass
-    delete. Exercised three ways: the direct unbucketed rewrite, the
-    partition fast path forced onto its rewrite fallback (the exact
+    delete. Exercised three ways: the direct anti-join delete, the
+    partition fast path forced onto its anti-join fallback (the exact
     ADVICE scenario: match_partition_dir_values raises transiently while
-    values carries a None), and the all-None no-op edge on both sinks."""
-    from vectordb_data_ingestion_spark.sinks import vector_store as vs_mod
-    from vectordb_data_ingestion_spark.sinks.manifest_sink import (
-        ManifestVectorSink,
-    )
-
+    values carries a None), and the all-None no-op edge."""
     df = spark.createDataFrame(
         [("a", "x"), ("b", "y"), ("c", None)],
         "chunk_id string, pcol string",
     )
 
-    # direct unbucketed rewrite with a None in the list: only the
+    # direct anti-join delete with a None in the list: only the
     # matching row dies; the NULL-keyed row and non-matching rows live
-    sink = ParquetVectorSink(spark, str(tmp_path / "direct"))
+    sink = ManifestVectorSink(spark, str(tmp_path / "direct"))
     sink.upsert(df)
     sink.delete_where("pcol", ["x", None])
     assert {r["chunk_id"] for r in sink.read().collect()} == {"b", "c"}
 
-    # all-None list: deletes nothing on either sink (and must not crash
-    # DataFrame type inference on the anti-join paths)
+    # all-None list: deletes nothing (and must not crash DataFrame type
+    # inference on the anti-join path)
     sink.delete_where("pcol", [None])
     assert {r["chunk_id"] for r in sink.read().collect()} == {"b", "c"}
-    msink = ManifestVectorSink(spark, str(tmp_path / "mnone"))
-    msink.upsert(df)
-    msink.delete_where("pcol", [None])
-    assert {r["chunk_id"] for r in msink.read().collect()} == {"a", "b", "c"}
 
     # the ADVICE scenario verbatim: partitioned sink, fast path raises
-    # transiently, values = ['x', None] → fallback rewrite must keep
+    # transiently, values = ['x', None] → the anti-join fallback must keep
     # every non-matching row (pre-fix it kept none)
     def boom(*a, **kw):
         raise RuntimeError("simulated transient matching failure")
 
-    monkeypatch.setattr(vs_mod, "match_partition_dir_values", boom)
-    psink = ParquetVectorSink(
-        spark, str(tmp_path / "pfall"), partition_col="pcol"
-    )
-    psink.upsert(df)
-    with pytest.warns(RuntimeWarning, match="falling back"):
-        psink.delete_where("pcol", ["x", None])
-    assert {r["chunk_id"] for r in psink.read().collect()} == {"b", "c"}
-
+    monkeypatch.setattr(manifest_sink, "match_partition_dir_values", boom)
     mpsink = ManifestVectorSink(
         spark, str(tmp_path / "mpfall"), partition_col="pcol"
     )
@@ -891,3 +618,15 @@ def test_none_in_delete_values_never_mass_deletes(
     with pytest.warns(RuntimeWarning, match="falling back"):
         mpsink.delete_where("pcol", ["x", None])
     assert {r["chunk_id"] for r in mpsink.read().collect()} == {"b", "c"}
+
+
+def test_make_vector_sink_kinds(spark, tmp_path):
+    """The factory builds the manifest sink over either store and refuses
+    any other substrate name."""
+    from vectordb_data_ingestion_spark.sinks import make_vector_sink
+
+    for kind in ("manifest", "manifest-log"):
+        sink = make_vector_sink(spark, kind, str(tmp_path / kind))
+        assert isinstance(sink, ManifestVectorSink)
+    with pytest.raises(ValueError, match="unknown sink kind"):
+        make_vector_sink(spark, "posix", str(tmp_path / "posix"))

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from vectordb_data_ingestion_spark.session import load_tables
 from vectordb_data_ingestion_spark.sinks import make_vector_sink
-from vectordb_data_ingestion_spark.sinks.vector_store import ParquetVectorSink
+from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
 from vectordb_data_ingestion_spark.streaming.incremental import (
     foreach_batch_refresh,
     read_file_stream,
@@ -20,12 +20,12 @@ from tests.conftest import SF_SMALL
 import pytest as _pt
 
 
-@_pt.fixture(params=["posix", "manifest", "manifest-log"])
+@_pt.fixture(params=["manifest", "manifest-log"])
 def sink_kind(request):
-    """Every sink substrate carries the refresh contract (VERDICT r7
-    item 6): the composed delete-then-insert flows must run unchanged on
-    the POSIX rename/flock sink, the object-store manifest sink, and the
-    manifest sink over the chunked commit log (VERDICT r8 item 2)."""
+    """Every sink store carries the refresh contract (VERDICT r7 item 6):
+    the composed delete-then-insert flows must run unchanged on the
+    manifest sink over one CAS manifest and over the chunked commit log
+    (VERDICT r8 item 2)."""
     return request.param
 
 
@@ -87,7 +87,7 @@ def test_refresh_default_path_is_distributed(spark, tmp_path):
         refresh_batch_fn,
     )
 
-    class SpySink(ParquetVectorSink):
+    class SpySink(ManifestVectorSink):
         def __init__(self, *a, **kw):
             super().__init__(*a, **kw)
             self.list_calls = 0
@@ -300,7 +300,7 @@ def test_streaming_ingestion_pipeline_end_to_end(spark, tmp_path):
     sink_dir = str(tmp_path / "vectors")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(stream_dir)
-    sink = ParquetVectorSink(spark, sink_dir, partition_col=None)
+    sink = ManifestVectorSink(spark, sink_dir, partition_col=None)
     dim = 8
 
     def transform(batch_df):
@@ -398,7 +398,7 @@ def test_streaming_bm25_index_refresh(spark, tmp_path):
     sink_dir = str(tmp_path / "postings")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(stream_dir)
-    sink = ParquetVectorSink(spark, sink_dir, partition_col=None)
+    sink = ManifestVectorSink(spark, sink_dir, partition_col=None)
 
     def doc(doc_id, body):
         return spark.createDataFrame(
@@ -928,7 +928,7 @@ def test_bm25_refresh_replay_same_batch_id(spark, tmp_path):
         refresh_batch_fn,
     )
 
-    sink = ParquetVectorSink(
+    sink = ManifestVectorSink(
         spark, str(tmp_path / "postings"), partition_col=None
     )
     run_batch = refresh_batch_fn(
@@ -1306,58 +1306,6 @@ def test_near_dup_index_compaction_preserves_admission(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     )
     assert final == [0, 1, 2, 11]  # near-copy of doc 2 rejected post-compact
-
-
-def test_incremental_refresh_with_bucketed_sink(spark, tmp_path):
-    """The 100 TB refresh shape end-to-end: the sink is hash-bucketed on
-    the refresh key, so each micro-batch's delete-then-insert rewrites
-    only the buckets its keys hash into (never the whole store), while
-    the refresh contract — latest version wins, replay-idempotent —
-    holds unchanged. The 'auto' wiring must pick the bucketed sink's
-    delete_where_df by itself."""
-    stream_dir = str(tmp_path / "incoming")
-    sink_dir = str(tmp_path / "vectors")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(stream_dir)
-    sink = ParquetVectorSink(
-        spark, sink_dir, partition_col=None, key_col="url", n_buckets=8
-    )
-
-    def transform(batch_df):
-        return batch_df.select(
-            "url",
-            F.sha2(F.concat_ws("#", "url", "text"), 256).alias("chunk_id"),
-            "text",
-            "version",
-        )
-
-    schema = _catalog_df(spark, 1, ["u1"]).schema
-
-    def run_once():
-        stream = read_file_stream(spark, stream_dir, schema)
-        q = foreach_batch_refresh(
-            stream,
-            transform,
-            sink_upsert=sink.upsert,
-            sink_delete_where=sink.delete_where,
-            key_col="url",
-            checkpoint=ckpt,
-        ).start()  # sink_delete_where_df defaults to "auto"
-        q.awaitTermination(120)
-
-    _catalog_df(spark, 1, ["u1", "u2"]).write.mode("append").parquet(
-        stream_dir
-    )
-    run_once()
-    _catalog_df(spark, 2, ["u1", "u3"]).write.mode("append").parquet(
-        stream_dir
-    )
-    run_once()
-    got = {(r["url"], r["version"]) for r in sink.read().collect()}
-    assert got == {("u1", 2), ("u2", 1), ("u3", 2)}
-    # the storage really is bucketed (layout hidden from readers)
-    dirs = [d for d in os.listdir(sink_dir) if d.startswith("pbucket=")]
-    assert dirs and "pbucket" not in sink.read().columns
 
 
 def test_compaction_never_folds_pending_replay_batch(spark, tmp_path):

@@ -31,15 +31,7 @@ def main() -> int:
             {"key_col": "chunk_id", "n_buckets": 4} if bucketed else {}
         )
         base_kind = kind.removesuffix("_bucketed")
-        if base_kind == "posix":
-            from vectordb_data_ingestion_spark.sinks.vector_store import (
-                ParquetVectorSink,
-            )
-
-            sink = ParquetVectorSink(
-                spark, path, partition_col=None, **layout
-            )
-        elif base_kind == "manifest":
+        if base_kind == "manifest":
             from vectordb_data_ingestion_spark.sinks.manifest_sink import (
                 ManifestVectorSink,
             )

@@ -2,12 +2,13 @@
 question the corpus probes never ask: as the SINK grows, what does one
 micro-batch's delete-then-insert cost?
 
-The unbucketed ``ParquetVectorSink.delete_where_df`` reads and rewrites
-the whole store per delete — per-batch cost proportional to sink size
-(fine for a catalog-sized KB, a non-starter at 100 TB). The bucketed
-layout (``key_col=... , n_buckets=N``) prunes the rewrite to the
-``pbucket`` partitions the batch's keys hash into, bounding the touched
-fraction by the batch's own key count.
+The unbucketed ``ManifestVectorSink.delete_where_df`` (``n_buckets=0``)
+reads and rewrites every visible segment per delete — per-batch cost
+proportional to sink size (fine for a catalog-sized KB, a non-starter at
+100 TB). The bucketed layout (``key_col=... , n_buckets=N``) prunes the
+rewrite to the ``pbucket`` files the batch's keys hash into, bounding the
+touched fraction by the batch's own key count; untouched buckets carry
+over into the new manifest by reference.
 
 This probe times ONE fixed delete batch (20 keys — a refresh
 micro-batch's typical changed-document count, the reference's E2 shape)
@@ -49,9 +50,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from vectordb_data_ingestion_spark.session import get_spark  # noqa: E402
 from vectordb_data_ingestion_spark.sinks.manifest_sink import (  # noqa: E402
     ManifestVectorSink,
-)
-from vectordb_data_ingestion_spark.sinks.vector_store import (  # noqa: E402
-    ParquetVectorSink,
 )
 
 
@@ -96,14 +94,14 @@ def main() -> None:
         for mult in (1, 10):
             rows = base_rows * mult
             data = synth_chunks(spark, rows, dim)
-            flat = ParquetVectorSink(
+            flat = ManifestVectorSink(
                 spark, f"{root}/flat_x{mult}", partition_col=None
             )
             flat.upsert(data)
             results[f"unbucketed_x{mult}"] = round(
                 time_delete(spark, flat, rows, dim), 3
             )
-            bk = ParquetVectorSink(
+            bk = ManifestVectorSink(
                 spark,
                 f"{root}/bk_x{mult}",
                 partition_col=None,
@@ -114,24 +112,9 @@ def main() -> None:
             results[f"bucketed_x{mult}"] = round(
                 time_delete(spark, bk, rows, dim), 3
             )
-            # r7: the object-store-safe sink, same bucketed layout — the
-            # commit is one conditional put instead of directory renames,
-            # and untouched buckets carry over by manifest REFERENCE
-            mf = ManifestVectorSink(
-                spark,
-                f"{root}/mf_x{mult}",
-                partition_col=None,
-                key_col="chunk_id",
-                n_buckets=n_buckets,
-            )
-            mf.upsert(data)
-            results[f"manifest_bucketed_x{mult}"] = round(
-                time_delete(spark, mf, rows, dim), 3
-            )
             print(
                 f"x{mult}: unbucketed {results[f'unbucketed_x{mult}']} s, "
-                f"bucketed {results[f'bucketed_x{mult}']} s, "
-                f"manifest {results[f'manifest_bucketed_x{mult}']} s",
+                f"bucketed {results[f'bucketed_x{mult}']} s",
                 flush=True,
             )
         print(json.dumps({
@@ -149,10 +132,6 @@ def main() -> None:
             ),
             "bucketed_speedup_at_10x": round(
                 results["unbucketed_x10"] / results["bucketed_x10"], 2
-            ),
-            "manifest_growth": round(
-                results["manifest_bucketed_x10"]
-                / results["manifest_bucketed_x1"], 2
             ),
         }))
     finally:

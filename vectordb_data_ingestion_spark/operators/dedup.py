@@ -523,7 +523,8 @@ def connected_components(
 
     Output has one row per node that appears in ``pairs``; isolated rows of
     the base table are absent (their component is their own id - see
-    :func:`dedup_by_components`).
+    :func:`dedup_by_components`). Raises ``RuntimeError`` if the checksum
+    has not settled after ``max_iterations`` rounds.
     """
     # Checkpoints here are LAZY (eager=False): each round's convergence
     # checksum ``collect`` is the action that materializes them, so the
@@ -611,6 +612,13 @@ def connected_components(
             )
             break
         prev_sum = cur_sum
+    else:
+        # labels that changed in the last round may still be above their
+        # component minimum: returning them would silently split clusters
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
+            "rounds; raise max_iterations"
+        )
     return labels
 
 

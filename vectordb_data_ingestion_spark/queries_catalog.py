@@ -8014,7 +8014,6 @@ _DRIVER_PRIORITY = [
     "lsh_topk_multitable",  # r8
     "ann_topk_batch",  # r8
     "minhash_signatures",  # r8
-    "near_dup_components",  # r8
     "simhash",  # r8
     "lang_id",  # r8
     "quality_score",  # r8

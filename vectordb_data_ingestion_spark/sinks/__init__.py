@@ -1,19 +1,18 @@
 """Vector-store sinks.
 
-Two substrates carry the same mutation contract (``upsert`` / ``read`` /
-``delete_where`` / ``delete_where_df``, plus each substrate's own
-maintenance surface — the manifest sink adds ``maybe_compact`` /
-``vacuum`` / ``read_at`` since its segments accrete, while the POSIX
-sink's rewrites are self-compacting):
+One substrate carries the mutation contract (``upsert`` / ``read`` /
+``delete_where`` / ``delete_where_df``, plus the maintenance surface
+``maybe_compact`` / ``vacuum`` / ``read_at``, since segments accrete):
+``ManifestVectorSink`` (manifest_sink.py) — immutable segments + one
+conditional-put manifest, over a ``ConditionalStore`` (file-backed by
+default, or the chunked commit log). The same protocol runs on local
+disk and on an object store.
 
-- ``ParquetVectorSink`` (vector_store.py) — POSIX substrate: rename +
-  flock protocols, the hermetic/local deployment;
-- ``ManifestVectorSink`` (manifest_sink.py) — object-store substrate:
-  immutable segments + one conditional-put manifest, the 100 TB cluster
-  deployment.
+``BatchingClientSink`` (vector_store.py) is a different contract: batched
+adds and predicate deletes against an external vector-DB client.
 
-Pipelines take the sink as a constructor choice: build either here (or
-pass any object with the same methods) and hand its bound methods to
+Pipelines take the sink as a constructor choice: build one here (or pass
+any object with the same methods) and hand its bound methods to
 ``foreach_batch_refresh`` / ``refresh_batch_fn``, which are
 sink-agnostic by design.
 """
@@ -28,17 +27,10 @@ from pyspark.sql import SparkSession
 def make_vector_sink(
     spark: SparkSession, kind: str, base_path: str, **kw: Any
 ):
-    """Construct a vector sink by substrate name: ``"posix"``
-    (``ParquetVectorSink``) or ``"manifest"`` (``ManifestVectorSink``).
-    The end-to-end sink choice for composed pipelines — both carry the
-    identical contract, so refresh/replay flows run unchanged on
-    either."""
-    if kind == "posix":
-        from vectordb_data_ingestion_spark.sinks.vector_store import (
-            ParquetVectorSink,
-        )
-
-        return ParquetVectorSink(spark, base_path, **kw)
+    """Construct a ``ManifestVectorSink`` by store name: ``"manifest"``
+    (one CAS-committed manifest object) or ``"manifest-log"`` (the same
+    sink over the chunked commit log). Both carry the identical contract,
+    so refresh/replay flows run unchanged on either."""
     if kind == "manifest":
         from vectordb_data_ingestion_spark.sinks.manifest_sink import (
             ManifestVectorSink,
@@ -69,6 +61,5 @@ def make_vector_sink(
         )
         return ManifestVectorSink(spark, base_path, store=store, **kw)
     raise ValueError(
-        f"unknown sink kind {kind!r}: use 'posix', 'manifest' or "
-        "'manifest-log'"
+        f"unknown sink kind {kind!r}: use 'manifest' or 'manifest-log'"
     )

@@ -1,75 +1,27 @@
-"""Vector-store sinks.
+"""Batched external-client vector sink.
 
-Two implementations of the same contract (``ensure_class`` /
-``upsert`` / ``delete_where``), mirroring the reference's Weaviate surface:
+:class:`BatchingClientSink` is the external-store path
+(data_load_weaviate, cmfunctions.py:177-223): ``foreachPartition``
+writer, one client per partition, batched adds with exponential-backoff
+retry (cmfunctions.py:103, 489-492), idempotent upserts keyed by the
+deterministic ``chunk_id`` (the reference's uuid4 at
+sharepointutils.py:381 breaks retry idempotence; deterministic ids fix
+it). The client is injected via a factory so tests run against an
+in-memory/file-backed fake and production swaps in a real
+``weaviate.Client`` without code changes.
 
-- :class:`ParquetVectorSink` - the hermetic/local substrate: the chunk
-  table as parquet, partitioned by a load-date column so incremental
-  refresh prunes partitions. ``delete_where`` rewrites only affected data
-  via an anti-join (delete-then-insert consistency for incremental refresh,
-  pairing with delete_filedata_from_vectordb, cmfunctions.py:226-261).
-
-- :class:`BatchingClientSink` - the external-store path
-  (data_load_weaviate, cmfunctions.py:177-223): ``foreachPartition``
-  writer, one client per partition, batched adds with exponential-backoff
-  retry (cmfunctions.py:103, 489-492), idempotent upserts keyed by the
-  deterministic ``chunk_id`` (the reference's uuid4 at
-  sharepointutils.py:381 breaks retry idempotence; deterministic ids fix
-  it). The client is injected via a factory so tests run against an
-  in-memory/file-backed fake and production swaps in a real
-  ``weaviate.Client`` without code changes.
+The parquet substrate carrying the same mutation contract is
+:class:`~vectordb_data_ingestion_spark.sinks.manifest_sink.ManifestVectorSink`.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
 from typing import Any, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-
-def hive_unescape(s: str) -> str:
-    """Decode Spark/Hive partition-dir escaping (%XX per special char)
-    back to the value's string rendering — the path is the authoritative
-    encoding of a partition value, so matching decodes the path rather
-    than re-encoding the value."""
-    import re
-
-    return re.sub(
-        r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s
-    )
-
-
-def match_partition_dir_values(
-    spark: SparkSession, decoded: list[str], values: list[Any], dtype
-) -> set[str]:
-    """Subset of ``decoded`` (hive-unescaped partition-dir value strings)
-    that EQUAL any of ``values`` once both sides are cast through the
-    column type the read path uses — the exact comparison the anti-join
-    rewrite performs, so the retention fast path reaches the same verdict
-    by construction. Comparing raw strings is NOT that rule for every
-    type: ``str(True)='True'`` while the dir says ``load_dt=true``, and a
-    ``pcol=1.50`` dir under a scale-2 decimal writer reads back as
-    ``1.5`` — mismatches the old fast path silently turned into
-    delete-nothing no-ops while the rewrite path deleted the rows
-    (ADVICE/VERDICT r7). One driver-local projection over the dir-name
-    list; no files touched. NULLs never match (equality deletes never
-    match NULL — ``__HIVE_DEFAULT_PARTITION__`` decodes to a failed cast
-    and survives, same as the anti-join)."""
-    vals = [v for v in values if v is not None]
-    if not vals or not decoded:
-        return set()
-    from functools import reduce
-
-    typed = F.col("s").cast(dtype)
-    cond = reduce(
-        lambda a, b: a | b,
-        [typed == F.lit(v).cast(dtype) for v in vals],
-    )
-    df = spark.createDataFrame([(s,) for s in decoded], "s string")
-    return {r["s"] for r in df.filter(cond).collect()}
+from vectordb_data_ingestion_spark.operators.enrichment import call_with_backoff
 
 
 class VectorClient(Protocol):
@@ -81,537 +33,6 @@ class VectorClient(Protocol):
     def add_batch(self, class_name: str, objects: list[dict]) -> None: ...
 
     def delete_where(self, class_name: str, path: str, values: list[Any]) -> None: ...
-
-
-# ---------------------------------------------------------------------------
-# Parquet substrate
-# ---------------------------------------------------------------------------
-
-
-class ParquetVectorSink:
-    """``key_col`` + ``n_buckets > 0`` turns on HASH-BUCKETED layout: rows
-    land under ``pbucket=pmod(xxhash64(key), n_buckets)`` (first partition
-    level), and a key-predicate delete rewrites ONLY the buckets its keys
-    hash into instead of the whole sink. Without it, every incremental
-    refresh micro-batch re-reads and re-writes the entire store — per-batch
-    cost proportional to SINK size, a non-starter at 100 TB; bucketed, the
-    cost is (touched buckets / n_buckets) of the sink, bounded by the
-    batch's own key count (measured: tools/probe_sink_delete.py)."""
-
-    BUCKET_COL = "pbucket"
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_path: str,
-        partition_col: str | None = "load_dt",
-        key_col: str | None = None,
-        n_buckets: int = 0,
-    ):
-        if n_buckets and not key_col:
-            raise ValueError("n_buckets requires key_col (the bucket key)")
-        self.spark = spark
-        self.base_path = base_path
-        self.partition_col = partition_col
-        self.key_col = key_col
-        self.n_buckets = int(n_buckets)
-        with self._locked():
-            self._recover()
-
-    def _locked(self):
-        """Serialize MUTATING operations on one sink path across
-        processes: two concurrent deletes both stage at ``base__rewrite``
-        and the loser's staging (or manifest) vanishes under the winner's
-        cleanup — the same lost-commit class the datasource writer's
-        flock closes (sinks/datasource_writer.py). An exclusive flock on
-        a sidecar lockfile spans recover+stage+swap; readers don't take
-        it (renames are atomic, and _recover inside a mutator is the one
-        that must not race). Local-filesystem semantics, like every
-        os.rename in this sink; an object-store deployment swaps these
-        for its conditional-put primitives."""
-        import contextlib
-        import fcntl
-        import os
-
-        @contextlib.contextmanager
-        def hold():
-            os.makedirs(
-                os.path.dirname(self.base_path.rstrip("/")) or ".",
-                exist_ok=True,
-            )
-            fd = os.open(
-                self.base_path.rstrip("/") + "__lock",
-                os.O_CREAT | os.O_RDWR,
-                0o644,
-            )
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                os.close(fd)  # closing releases the flock
-
-        return hold()
-
-    # -- bucketed-layout helpers ---------------------------------------------
-
-    def _bucket_expr(self, col: str):
-        return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets)).cast(
-            "int"
-        )
-
-    def _partition_cols(self, df: DataFrame) -> list[str]:
-        cols = []
-        # keyed on the DATA, not just self.n_buckets: a bucketed store
-        # opened with n_buckets=0 (the documented rebuild/inspection
-        # hatch) must not have a non-key delete's rewrite silently
-        # FLATTEN the pbucket layout future bucketed opens prune on
-        if self.BUCKET_COL in df.columns:
-            cols.append(self.BUCKET_COL)
-        if self.partition_col and self.partition_col in df.columns:
-            cols.append(self.partition_col)
-        return cols
-
-    def _bucket_swap_roll_forward(self) -> None:
-        """Finish (or finish replaying) a committed per-bucket swap. The
-        manifest (``_BUCKET_SWAP`` in the staging root, written only after
-        the staging write fully succeeded) is the commit point; each line
-        is ``<bucket> keep|drop``. Idempotent: 'keep' buckets whose staging
-        dir is gone were already swapped; 'drop' removals re-run safely."""
-        import os
-        import shutil
-
-        base = self.base_path.rstrip("/")
-        staging = base + "__rewrite"
-        manifest = os.path.join(staging, "_BUCKET_SWAP")
-        with open(manifest) as fh:
-            entries = [line.split() for line in fh.read().split("\n") if line]
-        for bucket, action in entries:
-            sub = f"{self.BUCKET_COL}={bucket}"
-            dst = os.path.join(base, sub)
-            src = os.path.join(staging, sub)
-            if action == "keep":
-                if os.path.isdir(src):
-                    shutil.rmtree(dst, ignore_errors=True)
-                    os.rename(src, dst)
-            else:
-                shutil.rmtree(dst, ignore_errors=True)
-        # a delete that dropped the LAST bucket leaves a schema-less husk
-        # no parquet read can infer — retire it: an emptied sink returns
-        # to the not-yet-created state (upsert recreates it; delete_where
-        # on a missing path is already a documented no-op)
-        if os.path.isdir(base) and not any(
-            e.startswith(f"{self.BUCKET_COL}=") for e in os.listdir(base)
-        ):
-            shutil.rmtree(base)
-        shutil.rmtree(staging)
-
-    def _recover(self) -> None:
-        """Finish or roll back a rewrite interrupted by a crash. The swap
-        in :meth:`_rewrite` renames completed-new in before deleting old,
-        so on entry at most one of these holds:
-
-        - ``base`` missing + ``__rewrite`` present: the crash hit between
-          the two renames — the rewrite WAS complete (it only renames
-          after the write succeeds), finish it.
-        - ``base`` present + ``__rewrite`` present: a crash mid-write
-          left a partial rewrite — discard it.
-        - ``base`` present + ``__old`` present: the crash hit before the
-          old copy was deleted — the swap finished, retire the old copy.
-
-        Bucketed sinks add one state: ``__rewrite`` carrying a
-        ``_BUCKET_SWAP`` manifest is a COMMITTED per-bucket delete — roll
-        it forward (without the manifest, a staging dir is an uncommitted
-        partial write and is discarded by the rules above).
-        """
-        import os
-        import shutil
-
-        import glob
-
-        base = self.base_path.rstrip("/")
-        # stranded retention trash: a partition drop renames dirs out to
-        # base__trash_* before removing them — finish any interrupted
-        # removal (the rename already made them invisible to readers)
-        for trash in glob.glob(base + "__trash_*"):
-            shutil.rmtree(trash, ignore_errors=True)
-        tmp, old = base + "__rewrite", base + "__old"
-        if os.path.exists(os.path.join(tmp, "_BUCKET_SWAP")):
-            self._bucket_swap_roll_forward()
-        if not os.path.exists(base) and os.path.exists(tmp):
-            os.rename(tmp, base)
-        elif os.path.exists(base) and os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        if os.path.exists(base) and os.path.exists(old):
-            shutil.rmtree(old)
-
-    def _check_layout_compatible(self) -> None:
-        """A bucketed-configured sink appending into an existing unbucketed
-        store (or vice versa) would mix partition layouts under one root —
-        every subsequent parquet read then dies on a partition-discovery
-        conflict, and key deletes prune buckets that don't exist. Detect the
-        mismatch at WRITE time, the same error :meth:`_delete_buckets`
-        raises at delete time."""
-        import os
-
-        base = self.base_path.rstrip("/")
-        if not os.path.isdir(base):
-            return
-        entries = [e for e in os.listdir(base) if not e.startswith(("_", "."))]
-        if not entries:
-            return
-        bucketed_store = any(
-            e.startswith(f"{self.BUCKET_COL}=") for e in entries
-        )
-        if self.n_buckets and not bucketed_store:
-            raise RuntimeError(
-                f"sink at {base} has no {self.BUCKET_COL!r} layout — it was "
-                "written unbucketed; rebuild it through a bucketed sink (or "
-                "open it with n_buckets=0)"
-            )
-        if not self.n_buckets and bucketed_store:
-            raise RuntimeError(
-                f"sink at {base} is hash-bucketed ({self.BUCKET_COL}= "
-                "layout) — open it with the same key_col/n_buckets it was "
-                "built with"
-            )
-
-    def upsert(self, df: DataFrame) -> None:
-        # the WRITE stays under the lock too: an append racing a
-        # concurrent delete's whole-root swap would land its files in the
-        # directory the swap is about to retire — silently lost rows
-        with self._locked():
-            self._recover()
-            self._check_layout_compatible()
-            if self.n_buckets:
-                # recompute, never trust a caller-supplied bucket column —
-                # a mis-bucketed row would be invisible to every future
-                # delete
-                df = df.withColumn(
-                    self.BUCKET_COL, self._bucket_expr(self.key_col)
-                )
-            writer = df.write.mode("append")
-            parts = self._partition_cols(df)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(self.base_path)
-
-    def _read_raw(self) -> DataFrame:
-        return self.spark.read.parquet(self.base_path)
-
-    def read(self) -> DataFrame:
-        with self._locked():
-            self._recover()
-        df = self._read_raw()
-        # the bucket key is storage layout, not data — consumers see the
-        # rows they wrote
-        return df.drop(self.BUCKET_COL) if self.n_buckets else df
-
-    def delete_where(self, col: str, values: list[Any]) -> None:
-        """Predicate delete via rewrite: read, anti-filter, overwrite.
-        With a partitioned layout and a partition-aligned predicate this
-        touches only affected partitions (dynamic partition overwrite);
-        table formats with real deletes (Delta/Iceberg) would do this
-        transactionally. No-op on a sink that doesn't exist yet (first
-        incremental batch). ``values`` is a driver-side list (fine to
-        ~1M keys via InSet); when the keys already live in a DataFrame,
-        use :meth:`delete_where_df` and skip the driver round trip.
-
-        A delete on the PARTITION column takes the retention fast path:
-        matching ``<col>=<value>`` dirs are dropped directly (rename to a
-        sibling trash dir, then remove) — zero rows scanned or rewritten,
-        the aged-out ``load_dt`` maintenance shape. Per-dir renames are
-        atomic; a crash mid-way leaves some partitions dropped and some
-        not, which a replayed delete finishes (converging, like every
-        delete here), and :meth:`_recover` sweeps stranded trash."""
-        import os
-
-        if self.partition_col and col == self.partition_col:
-            if not values:
-                return
-            with self._locked():
-                self._recover()
-                if not os.path.exists(self.base_path):
-                    return
-                # same layout gate as upsert: a bucketed sink opened over
-                # an unbucketed store must fail loudly, not scan
-                # nonexistent pbucket= parents and silently delete nothing
-                self._check_layout_compatible()
-                self._drop_partition_dirs(values)
-            return
-        if self.n_buckets and col == self.key_col:
-            # same bucketed path as the DataFrame form — one code path to
-            # keep correct, and a catalog-sized list gains the same
-            # touched-buckets-only rewrite
-            # Nones never match (anti-join on NULL is no match) and an
-            # all-None list would fail DataFrame type inference — strip
-            vals = [v for v in values if v is not None]
-            if not vals:
-                return
-            self.delete_where_df(
-                col,
-                self.spark.createDataFrame([(v,) for v in vals], [col]),
-            )
-            return
-        with self._locked():
-            self._recover()
-            if not os.path.exists(self.base_path):
-                return
-            self._delete_where_unbucketed(col, values)
-
-    def _drop_partition_dirs(self, values: list[Any]) -> None:
-        """Retention fast path body (caller holds the mutation lock):
-        rename every ``<partition_col>=<value>`` dir (top-level, or one
-        level under ``pbucket=`` on a bucketed sink) to a sibling trash
-        dir, then remove it. Values compare against the Hive-DECODED dir
-        name; NULLs are skipped (equality deletes never match NULL —
-        ``__HIVE_DEFAULT_PARTITION__`` survives). An emptied sink retires
-        to the not-yet-created state, same husk rule as the bucket
-        swap."""
-        import os
-        import shutil
-        import uuid as _uuid
-
-        base = self.base_path.rstrip("/")
-        prefix = f"{self.partition_col}="
-
-        def partition_dirs():
-            parents = [base]
-            if self.n_buckets:
-                parents = [
-                    os.path.join(base, d)
-                    for d in os.listdir(base)
-                    if d.startswith(f"{self.BUCKET_COL}=")
-                ]
-            for parent in parents:
-                if not os.path.isdir(parent):
-                    continue
-                for d in os.listdir(parent):
-                    full = os.path.join(parent, d)
-                    if d.startswith(prefix) and os.path.isdir(full):
-                        yield full, hive_unescape(d[len(prefix):])
-
-        candidates = list(partition_dirs())
-        if not candidates:
-            return
-        decoded = sorted({s for _, s in candidates})
-        try:
-            # compare dirs and values through the type the READ path
-            # infers, exactly as the anti-join rewrite would
-            dtype = self._read_raw().schema[self.partition_col].dataType
-            targets = match_partition_dir_values(
-                self.spark, decoded, values, dtype
-            )
-        except Exception as exc:
-            # stored type unresolvable (or the matching projection failed
-            # transiently): degrade to the exact anti-join rewrite — the
-            # semantics the fast path merely accelerates — NEVER to a
-            # str(v) dir-name compare, whose type-blind misses silently
-            # turned bool/decimal deletes into no-ops (ADVICE r8). The
-            # rewrite reads the rows, so a genuinely unreadable sink
-            # surfaces its error instead of "deleting" nothing.
-            import warnings
-
-            warnings.warn(
-                "partition-drop fast path on "
-                f"{self.base_path} could not resolve the stored partition "
-                f"type ({exc!r}); falling back to the rewrite delete",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            self._delete_where_unbucketed(self.partition_col, values)
-            return
-        if not targets:
-            return
-
-        for full in [f for f, s in candidates if s in targets]:
-            trash = base + f"__trash_{_uuid.uuid4().hex}"
-            os.rename(full, trash)  # atomic per partition dir
-            shutil.rmtree(trash, ignore_errors=True)
-        # husk rule: nothing data-bearing left -> retire the base dir so
-        # reads fail loudly and the next upsert recreates it
-        leftover = [
-            e for e in os.listdir(base) if not e.startswith(("_", "."))
-        ]
-        if self.n_buckets:
-            leftover = [
-                e for e in leftover
-                if not (
-                    e.startswith(f"{self.BUCKET_COL}=")
-                    and not os.listdir(os.path.join(base, e))
-                )
-            ]
-        if not leftover:
-            shutil.rmtree(base)
-
-    def _delete_where_unbucketed(self, col: str, values: list[Any]) -> None:
-        # a None in the VALUE list is just as dangerous as a NULL key:
-        # `x IN (a, NULL)` is NULL (not false) for every x != a, so
-        # ~isin() would drop ALL non-matching rows — a mass delete.
-        # Equality deletes never match NULL (documented contract shared
-        # with the partition fast path), so Nones are simply stripped;
-        # an all-None list deletes nothing.
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return
-        current = self._read_raw()
-        # keep NULL-keyed rows: ~isin() is NULL (dropped by filter) for
-        # NULL keys, which would silently delete every NULL-keyed row —
-        # the anti-join form (delete_where_df) retains them, and the two
-        # paths must agree on which rows survive
-        self._rewrite(
-            current.filter(~F.col(col).isin(vals) | F.col(col).isNull())
-        )
-
-    def delete_where_df(self, col: str, keys: DataFrame) -> None:
-        """Anti-join form of :meth:`delete_where`: the key set stays
-        distributed, so a micro-batch with millions of changed documents
-        never materializes its keys on the driver. The join strategy is
-        left to AQE (r5): catalog-sized key sets broadcast into the scan;
-        a backfill batch whose keys outgrow executor memory falls back to
-        a shuffled anti-join instead of OOMing on a forced broadcast.
-
-        Mutations on one sink path serialize via :meth:`_locked` — see
-        its docstring for the lost-commit race it closes."""
-        import os
-
-        with self._locked():
-            self._recover()
-            if not os.path.exists(self.base_path):
-                return
-            key_df = keys.select(
-                F.col(keys.columns[0]).alias(col)
-            ).distinct()
-            if self.n_buckets and col == self.key_col:
-                self._delete_buckets(col, key_df)
-                return
-            self._delete_df_unbucketed(col, key_df)
-
-    def _delete_df_unbucketed(self, col: str, key_df: DataFrame) -> None:
-        current = self._read_raw()
-        # USING-style join moves the key column to the front — restore the
-        # stored column order, or every rewrite permutes the sink schema
-        remaining = current.join(
-            key_df, col, "left_anti"
-        ).select(*current.columns)
-        self._rewrite(remaining)
-
-    def _delete_buckets(self, col: str, key_df: DataFrame) -> None:
-        """Bucket-pruned delete: rewrite only the ``pbucket=`` partitions
-        the key set hashes into.
-
-        1. The affected-bucket list is a driver collect BOUNDED BY
-           ``n_buckets`` (ints, never keys) — at most one row per bucket
-           regardless of batch size.
-        2. One pruned scan (``PartitionFilters`` on pbucket) anti-joins the
-           distributed key set and writes survivors to the staging root,
-           partitioned the same way.
-        3. The ``_BUCKET_SWAP`` manifest (bucket -> keep|drop) is the
-           crash-commit point: written only after the staging write fully
-           succeeded, then the per-bucket swap runs — idempotently
-           re-runnable from :meth:`_recover` at any crash point. NULL keys
-           never delete anything (they hash to a bucket but the anti-join
-           keeps NULL-keyed rows, same as the unbucketed paths).
-        """
-        import os
-
-        base = self.base_path.rstrip("/")
-        staging = base + "__rewrite"
-        raw = self._read_raw()
-        if self.BUCKET_COL not in raw.columns:
-            raise RuntimeError(
-                f"sink at {base} has no {self.BUCKET_COL!r} layout — it was "
-                "written unbucketed; rebuild it through a bucketed sink (or "
-                "open it with n_buckets=0)"
-            )
-        # xxhash64 is TYPE-sensitive: hash(1 as int) != hash(1 as long), so
-        # a key set whose inferred type (createDataFrame → LongType) differs
-        # from the stored key column's would prune the WRONG buckets and the
-        # delete would silently remove nothing. Cast to the stored type
-        # first; values that don't survive the cast become NULL, and NULL
-        # keys never delete anything (same rule as the anti-join below).
-        key_df = key_df.select(
-            F.col(col).cast(raw.schema[col].dataType).alias(col)
-        )
-        affected = sorted(
-            r[0]
-            for r in key_df.select(
-                self._bucket_expr(col).alias("b")
-            ).distinct().collect()
-            if r[0] is not None
-        )
-        if not affected:
-            return
-        current = raw.filter(F.col(self.BUCKET_COL).isin(affected))
-        remaining = current.join(key_df, col, "left_anti").select(
-            *current.columns
-        )
-        writer = remaining.write.mode("overwrite")
-        parts = self._partition_cols(remaining)
-        writer.partitionBy(*parts).parquet(staging)
-        # which buckets still have rows: read the staging DIRS, not a
-        # second anti-join pass (an all-rows-deleted staging has no part
-        # files at all, which a parquet read cannot even infer a schema
-        # from)
-        kept = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith(f"{self.BUCKET_COL}=")
-        }
-        manifest = os.path.join(staging, "_BUCKET_SWAP")
-        tmp_manifest = manifest + ".tmp"
-        with open(tmp_manifest, "w") as fh:
-            fh.write(
-                "\n".join(
-                    f"{b} {'keep' if b in kept else 'drop'}" for b in affected
-                )
-            )
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp_manifest, manifest)  # atomic commit point
-        self._bucket_swap_roll_forward()
-
-    def _rewrite(self, remaining: DataFrame) -> None:
-        """Crash-safe swap: the old layout stays on disk until the new one
-        is fully in place (rmtree-then-move had a crash window as wide as
-        the delete itself, after which a replaying micro-batch would
-        silently rebuild the sink from only the latest batch). Every crash
-        point here is repaired by :meth:`_recover`."""
-        import os
-        import shutil
-
-        base = self.base_path.rstrip("/")
-        tmp, old = base + "__rewrite", base + "__old"
-        writer = remaining.write.mode("overwrite")
-        parts = self._partition_cols(remaining)
-        if parts:
-            # includes pbucket on a bucketed sink: a non-key-predicate
-            # rewrite must not flatten the bucket layout future key
-            # deletes prune on
-            writer = writer.partitionBy(*parts)
-        writer.parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)  # stale from a prior crash
-        os.rename(base, old)
-        os.rename(tmp, base)
-        shutil.rmtree(old)
-
-
-# ---------------------------------------------------------------------------
-# Batched external-client sink
-# ---------------------------------------------------------------------------
-
-
-def _with_backoff(fn, max_retries: int = 5, base_delay: float = 0.1):
-    """Exponential backoff, the reference's retry policy
-    (cmfunctions.py:103, 489-492) without the external backoff package."""
-    attempt = 0
-    while True:
-        try:
-            return fn()
-        except Exception:  # noqa: BLE001 - sink boundary
-            attempt += 1
-            if attempt > max_retries:
-                raise
-            time.sleep(base_delay * (2 ** (attempt - 1)))
 
 
 class BatchingClientSink:
@@ -641,7 +62,8 @@ class BatchingClientSink:
         idempotent because ids are deterministic."""
         class_name = self.class_name
         batch_size = self.batch_size
-        max_retries = self.max_retries
+        # call_with_backoff counts attempts: the first try plus retries
+        attempts = 1 + self.max_retries
         id_col, vector_col = self.id_col, self.vector_col
         factory = self.client_factory
 
@@ -652,9 +74,9 @@ class BatchingClientSink:
             def flush():
                 if batch:
                     payload = list(batch)
-                    _with_backoff(
+                    call_with_backoff(
                         lambda: client.add_batch(class_name, payload),
-                        max_retries=max_retries,
+                        max_retries=attempts,
                     )
                     batch.clear()
 
@@ -678,7 +100,7 @@ class BatchingClientSink:
         """Predicate delete (delete_filedata_from_vectordb semantics,
         cmfunctions.py:226-261) - driver-side, value list is catalog-sized."""
         client = self.client_factory()
-        _with_backoff(
+        call_with_backoff(
             lambda: client.delete_where(self.class_name, path, values),
-            max_retries=self.max_retries,
+            max_retries=1 + self.max_retries,
         )

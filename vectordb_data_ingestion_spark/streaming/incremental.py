@@ -64,7 +64,7 @@ def refresh_batch_fn(
 
     ``sink_delete_where_df`` defaults to ``"auto"``: when
     ``sink_delete_where`` is a bound method of a sink that also exposes
-    ``delete_where_df`` (``ParquetVectorSink`` does), the distributed
+    ``delete_where_df`` (``ManifestVectorSink`` does), the distributed
     form is used — a backfill micro-batch carrying millions of changed
     documents must never funnel its key set through the driver. The
     key-LIST path (collect distinct keys, pass a Python list) runs only
