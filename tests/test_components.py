@@ -184,3 +184,99 @@ def test_choose_lsh_banding_curve_properties():
     # infeasible bounds raise instead of nearest-fitting
     with pytest.raises(ValueError, match="loosen"):
         choose_lsh_banding(0.5, max_hashes=32, max_fp_rate=0.05)
+
+
+# the package's only rename/lock commit primitive lives in the conditional
+# store; everything else commits through a manifest CAS. The golden-file
+# caches in queries_catalog publish with an atomic os.replace of a temp file.
+_COMMIT_PRIMITIVES = {("fcntl", "flock"), ("os", "rename"), ("os", "replace")}
+_PRIMITIVE_ALLOWED = {
+    "sinks/commit_store.py": None,  # None = the whole module
+    "queries_catalog.py": {
+        "_chunk_recursive_oracle_sql",
+        "_bpe_train_merges_oracle_sql",
+        "_bpe_segment_oracle_sql",
+    },
+}
+
+
+def _primitive_calls(tree):
+    """(enclosing top-level function or None, module, attr, line) for each
+    call of a commit primitive, resolving ``import os as x`` and
+    ``from os import replace`` aliases."""
+    import ast
+
+    mods = {m: m for m, _ in _COMMIT_PRIMITIVES}
+    funcs = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name in mods:
+                    mods[a.asname or a.name] = a.name
+        elif isinstance(node, ast.ImportFrom) and node.module in mods:
+            for a in node.names:
+                funcs[a.asname or a.name] = (node.module, a.name)
+
+    def calls(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                yield from calls(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                target = None
+                if isinstance(f, ast.Attribute) and isinstance(
+                    f.value, ast.Name
+                ) and f.value.id in mods:
+                    target = (mods[f.value.id], f.attr)
+                elif isinstance(f, ast.Name) and f.id in funcs:
+                    target = funcs[f.id]
+                if target in _COMMIT_PRIMITIVES:
+                    yield (owner, *target, child.lineno)
+            yield from calls(child, owner)
+
+    return list(calls(tree, None))
+
+
+def test_commit_primitives_stay_in_the_conditional_store():
+    """CI guard: no package module other than sinks/commit_store.py calls
+    fcntl.flock, os.rename or os.replace (queries_catalog's three
+    golden-file writes are allowed by their enclosing function). A second
+    lock- or rename-based commit protocol would not survive an object
+    store, which has neither."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "vectordb_data_ingestion_spark"
+    )
+    offenders = []
+    seen_allowed = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        allowed = _PRIMITIVE_ALLOWED.get(rel, set())
+        for owner, mod, attr, line in _primitive_calls(
+            ast.parse(path.read_text())
+        ):
+            if allowed is None or owner in allowed:
+                seen_allowed.add((rel, owner))
+                continue
+            offenders.append(f"{rel}:{line} {mod}.{attr} in {owner}")
+    assert not offenders, offenders
+    # the allow-list names live call sites, not stale entries
+    assert {
+        (rel, o)
+        for rel, owners in _PRIMITIVE_ALLOWED.items()
+        if owners
+        for o in owners
+    } <= seen_allowed
+    # the scanner itself resolves aliases
+    probe = ast.parse(
+        "import os as _o\nfrom fcntl import flock as lk\n"
+        "def f():\n    _o.replace('a', 'b')\n    lk(1, 2)\n"
+    )
+    assert [c[:3] for c in _primitive_calls(probe)] == [
+        ("f", "os", "replace"), ("f", "fcntl", "flock"),
+    ]

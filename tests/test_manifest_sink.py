@@ -318,6 +318,68 @@ def test_manifest_sink_compact(spark, tmp_path, binding):
     assert sink.vacuum() == 4  # the four pre-compaction segment dirs
 
 
+def test_manifest_sink_replayed_batch_id_is_noop(spark, tmp_path, binding):
+    """upsert(txn=(writer, batch)) is Delta's idempotent append: the
+    manifest keeps each writer's last batch id, a batch at or below it
+    commits nothing (no new segment, no new generation), and writers are
+    independent."""
+    sink = _sink(spark, tmp_path, binding, name="txn")
+
+    def rows(*ids):
+        return spark.createDataFrame(
+            [(f"c{i}", i) for i in ids], "chunk_id string, v long"
+        )
+
+    sink.upsert(rows(0, 1), txn=("w", 0))
+    gen = sink.current_commit_id()
+    sink.upsert(rows(0, 1), txn=("w", 0))  # replay of the same batch
+    sink.upsert(rows(7), txn=("w", 0))  # a replay never re-derives rows
+    assert sink.current_commit_id() == gen
+    assert sorted(r["v"] for r in sink.read().collect()) == [0, 1]
+
+    sink.upsert(rows(2), txn=("w", 1))
+    sink.upsert(rows(3), txn=("v", 0))  # another writer's batch 0
+    sink.upsert(rows(2), txn=("w", 1))
+    sink.upsert(rows(0), txn=("w", 0))  # older than the recorded batch
+    sink.upsert(rows(4))  # no txn: a plain append always lands
+    assert sorted(r["v"] for r in sink.read().collect()) == [0, 1, 2, 3, 4]
+    manifest, _ = sink._get_manifest()
+    assert manifest["txns"] == {"w": 1, "v": 0}
+    assert len(manifest["segments"]) == 4
+
+
+def test_manifest_sink_txn_record_survives_mutations(
+    spark, tmp_path, binding
+):
+    """The replay record is carried forward by every commit, like the
+    schema: after delete_where, compact_small and compact, replaying an
+    already-committed batch is still a no-op."""
+    sink = _sink(spark, tmp_path, binding, name="txn_keep")
+
+    def rows(*ids):
+        return spark.createDataFrame(
+            [(f"c{i}", i) for i in ids], "chunk_id string, v long"
+        )
+
+    for b in range(3):
+        sink.upsert(rows(2 * b, 2 * b + 1), txn=("w", b))
+
+    def replay_is_noop(batch, expect):
+        sink.upsert(rows(99), txn=("w", batch))
+        manifest, _ = sink._get_manifest()
+        assert manifest["txns"] == {"w": batch}
+        assert sorted(r["v"] for r in sink.read().collect()) == expect
+
+    sink.delete_where("chunk_id", ["c0"])  # rewrites into one segment
+    replay_is_noop(2, [1, 2, 3, 4, 5])
+    sink.upsert(rows(6), txn=("w", 3))
+    assert sink.compact_small() == 2
+    replay_is_noop(3, [1, 2, 3, 4, 5, 6])
+    sink.upsert(rows(7), txn=("w", 4))
+    assert sink.compact() == 2
+    replay_is_noop(4, [1, 2, 3, 4, 5, 6, 7])
+
+
 # ---------------------------------------------------------------------------
 # two-phase datasource writer under both bindings
 # ---------------------------------------------------------------------------

@@ -154,207 +154,3 @@ def test_two_process_race_bucketed_sinks(spark, tmp_path):
     assert len(got) == len(set(got)), "duplicate committed rows"
     assert set(got) == _expected(), "lost/resurrected rows"
 
-
-def test_fold_lock_excludes_recovery_across_processes(tmp_path):
-    """REAL cross-process form of the r8 fold-lock fix (ADVICE r7 high):
-    while another OS process holds the fold lock mid-fold (target
-    written, _FOLD_COMMITTED not yet), _fold_recover from THIS process
-    must skip — not roll back the generation the fold is about to
-    commit. Once the fold finishes, recovery is a clean no-op and no
-    row was lost. Pure-stdlib on both sides (the lock contract is the
-    OS's, not Spark's)."""
-    from vectordb_data_ingestion_spark.streaming.incremental import (
-        _fold_recover,
-    )
-
-    root = str(tmp_path / "codes")
-    os.makedirs(os.path.join(root, "batch=0"))
-    with open(os.path.join(root, "batch=0", "part-0.parquet"), "w") as fh:
-        fh.write("rows")
-
-    worker = os.path.join(_REPO, "tests", "fold_lock_worker.py")
-    proc = subprocess.Popen(
-        [sys.executable, worker, root],
-        env=dict(os.environ, PYTHONPATH=_REPO),
-        cwd=_REPO,
-        stdin=subprocess.PIPE,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        assert proc.stdout.readline().strip() == "HELD"
-        # the race window: recovery runs while the fold holds the lock
-        _fold_recover(root)
-        assert os.path.isdir(os.path.join(root, "batch=-1"))  # NOT rolled back
-        assert os.path.exists(os.path.join(root, "_FOLD_PENDING"))
-
-        proc.stdin.write("go\n")
-        proc.stdin.flush()
-        assert proc.stdout.readline().strip() == "DONE"
-    finally:
-        proc.stdin.close()
-        rc = proc.wait(timeout=60)
-    assert rc == 0, proc.stderr.read()
-
-    # fold finished its own protocol: one generation, zero rows lost
-    listing = sorted(
-        d for d in os.listdir(root) if not d.startswith("_FOLD_")
-    )
-    assert listing == ["batch=-1"]
-    assert os.path.exists(os.path.join(root, "batch=-1", "part-0.parquet"))
-    _fold_recover(root)  # idempotent no-op after the fact
-    assert os.path.isdir(os.path.join(root, "batch=-1"))
-
-
-def test_loader_waits_out_concurrent_recovery(tmp_path):
-    """ADVICE r8 (low): when two loaders race on a crashed fold's
-    markers, the second must not skip the held lock and read beside the
-    first's mid-rmtree rollback — recovery holders advertise via the
-    _FOLD_RECOVERING hint and the second loader WAITS them out, starting
-    its read from a consistent state. REAL cross-process drill."""
-    import threading
-
-    from vectordb_data_ingestion_spark.streaming.incremental import (
-        _fold_recover,
-    )
-
-    root = str(tmp_path / "codes")
-    os.makedirs(os.path.join(root, "batch=0"))
-    with open(os.path.join(root, "batch=0", "part-0.parquet"), "w") as fh:
-        fh.write("rows")
-    # the crashed fold's partial target the holder is rolling back
-    os.makedirs(os.path.join(root, "batch=-1"))
-    with open(os.path.join(root, "batch=-1", "part-0.parquet"), "w") as fh:
-        fh.write("partial")
-
-    worker = os.path.join(_REPO, "tests", "recovery_lock_worker.py")
-    proc = subprocess.Popen(
-        [sys.executable, worker, root],
-        env=dict(os.environ, PYTHONPATH=_REPO),
-        cwd=_REPO,
-        stdin=subprocess.PIPE,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        assert proc.stdout.readline().strip() == "HELD"
-        loader = threading.Thread(target=_fold_recover, args=(root,))
-        loader.start()
-        loader.join(0.6)
-        # the loader is WAITING on the advertised recovery, not skipping
-        assert loader.is_alive()
-
-        proc.stdin.write("go\n")
-        proc.stdin.flush()
-        assert proc.stdout.readline().strip() == "DONE"
-        loader.join(15)
-        assert not loader.is_alive()
-    finally:
-        proc.stdin.close()
-        rc = proc.wait(timeout=60)
-    assert rc == 0, proc.stderr.read()
-
-    # consistent post-recovery state: rollback complete, sources intact,
-    # no markers or hint left behind
-    assert not os.path.isdir(os.path.join(root, "batch=-1"))
-    assert os.path.exists(os.path.join(root, "batch=0", "part-0.parquet"))
-    assert not os.path.exists(os.path.join(root, "_FOLD_PENDING"))
-    assert not os.path.exists(os.path.join(root, "_FOLD_COMMITTED"))
-    assert not os.path.exists(os.path.join(root, "_FOLD_RECOVERING"))
-
-
-def test_loader_waits_out_slow_recovery_past_old_deadline(tmp_path):
-    """VERDICT r9 weak mark: the old wall-clock bail-out
-    (`elif time.monotonic() >= deadline: return`) could only fire while
-    the recoverer's flock was continuously HELD — i.e. when the holder
-    was provably ALIVE and mid-rmtree (a slow rollback: multi-GB partial
-    generation, network storage) — skipping the loader into the exact
-    partially-deleted-target read the hint exists to prevent. The wait
-    is now liveness-based (the flock is the signal); this drill holds a
-    REAL cross-process recovery for >10 s (past the old deadline),
-    asserts the loader is still waiting — with the stall warning
-    raised — and that it reads a consistent state once the holder
-    finishes."""
-    import threading
-    import time
-    import warnings as _warnings
-
-    from vectordb_data_ingestion_spark.streaming import incremental as inc
-
-    root = str(tmp_path / "codes")
-    os.makedirs(os.path.join(root, "batch=0"))
-    with open(os.path.join(root, "batch=0", "part-0.parquet"), "w") as fh:
-        fh.write("rows")
-    os.makedirs(os.path.join(root, "batch=-1"))
-    with open(os.path.join(root, "batch=-1", "part-0.parquet"), "w") as fh:
-        fh.write("partial")
-
-    worker = os.path.join(_REPO, "tests", "recovery_lock_worker.py")
-    proc = subprocess.Popen(
-        [sys.executable, worker, root],
-        env=dict(os.environ, PYTHONPATH=_REPO),
-        cwd=_REPO,
-        stdin=subprocess.PIPE,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        assert proc.stdout.readline().strip() == "HELD"
-        with _warnings.catch_warnings(record=True) as caught:
-            _warnings.simplefilter("always")
-            loader = threading.Thread(
-                target=inc._fold_recover, args=(root,)
-            )
-            t0 = time.monotonic()
-            loader.start()
-            # hold the recovery well past the retired 10 s deadline
-            while time.monotonic() - t0 < 10.8:
-                assert loader.is_alive(), (
-                    "loader gave up while the recovery flock was held "
-                    f"(t={time.monotonic() - t0:.1f}s)"
-                )
-                time.sleep(0.2)
-            proc.stdin.write("go\n")
-            proc.stdin.flush()
-            assert proc.stdout.readline().strip() == "DONE"
-            loader.join(15)
-            assert not loader.is_alive()
-        assert any(
-            issubclass(w.category, RuntimeWarning)
-            and "held its lock" in str(w.message)
-            for w in caught
-        ), "expected the >10s stall warning"
-    finally:
-        proc.stdin.close()
-        rc = proc.wait(timeout=60)
-    assert rc == 0, proc.stderr.read()
-
-    # consistent post-recovery state, same bar as the fast drill
-    assert not os.path.isdir(os.path.join(root, "batch=-1"))
-    assert os.path.exists(os.path.join(root, "batch=0", "part-0.parquet"))
-    for m in ("_FOLD_PENDING", "_FOLD_COMMITTED", "_FOLD_RECOVERING"):
-        assert not os.path.exists(os.path.join(root, m))
-
-
-def test_stranded_recovery_hint_is_cleared(tmp_path):
-    """A crash between marker removal and hint removal strands
-    _FOLD_RECOVERING with no markers: the next recover call clears it on
-    the fast path (and must not wait on it), so a later live fold's held
-    lock is never mistaken for an overlong recovery."""
-    import time
-
-    from vectordb_data_ingestion_spark.streaming.incremental import (
-        _fold_recover,
-    )
-
-    root = str(tmp_path / "codes")
-    os.makedirs(root)
-    with open(os.path.join(root, "_FOLD_RECOVERING"), "w") as fh:
-        fh.write("stranded\n")
-    t0 = time.monotonic()
-    _fold_recover(root)
-    assert time.monotonic() - t0 < 1.0
-    assert not os.path.exists(os.path.join(root, "_FOLD_RECOVERING"))

@@ -416,7 +416,7 @@ def test_residual_index_roundtrip_and_append(spark, tmp_path):
     """_meta.json makes the stored encoding part of the index contract:
     load routes queries to the residual scorer, a streaming append
     encodes residually (a direct-encoded append would corrupt the cells
-    it lands in), and a pre-meta (legacy) index loads as direct."""
+    it lands in)."""
     import os
 
     from vectordb_data_ingestion_spark.operators.pq import (
@@ -494,9 +494,6 @@ def test_residual_index_roundtrip_and_append(spark, tmp_path):
     }
     assert 9005 in got2
 
-    # legacy index (no meta) loads as direct
-    os.remove(os.path.join(out, "_meta.json"))
-    assert not load_ivfpq_index(spark, out, m=m, dim=dim).residual
 
 
 def test_residual_query_prunes_cell_partitions(spark, tmp_path):
@@ -862,101 +859,21 @@ def test_calibrate_n_probe_hits_target_recall(spark, tmp_path):
             assert rec < target, (level, rec, target)
 
 
-def test_legacy_protocol1_index_loads_without_marker(spark, tmp_path):
-    """ADVICE r7 (medium): indexes built by protocol-1 versions of this
-    module wrote _meta.json LAST and never wrote _INDEX_SUCCESS — for
-    them meta-present means the build completed, so the completion gate
-    must not require the marker (versioned via meta's "protocol" field).
-    Only a meta that DECLARES protocol >= 2 promises a trailing marker."""
-    import json
-    import numpy as np
-
-    from vectordb_data_ingestion_spark.operators.pq import (
-        pq_train,
-        residual_table,
-    )
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        build_ivfpq_index,
-        load_ivfpq_index,
-        query_ivfpq_index,
-    )
-
-    m, dim = 4, 16
-    rng = np.random.default_rng(11)
-    x = rng.normal(size=(60, dim))
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in x[i]]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = spark.createDataFrame(
-        [(0, [float(v) for v in x[:30].mean(axis=0)]),
-         (1, [float(v) for v in x[30:].mean(axis=0)])],
-        "c_id long, c_embedding array<double>",
-    )
-    books = pq_train(residual_table(emb, cents), m, dim, k=8,
-                     iterations=1, vec_col="rvec")
-    out = str(tmp_path / "idx")
-    build_ivfpq_index(emb, cents, books, out, m=m, dim=dim, residual=True)
-    qv = [float(v) for v in x[3]]
-    truth = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=5, n_probe=2
-        ).collect()
-    ]
-
-    # rewrite the on-disk state as a protocol-1 upgrade would find it:
-    # meta without a protocol field, NO marker ever written
-    meta_path = os.path.join(out, "_meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
-    del meta["protocol"]
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
-    os.remove(os.path.join(out, "_INDEX_SUCCESS"))
-
-    idx = load_ivfpq_index(spark, out)  # loads, no "crashed" misread
-    assert idx.residual
-    got = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(idx, qv, k=5, n_probe=2).collect()
-    ]
-    assert got == truth
-
-    # the streaming-append gate accepts the legacy index too
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        _check_index_complete,
-    )
-
-    assert _check_index_complete(out, "accept appends") == meta
-
-    # but a protocol-2 meta without its marker still fails loudly
-    meta["protocol"] = 2
-    with open(meta_path, "w") as fh:
-        json.dump(meta, fh)
-    with pytest.raises(RuntimeError, match="_INDEX_SUCCESS"):
-        load_ivfpq_index(spark, out)
-
-
 def test_marker_era_crashed_build_fails_loudly(spark, tmp_path):
-    """ADVICE r8 (medium): between the meta-first change and the protocol
-    stamp, builds wrote _meta.json FIRST and _INDEX_SUCCESS last but
-    recorded no "protocol" field — so a crash mid-data-write leaves a
-    no-protocol meta with no marker, indistinguishable by meta alone from
-    a complete protocol-1 (meta-last) index. The gate must NOT trust it
-    unconditionally: it falls back to the physical check (Spark _SUCCESS
-    under codes/centroids/codebooks) and raises when data is incomplete."""
+    """Every index layout written before codes/ became a manifest table —
+    complete or crashed, with or without _INDEX_SUCCESS or a protocol
+    field — has a codes/ directory no manifest describes. Loading it or
+    appending to it must refuse with one clear "rebuild" error instead of
+    guessing completeness from directory listings, and a rebuild in place
+    serves again."""
     import json
     import shutil
+
     import numpy as np
 
-    from vectordb_data_ingestion_spark.operators.pq import (
-        pq_train,
-        residual_table,
-    )
     from vectordb_data_ingestion_spark.operators.vector_index import (
-        _check_index_complete,
         build_ivfpq_index,
+        foreach_batch_index_append,
         load_ivfpq_index,
     )
 
@@ -972,14 +889,23 @@ def test_marker_era_crashed_build_fails_loudly(spark, tmp_path):
          (1, [float(v) for v in x[20:].mean(axis=0)])],
         "c_id long, c_embedding array<double>",
     )
-    books = pq_train(residual_table(emb, cents), m, dim, k=8,
-                     iterations=1, vec_col="rvec")
+    books = pq_train(emb, m, dim, k=8, iterations=1)
     out = str(tmp_path / "idx")
     build_ivfpq_index(emb, cents, books, out, m=m, dim=dim)
+    rows = load_ivfpq_index(spark, out).codes.count()
 
-    # forge the marker-era crash: strip the protocol field and the
-    # marker (meta-first era, build died mid-data-write) and knock out
-    # one data table's _SUCCESS — the state the old gate silently loaded
+    # devolve codes/ to the directory-listed layout older builds wrote
+    # (codes/batch=base/cell=N), keeping the data and both markers
+    codes_dir = os.path.join(out, "codes")
+    legacy = load_ivfpq_index(spark, out).codes.localCheckpoint()
+    shutil.rmtree(codes_dir)
+    legacy.write.partitionBy("cell").parquet(
+        os.path.join(codes_dir, "batch=base")
+    )
+    with pytest.raises(RuntimeError, match="no codes manifest.*rebuild"):
+        load_ivfpq_index(spark, out)
+
+    # the protocol-1 shape (no protocol field, no marker) refuses the same
     meta_path = os.path.join(out, "_meta.json")
     with open(meta_path) as fh:
         meta = json.load(fh)
@@ -987,52 +913,20 @@ def test_marker_era_crashed_build_fails_loudly(spark, tmp_path):
     with open(meta_path, "w") as fh:
         json.dump(meta, fh)
     os.remove(os.path.join(out, "_INDEX_SUCCESS"))
-    os.remove(os.path.join(out, "codebooks", "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="incomplete"):
+    with pytest.raises(RuntimeError, match="no codes manifest.*rebuild"):
         load_ivfpq_index(spark, out)
 
-    # a crash BEFORE any data write (meta only) fails the same way
-    out2 = str(tmp_path / "idx2")
-    os.makedirs(out2)
-    with open(os.path.join(out2, "_meta.json"), "w") as fh:
-        json.dump({"residual": False, "m": m, "dim": dim}, fh)
-    with pytest.raises(RuntimeError, match="incomplete"):
-        _check_index_complete(out2, "serve queries")
+    # a streaming append refuses before writing anything
+    inc = str(tmp_path / "inc")
+    emb.limit(3).write.parquet(inc)
+    q = foreach_batch_index_append(
+        spark.readStream.schema(emb.schema).parquet(inc),
+        out, str(tmp_path / "ckpt"), m=m, dim=dim,
+    ).start()
+    with pytest.raises(Exception, match="no codes manifest"):
+        q.awaitTermination(120)
+    assert not os.path.exists(os.path.join(codes_dir, "_data"))
 
-    # missing codes-batch _SUCCESS (died mid-codes-write) also refuses
-    out3 = str(tmp_path / "idx3")
-    shutil.copytree(out, out3)
-    with open(os.path.join(out3, "codebooks", "_SUCCESS"), "w"):
-        pass
-    os.remove(os.path.join(out3, "codes", "batch=base", "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="incomplete"):
-        _check_index_complete(out3, "serve queries")
-
-    # ADVICE r9 (low): the refusal must NAME its _SUCCESS dependency and
-    # the stripped-marker escape hatch, and the opt-in override must let
-    # a complete-but-marker-stripped protocol-1 index load (and a
-    # protocol-2 crash must STILL refuse with the override set)
-    with pytest.raises(RuntimeError, match="SPARK_GRAFT_INDEX_ALLOW_LEGACY"):
-        _check_index_complete(out3, "serve queries")
-    os.environ["SPARK_GRAFT_INDEX_ALLOW_LEGACY"] = "1"
-    try:
-        assert _check_index_complete(out3, "serve queries") is not None
-        got = load_ivfpq_index(spark, out)  # the original stripped index
-        assert got is not None
-        out4 = str(tmp_path / "idx4")
-        shutil.copytree(out, out4)
-        with open(os.path.join(out4, "_meta.json")) as fh:
-            m4 = json.load(fh)
-        m4["protocol"] = 2
-        with open(os.path.join(out4, "_meta.json"), "w") as fh:
-            json.dump(m4, fh)
-        with pytest.raises(RuntimeError, match="_INDEX_SUCCESS"):
-            _check_index_complete(out4, "serve queries")
-    finally:
-        del os.environ["SPARK_GRAFT_INDEX_ALLOW_LEGACY"]
-
-    # restoring the physical completeness restores loadability — the
-    # ADVICE r7 guarantee (real protocol-1 indexes load) is unchanged
-    with open(os.path.join(out3, "codes", "batch=base", "_SUCCESS"), "w"):
-        pass
-    assert _check_index_complete(out3, "serve queries") == meta
+    # rebuilding in place replaces the old layout
+    build_ivfpq_index(emb, cents, books, out, m=m, dim=dim)
+    assert load_ivfpq_index(spark, out).codes.count() == rows

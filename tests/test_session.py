@@ -73,3 +73,55 @@ def test_load_tables_events_ts_values_unchanged(spark):
     assert row["lo"] is not None and row["hi"] is not None
     assert row["lo"] <= row["hi"]
     assert row["lo"].year >= 1990 and row["hi"].year <= 2100
+
+
+def test_schema_memo_sees_nested_part_changes(spark, tmp_path):
+    """The schema memo key covers files under partition subdirectories:
+    replacing nested part files (no top-level file touched) with files
+    that carry an extra column must show that column on the next read."""
+    from vectordb_data_ingestion_spark.session import _read_parquet_cached
+
+    root = tmp_path / "parted"
+    pq.write_to_dataset(
+        pa.table({"k": [0, 1], "v": [1.0, 2.0]}), str(root),
+        partition_cols=["k"],
+    )
+    assert not [p for p in root.iterdir() if p.is_file()]
+    assert _read_parquet_cached(spark, str(root)).columns == ["v", "k"]
+
+    for part_dir in root.iterdir():
+        (part,) = list(part_dir.iterdir())
+        part.unlink()
+        pq.write_table(
+            pa.table({"v": [3.0], "extra": ["new"]}), str(part)
+        )
+    assert "extra" in _read_parquet_cached(spark, str(root)).columns
+
+
+def test_spread_memo_follows_split_confs(spark, tmp_path):
+    """spread()'s partition-count memo is keyed on the split confs too:
+    shrinking maxPartitionBytes on the same table splits its scan into
+    enough partitions, and spread must then stop repartitioning."""
+    from vectordb_data_ingestion_spark.session import spread
+
+    pq.write_table(
+        pa.table({"x": list(range(20_000)), "s": [f"r{i}" for i in range(20_000)]}),
+        str(tmp_path / "wide.parquet"),
+        row_group_size=500,
+    )
+    want = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    try:
+        df = load_tables(spark, str(tmp_path), ("wide",), False)["wide"]
+        assert df.rdd.getNumPartitions() < want
+        assert spread(df) is not df  # too few scan splits: repartitioned
+        spark.conf.set(key, "4096")
+        df = load_tables(spark, str(tmp_path), ("wide",), False)["wide"]
+        assert df.rdd.getNumPartitions() >= want
+        assert spread(df) is df
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -29,6 +29,18 @@ def sink_kind(request):
     return request.param
 
 
+def _index_rows(spark, path):
+    """Rows of one near-dup index table (a partition-less manifest sink)."""
+    return ManifestVectorSink(spark, path, partition_col=None).read()
+
+
+def _segments(spark, path, partition_col=None):
+    manifest, _ = ManifestVectorSink(
+        spark, path, partition_col=partition_col
+    )._get_manifest()
+    return manifest["segments"]
+
+
 def _catalog_df(spark, version: int, urls):
     rows = [(u, f"content v{version} of {u}", version) for u in urls]
     return spark.createDataFrame(rows, "url string, text string, version int")
@@ -596,12 +608,11 @@ def test_streaming_near_dup_filter(spark, tmp_path):
     # the index grew only by survivors
     idx_ids = sorted(
         r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "index/shingles"))
+        for r in _index_rows(spark, str(tmp_path / "index/shingles"))
         .select("doc_id")
-        .distinct()
         .collect()
     )
-    assert idx_ids == admitted
+    assert idx_ids == admitted  # one shingle row per admitted doc
 
 
 def test_streaming_vector_index_append(spark, tmp_path):
@@ -716,12 +727,11 @@ def test_near_dup_replay_same_batch_id_no_data_loss(spark, tmp_path):
     assert admitted == [0, 1, 3]
     idx_ids = sorted(
         r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "index/shingles"))
+        for r in _index_rows(spark, str(tmp_path / "index/shingles"))
         .select("doc_id")
-        .distinct()
         .collect()
     )
-    assert idx_ids == admitted
+    assert idx_ids == admitted  # one shingle row per admitted doc
 
 
 def test_refresh_replay_same_batch_id_no_dupes(spark, tmp_path, sink_kind):
@@ -758,90 +768,6 @@ def test_refresh_replay_same_batch_id_no_dupes(spark, tmp_path, sink_kind):
     run_batch(b2, 1)  # replay of the update batch
     got = [(r["url"], r["version"]) for r in sink.read().collect()]
     assert sorted(got) == [("u1", 2), ("u2", 1), ("u3", 2)]
-
-
-def test_index_append_migrates_legacy_flat_layout(spark, tmp_path):
-    """An index built before the two-level (batch, cell) codes layout has
-    cell= dirs at the codes/ root; a streaming append must lift them under
-    batch=base first, or mixed partition depths break discovery."""
-    import shutil
-
-    from vectordb_data_ingestion_spark.operators.pq import pq_train
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        build_ivfpq_index,
-        foreach_batch_index_append,
-        load_ivfpq_index,
-    )
-
-    emb = (
-        spark.read.parquet(os.path.join(SF_SMALL, "embeddings.parquet"))
-        .select("vec_id", "embedding")
-    )
-    initial = emb.filter(F.col("vec_id") < 300)
-    late = emb.filter(
-        (F.col("vec_id") >= 300) & (F.col("vec_id") < 360)
-    )
-    cb = pq_train(initial, m=8, dim=64, k=4, iterations=1)
-    centroids = initial.filter(F.col("vec_id") % 25 == 2).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_embedding"),
-    )
-    idx_dir = str(tmp_path / "idx")
-    build_ivfpq_index(initial, centroids, cb, idx_dir, m=8, dim=64)
-
-    # devolve to the legacy flat layout: codes/cell=N at the root
-    codes_dir = os.path.join(idx_dir, "codes")
-    base = os.path.join(codes_dir, "batch=base")
-    for e in os.listdir(base):
-        shutil.move(os.path.join(base, e), os.path.join(codes_dir, e))
-    os.rmdir(base)
-    assert any(e.startswith("cell=") for e in os.listdir(codes_dir))
-
-    stream_src = tmp_path / "legacy_stream_in"
-    late.coalesce(1).write.parquet(str(stream_src))
-    stream = spark.readStream.schema(late.schema).parquet(str(stream_src))
-    q = foreach_batch_index_append(
-        stream, idx_dir, checkpoint=str(tmp_path / "ckpt_legacy"), m=8, dim=64
-    ).start()
-    q.awaitTermination(120)
-
-    index = load_ivfpq_index(spark, idx_dir, m=8, dim=64)
-    assert index.codes.count() == initial.count() + late.count()
-
-
-def test_legacy_migration_is_crash_resumable(tmp_path):
-    """A migration that died mid-way leaves batch=base alongside root-level
-    cell= dirs; the next invocation must finish the renames (advice r3) —
-    the old code saw a batch= entry and returned False, stranding a layout
-    Spark's partition discovery rejects."""
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        _migrate_legacy_flat_codes,
-    )
-
-    codes = tmp_path / "codes"
-    # simulate the crash: cell=2 already moved, cell=0/cell=1 still at
-    # root — and the _MIGRATING marker (written before batch=base was
-    # created) still present, which is what distinguishes a resumable
-    # crash from a rebuilt-over-legacy conflict (advice r4)
-    (codes / "batch=base" / "cell=2").mkdir(parents=True)
-    (codes / "cell=0").mkdir()
-    (codes / "cell=1").mkdir()
-    (codes / "_SUCCESS").touch()
-    (codes / "_MIGRATING").touch()
-
-    assert _migrate_legacy_flat_codes(str(codes)) is True
-    root = sorted(os.listdir(codes))
-    assert root == ["batch=base"]
-    moved = sorted(os.listdir(codes / "batch=base"))
-    assert moved == ["_SUCCESS", "cell=0", "cell=1", "cell=2"]
-    # idempotent: a second call finds nothing left to move
-    assert _migrate_legacy_flat_codes(str(codes)) is False
-    # genuine streaming batches next to flat cells are NOT this migration's
-    # target — leave them for the operator to handle explicitly
-    codes2 = tmp_path / "codes2"
-    (codes2 / "batch=7" / "cell=0").mkdir(parents=True)
-    (codes2 / "cell=1").mkdir()
-    assert _migrate_legacy_flat_codes(str(codes2)) is False
 
 
 def test_index_append_replay_same_batch_id_no_dupes(spark, tmp_path):
@@ -972,87 +898,6 @@ def test_bm25_refresh_replay_same_batch_id(spark, tmp_path):
     assert n_doc2_terms == sink.read().filter(
         F.col("doc_id") == 2
     ).dropDuplicates(["term"]).count()  # no duplicated postings rows
-
-
-def test_legacy_migration_refuses_stale_rebuild_conflict(tmp_path):
-    """A rebuilt index (fresh batch=base) with stale root-level legacy
-    cell= dirs whose names collide is NOT an interrupted migration:
-    merging the stale vectors would corrupt queries, so the migration
-    must refuse loudly BEFORE moving anything (review r4)."""
-    import pytest
-
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        _migrate_legacy_flat_codes,
-    )
-
-    codes = tmp_path / "codes"
-    (codes / "batch=base" / "cell=0").mkdir(parents=True)
-    (codes / "cell=0").mkdir()  # stale leftover colliding with fresh cell
-    (codes / "cell=1").mkdir()
-    with pytest.raises(RuntimeError, match="stale"):
-        _migrate_legacy_flat_codes(str(codes))
-    # nothing was moved: the refusal happened before any rename
-    assert sorted(os.listdir(codes)) == ["batch=base", "cell=0", "cell=1"]
-
-    # DISJOINT cell names are just as stale (a rebuild that repartitioned
-    # cells leaves no name collisions) — without the _MIGRATING marker the
-    # half-layout is not ours, so it must refuse too (advice r5)
-    codes2 = tmp_path / "codes2"
-    (codes2 / "batch=base" / "cell=9").mkdir(parents=True)
-    (codes2 / "cell=0").mkdir()
-    with pytest.raises(RuntimeError, match="stale"):
-        _migrate_legacy_flat_codes(str(codes2))
-    assert sorted(os.listdir(codes2)) == ["batch=base", "cell=0"]
-
-    # force=True is the deliberate-merge escape hatch
-    assert _migrate_legacy_flat_codes(str(codes2), force=True) is True
-    assert sorted(os.listdir(codes2)) == ["batch=base"]
-    assert sorted(os.listdir(codes2 / "batch=base")) == ["cell=0", "cell=9"]
-
-
-def test_legacy_migration_force_merges_colliding_cells(tmp_path):
-    """force=True with COLLIDING cell names: os.rename refuses a
-    non-empty dir target, so the merge must move the cell's part files
-    individually instead of crashing ENOTEMPTY mid-migration (which
-    would strand the _MIGRATING marker and let the NEXT plain call
-    bypass the rebuilt-over-legacy guard — review r5). An inner part-
-    file collision is unresolvable without overwriting data and must
-    refuse loudly."""
-    import pytest
-
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        _migrate_legacy_flat_codes,
-    )
-
-    codes = tmp_path / "codes"
-    fresh = codes / "batch=base" / "cell=0"
-    fresh.mkdir(parents=True)
-    (fresh / "part-fresh.parquet").write_bytes(b"fresh")
-    stale = codes / "cell=0"
-    stale.mkdir()
-    (stale / "part-stale.parquet").write_bytes(b"stale")
-    (codes / "cell=1").mkdir()
-
-    assert _migrate_legacy_flat_codes(str(codes), force=True) is True
-    assert sorted(os.listdir(codes)) == ["batch=base"]  # marker cleared
-    merged = codes / "batch=base" / "cell=0"
-    assert sorted(os.listdir(merged)) == [
-        "part-fresh.parquet", "part-stale.parquet",
-    ]
-    assert (merged / "part-fresh.parquet").read_bytes() == b"fresh"
-
-    # inner filename collision: refuses, never overwrites either copy
-    codes2 = tmp_path / "codes2"
-    fresh2 = codes2 / "batch=base" / "cell=0"
-    fresh2.mkdir(parents=True)
-    (fresh2 / "part-0.parquet").write_bytes(b"fresh")
-    stale2 = codes2 / "cell=0"
-    stale2.mkdir()
-    (stale2 / "part-0.parquet").write_bytes(b"stale")
-    with pytest.raises(RuntimeError, match="both"):
-        _migrate_legacy_flat_codes(str(codes2), force=True)
-    assert (fresh2 / "part-0.parquet").read_bytes() == b"fresh"
-    assert (stale2 / "part-0.parquet").read_bytes() == b"stale"
 
 
 def test_watermark_drops_beyond_horizon_event(spark, tmp_path):
@@ -1227,16 +1072,12 @@ def test_sessionize_stream_late_events_and_unique_idx(spark, tmp_path):
 
 
 def test_near_dup_index_compaction_preserves_admission(spark, tmp_path):
-    """compact_near_dup_index merges the per-batch index partitions into
-    one negative-id partition without changing ANY admission verdict:
-    a near-copy of a pre-compaction doc is still rejected, a fresh doc is
-    still admitted, and a replayed batch id never collides with the
-    compacted partition (negative vs >= 0). The NEWEST batch is never
-    folded (its offset commit may still be pending — see
-    test_compaction_never_folds_pending_replay_batch). Second compaction
-    with one compactable partition is a no-op."""
-    import os
-
+    """compact_near_dup_index folds the per-batch index segments with the
+    sink's compact_small without changing ANY admission verdict: a
+    near-copy of a pre-compaction doc is still rejected, a fresh doc is
+    still admitted (also on replay of the same batch id), and a second
+    compaction folds the compacted segment with the newer batch. With one
+    segment per table left it is a no-op."""
     from vectordb_data_ingestion_spark.streaming.incremental import (
         compact_near_dup_index,
         near_dup_batch_fn,
@@ -1259,16 +1100,12 @@ def test_near_dup_index_compaction_preserves_admission(spark, tmp_path):
             ),
             i,
         )
-    def _parts(p):
-        return sorted(d for d in os.listdir(p) if not d.startswith("_"))
+    assert len(_segments(spark, f"{index_dir}/bands")) == 3
 
-    assert len(_parts(f"{index_dir}/bands")) == 3
-
-    merged = compact_near_dup_index(spark, index_dir)
-    # batches 0 and 1 fold; batch=2 (newest, possibly pending replay) stays
-    assert merged == 4
-    assert _parts(f"{index_dir}/bands") == ["batch=-1", "batch=2"]
-    assert _parts(f"{index_dir}/shingles") == ["batch=-1", "batch=2"]
+    # every batch's segment folds, in both tables
+    assert compact_near_dup_index(spark, index_dir) == 6
+    assert len(_segments(spark, f"{index_dir}/bands")) == 1
+    assert len(_segments(spark, f"{index_dir}/shingles")) == 1
 
     # admission against the compacted index: near-copy of doc 1 rejected,
     # fresh doc admitted — including on replay of the same batch id
@@ -1287,11 +1124,9 @@ def test_near_dup_index_compaction_preserves_admission(spark, tmp_path):
     )
     assert admitted == [0, 1, 2, 11]
 
-    # compacting again folds {batch=-1, batch=2} into batch=-2; batch=3 is
-    # now the newest and stays out
+    # compacting again folds {compacted, batch 3} per table
     assert compact_near_dup_index(spark, index_dir) == 4
-    assert _parts(f"{index_dir}/bands") == ["batch=-2", "batch=3"]
-    # with only the compacted generation left compactable, it's a no-op
+    assert len(_segments(spark, f"{index_dir}/bands")) == 1
     assert compact_near_dup_index(spark, index_dir) == 0
 
     # the full verdict history survives both compactions
@@ -1306,19 +1141,20 @@ def test_near_dup_index_compaction_preserves_admission(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     )
     assert final == [0, 1, 2, 11]  # near-copy of doc 2 rejected post-compact
+    idx_ids = sorted(
+        r["doc_id"]
+        for r in _index_rows(spark, f"{index_dir}/shingles").collect()
+    )
+    assert idx_ids == [0, 1, 2, 11]
 
 
-def test_compaction_never_folds_pending_replay_batch(spark, tmp_path):
+def test_compaction_then_replay_loses_and_duplicates_nothing(spark, tmp_path):
     """The maintenance-window hazard (ADVICE r6): the stream crashed after
-    writing batch=N's index rows but BEFORE the checkpoint commit, then
-    compaction ran, then the stream restarted and replayed batch N. If
-    compaction had folded batch N into a negative partition, the replay's
-    `batch != N` self-exclusion would no longer see those rows — every doc
-    batch N kept would self-match at jaccard 1.0 and the replay would
-    overwrite out/batch=N with nothing (data loss). Compaction must leave
-    the newest batch partition alone."""
-    import os
-
+    committing batch N's index rows but BEFORE its checkpoint commit, then
+    compaction folded every segment (batch N's included), then the stream
+    restarted and replayed batch N. The replay must lose nothing (its own
+    folded rows must not self-match its docs away at jaccard 1.0) and
+    duplicate nothing (the folded manifest still records batch N)."""
     from vectordb_data_ingestion_spark.streaming.incremental import (
         compact_near_dup_index,
         near_dup_batch_fn,
@@ -1343,13 +1179,12 @@ def test_compaction_never_folds_pending_replay_batch(spark, tmp_path):
     # batch 2: writes land, offset commit does NOT (crash) — the engine
     # will replay this exact batch_id on restart
     run_batch(waves[2], 2)
+    n_bands = _index_rows(spark, f"{index_dir}/bands").count()
 
-    # maintenance window: compaction runs before the restart
-    merged = compact_near_dup_index(spark, index_dir)
-    assert merged == 4  # batches 0+1 fold; the pending batch=2 survives
-    assert "batch=2" in os.listdir(f"{index_dir}/bands")
+    # maintenance window: compaction folds all three batches
+    assert compact_near_dup_index(spark, index_dir) == 6
 
-    # restart: the replay must be a lossless no-op
+    # restart: the replay must be a lossless, duplicate-free no-op
     run_batch(waves[2], 2)
     admitted = sorted(
         r["doc_id"] for r in spark.read.parquet(out_dir).collect()
@@ -1357,10 +1192,10 @@ def test_compaction_never_folds_pending_replay_batch(spark, tmp_path):
     assert admitted == [0, 1, 2]  # doc 2 NOT self-matched away
     idx_ids = sorted(
         r["doc_id"]
-        for r in spark.read.parquet(f"{index_dir}/shingles")
-        .select("doc_id").distinct().collect()
+        for r in _index_rows(spark, f"{index_dir}/shingles").collect()
     )
-    assert idx_ids == [0, 1, 2]
+    assert idx_ids == [0, 1, 2]  # one row each: nothing appended twice
+    assert _index_rows(spark, f"{index_dir}/bands").count() == n_bands
 
 
 def _small_ivfpq(spark, tmp_path, n=200, dim=16, m=4):
@@ -1390,10 +1225,9 @@ def _small_ivfpq(spark, tmp_path, n=200, dim=16, m=4):
 
 
 def test_compact_ivfpq_codes_preserves_queries(spark, tmp_path):
-    """codes/ compaction folds batch=base + old append batches into one
-    negative generation WITH the cell partitioning intact, leaves the
-    newest append batch out (pending-replay safety), and query results
-    are bit-identical before and after."""
+    """codes/ compaction folds the base build's segment and the streaming
+    appends' segments into one, WITH the cell partitioning intact, and
+    query results are bit-identical before and after."""
     import numpy as np
 
     from vectordb_data_ingestion_spark.operators.vector_index import (
@@ -1409,7 +1243,7 @@ def test_compact_ivfpq_codes_preserves_queries(spark, tmp_path):
     dim = x.shape[1]
     rng = np.random.default_rng(9)
 
-    # two streaming appends -> codes/{batch=base,batch=0,batch=1}
+    # two streaming appends -> base segment + one segment per batch
     inc = str(tmp_path / "inc")
     for wave in range(2):
         spark.createDataFrame(
@@ -1427,7 +1261,7 @@ def test_compact_ivfpq_codes_preserves_queries(spark, tmp_path):
         q.awaitTermination(120)
 
     codes = os.path.join(out, "codes")
-    assert sorted(os.listdir(codes)) == ["batch=0", "batch=1", "batch=base"]
+    assert len(_segments(spark, codes, "cell")) == 3
 
     qv = [float(v) for v in x[7]]
     before = [
@@ -1436,207 +1270,92 @@ def test_compact_ivfpq_codes_preserves_queries(spark, tmp_path):
             load_ivfpq_index(spark, out), qv, k=8, n_probe=2
         ).collect()
     ]
-    merged = compact_ivfpq_codes(spark, out)
-    assert merged == 2  # base + batch=0 fold; batch=1 (newest) stays
-    listing = sorted(
-        d for d in os.listdir(codes) if not d.startswith("_")
-    )
-    assert listing == ["batch=-1", "batch=1"]
-    # the folded generation keeps cell= partitioning (probe pruning)
+    assert compact_ivfpq_codes(spark, out) == 3
+    (seg,) = _segments(spark, codes, "cell")
+    # the folded segment keeps cell= partitioning (probe pruning)
+    seg_dir = os.path.join(codes, "_data", seg["dir"])
     assert all(
         d.startswith("cell=")
-        for d in os.listdir(os.path.join(codes, "batch=-1"))
+        for d in os.listdir(seg_dir)
         if not d.startswith(("_", "."))
     )
+    idx = load_ivfpq_index(spark, out)
+    assert idx.codes.count() == 210
     after = [
         (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=8, n_probe=2
-        ).collect()
+        for r in query_ivfpq_index(idx, qv, k=8, n_probe=2).collect()
     ]
     assert after == before
 
 
 def test_ivfpq_fold_crash_recovery(spark, tmp_path):
-    """The two-marker fold protocol: a crash during the generation write
-    (PENDING only) rolls back to the sources; a crash during the source
-    deletes (COMMITTED present) finishes them — a loaded index never
-    serves a row from both a folded generation and its source batch."""
-    import json
-    import shutil
-
+    """A codes compaction that crashes at its manifest CAS leaves nothing
+    to recover: the folded segment is an orphan no manifest names, and
+    the index keeps serving every row exactly once. A CAS whose put
+    landed but whose response was lost also serves every row once, and
+    vacuum reclaims the crashed attempt's orphan."""
     from vectordb_data_ingestion_spark.operators.vector_index import (
+        _codes_table,
         load_ivfpq_index,
         query_ivfpq_index,
+    )
+    from vectordb_data_ingestion_spark.sinks.commit_store import (
+        FileConditionalStore,
     )
     from vectordb_data_ingestion_spark.streaming.incremental import (
         compact_ivfpq_codes,
     )
 
     out, x = _small_ivfpq(spark, tmp_path)
-    codes = os.path.join(out, "codes")
+    tbl = _codes_table(spark, out)
+    # a second segment so the compaction has something to fold
+    tbl.upsert(tbl.read().withColumn("vec_id", F.col("vec_id") + 10_000))
     qv = [float(v) for v in x[7]]
-    truth = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=8, n_probe=2
-        ).collect()
-    ]
 
-    # crash mid-write: PENDING marker + a partial target dir
-    os.makedirs(os.path.join(codes, "batch=-1", "cell=0"), exist_ok=True)
-    with open(os.path.join(codes, "batch=-1", "cell=0", "junk.parquet"), "w") as fh:
-        fh.write("partial")
-    with open(os.path.join(codes, "_FOLD_PENDING"), "w") as fh:
-        json.dump({"target": "batch=-1", "sources": ["batch=base"]}, fh)
-    got = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=8, n_probe=2
-        ).collect()
-    ]
-    assert got == truth
-    assert not os.path.exists(os.path.join(codes, "batch=-1"))
-    assert not os.path.exists(os.path.join(codes, "_FOLD_PENDING"))
+    def served():
+        idx = load_ivfpq_index(spark, out)
+        ids = [r["vec_id"] for r in idx.codes.select("vec_id").collect()]
+        hits = [
+            (r["vec_id"], r["adc"])
+            for r in query_ivfpq_index(idx, qv, k=8, n_probe=2).collect()
+        ]
+        return sorted(ids), hits
 
-    # crash mid-delete: COMMITTED marker, folded gen complete, source
-    # still present — recovery deletes the source, not the generation
-    shutil.copytree(
-        os.path.join(codes, "batch=base"), os.path.join(codes, "batch=-1")
-    )
-    payload = {"target": "batch=-1", "sources": ["batch=base"]}
-    with open(os.path.join(codes, "_FOLD_PENDING"), "w") as fh:
-        json.dump(payload, fh)
-    with open(os.path.join(codes, "_FOLD_COMMITTED"), "w") as fh:
-        json.dump(payload, fh)
-    got = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=8, n_probe=2
-        ).collect()
-    ]
-    assert got == truth  # no duplicates served
-    assert not os.path.exists(os.path.join(codes, "batch=base"))
-    assert os.path.exists(os.path.join(codes, "batch=-1"))
-    # idempotent: compaction after recovery is a no-op on one partition
-    assert compact_ivfpq_codes(spark, out) == 0
+    ids, truth = served()
+    assert len(ids) == len(set(ids)) == 400
 
+    orig = FileConditionalStore.put_if
 
-def test_fold_recovery_skips_while_fold_lock_held(spark, tmp_path):
-    """ADVICE r7 (high): a loader's recovery pass racing a LIVE fold must
-    not mistake the fold's in-progress markers for a crash — between the
-    fold's finished target write and its _FOLD_COMMITTED write, a
-    rollback would rmtree the finished generation, and the fold would
-    then commit and delete every source (permanent row loss). With the
-    fold lock held (simulating the live fold at exactly that point),
-    _fold_recover must skip; once released, it recovers normally."""
-    import fcntl
-    import json
-    import shutil
+    def crash_at_cas(self, key, data, token):
+        if key == "MANIFEST":
+            raise RuntimeError("injected crash at the manifest CAS")
+        return orig(self, key, data, token)
 
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        load_ivfpq_index,
-        query_ivfpq_index,
-    )
-    from vectordb_data_ingestion_spark.streaming.incremental import (
-        _fold_recover,
-    )
-
-    out, x = _small_ivfpq(spark, tmp_path)
-    codes = os.path.join(out, "codes")
-    qv = [float(v) for v in x[7]]
-    truth = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=8, n_probe=2
-        ).collect()
-    ]
-
-    # the live fold's state between target write and COMMITTED: complete
-    # target generation + PENDING marker, fold lock held
-    shutil.copytree(
-        os.path.join(codes, "batch=base"), os.path.join(codes, "batch=-1")
-    )
-    payload = {"target": "batch=-1", "sources": ["batch=base"]}
-    with open(os.path.join(codes, "_FOLD_PENDING"), "w") as fh:
-        json.dump(payload, fh)
-    fd = os.open(os.path.join(codes, "_FOLD_LOCK"), os.O_CREAT | os.O_RDWR)
-    fcntl.flock(fd, fcntl.LOCK_EX)
+    FileConditionalStore.put_if = crash_at_cas
     try:
-        _fold_recover(codes)
-        # skipped: the generation the fold is about to commit survives
-        assert os.path.exists(os.path.join(codes, "batch=-1"))
-        assert os.path.exists(os.path.join(codes, "_FOLD_PENDING"))
-    finally:
-        os.close(fd)
-
-    # the fold then finishes its own protocol (COMMITTED + source delete)
-    with open(os.path.join(codes, "_FOLD_COMMITTED"), "w") as fh:
-        json.dump(payload, fh)
-    shutil.rmtree(os.path.join(codes, "batch=base"))
-    os.remove(os.path.join(codes, "_FOLD_PENDING"))
-    os.remove(os.path.join(codes, "_FOLD_COMMITTED"))
-    got = [
-        (r["vec_id"], r["adc"])
-        for r in query_ivfpq_index(
-            load_ivfpq_index(spark, out), qv, k=8, n_probe=2
-        ).collect()
-    ]
-    assert got == truth  # zero rows lost across the race
-
-    # lock released + a genuine crash marker: recovery behaves as before
-    with open(os.path.join(codes, "_FOLD_PENDING"), "w") as fh:
-        json.dump({"target": "batch=-2", "sources": ["batch=-1"]}, fh)
-    os.makedirs(os.path.join(codes, "batch=-2"), exist_ok=True)
-    _fold_recover(codes)
-    assert not os.path.exists(os.path.join(codes, "batch=-2"))
-    assert not os.path.exists(os.path.join(codes, "_FOLD_PENDING"))
-
-
-def test_fold_aborts_if_target_vanishes_before_commit(spark, tmp_path):
-    """The lock-less substrate guard: if the written fold target is gone
-    at commit time, the fold must abort with sources intact — writing
-    _FOLD_COMMITTED anyway would finish with source deletes and lose the
-    rows forever."""
-    import shutil
-
-    import pytest as _pytest
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from vectordb_data_ingestion_spark.operators.vector_index import (
-        load_ivfpq_index,
-    )
-    from vectordb_data_ingestion_spark.streaming.incremental import (
-        compact_ivfpq_codes,
-    )
-
-    out, x = _small_ivfpq(spark, tmp_path)
-    codes = os.path.join(out, "codes")
-    # two extra batch partitions so the fold has >1 foldable partition
-    # (batch=1 is newest and never folds; {base, 0} fold)
-    shutil.copytree(os.path.join(codes, "batch=base"),
-                    os.path.join(codes, "batch=0"))
-    shutil.copytree(os.path.join(codes, "batch=base"),
-                    os.path.join(codes, "batch=1"))
-    n_before = load_ivfpq_index(spark, out).codes.count()
-
-    orig = DataFrameWriter.parquet
-
-    def vanish_after_write(self, path, **kw):
-        orig(self, path, **kw)
-        if "batch=-" in path:  # the fold's target generation
-            shutil.rmtree(path)
-
-    DataFrameWriter.parquet = vanish_after_write
-    try:
-        with _pytest.raises(RuntimeError, match="vanished"):
+        with pytest.raises(RuntimeError, match="injected crash"):
             compact_ivfpq_codes(spark, out)
     finally:
-        DataFrameWriter.parquet = orig
-    # sources intact, markers cleaned, zero rows lost
-    assert not os.path.exists(os.path.join(codes, "_FOLD_PENDING"))
-    assert not os.path.exists(os.path.join(codes, "_FOLD_COMMITTED"))
-    assert load_ivfpq_index(spark, out).codes.count() == n_before
-    # and the next (unmolested) fold succeeds
-    assert compact_ivfpq_codes(spark, out) >= 1
-    assert load_ivfpq_index(spark, out).codes.count() == n_before
+        FileConditionalStore.put_if = orig
+    assert served() == (ids, truth)
+    assert len(_segments(spark, os.path.join(out, "codes"), "cell")) == 2
+
+    lied = []
+
+    def lost_response(self, key, data, token):
+        ok = orig(self, key, data, token)
+        if key == "MANIFEST" and ok and not lied:
+            lied.append(key)
+            return False  # the put landed; its response was lost
+        return ok
+
+    FileConditionalStore.put_if = lost_response
+    try:
+        assert compact_ivfpq_codes(spark, out) == 2
+    finally:
+        FileConditionalStore.put_if = orig
+    assert lied
+    assert served() == (ids, truth)
+    assert len(_segments(spark, os.path.join(out, "codes"), "cell")) == 1
+    assert tbl.vacuum(retain_versions=0) >= 1  # the crashed fold's orphan
+    assert served() == (ids, truth)

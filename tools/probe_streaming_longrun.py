@@ -17,10 +17,11 @@ already-admitted docs so candidate verification really runs) through
 ``cadence`` batches in the "on" mode and never in the "off" mode.
 Deterministic content (md5-derived words). Per-batch wall time is
 recorded; the summary compares the median of an EARLY window vs a LATE
-window at comparable admitted-corpus size per mode, plus the partition
-count at the end. Expected shape: "off" compounds with batch count (the
-small-files cliff); "on" tracks admitted volume only (early->late growth
-~ the data term), partitions bounded by the cadence.
+window at comparable admitted-corpus size per mode, plus the bands
+table's segment count at the end (each micro-batch appends one segment
+to the index's manifest tables). Expected shape: "off" compounds with
+batch count (the small-files cliff); "on" tracks admitted volume only
+(early->late growth ~ the data term), segments bounded by the cadence.
 
 Usage: python tools/probe_streaming_longrun.py [n_batches] [batch_docs]
        (defaults 110, 200; ~6-8 min on local[8])
@@ -61,6 +62,9 @@ def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
     includes the commit path — on ``manifest-log`` each batch appends a
     delta record to the chain (plus periodic checkpoints), the
     high-commit-rate deployment shape the r9 curve never measured."""
+    from vectordb_data_ingestion_spark.sinks.manifest_sink import (
+        ManifestVectorSink,
+    )
     from vectordb_data_ingestion_spark.streaming.incremental import (
         compact_near_dup_index,
         near_dup_batch_fn,
@@ -102,10 +106,10 @@ def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
             times.append(time.perf_counter() - t0)
             if mode == "on" and b and b % cadence == 0:
                 compact_near_dup_index(spark, index_dir)
-        parts = len(
-            [d for d in os.listdir(os.path.join(index_dir, "bands"))
-             if d.startswith("batch=")]
-        )
+        manifest, _ = ManifestVectorSink(
+            spark, os.path.join(index_dir, "bands"), partition_col=None
+        )._get_manifest()
+        segments = len(manifest["segments"])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -125,7 +129,7 @@ def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
         "early_batch_p50_s": med(early),
         "late_batch_p50_s": med(late),
         "late_over_early": round(med(late) / med(early), 2),
-        "end_partitions": parts,
+        "end_segments": segments,
         "total_s": round(sum(times), 1),
     }
 

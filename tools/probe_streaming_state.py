@@ -2,27 +2,31 @@
 unmeasured row (SCALE.md: "streaming incremental").
 
 The near-dup admission path (streaming/incremental.py::near_dup_batch_fn)
-keeps its state as a persisted banded index on storage, appended one
-``batch=N`` partition per micro-batch. Its per-batch cost therefore has
-TWO growth axes a long-lived stream exercises and the 10x/100x corpus
-probes do not:
+keeps its state as a persisted banded index on storage: two
+``ManifestVectorSink`` tables (``bands/``, ``shingles/``), appended one
+segment per micro-batch. Its per-batch cost therefore has TWO growth axes
+a long-lived stream exercises and the 10x/100x corpus probes do not:
 
 - DATA volume: the candidate equi-join scans the bands table of the
   whole admitted corpus every batch (3 scalar columns — linear by
   design, like the incremental BM25 postings probe);
-- FILE count: after K micro-batches the index is K partition dirs, so
+- FILE count: after K micro-batches each table is K segments, so
   listing/opening cost grows with BATCH COUNT even at flat data volume —
-  the classic small-files cliff that compact_near_dup_index exists to
-  reset.
+  the classic small-files cliff that compact_near_dup_index (the sink's
+  compact_small) exists to reset.
 
 This probe measures a fixed 1000-doc admission batch (500 fresh docs +
 500 near-copies of admitted docs, so LSH candidate verification really
 runs) against the same admitted corpus laid out four ways:
 
-  A  20k docs,   1 partition   (baseline)
-  B  200k docs,  10 partitions (10x data axis)
-  C  200k docs,  100 partitions (10x file-count axis at B's volume)
-  D  C compacted to 1 partition (the maintenance fix)
+  A  20k docs,   1 segment    (baseline)
+  B  200k docs,  10 segments  (10x data axis)
+  C  200k docs,  100 segments (10x file-count axis at B's volume)
+  D  C compacted to 1 segment (the maintenance fix)
+
+Each timed admission runs against a fresh copy of the index (the copy is
+not timed), so every run and every layout sees the identical admitted
+corpus.
 
 Content is deterministic (words are md5-derived from the doc id — no
 Date.now/random) and mutually disjoint across docs, so candidate mass is
@@ -50,6 +54,9 @@ from vectordb_data_ingestion_spark.operators.dedup import (  # noqa: E402
     banded_signature_table,
 )
 from vectordb_data_ingestion_spark.session import get_spark  # noqa: E402
+from vectordb_data_ingestion_spark.sinks.manifest_sink import (  # noqa: E402
+    ManifestVectorSink,
+)
 from vectordb_data_ingestion_spark.streaming.incremental import (  # noqa: E402
     compact_near_dup_index,
     near_dup_batch_fn,
@@ -81,20 +88,24 @@ def synth_docs(spark, start: int, n: int):
 
 def build_index(spark, index_dir: str, total_docs: int, n_parts: int) -> None:
     """Materialize an admitted-corpus index of total_docs docs split over
-    n_parts batch partitions — the layout K micro-batches leave behind,
-    built directly (same tables near_dup_batch_fn writes) so the probe
-    doesn't pay K sequential admission runs to reach steady state."""
+    n_parts segments — the layout K micro-batches leave behind, built
+    directly (same tables and columns near_dup_batch_fn appends) so the
+    probe doesn't pay K sequential admission runs to reach steady state."""
     per = total_docs // n_parts
+    tables = {
+        sub: ManifestVectorSink(
+            spark, f"{index_dir}/{sub}", partition_col=None
+        )
+        for sub in ("shingles", "bands")
+    }
     for k in range(n_parts):
         chunk = synth_docs(spark, k * per, per)
         sh_tbl, banded = banded_signature_table(
             chunk, "text", "doc_id", NUM_HASHES, BANDS, 3
         )
-        sub = f"batch={k}"
-        sh_tbl.write.mode("overwrite").parquet(
-            f"{index_dir}/shingles/{sub}"
-        )
-        banded.write.mode("overwrite").parquet(f"{index_dir}/bands/{sub}")
+        tag = F.lit(k).cast("long").alias("batch")
+        tables["shingles"].upsert(sh_tbl.select("*", tag))
+        tables["bands"].upsert(banded.select("*", tag))
 
 
 def time_admission(spark, index_dir: str, out_dir: str, total_docs: int,
@@ -115,18 +126,18 @@ def time_admission(spark, index_dir: str, out_dir: str, total_docs: int,
     batch = fresh.unionByName(copies).localCheckpoint()
     times = []
     for i in range(runs):
+        # the admission commits its survivors to the index it probes: run
+        # it on a copy so the next run (and the next layout) sees the
+        # identical admitted corpus
+        scratch = f"{out_dir}/index_r{i}"
+        shutil.copytree(index_dir, scratch)
         run_batch = near_dup_batch_fn(
-            index_dir, f"{out_dir}/r{i}", num_hashes=NUM_HASHES, bands=BANDS,
+            scratch, f"{out_dir}/r{i}", num_hashes=NUM_HASHES, bands=BANDS,
         )
         t0 = time.monotonic()
         run_batch(batch, 999_999)
         times.append(time.monotonic() - t0)
-        # drop the probe batch's own index partition so the next run (and
-        # the next layout) sees the identical admitted corpus
-        for sub in ("bands", "shingles"):
-            shutil.rmtree(
-                f"{index_dir}/{sub}/batch=999999", ignore_errors=True
-            )
+        shutil.rmtree(scratch, ignore_errors=True)
     kept = spark.read.parquet(f"{out_dir}/r0").count()
     assert 400 <= kept <= 600, (
         f"admission verdicts off ({kept} kept of 1000): the probe must "
@@ -143,9 +154,9 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="stream_state_probe_")
     results: dict[str, float] = {}
     layouts = [
-        ("A_20k_1part", base, 1),
-        ("B_200k_10part", base * 10, 10),
-        ("C_200k_100part", base * 10, 100),
+        ("A_20k_1seg", base, 1),
+        ("B_200k_10seg", base * 10, 10),
+        ("C_200k_100seg", base * 10, 100),
     ]
     try:
         # throwaway warm-up layout: the first admission pays JVM/codegen
@@ -161,7 +172,7 @@ def main() -> None:
             )
             print(f"{name}: {results[name]} s", flush=True)
         # D: compact C's layout and re-measure the same data
-        idx_c = f"{root}/C_200k_100part/index"
+        idx_c = f"{root}/C_200k_100seg/index"
         t0 = time.monotonic()
         compact_near_dup_index(spark, idx_c)
         compact_s = round(time.monotonic() - t0, 3)
@@ -180,13 +191,13 @@ def main() -> None:
             "batches": results,
             "compaction_s": compact_s,
             "data_axis_10x": round(
-                results["B_200k_10part"] / results["A_20k_1part"], 2
+                results["B_200k_10seg"] / results["A_20k_1seg"], 2
             ),
             "file_axis_10x": round(
-                results["C_200k_100part"] / results["B_200k_10part"], 2
+                results["C_200k_100seg"] / results["B_200k_10seg"], 2
             ),
             "compaction_gain": round(
-                results["C_200k_100part"] / results["D_200k_compacted"], 2
+                results["C_200k_100seg"] / results["D_200k_compacted"], 2
             ),
         }))
     finally:

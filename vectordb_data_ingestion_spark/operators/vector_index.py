@@ -8,13 +8,21 @@ the materialized BM25 inverted index (``search.build_bm25_index``):
 - ``centroids/``  (c_id, c_embedding)            — k rows, broadcastable
 - ``codebooks/``  (sub, code, sv)                — m*k rows, broadcastable
 - ``codes/``      (vec_id, pq_codes) PARTITIONED BY cell — 1 byte/subspace
-  per vector plus the cell key; the ONLY corpus-scale table
+  per vector plus the cell key; the ONLY corpus-scale table, and the only
+  one that grows after the build: a ``ManifestVectorSink`` table whose
+  streaming appends (:func:`foreach_batch_index_append`) and compactions
+  each commit by one manifest CAS
 
-Partitioning ``codes/`` by cell makes the coarse-quantizer pruning a
-*partition filter*: probing ``n_probe`` of ``k`` cells reads ``n_probe/k``
-of the index files — the scan never touches unprobed cells' bytes
-(asserted in tests/test_pq.py). Queries answer from the index alone; the
-raw vectors are never read again.
+Partitioning ``codes/`` by cell (the sink's partition column) makes the
+coarse-quantizer pruning a *partition filter*: probing ``n_probe`` of
+``k`` cells reads ``n_probe/k`` of the index files — the scan never
+touches unprobed cells' bytes (asserted in tests/test_pq.py). Queries
+answer from the index alone; the raw vectors are never read again.
+
+Build protocol: ``_meta.json`` first, ``_INDEX_SUCCESS`` last, so a build
+that died in between refuses to load or accept appends. An index whose
+``codes/`` has no manifest (any layout written before ``codes/`` became a
+manifest table) refuses the same way: rebuild it.
 """
 
 from __future__ import annotations
@@ -24,6 +32,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
 
 
 @dataclass
@@ -64,6 +74,7 @@ def build_ivfpq_index(
     residual scorer automatically — an index can never be silently read
     under the wrong decoding."""
     import json
+    import shutil
 
     from vectordb_data_ingestion_spark.operators.pq import (
         pq_encode_residual_vectorized,
@@ -97,9 +108,9 @@ def build_ivfpq_index(
         codes = encoded.join(assigned.select(id_col, "cell"), id_col)
     # mode metadata lands BEFORE any data: a crash after codes/centroids/
     # codebooks but before a trailing meta write used to leave a
-    # residual-encoded index that loaded as legacy-direct and decoded
-    # under the wrong scheme silently. Meta-first plus a final completion
-    # marker makes every partial build fail LOUDLY at load time instead.
+    # residual-encoded index that loaded as direct and decoded under the
+    # wrong scheme silently. Meta-first plus a final completion marker
+    # makes every partial build fail LOUDLY at load time instead.
     os.makedirs(out_dir, exist_ok=True)
     success_marker = os.path.join(out_dir, "_INDEX_SUCCESS")
     if os.path.exists(success_marker):
@@ -107,12 +118,7 @@ def build_ivfpq_index(
     with open(os.path.join(out_dir, "_meta.json"), "w") as fh:
         json.dump(
             {
-                # protocol 2 = "this build writes _INDEX_SUCCESS last";
-                # the load gate requires the marker ONLY for metas that
-                # declare it — indexes built by protocol-1 versions of
-                # this module (meta written last, no marker ever) stay
-                # loadable instead of misreading as crashed builds
-                "protocol": 2,
+                "protocol": 2,  # meta first, _INDEX_SUCCESS last
                 "residual": bool(residual),
                 "m": m,
                 "dim": dim,
@@ -122,12 +128,10 @@ def build_ivfpq_index(
         )
         fh.flush()
         os.fsync(fh.fileno())
-    # the base build lands under batch=base so streaming appends
-    # (batch=<id> subdirs, see foreach_batch_index_append) share one
-    # consistent two-level (batch, cell) partition layout
-    codes.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(out_dir, "codes", "batch=base")
-    )
+    # a rebuild replaces the codes table wholesale (the old one is
+    # unreachable anyway until the new marker lands)
+    shutil.rmtree(os.path.join(out_dir, "codes"), ignore_errors=True)
+    _codes_table(codes.sparkSession, out_dir).upsert(codes)
     centroids.write.mode("overwrite").parquet(
         os.path.join(out_dir, "centroids")
     )
@@ -138,231 +142,54 @@ def build_ivfpq_index(
         fh.write("complete\n")
 
 
-def _migrate_legacy_flat_codes(codes_dir: str, force: bool = False) -> bool:
-    """Indexes built before the two-level ``(batch, cell)`` layout wrote
-    ``codes/cell=N/`` directly; a streaming append adding ``batch=<id>``
-    subdirs next to them would leave mixed partition depths that Spark's
-    partition discovery rejects. Detect the flat layout and move the
-    ``cell=`` dirs under ``batch=base/`` (pure renames on the directory
-    substrate; an object-store deployment would do the same with a
-    listing+copy). Returns True if a migration happened.
-
-    Crash-resumable via an explicit ``_MIGRATING`` marker written BEFORE
-    ``batch=base`` is created and removed only after the last rename: a
-    prior attempt that died mid-way leaves the marker, so the next
-    invocation knows the half-moved state is OURS and finishes the
-    renames (each per-dir rename is idempotent: once moved, the root
-    entry is gone). Without the marker, a populated ``batch=base`` next
-    to root-level ``cell=`` dirs is a rebuilt-over-legacy conflict
-    (``build_ivfpq_index`` wrote a fresh ``batch=base`` while stale flat
-    ``cell=`` dirs linger) — name collisions OR disjoint cell
-    partitionings alike: silently merging stale vectors into the fresh
-    index would corrupt queries, so we refuse loudly BEFORE moving
-    anything and tell the operator to delete the stale dirs (or pass
-    ``force=True`` to merge deliberately). Two concurrent migrators race
-    benignly: the marker write and ``exist_ok=True`` mkdir are
-    idempotent, and a rename losing the race (the other mover already
-    took the dir) is skipped."""
-    if not os.path.isdir(codes_dir):
-        return False
-    entries = os.listdir(codes_dir)
-    cells = [e for e in entries if e.startswith("cell=")]
-    if not cells:
-        # nothing left to move; clear a marker a finished-but-interrupted
-        # run may have stranded after its last rename
-        marker = os.path.join(codes_dir, "_MIGRATING")
-        if os.path.exists(marker):
-            os.remove(marker)
-        return False
-    if any(e.startswith("batch=") and e != "batch=base" for e in entries):
-        # genuine streaming batches already coexist with flat cell= dirs:
-        # not the legacy layout this migration targets — leave it alone.
-        return False
-    base = os.path.join(codes_dir, "batch=base")
-    marker = os.path.join(codes_dir, "_MIGRATING")
-    if os.path.isdir(base) and not os.path.exists(marker) and not force:
-        raise RuntimeError(
-            "codes dir holds BOTH a populated batch=base and root-level "
-            f"legacy cell= dirs ({cells[:3]}"
-            f"{'...' if len(cells) > 3 else ''}) with no _MIGRATING "
-            "marker: either a rebuilt index with stale flat-layout "
-            "leftovers, or a migration interrupted by a pre-marker "
-            "version of this code. Refusing to guess — if the root "
-            "cell= dirs are stale leftovers from before a rebuild, "
-            f"delete them under {codes_dir} (or the whole dir and "
-            "rebuild); if they are unmoved cells of the SAME build "
-            "(interrupted migration), call with force=True to finish "
-            "the merge (it refuses to overwrite any colliding part "
-            "file, so same-build resumes are safe)."
-        )
-    # marker BEFORE base: a crash between the two still resumes cleanly
-    with open(marker, "w") as fh:
-        fh.write("legacy flat-codes migration in progress\n")
-    os.makedirs(base, exist_ok=True)
-    for e in entries:
-        if e.startswith("cell=") or e == "_SUCCESS":
-            src, dst = os.path.join(codes_dir, e), os.path.join(base, e)
-            try:
-                os.rename(src, dst)
-            except FileNotFoundError:
-                pass  # a concurrent migrator already moved this entry
-            except OSError:
-                # dst already exists (deliberate force=True merge onto a
-                # rebuilt index with COLLIDING cell names, or a resumed
-                # interrupted merge): rename refuses non-empty dir
-                # targets, so merge the cell's part files individually.
-                # An inner filename collision is NOT resolvable without
-                # overwriting data — refuse loudly rather than pick one.
-                if not (os.path.isdir(src) and os.path.isdir(dst)):
-                    raise
-                for part in os.listdir(src):
-                    inner_dst = os.path.join(dst, part)
-                    if part != "_SUCCESS" and os.path.exists(inner_dst):
-                        raise RuntimeError(
-                            f"flat-codes merge: {e}/{part} exists in both "
-                            "the legacy layout and batch=base — refusing "
-                            "to overwrite either copy"
-                        )
-                    os.replace(os.path.join(src, part), inner_dst)
-                os.rmdir(src)
-    try:
-        os.remove(marker)
-    except FileNotFoundError:
-        pass  # a concurrent migrator already cleaned up
-    return True
-
-
-def _check_index_complete(out_dir: str, action: str) -> dict | None:
-    """Read ``_meta.json`` (None when absent — pre-meta legacy indexes,
-    direct mode, stay loadable) and enforce the completion gate: a
-    protocol-2 build writes ``_meta.json`` FIRST and ``_INDEX_SUCCESS``
-    last, so a protocol-2 meta without the marker is a build that died
-    mid-write — fail loudly rather than serve partial codes. Metas that
-    do not declare ``protocol >= 2`` are ambiguous: true protocol-1
-    builds wrote meta LAST (meta present = data complete), but the
-    marker-era window between the meta-first change and the protocol
-    stamp ALSO wrote meta first without a protocol field — so a
-    no-protocol meta with no marker could be either a complete
-    protocol-1 index or a marker-era build that died mid-data-write
-    (ADVICE r8). Rather than trust it unconditionally, fall back to a
-    secondary discriminator: every complete build of ANY era left Spark
-    ``_SUCCESS`` files under codes/centroids/codebooks, while a
-    crashed-mid-data marker-era build is missing at least one. Only a
-    meta that passes that physical check loads without its marker
-    (ADVICE r7 still holds: genuinely complete pre-marker indexes stay
-    loadable on upgrade).
-
-    The physical check depends on Spark's ``_SUCCESS`` job markers
-    existing: a deployment that strips them
-    (``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, or an
-    object-store lifecycle cleaner) would see a genuinely complete
-    protocol-1 index refuse to load on upgrade (ADVICE r9). For those,
-    ``SPARK_GRAFT_INDEX_ALLOW_LEGACY=1`` (read per call) skips the
-    physical fallback and trusts a protocol-less meta the way a true
-    protocol-1 reader did — the operator asserts "my markers are
-    stripped but my index is complete"; a partial marker-era build then
-    loads as truncated data, the pre-r8 behavior, which is why the
-    override is opt-in and never the default."""
-    import json as _json
-
-    meta_path = os.path.join(out_dir, "_meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    declared = "protocol" in meta
-    if not os.path.exists(os.path.join(out_dir, "_INDEX_SUCCESS")):
-        if declared and int(meta.get("protocol", 1)) >= 2:
-            raise RuntimeError(
-                f"ivfpq index at {out_dir} has a protocol-2 _meta.json but "
-                "no _INDEX_SUCCESS marker: the build crashed before "
-                f"completing — rebuild the index (a partial index must "
-                f"not {action})"
-            )
-        allow_legacy = os.environ.get(
-            "SPARK_GRAFT_INDEX_ALLOW_LEGACY", ""
-        ) == "1"
-        if not declared and not allow_legacy and not _data_dirs_complete(
-            out_dir
-        ):
-            raise RuntimeError(
-                f"ivfpq index at {out_dir} has a _meta.json with no "
-                "protocol field, no _INDEX_SUCCESS marker, and incomplete "
-                "data tables (missing Spark _SUCCESS under codes/, "
-                "centroids/ or codebooks/): this is a meta-first build "
-                "that crashed before its data finished writing — rebuild "
-                f"the index (a partial index must not {action}). NOTE: "
-                "this completeness check relies on Spark _SUCCESS job "
-                "markers; if this deployment strips them (mapreduce."
-                "fileoutputcommitter.marksuccessfuljobs=false or a "
-                "lifecycle cleaner) and the index is known complete, set "
-                "SPARK_GRAFT_INDEX_ALLOW_LEGACY=1 to load it anyway"
-            )
-    return meta
-
-
-def _data_dirs_complete(out_dir: str) -> bool:
-    """Physical completeness check for indexes whose meta predates the
-    protocol stamp: Spark stamps ``_SUCCESS`` at the root of every
-    completed write, so a finished build of any era has one under
-    ``centroids/``, ``codebooks/`` and ``codes/`` (at the codes root for
-    the legacy flat layout, else inside every ``batch=*`` subdir — the
-    flat-layout migration moves the root marker into ``batch=base``)."""
-    for sub in ("centroids", "codebooks"):
-        if not os.path.exists(os.path.join(out_dir, sub, "_SUCCESS")):
-            return False
-    codes = os.path.join(out_dir, "codes")
-    if os.path.exists(os.path.join(codes, "_SUCCESS")):
-        return True
-    batches = [
-        e
-        for e in (os.listdir(codes) if os.path.isdir(codes) else [])
-        if e.startswith("batch=")
-    ]
-    return bool(batches) and all(
-        os.path.exists(os.path.join(codes, b, "_SUCCESS")) for b in batches
+def _codes_table(spark: SparkSession, out_dir: str) -> ManifestVectorSink:
+    """The index's ``codes/`` table: a manifest sink partitioned by cell."""
+    return ManifestVectorSink(
+        spark, os.path.join(out_dir, "codes"), partition_col="cell"
     )
+
+
+def _open_index(
+    spark: SparkSession, out_dir: str, action: str
+) -> tuple[ManifestVectorSink, dict]:
+    """The completion gate every reader and appender passes: ``codes/``
+    must be a manifest table (older layouts are refused — rebuild), and
+    the build must have reached ``_INDEX_SUCCESS`` (it writes
+    ``_meta.json`` first and the marker last, so a meta without the
+    marker is a build that died mid-write — never serve partial codes).
+    Returns the codes table and the parsed meta."""
+    import json
+
+    codes = _codes_table(spark, out_dir)
+    if codes.current_commit_id() is None:
+        raise RuntimeError(
+            f"ivfpq index at {out_dir} has no codes manifest: it was built "
+            "before codes/ became a manifest table (or its build never "
+            "reached the codes write) — rebuild the index with "
+            f"build_ivfpq_index (it must not {action})"
+        )
+    if not os.path.exists(os.path.join(out_dir, "_INDEX_SUCCESS")):
+        raise RuntimeError(
+            f"ivfpq index at {out_dir} has no _INDEX_SUCCESS marker: the "
+            "build crashed before completing — rebuild the index (a "
+            f"partial index must not {action})"
+        )
+    with open(os.path.join(out_dir, "_meta.json")) as fh:
+        return codes, json.load(fh)
 
 
 def load_ivfpq_index(
     spark: SparkSession, out_dir: str, m: int = 8, dim: int = 64
 ) -> IvfPqIndex:
-    # a read should not fail just because the store is read-only or a
-    # concurrent reader is mid-migration: attempt the layout fix, but fall
-    # back to reading whatever is there (a flat layout is still readable
-    # until the first streaming append adds a batch= dir next to it).
-    import json
-
-    try:
-        _migrate_legacy_flat_codes(os.path.join(out_dir, "codes"))
-    except OSError:
-        pass
-    # finish/roll back a codes compaction a crash interrupted — an index
-    # must never serve the same row from both a folded generation and a
-    # not-yet-deleted source batch. Unlike the flat-layout migration
-    # (whose unmigrated state is still CORRECT to read), an unrecovered
-    # fold is duplicate data — a read-only store that can't be repaired
-    # rightly fails here rather than serve wrong rows.
-    from vectordb_data_ingestion_spark.streaming.incremental import (
-        _fold_recover,
-    )
-
-    _fold_recover(os.path.join(out_dir, "codes"))
-    residual, rotation = False, None
-    meta = _check_index_complete(out_dir, "serve queries")
-    if meta is not None:
-        residual = bool(meta.get("residual", False))
-        rotation = meta.get("rotation")
-        m = int(meta.get("m", m))
-        dim = int(meta.get("dim", dim))
+    codes, meta = _open_index(spark, out_dir, "serve queries")
     return IvfPqIndex(
         centroids=spark.read.parquet(os.path.join(out_dir, "centroids")),
         codebooks=spark.read.parquet(os.path.join(out_dir, "codebooks")),
-        codes=spark.read.parquet(os.path.join(out_dir, "codes")),
-        m=m,
-        dim=dim,
-        residual=residual,
-        rotation=rotation,
+        codes=codes.read(),
+        m=int(meta.get("m", m)),
+        dim=int(meta.get("dim", dim)),
+        residual=bool(meta.get("residual", False)),
+        rotation=meta.get("rotation"),
     )
 
 
@@ -445,14 +272,17 @@ def foreach_batch_index_append(
     """Incremental index maintenance (the vector-side sibling of the BM25
     postings refresh): each micro-batch of new vectors is assigned its
     coarse cell and PQ-encoded against the STORED centroids/codebooks, and
-    the rows append to the cell-partitioned ``codes/`` table. The coarse
-    quantizer and codebooks are frozen at build time — standard IVF
-    practice (re-train offline when drift accumulates; the index swap is a
-    directory rename). Queries see new vectors immediately: the index
-    tables are the single source of truth, no rebuild, no state in
-    executor memory."""
-    import os as _os
+    the rows append to the cell-partitioned ``codes/`` table as one
+    manifest commit. The coarse quantizer and codebooks are frozen at
+    build time — standard IVF practice (re-train offline when drift
+    accumulates and rebuild with :func:`build_ivfpq_index`). Queries see
+    new vectors immediately: the index tables are the single source of
+    truth, no rebuild, no state in executor memory.
 
+    ``foreachBatch`` is at-least-once: each append carries
+    ``(writer, batch_id)`` into the codes manifest, so a replayed batch
+    commits nothing — the writer is fixed per index, so a stream restarted
+    from a NEW checkpoint (batch ids from 0 again) needs a fresh index."""
     from vectordb_data_ingestion_spark.operators.pq import pq_encode_vectorized
     from vectordb_data_ingestion_spark.operators.similarity import (
         assign_ivf_cells_vectorized,
@@ -461,23 +291,16 @@ def foreach_batch_index_append(
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # upgraded deployments: lift a pre-two-level flat cell= layout
-        # under batch=base before adding batch-keyed subdirs next to it
-        _migrate_legacy_flat_codes(_os.path.join(out_dir, "codes"))
+        spark = batch_df.sparkSession
         # same completion gate as load_ivfpq_index: never append into a
         # build that died between its meta write and its data writes
-        meta = _check_index_complete(out_dir, "accept appends")
-        spark = batch_df.sparkSession
-        centroids = spark.read.parquet(_os.path.join(out_dir, "centroids"))
-        codebooks = spark.read.parquet(_os.path.join(out_dir, "codebooks"))
+        codes_tbl, meta = _open_index(spark, out_dir, "accept appends")
+        centroids = spark.read.parquet(os.path.join(out_dir, "centroids"))
+        codebooks = spark.read.parquet(os.path.join(out_dir, "codebooks"))
         # appends MUST match the stored encoding: direct-encoded rows
         # appended to a residual index (or vice versa) would silently
         # corrupt every query that touches their cells
-        residual, rotation = False, None
-        if meta is not None:
-            residual = bool(meta.get("residual", False))
-            rotation = meta.get("rotation")
-        if residual:
+        if meta.get("residual", False):
             from vectordb_data_ingestion_spark.operators.pq import (
                 pq_encode_residual_vectorized,
             )
@@ -485,7 +308,7 @@ def foreach_batch_index_append(
             codes = pq_encode_residual_vectorized(
                 batch_df, centroids, codebooks, m, dim, vec_col=vec_col,
                 id_col=id_col, centroid_id=centroid_id,
-                centroid_vec=centroid_vec, rotation=rotation,
+                centroid_vec=centroid_vec, rotation=meta.get("rotation"),
             )
         else:
             assigned = assign_ivf_cells_vectorized(
@@ -497,11 +320,8 @@ def foreach_batch_index_append(
                 batch_df, codebooks, m, dim, vec_col=vec_col, id_col=id_col
             )
             codes = encoded.join(assigned.select(id_col, "cell"), id_col)
-        # batch-keyed subdir + overwrite: a RETRIED micro-batch rewrites
-        # its own partition instead of double-appending (foreachBatch is
-        # at-least-once; the append form broke the determinism claim)
-        codes.write.mode("overwrite").partitionBy("cell").parquet(
-            _os.path.join(out_dir, "codes", f"batch={int(batch_id)}")
+        codes_tbl.upsert(
+            codes, txn=("foreach_batch_index_append", int(batch_id))
         )
 
     return (

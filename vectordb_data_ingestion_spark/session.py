@@ -124,18 +124,17 @@ def _table_key(path: str):
     """Content-sensitive memo key for a local parquet table (ADVICE r10):
     mtime alone misses same-second rewrites and in-place part-file
     overwrites under a directory, so the key also carries sizes — for a
-    directory, the sorted (name, mtime, size) of its entries."""
+    directory, the sorted (relative path, mtime, size) of every file
+    beneath it, partition subdirectories included."""
     apath = os.path.abspath(path)
     if os.path.isdir(apath):
-        with os.scandir(apath) as it:
-            entries = tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime, e.stat().st_size)
-                    for e in it
-                    if e.is_file()
-                )
-            )
-        return (apath, entries)
+        entries = []
+        for dirpath, _dirs, names in os.walk(apath):
+            for n in names:
+                st = os.stat(os.path.join(dirpath, n))
+                rel = os.path.relpath(os.path.join(dirpath, n), apath)
+                entries.append((rel, st.st_mtime, st.st_size))
+        return (apath, tuple(sorted(entries)))
     st = os.stat(apath)
     return (apath, st.st_mtime, st.st_size)
 
@@ -281,14 +280,22 @@ def values_df(spark: SparkSession, rows, ddl: str):
     return spark.sql(f"SELECT {cols} FROM (VALUES {vals}) AS __v({names})")
 
 
-# spread()'s partition probe, memoized per (table content key, parallelism):
-# ``df.rdd.getNumPartitions()`` forces a plan->RDD conversion on the driver
-# for every call (the same toRdd cost class the r10 round attacked, ~10-30 ms
-# x ~40 call sites x bench runs). A bare table load's scan split count is a
-# pure function of the file set and the session's parallelism/split confs, so
-# the probe result is memoized for DataFrames that carry the load_tables
-# source marker; derived DataFrames (post-select/filter) still probe live.
+# spread()'s partition probe, memoized per (table content key, parallelism,
+# split confs): ``df.rdd.getNumPartitions()`` forces a plan->RDD conversion on
+# the driver for every call (the same toRdd cost class the r10 round
+# attacked, ~10-30 ms x ~40 call sites x bench runs). A bare table load's
+# scan split count is a pure function of the file set, the session's
+# parallelism and the split confs below, so the probe result is memoized for
+# DataFrames that carry the load_tables source marker; derived DataFrames
+# (post-select/filter) still probe live. Bounded: the oldest entry goes
+# first once the memo holds _NPART_CACHE_MAX keys.
 _NPART_CACHE: dict = {}
+_NPART_CACHE_MAX = 256
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+)
 
 
 def spread(df, min_partitions: int | None = None):
@@ -301,10 +308,13 @@ def spread(df, min_partitions: int | None = None):
     want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     key = getattr(df, "_graft_table_key", None)
     if key is not None:
-        key = (key, want)
+        conf = df.sparkSession.conf
+        key = (key, want, *(conf.get(c, None) for c in _SPLIT_CONFS))
         nparts = _NPART_CACHE.get(key)
         if nparts is None:
             nparts = df.rdd.getNumPartitions()
+            if len(_NPART_CACHE) >= _NPART_CACHE_MAX:
+                del _NPART_CACHE[next(iter(_NPART_CACHE))]
             _NPART_CACHE[key] = nparts
     else:
         nparts = df.rdd.getNumPartitions()

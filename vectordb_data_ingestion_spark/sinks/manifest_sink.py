@@ -29,7 +29,10 @@ Correctness properties, each pinned by tests/test_manifest_sink.py:
   ``pbucket=`` files its keys hash into — untouched buckets' files carry
   over into the new manifest by REFERENCE, zero bytes copied;
 - **replay idempotence** (the refresh contract): delete-then-insert with
-  the same batch re-applied converges to the same visible rows;
+  the same batch re-applied converges to the same visible rows; a pure
+  append passes ``upsert(df, txn=(writer_id, batch_id))`` and a replayed
+  batch id commits nothing (Delta's idempotent-write record, carried
+  through every later commit);
 - **snapshot reads**: every committed manifest generation is also written
   to an immutable ``MANIFEST.v<commit_id>`` key (create-only put), so
   ``read_at(commit_id)`` reproduces any past visible state whose segments
@@ -201,15 +204,19 @@ class ManifestVectorSink:
         time.sleep(0.01 * min(attempt + 1, 10))
 
     def _commit(self, manifest: dict | None, segments: list[dict],
-                token: object, schema_json: str | None = None) -> int | None:
+                token: object, schema_json: str | None = None,
+                txn: tuple[str, int] | None = None) -> int | None:
         """One commit attempt: stamp the next ``commit_id``, CAS the
         current manifest, and on success publish the generation to its
         immutable ``MANIFEST.v<id>`` history key (create-only put — the
         id was won by the CAS, so the create can only collide with a
         retried self, which is idempotent). ``schema_json`` records the
         latest writer's schema (carried forward when None) so deletes can
-        resolve the stored key type without a sink read. Returns the
-        committed id, or None if the CAS lost.
+        resolve the stored key type without a sink read. ``txn`` records
+        ``(writer_id, batch_id)`` in the manifest's ``txns`` map (carried
+        forward like ``schema``, so deletes and compactions keep every
+        writer's last batch). Returns the committed id, or None if the
+        CAS lost.
 
         Before CAS-ing, HEAL the history key of the generation we read: a
         committer can crash (or lose the put response) between winning
@@ -235,6 +242,11 @@ class ManifestVectorSink:
             "commit_id": commit_id,
             "schema": schema_json or (manifest or {}).get("schema"),
         }
+        txns = (manifest or {}).get("txns")
+        if txn is not None:
+            txns = {**(txns or {}), txn[0]: int(txn[1])}
+        if txns:
+            new["txns"] = txns
         # byte seam: serialize once, reuse for the history publish;
         # parsed seam: no full-state serialize at all (the store diffs
         # the dict and history is implicit in the log)
@@ -446,7 +458,21 @@ class ManifestVectorSink:
             return True
         return self._dir_in_history(entry["dir"], first_seen + 1, cur_id)
 
-    def upsert(self, df: DataFrame) -> None:
+    def upsert(
+        self, df: DataFrame, txn: tuple[str, int] | None = None
+    ) -> None:
+        """Append ``df`` as one fresh segment, committed by CAS.
+
+        ``txn=(writer_id, batch_id)`` makes the append idempotent under
+        replay (Delta Lake's ``txnAppId``/``txnVersion``): the manifest
+        keeps each writer's last committed batch id, and an upsert whose
+        batch id is at or below it commits nothing. ``foreachBatch``
+        delivers at least once, so a micro-batch re-run after a crash
+        between its sink commit and its offset commit lands exactly once
+        without reading or rewriting any stored row. The writer id must be
+        stable across restarts of the same stream — and must change when
+        its batch ids restart from 0 (a new checkpoint), or the new
+        stream's first batches would be skipped as replays."""
         if self.n_buckets:
             # recompute, never trust a caller-supplied bucket column
             df = df.withColumn(self.BUCKET_COL, self._bucket_expr(self.key_col))
@@ -489,9 +515,18 @@ class ManifestVectorSink:
                 entry["dir"], first_seen + 1, cur_id
             ):
                 return
+            # replayed batch: this writer's batch id is already committed
+            # (checked after the lost-response guards, so the staged
+            # segment dropped here is never one a manifest references)
+            if txn is not None and int(
+                ((manifest or {}).get("txns") or {}).get(txn[0], -1)
+            ) >= int(txn[1]):
+                self._drop_segment(entry)
+                return
             segments = [*existing, entry]
             if self._commit(
-                manifest, segments, token, schema_json=df.schema.json()
+                manifest, segments, token, schema_json=df.schema.json(),
+                txn=txn,
             ) is not None:
                 return
             self._cas_backoff(attempt)
@@ -724,9 +759,11 @@ class ManifestVectorSink:
         exceeds ``max_segments``, run the SIZE-TIERED fold
         (:meth:`compact_small`) — never the full rewrite. Every mutation
         adds a segment, and each segment adds a scan branch to every read —
-        the same batch-count small-files growth the streaming near-dup
-        index compaction bounds (``compact_near_dup_index``); but that
-        overhead lives almost entirely in the newest (small) segments, so
+        batch-count small-files growth (the streaming index tables —
+        near-dup ``bands``/``shingles``, ivfpq ``codes`` — accrete one
+        segment per micro-batch and fold through this same
+        :meth:`compact_small`); but that overhead lives almost entirely
+        in the newest (small) segments, so
         folding only those keeps the maintenance cost proportional to the
         small-segment mass instead of the sink size — at 100 TB a full
         :meth:`compact` would be a full-corpus rewrite (VERDICT r7 item 2).
