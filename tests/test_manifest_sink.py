@@ -530,13 +530,245 @@ def test_manifest_sink_schema_evolution(spark, tmp_path, binding):
     }
     assert got == {("a", 1, None), ("b", 2, "en")}
     # deletes across evolved segments still work (anti-join on the shared
-    # key column; survivors keep their own segment's schema via the same
-    # by-name union)
+    # key column; survivors are read under the table schema)
     sink.delete_where("chunk_id", ["a"])
     got = {
         (r["chunk_id"], r["v"], r["lang"]) for r in sink.read().collect()
     }
     assert got == {("b", 2, "en")}
+
+
+def _jobs_during(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched, counted through
+    a job group once the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_sink_read_is_one_pinned_scan(spark, tmp_path, binding):
+    """A read of an unpartitioned, unbucketed sink is ONE scan pinned to
+    the manifest's table schema: no footer-inference job per segment, and
+    the small segment files pack into at most ``defaultParallelism``
+    splits instead of one per file (4 segments x 2 files here)."""
+    sink = _sink(spark, tmp_path, binding, name="scan")
+    for i in range(4):
+        sink.upsert(
+            spark.createDataFrame(
+                [(f"c{i}_{j}", float(j)) for j in range(20)],
+                "chunk_id string, v double",
+            ).repartition(2)
+        )
+    df, jobs = _jobs_during(spark, sink.read)
+    assert jobs == 0
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert df.count() == 80
+
+
+def test_manifest_sink_table_schema_merges_writers(spark, tmp_path, binding):
+    """The manifest records the by-name merge of every writer's schema —
+    new columns appended, int→long and float→double widened as
+    unionByName widens them — never just the last writer's, so a writer
+    that omits columns doesn't narrow the table. Deletes and compactions
+    keep it; ``read_at`` reads a generation under its own schema; a type
+    conflict unionByName rejects refuses the upsert."""
+    sink = _sink(spark, tmp_path, binding, name="merge")
+    writers = [
+        spark.createDataFrame(
+            [("a", 1, 1.5)], "chunk_id string, v int, f float"
+        ),
+        spark.createDataFrame(
+            [("b", 2, 2.5, "en")],
+            "chunk_id string, v long, f double, lang string",
+        ),
+        spark.createDataFrame([("c",)], "chunk_id string"),
+        spark.createDataFrame([("d", 4)], "chunk_id string, v long"),
+    ]
+    for w in writers:
+        sink.upsert(w)
+    union = writers[0]
+    for w in writers[1:]:
+        union = union.unionByName(w, allowMissingColumns=True)
+    want_types = union.schema.simpleString()
+    assert want_types == (
+        "struct<chunk_id:string,v:bigint,f:double,lang:string>"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*union.columns).collect())
+
+    got = sink.read()
+    assert got.schema.simpleString() == want_types
+    assert rows(got) == rows(union)
+
+    assert sink.compact_small(small_bytes=1 << 30) == 4
+    assert sink.read().schema.simpleString() == want_types
+    sink.delete_where("chunk_id", ["a", "b"])
+    assert sink.read().schema.simpleString() == want_types
+    sink.upsert(spark.createDataFrame([("e",)], "chunk_id string"))
+    assert sink.compact() == 2
+    got = sink.read()
+    assert got.schema.simpleString() == want_types
+    assert rows(got) == [
+        ("c", None, None, None), ("d", 4, None, None), ("e", None, None, None)
+    ]
+
+    v1 = sink.read_at(1)
+    assert v1.schema.simpleString() == writers[0].schema.simpleString()
+    assert [tuple(r) for r in v1.collect()] == [("a", 1, 1.5)]
+
+    before = rows(sink.read())
+    with pytest.raises(Exception, match="(?i)incompatible|cannot"):
+        sink.upsert(
+            spark.createDataFrame([("x", True)], "chunk_id string, v boolean")
+        )
+    assert rows(sink.read()) == before
+
+
+def test_manifest_sink_widening_a_pinned_scan_cannot_read(
+    spark, tmp_path, binding
+):
+    """bigint→double is a widening unionByName applies but a parquet
+    scan pinned to ``double`` fails on: such a table reads each segment
+    under its own footer schema and unions by name, as before the table
+    schema existed — the same rows and types."""
+    sink = _sink(spark, tmp_path, binding, name="wide")
+    a = spark.createDataFrame([("a", 1)], "chunk_id string, v long")
+    b = spark.createDataFrame([("b", 1.5)], "chunk_id string, v double")
+    sink.upsert(a)
+    sink.upsert(b)
+    want = a.unionByName(b)
+    got = sink.read()
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert sorted(got.collect()) == sorted(want.collect())
+    sink.delete_where("chunk_id", ["a"])
+    assert [tuple(r) for r in sink.read().collect()] == [("b", 1.5)]
+
+
+def test_manifest_sink_schemaless_manifest_reads_and_is_seeded(
+    spark, tmp_path, binding
+):
+    """A manifest without a table schema (written before one was
+    recorded; it carries only the last writer's ``schema``) reads by
+    per-segment inference, and its next commit seeds the table schema
+    from that inferred read — every column, not the last writer's."""
+    src = _sink(spark, tmp_path, "file", name="old")
+    src.upsert(
+        spark.createDataFrame(
+            [("a", 1, "en")], "chunk_id string, v long, lang string"
+        )
+    )
+    last = spark.createDataFrame([("b",)], "chunk_id string")
+    src.upsert(last)
+    manifest, _ = src._get_manifest()
+    old = {
+        "layout": manifest["layout"],
+        "segments": manifest["segments"],
+        "commit_id": 1,
+        "schema": last.schema.json(),
+    }
+    if binding == "file":
+        store = FileConditionalStore(str(tmp_path / "old_ctrl"))
+    elif binding == "memory":
+        store = MemoryConditionalStore()
+    else:
+        from vectordb_data_ingestion_spark.sinks.log_store import (
+            LogConditionalStore,
+        )
+
+        store = LogConditionalStore(MemoryConditionalStore())
+    assert store.put_if("MANIFEST", json.dumps(old).encode(), None)
+    sink = ManifestVectorSink(
+        spark, str(tmp_path / "old"), partition_col=None, store=store
+    )
+    got = {tuple(r) for r in sink.read().select("chunk_id", "v", "lang")
+           .collect()}
+    assert got == {("a", 1, "en"), ("b", None, None)}
+
+    sink.delete_where("chunk_id", ["b"])
+    manifest, _ = sink._get_manifest()
+    seeded = json.loads(manifest["table_schema"])
+    assert [f["name"] for f in seeded["fields"]] == ["chunk_id", "v", "lang"]
+    _df, jobs = _jobs_during(spark, sink.read)
+    assert jobs == 0
+    assert [tuple(r) for r in sink.read().select("chunk_id", "v", "lang")
+            .collect()] == [("a", 1, "en")]
+
+
+def test_manifest_sink_partition_columns_keep_writer_type(spark, tmp_path):
+    """Partition columns read back in the writer's type and value, not
+    Spark's partition-value inference (``"007"`` used to read as int 7,
+    a string ``load_dt`` as DATE), and a partitioned read launches no
+    inference job either."""
+    sink = ManifestVectorSink(
+        spark, str(tmp_path / "tenant"), partition_col="tenant"
+    )
+    df = spark.createDataFrame(
+        [("a", "007"), ("b", "008")], "chunk_id string, tenant string"
+    )
+    sink.upsert(df)
+    got, jobs = _jobs_during(spark, sink.read)
+    assert jobs == 0
+    assert got.schema["tenant"].dataType.simpleString() == "string"
+    assert sorted(tuple(r) for r in got.collect()) == [
+        ("a", "007"), ("b", "008"),
+    ]
+
+    dated = ManifestVectorSink(spark, str(tmp_path / "dated"))
+    dated.upsert(
+        spark.createDataFrame(
+            [("a", "2024-01-01")], "chunk_id string, load_dt string"
+        )
+    )
+    assert dated.read().schema["load_dt"].dataType.simpleString() == "string"
+    assert dated.read().first()["load_dt"] == "2024-01-01"
+
+
+def test_manifest_sink_bucketed_partial_entries_read(spark, tmp_path, binding):
+    """A bucketed sink whose entries a key delete partially dereferenced
+    (per-file lists instead of "full") reads exactly the surviving rows
+    through its pinned per-segment branches, with no inference job."""
+    sink = _sink(
+        spark, tmp_path, binding, name="bpart", key_col="chunk_id",
+        n_buckets=4,
+    )
+    for i in range(2):
+        sink.upsert(
+            spark.createDataFrame(
+                [(f"c{i}_{j}", j) for j in range(12)],
+                "chunk_id string, v int",
+            )
+        )
+    sink.delete_where("chunk_id", ["c0_3", "c1_5"])
+    manifest, _ = sink._get_manifest()
+    assert any(not s.get("full") for s in manifest["segments"])
+    got, jobs = _jobs_during(spark, sink.read)
+    assert jobs == 0
+    assert got.columns == ["chunk_id", "v"]
+    want = sorted(
+        (f"c{i}_{j}", j)
+        for i in range(2)
+        for j in range(12)
+        if (i, j) not in {(0, 3), (1, 5)}
+    )
+    assert sorted(tuple(r) for r in got.collect()) == want
+
+
+def test_read_of_missing_sink_creates_nothing(spark, tmp_path):
+    """Opening a sink to read leaves no control objects behind: a read of
+    a path with no sink raises FileNotFoundError and creates nothing."""
+    path = tmp_path / "nowhere"
+    with pytest.raises(FileNotFoundError):
+        ManifestVectorSink(spark, str(path), partition_col=None).read()
+    assert not path.exists()
 
 
 def test_manifest_sink_maybe_compact_threshold(spark, tmp_path):
@@ -737,10 +969,8 @@ def test_manifest_sink_partition_drop_is_manifest_only(spark, tmp_path, binding)
     manifest, _ = sink._get_manifest()
     # no new segment: same dirs, just fewer files referenced
     assert [s["dir"] for s in manifest["segments"]] == segs_before
-    # str(): with only date-shaped values left, Spark's standard partition
-    # type inference reads load_dt as a date (same as any partitioned
-    # parquet dir read)
-    got = {(r["chunk_id"], str(r["load_dt"])) for r in sink.read().collect()}
+    # load_dt reads back as the writer's string, not an inferred date
+    got = {(r["chunk_id"], r["load_dt"]) for r in sink.read().collect()}
     assert got == {("c", "2024-01-02")}
     # idempotent: a second drop of the same values is a no-op commit-wise
     cid = sink.current_commit_id()

@@ -904,6 +904,8 @@ def test_marker_era_crashed_build_fails_loudly(spark, tmp_path):
     )
     with pytest.raises(RuntimeError, match="no codes manifest.*rebuild"):
         load_ivfpq_index(spark, out)
+    # opening the sink to refuse it leaves no control objects behind
+    assert not os.path.exists(os.path.join(codes_dir, "_ctrl"))
 
     # the protocol-1 shape (no protocol field, no marker) refuses the same
     meta_path = os.path.join(out, "_meta.json")
@@ -926,6 +928,7 @@ def test_marker_era_crashed_build_fails_loudly(spark, tmp_path):
     with pytest.raises(Exception, match="no codes manifest"):
         q.awaitTermination(120)
     assert not os.path.exists(os.path.join(codes_dir, "_data"))
+    assert not os.path.exists(os.path.join(codes_dir, "_ctrl"))
 
     # rebuilding in place replaces the old layout
     build_ivfpq_index(emb, cents, books, out, m=m, dim=dim)

@@ -1,16 +1,23 @@
 """Manifest-sink segment-growth probe — the read-cost axis the delete
-probe doesn't measure: every mutation appends a segment, and every
-segment adds a scan branch to every read (the commit-log analogue of the
-streaming index's batch-count small-files growth,
-tools/probe_streaming_state.py). This measures read latency at growing
-segment counts and the reset `maybe_compact` buys.
+probe doesn't measure: every mutation appends a segment (the commit-log
+analogue of the streaming index's batch-count small-files growth,
+tools/probe_streaming_state.py). This measures read latency and Spark
+jobs per read at growing segment counts, and the reset `maybe_compact`
+buys, for two layouts:
+
+- ``buckets_16``: a 16-bucket layout, read as one pinned scan branch per
+  segment — each segment adds a branch to every read;
+- ``buckets_0``: no partition or bucket column, read as ONE pinned file
+  scan over every segment dir — the overhead should stay flat.
 
 Method: K micro-batch upserts (data volume grows WITH the axis — each
 batch appends rows, as a real refresh does), read-noop timed at
 checkpoints, then compacted and re-timed. The controlled segment-count
 comparison is the LAST pair: read at K segments vs read after compaction
 — same rows, same bytes, 1 segment — so `segment_overhead_at_max` isolates
-the scan-branch cost from data growth.
+the per-segment cost from data growth. `jobs_per_read` counts the Spark
+jobs building the read's DataFrame launches (footer inference), before
+any row moves.
 
 Writes one JSON line; findings go to BENCH_NOTES.md / SCALE.md.
 
@@ -56,6 +63,66 @@ def timed_read(sink, runs: int = 3) -> float:
     return round(times[len(times) // 2], 3)
 
 
+def jobs_per_read(spark, sink) -> int:
+    """Spark jobs launched while building ``sink.read()`` (no rows
+    move): the per-segment footer-inference cost of a read."""
+    sc = spark.sparkContext
+    group = f"probe-read-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "read plan")
+    try:
+        sink.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def growth_curve(spark, path: str, per_batch: int, batches: int,
+                 n_buckets: int) -> dict:
+    sink = ManifestVectorSink(
+        spark, path, partition_col=None,
+        key_col="chunk_id" if n_buckets else None, n_buckets=n_buckets,
+    )
+    curve: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    checkpoints = {1, 4, 16, batches}
+    for i in range(batches):
+        sink.upsert(batch_df(spark, i * per_batch, per_batch))
+        if (i + 1) in checkpoints:
+            key = f"read_at_{i + 1}_segments"
+            curve[key] = timed_read(sink)
+            jobs[key] = jobs_per_read(spark, sink)
+            print(
+                f"buckets={n_buckets} {i + 1} segments: read "
+                f"{curve[key]} s, {jobs[key]} jobs",
+                flush=True,
+            )
+    merged = sink.maybe_compact(max_segments=8)
+    curve["read_after_compact"] = timed_read(sink)
+    jobs["read_after_compact"] = jobs_per_read(spark, sink)
+    print(
+        f"buckets={n_buckets} compacted {merged} segments: read "
+        f"{curve['read_after_compact']} s, "
+        f"{jobs['read_after_compact']} jobs",
+        flush=True,
+    )
+    last = curve[f"read_at_{batches}_segments"]
+    return {
+        "curve": curve,
+        "jobs_per_read": jobs,
+        # data grew ~`batches`x along this axis too — NOT a pure
+        # segment-overhead number
+        "read_growth_with_data_and_segments": round(
+            last / curve["read_at_1_segments"], 2
+        ),
+        # same data, 1 segment vs `batches` segments: the isolated
+        # per-segment overhead maybe_compact resets
+        "segment_overhead_at_max": round(
+            last / curve["read_after_compact"], 2
+        ),
+    }
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     tiered_only = "--tiered-only" in sys.argv[1:]
@@ -63,30 +130,14 @@ def main() -> None:
     batches = int(args[1]) if len(args) > 1 else 64
     spark = get_spark(app_name="probe-manifest-segments")
     root = tempfile.mkdtemp(prefix="manifest_seg_probe_")
-    curve: dict[str, float] = {}
+    arms: dict[str, dict] = {}
     try:
         if not tiered_only:
-            sink = ManifestVectorSink(
-                spark, f"{root}/sink", partition_col=None,
-                key_col="chunk_id", n_buckets=16,
-            )
-            checkpoints = {1, 4, 16, batches}
-            for i in range(batches):
-                sink.upsert(batch_df(spark, i * per_batch, per_batch))
-                if (i + 1) in checkpoints:
-                    curve[f"read_at_{i + 1}_segments"] = timed_read(sink)
-                    print(
-                        f"{i + 1} segments: read "
-                        f"{curve[f'read_at_{i + 1}_segments']} s",
-                        flush=True,
-                    )
-            merged = sink.maybe_compact(max_segments=8)
-            curve["read_after_compact"] = timed_read(sink)
-            print(
-                f"compacted {merged} segments: read "
-                f"{curve['read_after_compact']} s",
-                flush=True,
-            )
+            for n_buckets in (16, 0):
+                arms[f"buckets_{n_buckets}"] = growth_curve(
+                    spark, f"{root}/sink_{n_buckets}", per_batch, batches,
+                    n_buckets,
+                )
         # ------------------------------------------------------------------
         # phase 2 (r8): size-tiered compaction cost is bounded by the
         # SMALL-segment mass, not the sink size — the shape a 100 TB sink
@@ -133,19 +184,7 @@ def main() -> None:
             "rows_per_batch": per_batch,
             "batches": batches,
             "unit": "sec",
-            "curve": curve,
-            # data grew ~`batches`x along this axis too — NOT a pure
-            # segment-overhead number
-            "read_growth_with_data_and_segments": round(
-                curve[f"read_at_{batches}_segments"]
-                / curve["read_at_1_segments"], 2
-            ) if curve else None,
-            # same data, 1 segment vs `batches` segments: the isolated
-            # scan-branch overhead maybe_compact resets
-            "segment_overhead_at_max": round(
-                curve[f"read_at_{batches}_segments"]
-                / curve["read_after_compact"], 2
-            ) if curve else None,
+            "arms": arms,
             "tiered": {
                 **tiered,
                 "small_batches": small_batches,

@@ -341,7 +341,9 @@ def build_bm25_index(
 
     ``term_filter`` restricts postings/terms to the given term set while
     keeping corpus-wide stats — the ad-hoc (:func:`bm25_topk`) shape,
-    where only query terms survive to the groupBy."""
+    where only query terms survive to the groupBy.
+
+    ``id_col`` must be unique: ``df`` is a plain row count per term."""
     toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
     docs = corpus.select(
         F.col(id_col), F.size(toks).alias("dl"), toks.alias("__toks")

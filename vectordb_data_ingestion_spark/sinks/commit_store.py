@@ -128,11 +128,12 @@ class FileConditionalStore:
     version sidecar is replaced after the data, so a reader never sees a
     torn value (a crash between the two replaces leaves the new data with
     the old token — the next put_if against that token wins exactly once,
-    same as a lost-response retry against a real store)."""
+    same as a lost-response retry against a real store). The root is
+    created by the first ``put_if``/``delete_if``: opening a store to read
+    leaves nothing behind, and a ``get`` on a missing root is None."""
 
     def __init__(self, root: str):
         self.root = root
-        os.makedirs(root, exist_ok=True)
 
     def _paths(self, key: str):
         safe = key.replace("/", "__")
@@ -145,6 +146,7 @@ class FileConditionalStore:
     def _atomic(self, key: str):
         import fcntl
 
+        os.makedirs(self.root, exist_ok=True)
         lock_path = os.path.join(self.root, "_store.lock")
         fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
         try:
@@ -166,6 +168,8 @@ class FileConditionalStore:
             return 0
 
     def get(self, key: str):
+        if not os.path.isdir(self.root):
+            return None
         data_path, ver_path = self._paths(key)
         with self._atomic(key):
             ver = self._current_ver(data_path, ver_path)
