@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 from vectordb_data_ingestion_spark.operators.bpe import (
     apply_merge,
-    bpe_segment,
+    bpe_segment_vectorized,
     bpe_train,
     pair_counts,
     word_freq_table,
@@ -51,7 +51,7 @@ def test_bpe_segment_uses_learned_merges(spark):
         "doc_id long, text string",
     )
     merges = bpe_train(docs, num_merges=4)
-    seg = bpe_segment(
+    seg = bpe_segment_vectorized(
         spark.createDataFrame([(1, "low lower")], "id int, text string"),
         merges,
     )
@@ -87,22 +87,17 @@ def test_bpe_segment_ignores_surrounding_whitespace(spark):
         "doc_id long, text string",
     )
     merges = bpe_train(docs, num_merges=4)
-    seg = bpe_segment(
+    seg = bpe_segment_vectorized(
         spark.createDataFrame([(1, "  low lower \n")], "id int, text string"),
         merges,
     )
     assert seg.collect()[0]["bpe_tokens"] == ["low</w>", "lowe", "r", "</w>"]
 
 
-def test_bpe_segment_vectorized_matches_fold(spark):
-    """The Arrow-batched cached segmenter must produce byte-identical token
-    streams to the fold-based bpe_segment for the same learned merges,
-    including repeated words (cache hits), unseen-at-train words, and
-    leading/trailing whitespace."""
-    from vectordb_data_ingestion_spark.operators.bpe import (
-        bpe_segment_vectorized,
-    )
-
+def test_bpe_segment_vectorized_golden(spark):
+    """Golden token streams for the learned merges: repeated words (cache
+    hits), words unseen at training, leading/trailing whitespace, empty
+    text, tabs/newlines as separators, and NULL text -> NULL, not []."""
     train_docs = spark.createDataFrame(
         [(0, "low low low low low lower lower lowest lowest lowest")],
         "doc_id long, text string",
@@ -114,19 +109,18 @@ def test_bpe_segment_vectorized_matches_fold(spark):
             (1, "  slow below  "),
             (2, ""),
             (3, "low\tlow\nlow"),
-            (4, None),  # NULL text: both forms yield NULL, not [] (r5)
+            (4, None),
         ],
         "doc_id long, text string",
     )
-    fold = {
-        r["doc_id"]: r["bpe_tokens"] and list(r["bpe_tokens"])
-        for r in bpe_segment(probe, merges).collect()
-    }
-    vec = {
+    got = {
         r["doc_id"]: r["bpe_tokens"] and list(r["bpe_tokens"])
         for r in bpe_segment_vectorized(probe, merges).collect()
     }
-    assert vec == fold
-    assert vec[0][0] == "low</w>"  # learned merges actually applied
-    assert vec[2] == []
-    assert vec[4] is None
+    assert got == {
+        0: ["low</w>", "lowe", "r", "</w>", "lowe", "s", "t", "</w>", "low</w>"],
+        1: ["s", "low</w>", "b", "e", "low</w>"],
+        2: [],
+        3: ["low</w>", "low</w>", "low</w>"],
+        4: None,
+    }

@@ -280,3 +280,52 @@ def test_commit_primitives_stay_in_the_conditional_store():
     assert [c[:3] for c in _primitive_calls(probe)] == [
         ("f", "os", "replace"), ("f", "fcntl", "flock"),
     ]
+
+
+# Kernels allowed to keep a JVM form X beside an Arrow-batched
+# X_vectorized. Each other kernel has exactly one implementation. The
+# registry and the collection facade still run different forms of
+# topk_by_certainty; settling the retrieval path empties this list.
+_TWIN_KERNELS_ALLOWED = {"topk_by_certainty"}
+
+
+def _public_functions(tree):
+    """Names of the module's top-level public functions."""
+    import ast
+
+    return {
+        node.name
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and not node.name.startswith("_")
+    }
+
+
+def test_no_twin_kernel_forms():
+    """CI guard: across operators/ and functions/, a public
+    ``X_vectorized`` must not have a public ``X`` beside it (unless X is
+    allow-listed). A second form of one kernel is code that only parity
+    tests run; keep the form the callers use and test it directly."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "vectordb_data_ingestion_spark"
+    )
+    names = set()
+    for sub in ("operators", "functions"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            names |= _public_functions(ast.parse(path.read_text()))
+    twins = {
+        n[: -len("_vectorized")]
+        for n in names
+        if n.endswith("_vectorized") and n[: -len("_vectorized")] in names
+    }
+    assert twins - _TWIN_KERNELS_ALLOWED == set(), sorted(twins)
+    # the allow-list names live pairs, not stale entries
+    assert _TWIN_KERNELS_ALLOWED <= twins
+    # the scanner sees only top-level public defs
+    probe = ast.parse(
+        "def a():\n    def b(): pass\ndef _c(): pass\nclass D: pass\n"
+    )
+    assert _public_functions(probe) == {"a"}

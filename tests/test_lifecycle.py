@@ -13,7 +13,7 @@ from vectordb_data_ingestion_spark.operators.catalog import (
     scd2_history,
 )
 from vectordb_data_ingestion_spark.operators.similarity import (
-    assign_ivf_cells,
+    assign_ivf_cells_vectorized,
     kmeans_fit,
 )
 
@@ -128,7 +128,7 @@ def test_scd2_null_states(spark):
 def _inertia(emb, centroids):
     """Mean (1 - cosine) to the assigned centroid - the quantity Lloyd
     minimizes under cosine assignment."""
-    assigned = assign_ivf_cells(emb, centroids)
+    assigned = assign_ivf_cells_vectorized(emb, centroids)
     from vectordb_data_ingestion_spark.functions.vectors import (
         cosine_similarity,
         to_double_array,
@@ -168,7 +168,9 @@ def test_kmeans_fit_converges_and_is_deterministic(spark):
 def test_semantic_dedup_removes_exact_directional_copies(spark):
     """Scaled copies (cosine 1 to their originals) must all be dominated;
     every original must survive (random embeddings are far apart at 0.999)."""
-    from vectordb_data_ingestion_spark.operators.dedup import semantic_dedup
+    from vectordb_data_ingestion_spark.operators.dedup import (
+        semantic_dedup_vectorized,
+    )
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     base = emb.select(
@@ -184,7 +186,7 @@ def test_semantic_dedup_removes_exact_directional_copies(spark):
         F.col("vec_id").alias("c_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("c_embedding"),
     )
-    kept = {r["vec_id"] for r in semantic_dedup(
+    kept = {r["vec_id"] for r in semantic_dedup_vectorized(
         corpus, centroids, threshold=0.999, vec_col="v"
     ).collect()}
     n_base = base.count()
@@ -193,87 +195,60 @@ def test_semantic_dedup_removes_exact_directional_copies(spark):
     assert len(kept) == n_base                    # every original survives
 
 
-def test_semantic_dedup_vectorized_matches_join_form(spark):
-    """The numpy-matmul path and the JVM pairwise-join path implement the
-    same dominance rule - identical survivor sets."""
+def test_semantic_dedup_zero_norm_rows_neither_dominate_nor_dominated(spark):
+    """A zero-norm vector has no cosine (NULL in the DuckDB oracle), so at
+    any threshold it never removes a row and is never removed - scoring it
+    cosine 0 would let it dominate everything at threshold <= 0."""
     from vectordb_data_ingestion_spark.operators.dedup import (
-        semantic_dedup,
         semantic_dedup_vectorized,
     )
 
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 0.0]), (4, [-1.0, 0.2])],
+        "vec_id long, embedding array<double>",
     )
-    copies = emb.filter(F.col("vec_id") % 4 == 1).select(
-        (F.col("vec_id") + 10_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x.cast("double") * 0.5).alias("v"),
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "c_id int, c_embedding array<double>"
     )
-    corpus = base.unionAll(copies)
-    centroids = emb.filter(F.col("vec_id") % 25 == 2).select(
-        F.col("vec_id").alias("c_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("c_embedding"),
+    for threshold in (0.0, -0.5, 0.95):
+        kept = sorted(
+            r["vec_id"]
+            for r in semantic_dedup_vectorized(
+                corpus, centroids, threshold=threshold
+            ).collect()
+        )
+        assert kept == [1, 2, 3, 4], threshold
+    # a real pair still dedups: row 4 vs row 1 is cosine -0.98
+    kept = sorted(
+        r["vec_id"]
+        for r in semantic_dedup_vectorized(
+            corpus, centroids, threshold=-0.99
+        ).collect()
     )
-    a = {r["vec_id"] for r in semantic_dedup(
-        corpus, centroids, threshold=0.999, vec_col="v").collect()}
-    b = {r["vec_id"] for r in semantic_dedup_vectorized(
-        corpus, centroids, threshold=0.999, vec_col="v").collect()}
-    assert a == b and len(a) > 0
-
-
-def test_assign_vectorized_matches_jvm(spark):
-    """matmul-argmax assignment is identical to the crossJoin+window form
-    (same 6dp rounding, same lowest-id tie-break)."""
-    from vectordb_data_ingestion_spark.operators.similarity import (
-        assign_ivf_cells,
-        assign_ivf_cells_vectorized,
-    )
-
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).select(
-        "vec_id", "embedding"
-    )
-    cent = emb.filter(F.col("vec_id") % 10 == 1).select(
-        F.col("vec_id").alias("c_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("c_embedding"),
-    )
-    a = {r["vec_id"]: r["cell"] for r in assign_ivf_cells(emb, cent).collect()}
-    b = {r["vec_id"]: r["cell"]
-         for r in assign_ivf_cells_vectorized(emb, cent).collect()}
-    assert a == b
-
-
-def test_kmeans_refine_mean_forms_match(spark):
-    """Per-batch numpy partial sums and the exploded JVM mean produce the
-    same refined centroids (6dp round absorbs fp association)."""
-    from vectordb_data_ingestion_spark.operators.similarity import kmeans_refine
-
-    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).select(
-        "vec_id", "embedding"
-    )
-    cent = emb.filter(F.col("vec_id") % 10 == 1).select(
-        F.col("vec_id").alias("c_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("c_embedding"),
-    )
-    a = {r["c_id"]: (list(r["c_embedding"]), r["n_members"])
-         for r in kmeans_refine(emb, cent, vectorized_mean=True).collect()}
-    b = {r["c_id"]: (list(r["c_embedding"]), r["n_members"])
-         for r in kmeans_refine(emb, cent, vectorized_mean=False).collect()}
-    assert a == b and len(a) > 0
+    assert kept == [1, 2, 3]
 
 
 def test_kmeans_fit_fused_matches_dataframe_form(spark):
-    from vectordb_data_ingestion_spark.operators.similarity import kmeans_fit
+    """The fused one-pass-per-iteration trainer equals Lloyd's as a chain
+    of kmeans_refine steps from the k lowest-id seeds."""
+    from vectordb_data_ingestion_spark.functions.vectors import to_double_array
+    from vectordb_data_ingestion_spark.operators.similarity import kmeans_refine
 
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
     a = sorted(
         (r["c_id"], tuple(r["c_embedding"]), r["n_members"])
-        for r in kmeans_fit(emb, k=5, iterations=3, fused=True).collect()
+        for r in kmeans_fit(emb, k=5, iterations=3).collect()
     )
+    centroids = emb.orderBy("vec_id").limit(5).select(
+        F.col("vec_id").alias("c_id"),
+        to_double_array(F.col("embedding")).alias("c_embedding"),
+    ).localCheckpoint()
+    for _ in range(3):
+        centroids = kmeans_refine(emb, centroids).localCheckpoint()
     b = sorted(
         (r["c_id"], tuple(r["c_embedding"]), r["n_members"])
-        for r in kmeans_fit(emb, k=5, iterations=3, fused=False).collect()
+        for r in centroids.collect()
     )
     assert a == b and len(a) > 0

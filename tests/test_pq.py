@@ -8,9 +8,8 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 from vectordb_data_ingestion_spark.operators.pq import (
-    pq_adc_topk,
-    pq_assign,
-    pq_encode,
+    pq_adc_topk_codes,
+    pq_encode_vectorized,
     pq_train,
 )
 from vectordb_data_ingestion_spark.operators.similarity import brute_force_topk
@@ -50,7 +49,7 @@ def test_pq_encode_covers_corpus_with_valid_codes(spark):
         r["sub"]: r["n"]
         for r in cb.groupBy("sub").agg(F.count("*").alias("n")).collect()
     }
-    enc = pq_encode(emb, cb, m=M, dim=DIM)
+    enc = pq_encode_vectorized(emb, cb, m=M, dim=DIM)
     rows = enc.collect()
     assert len(rows) == emb.count()
     for r in rows:
@@ -69,7 +68,7 @@ def test_adc_topk_recalls_exact_neighbors(spark):
 
     emb = _emb(spark).cache()
     cb = pq_train(emb, m=M, dim=DIM, k=8, iterations=2).cache()
-    assigned = pq_assign(emb, cb, m=M, dim=DIM).cache()
+    encoded = pq_encode_vectorized(emb, cb, m=M, dim=DIM).cache()
     hits = 0
     qids = (1, 7, 13)
     for qid in qids:
@@ -88,7 +87,9 @@ def test_adc_topk_recalls_exact_neighbors(spark):
         }
         approx = [
             r["vec_id"]
-            for r in pq_adc_topk(assigned, cb, qv, k=10, m=M, dim=DIM).collect()
+            for r in pq_adc_topk_codes(
+                encoded, cb, qv, k=10, m=M, dim=DIM
+            ).collect()
         ]
         hits += len(exact & set(approx))
     # 3 queries x top-10. Uniform-random vectors are PQ's worst case (no
@@ -96,39 +97,6 @@ def test_adc_topk_recalls_exact_neighbors(spark):
     # k in {8,16}, iters in {2,3} on this fixed corpus. 9 is the
     # regression floor; real clustered embeddings sit far above it.
     assert hits >= 9, f"ADC recall too low: {hits}/30"
-
-
-def test_pq_encode_vectorized_matches_jvm(spark):
-    """The matmul encode and the exploded-join JVM encode are bit-identical
-    (same rounding, same tie-break)."""
-    from vectordb_data_ingestion_spark.operators.pq import pq_encode_vectorized
-
-    emb = _emb(spark)
-    cb = pq_train(emb, m=M, dim=DIM, k=4, iterations=1).cache()
-    a = {r["vec_id"]: list(r["pq_codes"]) for r in pq_encode(emb, cb, M, DIM).collect()}
-    b = {r["vec_id"]: list(r["pq_codes"])
-         for r in pq_encode_vectorized(emb, cb, M, DIM).collect()}
-    assert a == b
-
-
-def test_pq_adc_codes_matches_join_form(spark):
-    from vectordb_data_ingestion_spark.operators.pq import (
-        pq_adc_topk_codes,
-        pq_encode_vectorized,
-    )
-
-    emb = _emb(spark).cache()
-    cb = pq_train(emb, m=M, dim=DIM, k=4, iterations=1).cache()
-    assigned = pq_assign(emb, cb, m=M, dim=DIM)
-    encoded = pq_encode_vectorized(emb, cb, M, DIM)
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 7).collect()[0][
-        "embedding"
-    ]]
-    a = [(r["vec_id"], r["adc"]) for r in pq_adc_topk(
-        assigned, cb, qv, k=10, m=M, dim=DIM).collect()]
-    b = [(r["vec_id"], r["adc"]) for r in pq_adc_topk_codes(
-        encoded, cb, qv, k=10, m=M, dim=DIM).collect()]
-    assert a == b
 
 
 def test_pq_adc_batch_matches_single(spark):

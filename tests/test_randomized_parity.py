@@ -117,7 +117,7 @@ def test_bpe_randomized_parity(spark):
     dict-based reference on small-alphabet random corpora that force
     repeated pairs and count ties."""
     from vectordb_data_ingestion_spark.operators.bpe import (
-        bpe_segment,
+        bpe_segment_vectorized,
         bpe_train,
     )
 
@@ -138,7 +138,7 @@ def test_bpe_randomized_parity(spark):
 
         # segmentation parity on a sample of the corpus words
         sample = sorted(set(text.split()))[:5]
-        seg = bpe_segment(
+        seg = bpe_segment_vectorized(
             spark.createDataFrame(
                 [(i, w) for i, w in enumerate(sample)], "id long, text string"
             ),

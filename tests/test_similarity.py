@@ -84,37 +84,6 @@ def test_lsh_query_hits_itself(spark):
     assert top[0]["vec_id"] == 7
 
 
-def test_vectorized_signature_parity(spark):
-    """Numpy matmul tagging is bit-identical to the Catalyst fold, single
-    and multi-table."""
-    from vectordb_data_ingestion_spark.operators.similarity import (
-        with_lsh_signature_vectorized,
-        with_lsh_signatures_multitable_vectorized,
-    )
-
-    emb = _emb(spark)
-    fold = {r[0]: r[1] for r in with_lsh_signature(emb).select("vec_id", "sig").collect()}
-    vec = {
-        r[0]: r[1]
-        for r in with_lsh_signature_vectorized(emb).select("vec_id", "sig").collect()
-    }
-    assert fold == vec
-    cols = [f"sig{t}" for t in range(3)]
-    mfold = {
-        r[0]: tuple(r[c] for c in cols)
-        for r in with_lsh_signatures_multitable(emb, n_tables=3)
-        .select("vec_id", *cols)
-        .collect()
-    }
-    mvec = {
-        r[0]: tuple(r[c] for c in cols)
-        for r in with_lsh_signatures_multitable_vectorized(emb, n_tables=3)
-        .select("vec_id", *cols)
-        .collect()
-    }
-    assert mfold == mvec
-
-
 def test_ann_topk_join_is_equi_join_and_self_hits(spark):
     """Batched ANN: the probe join must stay a hash equi-join (never a
     cartesian), and every query must at minimum retrieve itself at
@@ -191,11 +160,10 @@ def test_zero_norm_parity_jvm_vs_vectorized(spark):
     """Review r5: the vectorized paths replaced zero norms with 1.0,
     scoring zero-norm vectors certainty 0.5 (top-k) or similarity 0
     (IVF assign) while the JVM forms give cosine NULL — dropped by the
-    threshold filter / never winning under NULLS LAST. Both paths must
-    agree on degenerate data: zero-norm corpus rows never rank, and a
-    zero-norm centroid never captures a vector."""
+    threshold filter / never winning under NULLS LAST. Zero-norm corpus
+    rows never rank in either top-k form, and a zero-norm centroid never
+    captures a vector."""
     from vectordb_data_ingestion_spark.operators.similarity import (
-        assign_ivf_cells,
         assign_ivf_cells_vectorized,
         topk_by_certainty,
         topk_by_certainty_vectorized,
@@ -221,25 +189,26 @@ def test_zero_norm_parity_jvm_vs_vectorized(spark):
     assert ids_jvm == ids_vec == [1, 3]
 
     cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],
+        [(5, [0.0, 1.0]), (7, [1.0, 0.0]), (9, [0.0, 0.0])],
         "c_id int, c_embedding array<double>",
     )
     probe = spark.createDataFrame(
-        # cosine to both REAL centroids is negative: the zero-norm
-        # centroid's sim-0 would win if scored instead of masked
-        [(10, [-1.0, -1.0]), (11, [0.9, 0.1])],
+        [
+            # cosine to both REAL centroids is -0.707107 (a tie -> lowest
+            # id): the zero-norm centroid's sim-0 would win if scored
+            # instead of masked
+            (10, [-1.0, -1.0]),
+            (11, [0.9, 0.1]),
+            # a zero-norm row ties at 0 with every real centroid
+            (12, [0.0, 0.0]),
+        ],
         "vec_id long, embedding array<double>",
     )
-    jvm_cells = {
-        r["vec_id"]: r["cell"]
-        for r in assign_ivf_cells(probe, cents).collect()
-    }
-    vec_cells = {
+    cells = {
         r["vec_id"]: r["cell"]
         for r in assign_ivf_cells_vectorized(probe, cents).collect()
     }
-    assert jvm_cells == vec_cells
-    assert jvm_cells[10] in (1, 2)  # never the zero-norm centroid
+    assert cells == {10: 5, 11: 7, 12: 5}
 
 
 def test_bitext_mine_union_checkpoint_and_fallback(spark):

@@ -135,28 +135,6 @@ def bpe_train(
     return merges
 
 
-def bpe_segment(
-    df: DataFrame,
-    merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-    end_token: str = "</w>",
-) -> DataFrame:
-    """Tokenize text with a learned merge list: split to characters, apply
-    every merge in training order (pure folds, narrow). Empty tokens from
-    leading/trailing whitespace are dropped, matching training's vocab."""
-    words = F.filter(word_split(F.col(text_col)), lambda w: w != "")
-    sym_per_word = F.transform(
-        words,
-        lambda w: F.concat(F.split(w, ""), F.array(F.lit(end_token))),
-    )
-    flat = F.flatten(sym_per_word)
-    col = flat
-    for left, right, _ in merges:
-        col = apply_merge(col, left, right)
-    return df.withColumn(out_col, col)
-
-
 def bpe_segment_vectorized(
     df: DataFrame,
     merges: list[tuple[str, str, int]],
@@ -164,18 +142,19 @@ def bpe_segment_vectorized(
     out_col: str = "bpe_tokens",
     end_token: str = "</w>",
 ) -> DataFrame:
-    """Scale path for :func:`bpe_segment`: identical output, executed as an
-    Arrow-batched ``mapInPandas`` with a per-executor word->tokens cache
-    instead of chained Catalyst folds.
+    """Tokenize text with a learned merge list: split on whitespace
+    (empty tokens from leading/trailing whitespace dropped, matching
+    training's vocabulary), split each word to characters plus
+    ``end_token``, and apply every merge in training order, greedy
+    left-to-right as :func:`apply_merge` does. NULL text gives NULL
+    tokens; empty or all-whitespace text gives ``[]``.
 
-    Why this wins at corpus scale: the fold form re-derives every word's
-    segmentation character-by-character for every occurrence (8 chained
-    O(len) interpreted folds per document), while word frequency is Zipf -
-    the same few thousand distinct words cover almost all occurrences. The
-    cache makes the per-occurrence cost a dict lookup; only first-seen
-    words pay the merge scan. The merge list ships in the UDF closure
-    (tiny - it IS the tokenizer), so there is no join and no shuffle: a
-    pure narrow map, same as the fold form."""
+    Executed as an Arrow-batched ``mapInPandas`` with a per-task
+    word->tokens cache: word frequency is Zipf, so the same few thousand
+    distinct words cover almost all occurrences and the per-occurrence
+    cost is a dict lookup; only first-seen words pay the merge scan. The
+    merge list ships in the UDF closure (tiny - it IS the tokenizer), so
+    there is no join and no shuffle: a pure narrow map."""
     import re
 
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
@@ -196,10 +175,8 @@ def bpe_segment_vectorized(
 
     def segment(batches):
         for pdf in batches:
-            # NULL text -> NULL tokens, like the fold form (word_split
-            # propagates NULL); `txt or ""` here yielded [] and the two
-            # documented-identical implementations diverged on
-            # F.size()/posexplode downstream (review r5)
+            # NULL text -> NULL tokens, not []: F.size()/posexplode
+            # downstream tell the two apart
             toks = [
                 None
                 if txt is None

@@ -744,84 +744,6 @@ def embedding_near_dup_pairs(
 # Semantic dedup (SemDeDup-style): cluster embeddings, dedup within clusters
 # ---------------------------------------------------------------------------
 
-def semantic_dedup(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroid_vec: str = "c_embedding",
-    centroid_id: str = "c_id",
-    materialize: bool = True,
-) -> DataFrame:
-    """Embedding-space dedup blocked by k-means cells (the SemDeDup recipe:
-    cluster the corpus, then compare only within a cluster): a row survives
-    iff no LOWER-id row in the same cell has cosine >= ``threshold`` to it.
-    The greedy lowest-id-wins rule is deterministic and one-pass - no
-    iterative component propagation - which is what you want when the
-    threshold is high and duplicate groups are small and dense.
-
-    Shuffle profile: the assign is a broadcast of k centroids; the pair
-    generation is a self-equi-join on ``cell``, so the work is sum of
-    cell_size^2, never corpus^2 - the centroids (trained with
-    :func:`~vectordb_data_ingestion_spark.operators.similarity.kmeans_fit`)
-    control the blocking granularity. Returns the surviving rows with their
-    ``cell`` attached.
-
-    ``materialize``: the assignment feeds both sides of the cell self-join
-    AND the final anti-join, so a lazy plan re-runs the broadcast-assign +
-    window lineage three times (measured 4x slower at sf0.1). Checkpointing
-    the assigned table once is exactly what a 100 TB pipeline does by
-    writing the cell-partitioned corpus out before the dedup pass.
-    """
-    from vectordb_data_ingestion_spark.operators.similarity import (
-        assign_ivf_cells,
-    )
-
-    assigned = assign_ivf_cells(
-        corpus,
-        centroids,
-        vec_col=vec_col,
-        centroid_vec=centroid_vec,
-        centroid_id=centroid_id,
-        id_col=id_col,
-    )
-    if materialize:
-        assigned = assigned.localCheckpoint()
-    # per-side norms on the LINEAR slim tables (r7, same as bitext_mine):
-    # the self-join is Σcell² pairs and cosine-per-pair refolded each
-    # vector's norm once per cell partner. Identical doubles/rounding;
-    # zero-norm pairs stay NULL and fail the >= filter, as before.
-    slim = assigned.select(
-        "cell", id_col, vec_col,
-        l2_norm(to_double_array(F.col(vec_col))).alias("__n"),
-    )
-    right = slim.select(
-        F.col("cell"),
-        F.col(id_col).alias("__id_b"),
-        F.col(vec_col).alias("__vec_b"),
-        F.col("__n").alias("__nb"),
-    )
-    __denom = F.col("__n") * F.col("__nb")
-    sim = F.when(
-        __denom > 0,
-        dot_product(
-            to_double_array(F.col(vec_col)), to_double_array(F.col("__vec_b"))
-        )
-        / __denom,
-    )
-    dominated = (
-        slim.join(right, "cell")
-        .filter(F.col("__id_b") < F.col(id_col))
-        .filter(F.round(sim, 6) >= threshold)
-        .select(F.col(id_col).alias("__dup_id"))
-        .distinct()
-    )
-    return assigned.join(
-        dominated, assigned[id_col] == dominated["__dup_id"], "left_anti"
-    )
-
-
 def semantic_dedup_vectorized(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -831,11 +753,24 @@ def semantic_dedup_vectorized(
     centroid_vec: str = "c_embedding",
     centroid_id: str = "c_id",
 ) -> DataFrame:
-    """Same semantics as :func:`semantic_dedup` (same DuckDB oracle), with
-    the within-cell scoring as one numpy matmul per cell via
-    ``applyInPandas`` instead of a JVM pairwise join - the interpreted
-    array-fold cosine costs ~25k pairs/s, the matmul path ~10M/s (this is
-    the shape SemDeDup runs per cluster on accelerators).
+    """Embedding-space dedup blocked by k-means cells (the SemDeDup recipe:
+    cluster the corpus, then compare only within a cluster): each row is
+    assigned to its nearest centroid (max rounded cosine, ties -> lowest
+    centroid id), and it survives iff no LOWER-id row in the same cell has
+    rounded cosine >= ``threshold`` to it. The greedy lowest-id-wins rule
+    is deterministic and one-pass - no iterative component propagation -
+    which is what you want when the threshold is high and duplicate groups
+    are small and dense. A zero-norm vector has no cosine (NULL, as in the
+    DuckDB oracle): it never dominates and is never dominated, at any
+    threshold. Returns the surviving rows with their ``cell`` attached.
+
+    The centroids (trained with
+    :func:`~vectordb_data_ingestion_spark.operators.similarity.kmeans_fit`)
+    control the blocking granularity: the work is sum of cell_size^2,
+    never corpus^2, scored as one numpy matmul per cell via
+    ``applyInPandas`` (the shape SemDeDup runs per cluster on
+    accelerators). The assignment is checkpointed once so the cell
+    shuffle does not replay it.
 
     One shuffle keyed by cell; a pathological giant cell concentrates on
     one task - that is a property of the clustering (re-train with larger
@@ -860,9 +795,13 @@ def semantic_dedup_vectorized(
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         norms = np.sqrt((m * m).sum(axis=1))
-        norms[norms == 0.0] = 1.0
+        # a zero-norm row's cosine is NULL, which never passes the
+        # threshold: mask its row and column rather than scoring it 0
+        has_norm = norms != 0.0
+        norms[~has_norm] = 1.0
         sims = np.round((m / norms[:, None]) @ (m / norms[:, None]).T, 6)
-        dup = (np.tril(sims >= threshold, k=-1)).any(axis=1)
+        hit = (sims >= threshold) & has_norm[:, None] & has_norm[None, :]
+        dup = np.tril(hit, k=-1).any(axis=1)
         return pdf.loc[~dup]
 
     return assigned.groupBy("cell").applyInPandas(dedupe, schema=assigned.schema)

@@ -15,9 +15,9 @@ stores raw 1536-d ada-002 vectors, cfg.toml:19.)
 Scale shape:
 - codebooks are tiny (m * k rows): :func:`pq_encode_vectorized` closes
   them over each Arrow batch and encodes with one matmul + argmin per
-  subspace - a pure narrow projection, zero shuffle (the exploded JVM
-  forms :func:`pq_encode`/:func:`pq_assign` share its oracle but build a
-  corpus*m*k-row window: fine at catalog scale, DNF at 1M vectors);
+  subspace - a pure narrow projection, zero shuffle (an exploded
+  (vector, subspace, codeword) join + window is a corpus*m*k-row window
+  and does not finish at 1M vectors);
 - ADC scoring (:func:`pq_adc_topk_codes`) builds the per-query lookup
   table driver-side, scores each batch of packed codes with a
   fancy-index + sum, and TakeOrdered-merges the top-k: the scan reads
@@ -36,17 +36,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from vectordb_data_ingestion_spark.session import values_df
-from vectordb_data_ingestion_spark.functions.vectors import (
-    dot_product,
-    to_double_array,
-)
-
-
-def _l2sq(a: Column, b: Column) -> Column:
-    """Rounded squared L2 via the dot expansion (cross-engine stable)."""
-    return F.round(
-        dot_product(a, a) - 2 * dot_product(a, b) + dot_product(b, b), 6
-    )
+from vectordb_data_ingestion_spark.functions.vectors import to_double_array
 
 
 def subvectors(vec: Column, m: int, dim: int) -> Column:
@@ -183,98 +173,6 @@ def pq_train(
     )
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, pq_codes: array<long>) - each vector's nearest codeword per
-    subspace (min rounded L2^2, ties -> lowest code). Codebooks broadcast;
-    the only shuffle carries (id, sub, code) triples."""
-    best = pq_assign(corpus, codebooks, m, dim, vec_col=vec_col, id_col=id_col)
-    return best.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("sub", "code"))),
-            lambda s: s["code"],
-        ).alias("pq_codes")
-    )
-
-
-def pq_assign(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, sub, code): nearest codeword per (vector, subspace) - the
-    normalized form of :func:`pq_encode`, and the direct input to ADC."""
-    subs = corpus.select(
-        F.col(id_col),
-        F.posexplode(subvectors(to_double_array(F.col(vec_col)), m, dim)).alias(
-            "sub", "sv"
-        ),
-    )
-    cb = broadcast(codebooks.select("sub", "code", F.col("sv").alias("cv")))
-    scored = subs.join(cb, "sub").select(
-        id_col, "sub", "code", _l2sq(F.col("sv"), F.col("cv")).alias("d")
-    )
-    w = Window.partitionBy(id_col, "sub").orderBy(F.asc("d"), F.asc("code"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, "sub", "code")
-    )
-
-
-def adc_lookup_table(
-    codebooks: DataFrame, query_vector: list[float], m: int, dim: int
-) -> DataFrame:
-    """(sub, code, d): rounded squared L2 from the query's j-th subvector to
-    every codeword of subspace j. m*k rows - broadcast it."""
-    dsub = dim // m
-    qsub = F.array(
-        *[
-            F.array(
-                *[
-                    F.lit(float(query_vector[j * dsub + i]))
-                    for i in range(dsub)
-                ]
-            )
-            for j in range(m)
-        ]
-    )
-    return codebooks.select(
-        "sub",
-        "code",
-        _l2sq(F.element_at(qsub, F.col("sub") + 1), F.col("sv")).alias("d"),
-    )
-
-
-def pq_adc_topk(
-    assigned: DataFrame,
-    codebooks: DataFrame,
-    query_vector: list[float],
-    k: int,
-    m: int,
-    dim: int,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k by ADC: per-vector score = sum over subspaces of
-    the lookup-table entry for its code. One broadcast join on (sub, code),
-    a partial-summed groupBy on the id (m rows in per id), TakeOrdered k.
-    """
-    lut = broadcast(adc_lookup_table(codebooks, query_vector, m, dim))
-    scored = assigned.join(lut, ["sub", "code"]).groupBy(id_col).agg(
-        F.round(F.sum("d"), 6).alias("adc")
-    )
-    return scored.orderBy(F.asc("adc"), F.asc(id_col)).limit(k)
-
-
 def pq_encode_vectorized(
     corpus: DataFrame,
     codebooks: DataFrame,
@@ -284,15 +182,16 @@ def pq_encode_vectorized(
     id_col: str = "vec_id",
     rotation: list | None = None,
 ) -> DataFrame:
-    """Scale path for :func:`pq_encode` (same semantics, same oracle): the
-    codebooks (m * k rows, tiny) are collected once into numpy arrays and
-    closed over; each Arrow batch is encoded with one matmul + argmin per
+    """(id, pq_codes: array<long>) - each vector's nearest codeword per
+    subspace (min rounded L2^2, ties -> lowest code). The codebooks
+    (m * k rows, tiny) are collected once into numpy arrays and closed
+    over; each Arrow batch is encoded with one matmul + argmin per
     subspace. No explode, no join, no window - a pure narrow projection,
-    O(rows * m * k * dsub) flops instead of a 128M-row joined window at 1M
-    vectors (the exploded JVM form did not finish in 10 minutes there; this
-    runs in seconds). Ties break to the lowest code (argmin picks the first
-    minimum; codes are dense-ordered), and distances are rounded to 6dp
-    before comparison - bit-identical to the JVM form and the DuckDB oracle.
+    O(rows * m * k * dsub) flops. Ties break to the lowest code (argmin
+    picks the first minimum; codes are dense-ordered), and distances are
+    rounded to 6dp before comparison - bit-identical to the DuckDB
+    oracle. ``rotation`` (from :func:`opq_train`) is applied to every
+    vector first.
     """
     import numpy as np
     import pandas as pd

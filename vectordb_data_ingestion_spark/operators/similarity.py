@@ -207,34 +207,6 @@ def brute_force_topk(
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
-def assign_ivf_cells(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    centroid_vec: str = "c_embedding",
-    centroid_id: str = "c_id",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Assign every corpus vector to its nearest centroid (max cosine;
-    ties -> lowest centroid id). Centroids are broadcast; one narrow pass.
-    At scale, write the result partitioned/bucketed by ``cell`` so probes
-    prune files."""
-    c = to_double_array(F.col(vec_col))
-    cen = to_double_array(F.col(centroid_vec))
-    scored = corpus.crossJoin(broadcast(centroids)).select(
-        corpus["*"],
-        F.col(centroid_id),
-        F.round(cosine_similarity(c, cen), 6).alias("__sim"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc(centroid_id))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .withColumnRenamed(centroid_id, "cell")
-        .drop("__rn", "__sim")
-    )
-
-
 def ivf_topk(
     corpus_with_cells: DataFrame,
     centroids: DataFrame,
@@ -515,89 +487,6 @@ def lsh_topk_multitable(
     )
 
 
-def with_lsh_signature_vectorized(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_bits: int = 16,
-    dim: int = 64,
-    seed: int = 0,
-    out_col: str = "sig",
-) -> DataFrame:
-    """SIMD tag path for :func:`with_lsh_signature`: one numpy matmul per
-    Arrow batch ((batch x dim) @ (dim x n_bits)) instead of a per-element
-    Catalyst fold per bit. Same round-to-6 sign convention; measured 3.6x
-    end-to-end at 1M x 64-d, 16 bits (34.5s -> 9.7s incl. scan+write), with
-    0 signature mismatches across a 20k-row parity sample. Use this for
-    corpus tagging; the fold version stays as the pure-SQL-checkable
-    reference."""
-    import numpy as np
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    hp = np.asarray(
-        [
-            [hyperplane_sign(i, d, dim, seed) for d in range(dim)]
-            for i in range(n_bits)
-        ],
-        dtype=np.float64,
-    ).T  # (dim, n_bits)
-    weights = (1 << np.arange(n_bits)).astype(np.int64)
-    out_schema = StructType(df.schema.fields + [StructField(out_col, LongType())])
-
-    def tag(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = np.round(m @ hp, 6) > 0
-            pdf[out_col] = bits @ weights
-            yield pdf
-
-    return df.mapInPandas(tag, schema=out_schema)
-
-
-def with_lsh_signatures_multitable_vectorized(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_bits: int = 8,
-    n_tables: int = 6,
-    dim: int = 64,
-    seed_stride: int = 1000,
-    prefix: str = "sig",
-) -> DataFrame:
-    """Vectorized multi-table tagging: all L signature columns from one
-    mapInPandas pass (L matmuls per Arrow batch). Bit-identical to
-    :func:`with_lsh_signatures_multitable`."""
-    import numpy as np
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    hps = [
-        np.asarray(
-            [
-                [hyperplane_sign(i, d, dim, t * seed_stride) for d in range(dim)]
-                for i in range(n_bits)
-            ],
-            dtype=np.float64,
-        ).T
-        for t in range(n_tables)
-    ]
-    weights = (1 << np.arange(n_bits)).astype(np.int64)
-    out_schema = StructType(
-        df.schema.fields
-        + [StructField(f"{prefix}{t}", LongType()) for t in range(n_tables)]
-    )
-
-    def tag(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            for t in range(n_tables):
-                pdf[f"{prefix}{t}"] = (np.round(m @ hps[t], 6) > 0) @ weights
-            yield pdf
-
-    return df.mapInPandas(tag, schema=out_schema)
-
-
 # ---------------------------------------------------------------------------
 # K-means centroid training (Lloyd's) - produces the IVF coarse quantizer
 # ---------------------------------------------------------------------------
@@ -609,8 +498,6 @@ def kmeans_refine(
     centroid_vec: str = "c_embedding",
     centroid_id: str = "c_id",
     id_col: str = "vec_id",
-    vectorized_assign: bool = True,
-    vectorized_mean: bool = True,
 ) -> DataFrame:
     """One Lloyd iteration: assign every vector to its nearest centroid
     (max cosine, ties -> lowest centroid id), then recompute each centroid
@@ -620,19 +507,25 @@ def kmeans_refine(
     as the next iteration's ``centroids``. Empty cells drop out (standard
     Lloyd behavior; k shrinks rather than keeping a dead centroid).
 
-    Shuffle profile: the assign is a narrow pass over the corpus (matmul
-    per Arrow batch by default, or the broadcast-join JVM form with
-    ``vectorized_assign=False`` - same semantics either way); the mean is
-    posexplode -> partial agg on (cell, dim) - the per-dimension sums
-    combine map-side, so the exchange carries at most
-    ``k * dim * shuffle_partitions`` rows regardless of corpus size. That is
-    the textbook distributed-kmeans layout: per-partition partial sums, one
-    tiny shuffle, never the vectors themselves.
+    Shuffle profile: the assign is a narrow pass over the corpus (one
+    matmul per Arrow batch, :func:`assign_ivf_cells_vectorized`); the mean
+    is per-batch numpy partial sums - each Arrow batch emits at most k rows
+    ``(cell, [sum_0..sum_{d-1}, count])`` - merged by a (cell, pos)
+    aggregation, so the exchange carries ``batches * k`` tiny rows
+    regardless of corpus size. That is the textbook distributed-kmeans
+    layout: per-partition partial sums, one tiny shuffle, never the vectors
+    themselves.
     """
-    assign = (
-        assign_ivf_cells_vectorized if vectorized_assign else assign_ivf_cells
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        StructField,
+        StructType,
     )
-    assigned = assign(
+
+    assigned = assign_ivf_cells_vectorized(
         corpus,
         centroids,
         vec_col=vec_col,
@@ -640,59 +533,31 @@ def kmeans_refine(
         centroid_id=centroid_id,
         id_col=id_col,
     )
-    if vectorized_mean:
-        # M-step as per-batch numpy partial sums: each Arrow batch emits at
-        # most k rows (cell, [sum_0..sum_{d-1}, count]) - the exchange then
-        # carries batches*k tiny rows instead of generating rows*dim
-        # exploded values. Count rides as the array's last element so one
-        # (cell, pos) aggregation merges sums AND counts.
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import (
-            ArrayType,
-            DoubleType,
-            StructField,
-            StructType,
-        )
+    # count rides as the partial-sum array's last element so one
+    # (cell, pos) aggregation merges sums AND counts
+    part_schema = StructType(
+        [
+            StructField("cell", assigned.schema["cell"].dataType),
+            StructField("psum", ArrayType(DoubleType())),
+        ]
+    )
 
-        part_schema = StructType(
-            [
-                StructField("cell", assigned.schema["cell"].dataType),
-                StructField("psum", ArrayType(DoubleType())),
-            ]
-        )
+    def partial_sums(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cells = pdf["cell"].to_numpy()
+            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            uniq = np.unique(cells)
+            rows = []
+            for cell in uniq:
+                mask = cells == cell
+                rows.append(np.append(m[mask].sum(axis=0), mask.sum()))
+            yield pd.DataFrame({"cell": uniq, "psum": rows})
 
-        def partial_sums(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                cells = pdf["cell"].to_numpy()
-                m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                uniq = np.unique(cells)
-                rows = []
-                for cell in uniq:
-                    mask = cells == cell
-                    rows.append(np.append(m[mask].sum(axis=0), mask.sum()))
-                yield pd.DataFrame({"cell": uniq, "psum": rows})
-
-        partials = assigned.select("cell", vec_col).mapInPandas(
-            partial_sums, schema=part_schema
-        )
-        dims = partials.select(
-            "cell", F.posexplode("psum").alias("__pos", "__val")
-        )
-    else:
-        dims = assigned.select(
-            F.col("cell"),
-            # count rides as a trailing 1.0 per vector: same merge shape as
-            # the vectorized partials
-            F.posexplode(
-                F.concat(
-                    to_double_array(F.col(vec_col)),
-                    F.array(F.lit(1.0)),
-                )
-            ).alias("__pos", "__val"),
-        )
+    dims = assigned.select("cell", vec_col).mapInPandas(
+        partial_sums, schema=part_schema
+    ).select("cell", F.posexplode("psum").alias("__pos", "__val"))
     per_dim = dims.groupBy("cell", "__pos").agg(F.sum("__val").alias("__sum"))
     merged = per_dim.groupBy("cell").agg(
         F.array_sort(
@@ -716,27 +581,23 @@ def kmeans_fit(
     iterations: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    fused: bool = True,
 ) -> DataFrame:
     """Train k centroids with Lloyd's algorithm, deterministically seeded
     with the k lowest-id corpus vectors (reproducible across runs and
     engines - no RNG; max rounded cosine, ties -> lowest centroid id;
-    empty cells drop).
+    empty cells drop). Returns ``(c_id, c_embedding, n_members)`` - the
+    same centroids as chaining :func:`kmeans_refine` ``iterations`` times
+    from those seeds while no centroid has zero norm (6dp rounding absorbs
+    summation-order differences).
 
-    ``fused=True`` (the scale path, same pattern as pq.pq_train): each
-    iteration is ONE corpus pass - every Arrow batch assigns with a matmul
-    and emits per-cell partial sums; the k*(dim+1) partials collapse to the
-    driver, which updates the (driver-sized) centroid matrix for the next
-    pass. No checkpoint chain, no per-iteration assign+mean job pair.
-
-    ``fused=False`` keeps the compositional DataFrame form - iterated
-    :func:`kmeans_refine`, checkpointed between passes (what a pipeline
-    does when centroids must persist as a table between separate jobs).
-    Both forms produce identical centroids (parity-tested; 6dp rounding
-    absorbs summation-order differences).
+    Each iteration is ONE corpus pass (same pattern as pq.pq_train): every
+    Arrow batch assigns with a matmul and emits per-cell partial sums; the
+    k*(dim+1) partials collapse to the driver, which updates the
+    (driver-sized) centroid matrix for the next pass. No checkpoint chain,
+    no per-iteration assign+mean job pair.
     """
-    if fused and iterations < 1:
-        raise ValueError("fused kmeans_fit needs iterations >= 1")
+    if iterations < 1:
+        raise ValueError("kmeans_fit needs iterations >= 1")
     # k seed vectors (and per-iteration k*(dim+1) partials) land on the
     # driver — guard k x dim like the PQ trainers do. The dim probe is one
     # single-row job, paid only when k is big enough for the product to
@@ -750,18 +611,6 @@ def kmeans_fit(
         check_driver_collect_budget(
             k, probed[0] if probed else 0, "kmeans_fit seeds"
         )
-    if not fused:
-        centroids = (
-            corpus.orderBy(F.col(id_col)).limit(k).select(
-                F.col(id_col).alias("c_id"),
-                to_double_array(F.col(vec_col)).alias("c_embedding"),
-            )
-        ).localCheckpoint()
-        for _ in range(iterations):
-            centroids = kmeans_refine(
-                corpus, centroids, vec_col=vec_col, id_col=id_col
-            ).localCheckpoint()
-        return centroids
 
     import numpy as np
     import pandas as pd
@@ -875,20 +724,24 @@ def assign_ivf_cells_vectorized(
     id_col: str = "vec_id",
     _matrix=None,
 ) -> DataFrame:
-    """Scale path for :func:`assign_ivf_cells` (same semantics: max rounded
-    cosine, ties -> lowest centroid id). The JVM form is a corpus x k
-    crossJoin of interpreted cosine folds plus a window over all pairs -
-    at 1M vectors x 1024 centroids that is a billion-row window and did not
-    finish in 10 minutes; here the (tiny) centroid matrix closes over each
-    Arrow batch and assignment is one normalized matmul + argmax, a pure
-    narrow projection that finishes in seconds. Centroid rows are sorted by
-    id so argmax's first-maximum rule reproduces the asc-id tie-break."""
+    """Assign every corpus vector to its nearest centroid (max rounded
+    cosine, ties -> lowest centroid id) and return the corpus rows with a
+    ``cell`` column. A zero-norm centroid has no cosine (NULL in the DuckDB
+    oracles) and never captures a vector; a zero-norm corpus vector ties at
+    0 with every other centroid and goes to the lowest id among them. At
+    scale, write the result partitioned/bucketed by ``cell`` so probes
+    prune files.
+
+    The (tiny) centroid matrix closes over each Arrow batch and assignment
+    is one normalized matmul + argmax: a pure narrow projection, no join,
+    no window (a corpus x k crossJoin + window is a billion-row window at
+    1M vectors x 1024 centroids). Centroid rows are sorted by id so
+    argmax's first-maximum rule gives the asc-id tie-break; pass
+    ``_matrix`` from :func:`collect_centroid_matrix` to reuse one collect
+    across several corpora."""
     import numpy as np
     from pyspark.sql.types import StructField, StructType
 
-    # JVM parity note (lives in collect_centroid_matrix): a zero-norm
-    # centroid scores NULL in the JVM form and NULLS LAST never wins;
-    # its column is masked to -inf below instead of scoring 0.
     ids, cu, c_zero = (
         _matrix
         if _matrix is not None
@@ -952,9 +805,9 @@ def bitext_mine(
     is engine-exact (same contract as the kernel's oracle). Returns one
     row per source doc: (a_id, b_id, cell, cos_ppm, margin_ppm).
 
-    Cell assignment uses the Arrow/argmax path (one numpy matmul per
-    batch, no per-id window shuffle — same rounded-6/lowest-id contract
-    as the JVM form, parity-tested via semantic_dedup's oracle).
+    Cell assignment is :func:`assign_ivf_cells_vectorized` (one numpy
+    matmul per batch, no per-id window shuffle; rounded-6 cosine,
+    lowest-id tie-break).
     """
     # per-side norms ride the LINEAR cell tables (r7): the pair table is
     # Σcell² rows and the fold HOFs are interpreted per element, so

@@ -750,8 +750,8 @@ _IVF_ASSIGN_SQL = f"""
 
 
 def _ivf_parts(spark, sf_dir):
-    # vectorized assign (matmul per Arrow batch) — bit-identical to the JVM
-    # fold (tie-break parity pinned in tests), ~2x faster on the corpus scan
+    # matmul-per-Arrow-batch assign (rounded-6 cosine, lowest-id tie-break,
+    # zero-norm masking pinned by literal cells in tests)
     from vectordb_data_ingestion_spark.operators.similarity import (
         assign_ivf_cells_vectorized,
     )
@@ -2835,9 +2835,8 @@ def q_semantic_dedup(spark, sf_dir):
     cosine dominance (lowest id wins). The corpus is augmented with scaled
     copies (cosine 1 to their originals) that the dedup must remove; cells
     come from the deterministic centroid subset, in production from
-    kmeans_fit. Broadcast assign + one numpy matmul per cell - work is sum
-    of cell sizes squared, never corpus squared (the pairwise-join form
-    lives in dedup.semantic_dedup with identical semantics/oracle)."""
+    kmeans_fit. Arrow-batched assign + one numpy matmul per cell - work is
+    sum of cell sizes squared, never corpus squared."""
     from vectordb_data_ingestion_spark.operators.dedup import (
         semantic_dedup_vectorized as semantic_dedup,
     )
@@ -2947,8 +2946,7 @@ def q_pq_encode(spark, sf_dir):
     codebook ids (nearest codeword per subspace, dot-expansion L2 rounded
     identically on both engines). Vectorized path: the tiny codebooks close
     over each Arrow batch, one matmul + argmin per subspace - a pure
-    narrow projection with no shuffle at all (the exploded JVM form in
-    pq.pq_encode shares this oracle). The code array is unpacked to one
+    narrow projection with no shuffle at all. The code array is unpacked to one
     scalar column per subspace (c0..c7, lossless) because the driver's
     pandas canonicalizer cannot hash array cells."""
     from vectordb_data_ingestion_spark.operators.pq import pq_encode_vectorized
@@ -4533,10 +4531,9 @@ _BPE_SEGMENT_GOLDEN_SQL = """
 def q_bpe_segment_tokens(spark, sf_dir):
     """End-to-end tokenizer application: train 8 BPE merges on the corpus,
     then tokenize every document with the vectorized segmenter
-    (Arrow-batched, per-executor Zipf word cache — the scale path; the
-    fold-based ``bpe_segment`` shares semantics, parity-tested). Exploded
-    to (doc_id, pos, token) scalar rows; oracle is a golden parquet from
-    an independent dict-based rerun."""
+    (Arrow-batched, per-executor Zipf word cache). Exploded to
+    (doc_id, pos, token) scalar rows; oracle is a golden parquet from an
+    independent dict-based rerun."""
     from vectordb_data_ingestion_spark.operators.bpe import (
         bpe_segment_vectorized,
     )
