@@ -103,3 +103,19 @@ def _multiset_diff(a, b):
         if ca[k] != cb[k]:
             out.append((k, ca[k], cb[k]))
     return out
+
+
+def jobs_during(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched, counted through
+    a job group once the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

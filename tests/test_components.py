@@ -282,6 +282,77 @@ def test_commit_primitives_stay_in_the_conditional_store():
     ]
 
 
+# the manifest CAS is the package's one commit protocol: only the store
+# implementations and the manifest sink call the conditional-put primitives
+_CAS_PRIMITIVES = {"cas_update", "put_if", "put_state_if"}
+_CAS_ALLOWED = {
+    "sinks/commit_store.py",
+    "sinks/log_store.py",
+    "sinks/manifest_sink.py",
+}
+
+
+def _cas_calls(tree):
+    """(name, line) for each call of a conditional-put primitive: as a
+    method (``store.put_if(...)``), by name, or through a ``from ...
+    import cas_update as alias``."""
+    import ast
+
+    aliases = {
+        a.asname or a.name: a.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.name in _CAS_PRIMITIVES
+    }
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Attribute) and f.attr in _CAS_PRIMITIVES:
+            out.append((f.attr, node.lineno))
+        elif isinstance(f, ast.Name) and (
+            f.id in _CAS_PRIMITIVES or f.id in aliases
+        ):
+            out.append((aliases.get(f.id, f.id), node.lineno))
+    return sorted(out, key=lambda c: c[1])
+
+
+def test_one_commit_protocol():
+    """CI guard: no package module other than the conditional store, its
+    log adapter and the manifest sink calls ``cas_update``, ``put_if`` or
+    ``put_state_if``. Every other writer commits through
+    ``ManifestVectorSink``; a second CAS loop elsewhere is a second
+    commit protocol, with its own manifest format and guards."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "vectordb_data_ingestion_spark"
+    )
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel in _CAS_ALLOWED:
+            continue
+        for name, line in _cas_calls(ast.parse(path.read_text())):
+            offenders.append(f"{rel}:{line} {name}")
+    assert not offenders, offenders
+    # the allow-list names modules that exist and call the primitives
+    for rel in _CAS_ALLOWED:
+        assert _cas_calls(ast.parse((pkg / rel).read_text())), rel
+    # the scanner sees method calls, plain names and import aliases
+    probe = ast.parse(
+        "from x import cas_update as cu\n"
+        "def f(s):\n    s.put_if('k', b'', None)\n    cu(s, 'k', g)\n"
+        "    s.put_state_if('k', {}, None)\n"
+    )
+    assert [c[0] for c in _cas_calls(probe)] == [
+        "put_if", "cas_update", "put_state_if",
+    ]
+
+
 # Kernels allowed to keep a JVM form X beside an Arrow-batched
 # X_vectorized. Each other kernel has exactly one implementation. The
 # registry and the collection facade still run different forms of

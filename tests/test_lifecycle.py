@@ -252,3 +252,21 @@ def test_kmeans_fit_fused_matches_dataframe_form(spark):
         for r in centroids.collect()
     )
     assert a == b and len(a) > 0
+
+
+def test_kmeans_fit_zero_norm_centroid_captures_nothing(spark):
+    """A zero-norm seed centroid never captures a vector in kmeans_fit,
+    exactly as in kmeans_refine (both mask its column): one iteration from
+    the seeds [0,0] and [1,0] folds every vector into cell 1."""
+    from vectordb_data_ingestion_spark.operators.similarity import kmeans_refine
+
+    emb = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [-1.0, 0.1]), (3, [0.9, 0.2])],
+        "vec_id int, embedding array<double>",
+    )
+    seeds = emb.filter("vec_id < 2").select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_embedding")
+    )
+    fit = [tuple(r) for r in kmeans_fit(emb, k=2, iterations=1).collect()]
+    refined = [tuple(r) for r in kmeans_refine(emb, seeds).collect()]
+    assert fit == refined == [(1, [0.225, 0.075], 4)]

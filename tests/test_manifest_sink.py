@@ -1,6 +1,6 @@
 """The sink commit protocol (VERDICT r6 item 2): the ConditionalStore
 primitives, the ManifestVectorSink built on them, and the two-phase
-datasource writer's CAS manifest publication — crash-replay, concurrent
+datasource writer that commits through it — crash-replay, concurrent
 mutators, bucketed pruning and replay idempotence under every
 conditional-put binding."""
 
@@ -18,6 +18,7 @@ from vectordb_data_ingestion_spark.sinks.commit_store import (
     cas_update,
 )
 from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
+from tests.conftest import jobs_during
 
 
 # ---------------------------------------------------------------------------
@@ -386,82 +387,96 @@ def test_manifest_sink_txn_record_survives_mutations(
 
 
 def _writer(path, overwrite=False):
+    from pyspark.sql import types as T
+
     from vectordb_data_ingestion_spark.sinks.datasource_writer import (
         VectorStoreWriter,
     )
 
     return VectorStoreWriter(
-        {"path": path, "class_name": "Chunk", "batch_size": "2"}, overwrite
+        path, T.StructType.fromDDL("chunk_id string, text string"), overwrite
     )
 
 
-def _rows(ids):
-    from pyspark.sql import Row
+def _stage(writer, ids):
+    """One task's ``write``: its Arrow batch staged as a segment dir."""
+    import pyarrow as pa
 
-    return [Row(chunk_id=i, text=f"t-{i}") for i in ids]
+    batch = pa.RecordBatch.from_pylist(
+        [{"chunk_id": i, "text": f"t-{i}"} for i in ids]
+    )
+    return writer.write(iter([batch]))
+
+
+def _committed(spark, path, store):
+    """The writer's load as the sink reads it (the empty set when nothing
+    was committed)."""
+    sink = ManifestVectorSink(spark, path, partition_col=None, store=store)
+    try:
+        return sorted(r["chunk_id"] for r in sink.read().collect())
+    except FileNotFoundError:
+        return []
 
 
 @pytest.fixture(params=["file", "memory"])
 def writer_store(request, tmp_path):
     if request.param == "memory":
         return MemoryConditionalStore()
-    return None  # writer builds its default FileConditionalStore
+    return None  # the sink's default FileConditionalStore
 
 
-def test_writer_commit_protocol_under_binding(tmp_path, writer_store):
-    """The two-phase writer's spool -> commit -> read_committed contract,
+def test_writer_commit_protocol_under_binding(spark, tmp_path, writer_store):
+    """The two-phase writer's stage -> commit -> sink read contract,
     exercised directly (write/commit are plain methods) under each
-    commit-primitive binding: uncommitted spools invisible, append commits
-    accumulate, overwrite retires exactly the replaced generation."""
-    from vectordb_data_ingestion_spark.sinks import datasource_writer as dw
-
+    commit-primitive binding: uncommitted segments invisible, append
+    commits accumulate, overwrite replaces the segment list in one CAS."""
     path = str(tmp_path / "store")
+    store = writer_store
     w = _writer(path)
-    store = writer_store or dw._manifest_store(path)
 
-    m1 = w.write(iter(_rows(["a", "b", "c"])))
-    # spooled but uncommitted: invisible
-    assert dw.read_committed(path, store=store) == []
+    m1 = _stage(w, ["a", "b", "c"])
+    # staged but uncommitted: invisible
+    assert _committed(spark, path, store) == []
     w.commit([m1], store=store)
-    assert {o["chunk_id"] for o in dw.read_committed(path, store=store)} == {
-        "a", "b", "c",
-    }
+    assert _committed(spark, path, store) == ["a", "b", "c"]
 
     # append commit accumulates
-    m2 = w.write(iter(_rows(["d"])))
-    w.commit([m2], store=store)
-    assert {o["chunk_id"] for o in dw.read_committed(path, store=store)} == {
-        "a", "b", "c", "d",
-    }
+    w.commit([_stage(w, ["d"])], store=store)
+    assert _committed(spark, path, store) == ["a", "b", "c", "d"]
 
-    # overwrite retires the replaced generation's spool files
+    # overwrite replaces every committed segment in the same CAS
     w_over = _writer(path, overwrite=True)
-    m3 = w_over.write(iter(_rows(["z"])))
+    m3 = _stage(w_over, ["z"])
     w_over.commit([m3], store=store)
-    assert {o["chunk_id"] for o in dw.read_committed(path, store=store)} == {
-        "z",
-    }
-    spool = os.path.join(path, "_spool")
-    assert sorted(os.listdir(spool)) == [m3.filename]
+    assert _committed(spark, path, store) == ["z"]
+    sink = ManifestVectorSink(spark, path, partition_col=None, store=store)
+    assert sink._get_manifest()[0]["segments"] == [
+        {"dir": m3.dir, "full": True}
+    ]
 
     # abort removes only what it was told about
-    m4 = w.write(iter(_rows(["q"])))
-    w.abort([m4])
-    assert sorted(os.listdir(spool)) == [m3.filename]
-    # vacuum cleans orphans of dead tasks under the same binding
-    w.write(iter(_rows(["orphan"])))
-    assert dw.vacuum(path, store=store) == 1
+    data = os.path.join(path, "_data")
+    before = set(os.listdir(data))
+    m4 = _stage(w, ["q"])
+    w.abort([m4], store=store)
+    assert set(os.listdir(data)) == before
+    # the sink's vacuum reclaims a dead task's orphan and the replaced
+    # generation under the same binding
+    _stage(w, ["orphan"])
+    assert sink.vacuum() == len(before)
+    assert os.listdir(data) == [m3.dir]
+    assert _committed(spark, path, store) == ["z"]
 
 
-def test_writer_concurrent_append_commits_lossless_cas(tmp_path, writer_store):
+def test_writer_concurrent_append_commits_lossless_cas(
+    spark, tmp_path, writer_store
+):
     """The race the flock used to close, now closed by CAS: N threads
-    commit appends concurrently; every manifest line survives."""
-    from vectordb_data_ingestion_spark.sinks import datasource_writer as dw
-
+    commit appends concurrently; every staged segment lands."""
     path = str(tmp_path / "ccommit")
     w = _writer(path)
-    store = writer_store or dw._manifest_store(path)
-    msgs = [w.write(iter(_rows([f"id{i}"]))) for i in range(8)]
+    store = writer_store
+    msgs = [_stage(w, [f"id{i}"]) for i in range(8)]
     threads = [
         threading.Thread(target=w.commit, args=([m],), kwargs={"store": store})
         for m in msgs
@@ -470,8 +485,8 @@ def test_writer_concurrent_append_commits_lossless_cas(tmp_path, writer_store):
         t.start()
     for t in threads:
         t.join(120)
-    got = {o["chunk_id"] for o in dw.read_committed(path, store=store)}
-    assert got == {f"id{i}" for i in range(8)}
+    assert not any(t.is_alive() for t in threads)
+    assert _committed(spark, path, store) == sorted(f"id{i}" for i in range(8))
 
 
 def test_manifest_sink_snapshot_reads(spark, tmp_path, binding):
@@ -538,22 +553,6 @@ def test_manifest_sink_schema_evolution(spark, tmp_path, binding):
     assert got == {("b", 2, "en")}
 
 
-def _jobs_during(spark, fn):
-    """``fn()`` and the number of Spark jobs it launched, counted through
-    a job group once the listener bus has delivered every event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_manifest_sink_read_is_one_pinned_scan(spark, tmp_path, binding):
     """A read of an unpartitioned, unbucketed sink is ONE scan pinned to
     the manifest's table schema: no footer-inference job per segment, and
@@ -567,7 +566,7 @@ def test_manifest_sink_read_is_one_pinned_scan(spark, tmp_path, binding):
                 "chunk_id string, v double",
             ).repartition(2)
         )
-    df, jobs = _jobs_during(spark, sink.read)
+    df, jobs = jobs_during(spark, sink.read)
     assert jobs == 0
     assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     assert df.count() == 80
@@ -697,7 +696,7 @@ def test_manifest_sink_schemaless_manifest_reads_and_is_seeded(
     manifest, _ = sink._get_manifest()
     seeded = json.loads(manifest["table_schema"])
     assert [f["name"] for f in seeded["fields"]] == ["chunk_id", "v", "lang"]
-    _df, jobs = _jobs_during(spark, sink.read)
+    _df, jobs = jobs_during(spark, sink.read)
     assert jobs == 0
     assert [tuple(r) for r in sink.read().select("chunk_id", "v", "lang")
             .collect()] == [("a", 1, "en")]
@@ -715,7 +714,7 @@ def test_manifest_sink_partition_columns_keep_writer_type(spark, tmp_path):
         [("a", "007"), ("b", "008")], "chunk_id string, tenant string"
     )
     sink.upsert(df)
-    got, jobs = _jobs_during(spark, sink.read)
+    got, jobs = jobs_during(spark, sink.read)
     assert jobs == 0
     assert got.schema["tenant"].dataType.simpleString() == "string"
     assert sorted(tuple(r) for r in got.collect()) == [
@@ -750,7 +749,7 @@ def test_manifest_sink_bucketed_partial_entries_read(spark, tmp_path, binding):
     sink.delete_where("chunk_id", ["c0_3", "c1_5"])
     manifest, _ = sink._get_manifest()
     assert any(not s.get("full") for s in manifest["segments"])
-    got, jobs = _jobs_during(spark, sink.read)
+    got, jobs = jobs_during(spark, sink.read)
     assert jobs == 0
     assert got.columns == ["chunk_id", "v"]
     want = sorted(
@@ -1107,37 +1106,23 @@ def test_upsert_lost_response_does_not_duplicate(spark, tmp_path, substrate):
     assert len(manifest["segments"]) == 1
 
 
-def test_writer_append_commit_is_idempotent_on_lost_response(tmp_path):
+def test_writer_append_commit_is_idempotent_on_lost_response(spark, tmp_path):
     """Same lost-response class for the two-phase writer: a manifest put
-    that landed but reported failure must not list the spool file twice
-    (read_committed would double its rows); a re-driven commit of the
+    that landed but reported failure must not list the staged segments
+    twice (the read would double their rows); a re-driven commit of the
     same messages is equally a no-op."""
-    from vectordb_data_ingestion_spark.sinks import datasource_writer as dw
-
-    class LostResponseOnce(MemoryConditionalStore):
-        def __init__(self):
-            super().__init__()
-            self.lied = False
-
-        def put_if(self, key, data, token):
-            ok = super().put_if(key, data, token)
-            if ok and not self.lied:
-                self.lied = True
-                return False
-            return ok
-
     path = str(tmp_path / "wl")
-    store = LostResponseOnce()
+    store = _LostResponseOnce()
     w = _writer(path)
-    msg = w.write(iter(_rows(["a", "b"])))
-    w.commit([msg], store=store)
+    msgs = [_stage(w, ["a"]), _stage(w, ["b"])]
+    w.commit(msgs, store=store)
     assert store.lied
-    objs = dw.read_committed(path, store=store)
-    assert sorted(o["chunk_id"] for o in objs) == ["a", "b"]
+    assert _committed(spark, path, store) == ["a", "b"]
     # driver-level commit retry (same messages) is also a no-op
-    w.commit([msg], store=store)
-    objs = dw.read_committed(path, store=store)
-    assert sorted(o["chunk_id"] for o in objs) == ["a", "b"]
+    w.commit(msgs, store=store)
+    assert _committed(spark, path, store) == ["a", "b"]
+    sink = ManifestVectorSink(spark, path, partition_col=None, store=store)
+    assert sink.current_commit_id() == 1
 
 
 def test_compact_small_leaves_large_segments_in_place(spark, tmp_path):
@@ -1530,50 +1515,82 @@ def test_staging_mutations_survive_lost_response(
     assert sink.read().filter(F.col("chunk_id") == "zz").count() == 1
 
 
-def test_writer_abort_never_deletes_manifest_listed_files(tmp_path):
+def test_writer_abort_never_deletes_manifest_listed_files(spark, tmp_path):
     """Spark calls abort when commit() raises — and a commit that
     exhausted its CAS retries can still have LANDED a put (lost
-    response). Abort must not delete spool files the manifest lists, or
-    read_committed dangles on missing paths."""
-    from vectordb_data_ingestion_spark.sinks import datasource_writer as dw
+    response). Abort must not drop staged segments the manifest lists,
+    or every read dangles on missing paths."""
 
     class AlwaysLiesStore(MemoryConditionalStore):
-        """Every MANIFEST put lands but reports failure — commit
-        exhausts its retries and raises, with the first put committed."""
+        """Every MANIFEST put lands but reports failure."""
 
         def put_if(self, key, data, token):
             ok = super().put_if(key, data, token)
-            return False if ok else ok
+            return False if ok and key == "MANIFEST" else ok
 
     path = str(tmp_path / "wabort")
     store = AlwaysLiesStore()
     w = _writer(path)
-    msg = w.write(iter(_rows(["a", "b"])))
-    with pytest.raises(CasConflict):
-        w.commit([msg], store=store)
-    # the first "failed" put landed: the manifest lists the spool file
-    assert [o["chunk_id"] for o in dw.read_committed(path, store=store)] == [
-        "a",
-        "b",
-    ]
+    msg = _stage(w, ["a", "b"])
+    # the guard finds its own segment in the manifest: the commit landed
+    w.commit([msg], store=store)
+    assert _committed(spark, path, store) == ["a", "b"]
 
     # Spark's failure path: abort with the same messages
     w.abort([msg], store=store)
     # the committed rows survive
-    assert [o["chunk_id"] for o in dw.read_committed(path, store=store)] == [
-        "a",
-        "b",
-    ]
+    assert _committed(spark, path, store) == ["a", "b"]
 
     # a genuinely uncommitted message IS cleaned up by the same abort
     truthful = MemoryConditionalStore()
-    w2 = _writer(str(tmp_path / "wabort2"))
-    msg2 = w2.write(iter(_rows(["c"])))
+    path2 = str(tmp_path / "wabort2")
+    w2 = _writer(path2)
+    msg2 = _stage(w2, ["c"])
     w2.abort([msg2], store=truthful)
-    assert dw.read_committed(str(tmp_path / "wabort2"), store=truthful) == []
-    assert not os.path.exists(
-        os.path.join(str(tmp_path / "wabort2"), "_spool", msg2.filename)
-    )
+    assert _committed(spark, path2, truthful) == []
+    assert not os.path.exists(os.path.join(path2, "_data", msg2.dir))
+
+
+def test_writer_abort_keeps_staged_segments_when_manifest_unreadable(
+    spark, tmp_path
+):
+    """An abort that can't read the manifest must keep every staged
+    segment: a landed (lost-response) commit may list them, and a dropped
+    referenced dir breaks every later read, while an orphan is only
+    garbage ``vacuum()`` reclaims."""
+
+    class LandsThenUnreadable(MemoryConditionalStore):
+        """The MANIFEST put lands but reports failure; later, while
+        ``unreadable`` is set, the next ``get`` raises (once)."""
+
+        def __init__(self):
+            super().__init__()
+            self.lied = False
+            self.unreadable = False
+
+        def put_if(self, key, data, token):
+            ok = super().put_if(key, data, token)
+            if ok and key == "MANIFEST" and not self.lied:
+                self.lied = True
+                return False
+            return ok
+
+        def get(self, key):
+            if self.unreadable:
+                self.unreadable = False
+                raise OSError("store unavailable")
+            return super().get(key)
+
+    path = str(tmp_path / "wunread")
+    store = LandsThenUnreadable()
+    w = _writer(path)
+    msgs = [_stage(w, ["a"]), _stage(w, ["b"])]
+    w.commit(msgs, store=store)
+    assert store.lied
+    store.unreadable = True
+    w.abort(msgs, store=store)
+    assert not store.unreadable  # the abort did hit the failing read
+    assert _committed(spark, path, store) == ["a", "b"]
 
 
 def test_history_walk_is_bounded(spark, tmp_path):

@@ -102,40 +102,6 @@ def test_two_process_race_manifest_log_sink(spark, tmp_path):
 
 
 @pytest.mark.multiproc
-def test_two_process_writer_commits_lossless(tmp_path):
-    """Two REAL processes commit appends to one two-phase-writer path
-    concurrently (no Spark needed — write/commit are plain methods): the
-    CAS manifest publication must lose no committed line across genuine
-    process boundaries, where flock/O_EXCL semantics actually bite."""
-    path = str(tmp_path / "wstore")
-    worker = os.path.join(_REPO, "tests", "two_process_writer_worker.py")
-    env = dict(os.environ, PYTHONPATH=_REPO)
-    N = 25
-    procs = [
-        subprocess.Popen(
-            [sys.executable, worker, path, wid, str(N)],
-            env=env,
-            cwd=_REPO,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-        )
-        for wid in ("pa", "pb")
-    ]
-    outs = [p.communicate(timeout=300) for p in procs]
-    for p, (out, err) in zip(procs, outs):
-        assert p.returncode == 0, err.decode()[-3000:]
-
-    from vectordb_data_ingestion_spark.sinks.datasource_writer import (
-        read_committed,
-    )
-
-    got = {o["chunk_id"] for o in read_committed(path)}
-    assert got == {
-        f"{wid}-{i}" for wid in ("pa", "pb") for i in range(N)
-    }
-
-
-@pytest.mark.multiproc
 def test_two_process_race_bucketed_sinks(spark, tmp_path):
     """The bucketed layout under REAL cross-process contention: key
     deletes prune to hashed buckets while the other process appends — CAS

@@ -7,6 +7,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectordb_data_ingestion_spark.sinks import manifest_sink
 from vectordb_data_ingestion_spark.sinks.fake_client import FileBackedClient
@@ -109,165 +110,205 @@ def test_batching_sink_delete_where(spark, tmp_path):
     assert {o["properties"]["url"] for o in objs} == {"doc0"}
 
 
-def test_vector_store_datasource_writer_commit_protocol(spark, tmp_path):
-    """Two-phase load: rows spool per task, the manifest publishes them
-    atomically on commit; orphaned spool files stay invisible; append
-    grows the manifest."""
-    import json
-    import os
+def _staged(writer, ids):
+    """One task's ``write``: an Arrow batch of ``chunk_id`` rows staged as
+    a segment dir; returns its commit message."""
+    import pyarrow as pa
 
+    batch = pa.RecordBatch.from_pylist([{"chunk_id": i} for i in ids])
+    return writer.write(iter([batch]))
+
+
+def _ids(sink):
+    return sorted(r["chunk_id"] for r in sink.read().collect())
+
+
+def test_vector_store_datasource_writer_commit_protocol(spark, tmp_path):
+    """Two-phase load over the manifest sink: each task stages one
+    segment, commit publishes them in one CAS, and
+    ``ManifestVectorSink.read()`` returns exactly the written rows
+    (vectors intact) as one pinned scan; an orphaned staged segment stays
+    invisible; append grows the sink; abort drops staged segments."""
     from vectordb_data_ingestion_spark.sinks.datasource_writer import (
         VectorStoreDataSource,
-        read_committed,
+        VectorStoreWriter,
     )
+    from tests.conftest import jobs_during
 
     spark.dataSource.register(VectorStoreDataSource)
     path = str(tmp_path / "store")
     df = spark.createDataFrame(
         [(f"c{i}", f"text {i}", [float(i), 0.5]) for i in range(10)],
-        ["chunk_id", "text", "vector"],
+        "chunk_id string, text string, vector array<double>",
     ).repartition(3)
-    df.write.format("vector_store").option("path", path).option(
-        "class_name", "KB"
-    ).mode("append").save()
+    df.write.format("vector_store").option("path", path).mode("append").save()
 
-    rows = read_committed(path)
-    assert len(rows) == 10
-    assert {r["chunk_id"] for r in rows} == {f"c{i}" for i in range(10)}
-    assert all(r["class"] == "KB" for r in rows)
-    assert rows[0]["vector"] is not None
+    sink = ManifestVectorSink(spark, path, partition_col=None)
+    got, jobs = jobs_during(spark, sink.read)
+    assert jobs == 0  # pinned to the manifest's table schema: no inference
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1  # all 3 segments, one scan
+    assert got.schema == df.schema
+    assert got.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert sorted(got.collect()) == sorted(df.collect())
+    manifest, _ = sink._get_manifest()
+    assert manifest["commit_id"] == 1  # every task's segment, one CAS
+    assert len(manifest["segments"]) == 3
 
-    # an orphaned spool file (in-flight/aborted task) is NOT visible
-    orphan = os.path.join(path, "_spool", "orphan.jsonl")
-    with open(orphan, "w") as f:
-        f.write(json.dumps({"class": "KB", "chunk_id": "ghost"}) + "\n")
-    assert {r["chunk_id"] for r in read_committed(path)} == {
-        f"c{i}" for i in range(10)
-    }
+    # an orphaned staged segment (in-flight/aborted task) is NOT visible
+    w = VectorStoreWriter(path, T.StructType.fromDDL("chunk_id string"), False)
+    orphan = _staged(w, ["ghost"])
+    assert "ghost" not in _ids(sink)
 
-    # append mode: second load extends the manifest
+    # append mode: a second load extends the sink
     df.limit(2).write.format("vector_store").option("path", path).mode(
         "append"
     ).save()
-    assert len(read_committed(path)) == 12
+    assert sink.read().count() == 12
 
-    # abort() removes spooled-but-uncommitted files
-    from vectordb_data_ingestion_spark.sinks.datasource_writer import (
-        VectorStoreWriter,
-        _SpoolCommit,
-    )
+    # abort() drops staged-but-uncommitted segments; empty tasks stage none
+    w.abort([orphan, None, _staged(w, [])])
+    assert not os.path.exists(os.path.join(path, "_data", orphan.dir))
+    assert sink.read().count() == 12
 
-    w = VectorStoreWriter({"path": path}, overwrite=False)
-    with open(os.path.join(path, "_spool", "doomed.jsonl"), "w") as f:
-        f.write("{}\n")
-    w.abort([_SpoolCommit(filename="doomed.jsonl", n_rows=1), None])
-    assert not os.path.exists(os.path.join(path, "_spool", "doomed.jsonl"))
+    # the writer takes one option
+    with pytest.raises(Exception, match="exactly one option"):
+        df.write.format("vector_store").option("path", path).option(
+            "class_name", "KB"
+        ).mode("append").save()
 
 
 def test_vector_store_writer_overwrite_retires_spool_and_vacuum(spark, tmp_path):
-    import os
-
+    """Overwrite makes the new load the whole segment list in one CAS; the
+    replaced load stays readable through ``read_at`` until the sink's
+    ``vacuum`` reclaims it along with orphans, never a committed file."""
     from vectordb_data_ingestion_spark.sinks.datasource_writer import (
         VectorStoreDataSource,
-        read_committed,
-        vacuum,
+        VectorStoreWriter,
     )
 
     spark.dataSource.register(VectorStoreDataSource)
     path = str(tmp_path / "store2")
     df = spark.createDataFrame([(f"c{i}",) for i in range(4)], ["chunk_id"])
     df.write.format("vector_store").option("path", path).mode("append").save()
-    first_files = set(os.listdir(os.path.join(path, "_spool")))
-    # overwrite: manifest rewritten AND prior spool files retired
+    sink = ManifestVectorSink(spark, path, partition_col=None)
+    first = sink.current_commit_id()
+    replaced = len(sink._get_manifest()[0]["segments"])
     df.limit(2).write.format("vector_store").option("path", path).mode(
         "overwrite"
     ).save()
-    assert len(read_committed(path)) == 2
-    remaining = set(os.listdir(os.path.join(path, "_spool")))
-    assert not (first_files & remaining)
-    # vacuum removes orphans (dead-task leftovers) but not committed files
-    with open(os.path.join(path, "_spool", "orphan.jsonl"), "w") as f:
-        f.write("{}\n")
-    assert vacuum(path) == 1
-    assert len(read_committed(path)) == 2
+    assert sink.read().count() == 2
+    assert sink.read_at(first).count() == 4
+    # vacuum reclaims the replaced segments and an orphan (a dead task's
+    # leftover), but not the committed load
+    _staged(VectorStoreWriter(path, df.schema, False), ["orphan"])
+    assert sink.vacuum() == replaced + 1
+    live = {s["dir"] for s in sink._get_manifest()[0]["segments"]}
+    assert set(os.listdir(os.path.join(path, "_data"))) == live
+    assert sink.read().count() == 2
+    # overwriting with no rows empties the sink
+    df.limit(0).write.format("vector_store").option("path", path).mode(
+        "overwrite"
+    ).save()
+    assert sink._get_manifest()[0]["segments"] == []
+    with pytest.raises(FileNotFoundError):
+        sink.read()
 
 
-def test_vector_store_concurrent_append_commits_lossless(tmp_path):
-    # regression (ADVICE r5): append-mode commit is read-modify-replace; two
-    # jobs committing to the same sink path concurrently raced, the loser's
-    # manifest lines vanished, and vacuum() then deleted its committed spool
-    # files. The flock sidecar makes the section mutually exclusive.
+def test_vector_store_concurrent_append_commits_lossless(spark, tmp_path):
+    # concurrent append commits to one sink path must lose no committed
+    # segment, and vacuum() must then reclaim nothing. The commit is one
+    # manifest CAS; losers re-read and retry.
     import threading
 
     from vectordb_data_ingestion_spark.sinks.datasource_writer import (
         VectorStoreWriter,
-        _SpoolCommit,
-        read_committed,
-        vacuum,
     )
 
     path = str(tmp_path / "store_conc")
-    os.makedirs(os.path.join(path, "_spool"), exist_ok=True)
     n_threads, n_commits = 4, 25
+    schema = T.StructType.fromDDL("chunk_id string")
 
     def run(tid):
-        w = VectorStoreWriter({"path": path}, overwrite=False)
+        w = VectorStoreWriter(path, schema, overwrite=False)
         for i in range(n_commits):
-            fname = f"t{tid}_{i}.jsonl"
-            with open(os.path.join(path, "_spool", fname), "w") as f:
-                f.write('{"class": "Chunk", "chunk_id": "%s"}\n' % fname)
-            w.commit([_SpoolCommit(filename=fname, n_rows=1)])
+            w.commit([_staged(w, [f"t{tid}_{i}"])])
 
     threads = [threading.Thread(target=run, args=(t,)) for t in range(n_threads)]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
-    rows = read_committed(path)
-    assert len(rows) == n_threads * n_commits
-    # and vacuum must not remove any committed file
-    assert vacuum(path) == 0
-    assert len(read_committed(path)) == n_threads * n_commits
+        t.join(300)
+    assert not any(t.is_alive() for t in threads)
+    sink = ManifestVectorSink(spark, path, partition_col=None)
+    want = sorted(f"t{t}_{i}" for t in range(n_threads) for i in range(n_commits))
+    assert _ids(sink) == want
+    # and vacuum must not remove any committed segment
+    assert sink.vacuum() == 0
+    assert _ids(sink) == want
 
 
-def test_overwrite_commit_spares_inflight_spool(tmp_path):
-    # review r6: overwrite used to retire EVERY spool file not in the new
-    # manifest — including a concurrent job's spooled-but-uncommitted
-    # file, whose commit then published lines for deleted files. Only
-    # files the PREVIOUS manifest listed may be retired.
+def test_overwrite_commit_spares_inflight_spool(spark, tmp_path):
+    # an overwrite must not destroy a concurrent job's staged,
+    # uncommitted segment, and that job's later commit must still land.
     from vectordb_data_ingestion_spark.sinks.datasource_writer import (
         VectorStoreWriter,
-        _SpoolCommit,
-        read_committed,
     )
 
     path = str(tmp_path / "store_inflight")
-    spool = os.path.join(path, "_spool")
-    os.makedirs(spool, exist_ok=True)
+    schema = T.StructType.fromDDL("chunk_id string")
+    appender = VectorStoreWriter(path, schema, overwrite=False)
+    appender.commit([_staged(appender, ["old"])])
+    inflight = _staged(appender, ["inflight"])  # another job's task
 
-    def spool_file(fname):
-        with open(os.path.join(spool, fname), "w") as f:
-            f.write('{"class": "Chunk", "chunk_id": "%s"}\n' % fname)
+    overwriter = VectorStoreWriter(path, schema, overwrite=True)
+    overwriter.commit([_staged(overwriter, ["new"])])
 
-    appender = VectorStoreWriter({"path": path}, overwrite=False)
-    spool_file("old.jsonl")
-    appender.commit([_SpoolCommit(filename="old.jsonl", n_rows=1)])
-    spool_file("inflight.jsonl")  # another job's task: spooled, uncommitted
-
-    overwriter = VectorStoreWriter({"path": path}, overwrite=True)
-    spool_file("new.jsonl")
-    overwriter.commit([_SpoolCommit(filename="new.jsonl", n_rows=1)])
-
-    # the prior load is retired, the in-flight file survives
-    assert not os.path.exists(os.path.join(spool, "old.jsonl"))
-    assert os.path.exists(os.path.join(spool, "inflight.jsonl"))
-    assert [r["chunk_id"] for r in read_committed(path)] == ["new.jsonl"]
+    # the prior load is replaced, the in-flight segment survives
+    sink = ManifestVectorSink(spark, path, partition_col=None)
+    assert os.path.isdir(os.path.join(path, "_data", inflight.dir))
+    assert _ids(sink) == ["new"]
 
     # ...so the in-flight job's own commit still lands intact
-    appender.commit([_SpoolCommit(filename="inflight.jsonl", n_rows=1)])
-    assert sorted(r["chunk_id"] for r in read_committed(path)) == [
-        "inflight.jsonl", "new.jsonl",
-    ]
+    appender.commit([inflight])
+    assert _ids(sink) == ["inflight", "new"]
+
+
+def test_vector_store_failed_job_leaves_sink_unchanged(spark, tmp_path):
+    """A job whose UDF raises in one task commits nothing: ``read()`` is
+    unchanged, and after abort and the sink's ``vacuum()`` no staged
+    segment of the surviving tasks is left under ``_data``."""
+    from pyspark.sql.types import StringType
+
+    from vectordb_data_ingestion_spark.sinks.datasource_writer import (
+        VectorStoreDataSource,
+    )
+
+    spark.dataSource.register(VectorStoreDataSource)
+    path = str(tmp_path / "store_fail")
+    df = spark.createDataFrame(
+        [(f"c{i}",) for i in range(12)], "chunk_id string"
+    ).repartition(4)
+    df.write.format("vector_store").option("path", path).mode("append").save()
+    sink = ManifestVectorSink(spark, path, partition_col=None)
+    before_id, before = sink.current_commit_id(), _ids(sink)
+
+    @F.udf(StringType())
+    def boom(cid):
+        if cid == "c7":
+            raise ValueError("task failure")
+        return cid
+
+    with pytest.raises(Exception, match="task failure"):
+        df.select(boom("chunk_id").alias("chunk_id")).write.format(
+            "vector_store"
+        ).option("path", path).mode("append").save()
+    assert sink.current_commit_id() == before_id
+    assert _ids(sink) == before
+    sink.vacuum()
+    live = {s["dir"] for s in sink._get_manifest()[0]["segments"]}
+    assert set(os.listdir(os.path.join(path, "_data"))) == live
+    assert _ids(sink) == before
 
 
 def test_delete_where_df_matches_list_form(spark, tmp_path):

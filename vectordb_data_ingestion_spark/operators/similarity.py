@@ -587,8 +587,7 @@ def kmeans_fit(
     engines - no RNG; max rounded cosine, ties -> lowest centroid id;
     empty cells drop). Returns ``(c_id, c_embedding, n_members)`` - the
     same centroids as chaining :func:`kmeans_refine` ``iterations`` times
-    from those seeds while no centroid has zero norm (6dp rounding absorbs
-    summation-order differences).
+    from those seeds (6dp rounding absorbs summation-order differences).
 
     Each iteration is ONE corpus pass (same pattern as pq.pq_train): every
     Arrow batch assigns with a matmul and emits per-cell partial sums; the
@@ -636,17 +635,23 @@ def kmeans_fit(
 
     for _ in range(iterations):
         cn = np.sqrt((c * c).sum(axis=1))
-        cn[cn == 0.0] = 1.0
+        c_zero = cn == 0.0
+        cn[c_zero] = 1.0
         cu = (c / cn[:, None]).copy()
 
-        def partial_sums(batches, cu=cu):
+        def partial_sums(batches, cu=cu, c_zero=c_zero):
             for pdf in batches:
                 if pdf.empty:
                     continue
                 x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
                 xn = np.sqrt((x * x).sum(axis=1))
                 xn[xn == 0.0] = 1.0
-                cells = np.argmax(np.round((x / xn[:, None]) @ cu.T, 6), axis=1)
+                sims = np.round((x / xn[:, None]) @ cu.T, 6)
+                # a zero-norm centroid never captures a vector, as in
+                # assign_ivf_cells_vectorized
+                if c_zero.any():
+                    sims[:, c_zero] = -np.inf
+                cells = np.argmax(sims, axis=1)
                 uniq = np.unique(cells)
                 yield pd.DataFrame(
                     {

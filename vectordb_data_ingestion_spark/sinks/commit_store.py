@@ -1,10 +1,10 @@
 """Commit primitives for sink mutation protocols.
 
-The parquet sink and the two-phase datasource writer both need one thing
-from their storage to be crash- and concurrency-safe: an ATOMIC publish of
-a small control object (a manifest / generation pointer) that either wholly
-succeeds against the expected prior state or wholly fails. POSIX gives that
-via ``flock`` + ``os.replace``; object stores (the storage a 1000-executor
+The manifest sink needs one thing from its storage to be crash- and
+concurrency-safe: an ATOMIC publish of a small control object (a
+manifest / generation pointer) that either wholly succeeds against the
+expected prior state or wholly fails. POSIX gives that via ``flock`` +
+``os.replace``; object stores (the storage a 1000-executor
 cluster actually runs on) have NO rename and NO flock — they give
 *conditional put* (put-if-match on an etag / put-if-absent), which is what
 Delta/Iceberg-style commit logs are built on.
@@ -24,7 +24,7 @@ This module is the seam between the two worlds:
 - :class:`MemoryConditionalStore` — in-process binding for unit tests of
   the protocol logic itself (thread-safe; emulates etag semantics exactly).
 
-``cas_update`` is the optimistic-retry loop both sinks share.
+``cas_update`` is the optimistic-retry loop for small monotonic counters.
 """
 
 from __future__ import annotations

@@ -1,203 +1,121 @@
-"""Vector-store sink as a Spark 4 Python DataSource *writer*.
+"""Vector-store sink as a Spark 4 Python DataSource *writer*: the two-phase
+form of the reference's batch load (cmfunctions.py:177-223), where a
+failed or cancelled job leaves nothing visible.
 
-``BatchingClientSink`` (vector_store.py) is the ``foreachPartition`` form of
-the reference's ``data_load_weaviate`` loop (cmfunctions.py:177-223); it adds
-batching, backoff and idempotent ids, but inherits the loop's weakest
-property: a task that fails AFTER some batches flushed leaves them visible
-(the retry re-upserts idempotently, but a killed job leaves a partial load).
+``df.write.format("vector_store").option("path", p)`` loads into an
+unpartitioned :class:`ManifestVectorSink` at ``p``. Each task stages its
+Arrow batches as one parquet file in a fresh segment dir
+``<p>/_data/<uuid>/`` and returns that dir in its commit message; only
+when EVERY task succeeded does the driver-side ``commit`` publish all the
+staged segments in one manifest CAS (``ManifestVectorSink._commit_staged``,
+the commit ``upsert`` makes, lost-response guards included). ``overwrite``
+makes them the whole segment list in that CAS; ``abort`` drops them. The
+load reads back through ``ManifestVectorSink(spark, p, partition_col=None)
+.read()``.
 
-This module is the two-phase form: ``df.write.format("vector_store")`` spools
-each task's batches to an uncommitted staging area and returns a
-``WriterCommitMessage``; only when EVERY task succeeded does the driver-side
-``commit`` publish a manifest making the load visible. ``abort`` removes the
-spool — a failed or cancelled job leaves nothing visible. That is the same
-commit protocol Spark's file sinks use, expressed over a vector-store-shaped
-payload (one JSON object per chunk row: id, properties, vector).
-
-The staging substrate here is a directory (hermetic, testable); a real
-deployment points the same protocol at a store with staged-collection or
-alias-swap support (e.g. load into ``class__staging``, alias-flip on commit).
-``read_committed`` is the read side of the contract: only manifest-listed
-spool files count.
-
-Manifest publication goes through the :mod:`~.commit_store` commit
-primitives (VERDICT r6 item 2): the read-modify-write is an optimistic
-compare-and-swap loop — no lock is held across it, so the identical
-protocol code runs against the local file binding (flock inside each
-``put_if`` only, the hermetic default) and against an object store's
-conditional PUT (a deployment wraps its API in a ``ConditionalStore``).
-Concurrent committers race on the CAS; the loser re-reads and re-applies,
-so no manifest line is ever lost.
+One segment per task, never one dir shared by the job: a sink read scans
+whole segment dirs, and a ``"full"`` manifest entry means everything under
+its dir is live, so a failed task attempt's leftover file in a shared dir
+would become visible. In a per-task dir it is an unreferenced orphan, which
+the sink's ``vacuum()`` reclaims.
 """
 
 from __future__ import annotations
 
-import json
+import logging
 import os
 import uuid
 from dataclasses import dataclass
 
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceWriter,
+    DataSourceArrowWriter,
     WriterCommitMessage,
 )
 
-from vectordb_data_ingestion_spark.sinks.commit_store import (
-    ConditionalStore,
-    FileConditionalStore,
-    cas_update,
-)
-
-MANIFEST = "_committed_manifest.jsonl"
-
-
-def _manifest_store(path: str) -> ConditionalStore:
-    """Default binding: the manifest lives at its historical location
-    ``<path>/_committed_manifest.jsonl`` (read_committed and pre-existing
-    sinks keep working); the version sidecar + store lock land next to
-    it. A deployment swaps this for its conditional-put wrapper."""
-    os.makedirs(path, exist_ok=True)
-    return FileConditionalStore(path)
+from vectordb_data_ingestion_spark.sinks.commit_store import ConditionalStore
+from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
 
 
 @dataclass
-class _SpoolCommit(WriterCommitMessage):
-    filename: str
-    n_rows: int
+class _Staged(WriterCommitMessage):
+    dir: str | None  # the task's segment dir under <path>/_data; None = no rows
 
 
-class VectorStoreWriter(DataSourceWriter):
-    def __init__(self, options: dict, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("vector_store writer requires option 'path'")
-        self.class_name = options.get("class_name", "Chunk")
-        self.batch_size = int(options.get("batch_size", "150"))
+class VectorStoreWriter(DataSourceArrowWriter):
+    def __init__(self, path: str, schema: T.StructType, overwrite: bool):
+        self.path = path
+        self.schema = schema
         self.overwrite = overwrite
+
+    def _sink(self, store: ConditionalStore | None) -> ManifestVectorSink:
+        # commit and abort run in a Python worker with no SparkSession
+        return ManifestVectorSink(
+            SparkSession.getActiveSession(),
+            self.path,
+            partition_col=None,
+            store=store,
+        )
 
     # -- executor side --------------------------------------------------
     def write(self, iterator):
-        spool = os.path.join(self.path, "_spool")
-        os.makedirs(spool, exist_ok=True)
-        fname = f"{uuid.uuid4().hex}.jsonl"
-        n = 0
-        batch: list[str] = []
-        with open(os.path.join(spool, fname), "w") as f:
-            for row in iterator:
-                obj = row.asDict(recursive=True)
-                batch.append(json.dumps({"class": self.class_name, **obj}))
-                n += 1
-                if len(batch) >= self.batch_size:
-                    f.write("\n".join(batch) + "\n")
-                    batch = []
-            if batch:
-                f.write("\n".join(batch) + "\n")
-        return _SpoolCommit(filename=fname, n_rows=n)
+        import pyarrow.parquet as pq
+
+        seg = uuid.uuid4().hex
+        seg_dir = os.path.join(self.path, "_data", seg)
+        out = None
+        try:
+            for batch in iterator:
+                if batch.num_rows == 0:
+                    continue
+                if out is None:
+                    os.makedirs(seg_dir)
+                    out = pq.ParquetWriter(
+                        os.path.join(seg_dir, "part-00000.parquet"),
+                        batch.schema,
+                    )
+                out.write_batch(batch)
+        finally:
+            if out is not None:
+                out.close()
+        return _Staged(dir=seg if out is not None else None)
 
     # -- driver side -----------------------------------------------------
-    def _store(self) -> ConditionalStore:
-        return _manifest_store(self.path)
-
     def commit(self, messages, store: ConditionalStore | None = None):
-        """Publish the load: CAS the manifest (see module docstring), then
-        — for overwrite — retire the spool files the manifest generation
-        we replaced listed and the new one doesn't. ``store`` is the
-        commit-primitive binding; tests pass a ``MemoryConditionalStore``
-        to prove the protocol is rename/lock-free."""
-        store = store or self._store()
-        committed = {m.filename for m in messages if m is not None}
-        lines = [
-            json.dumps({"file": m.filename, "n_rows": m.n_rows}) + "\n"
-            for m in messages
-            if m is not None
-        ]
-        new_payload = "".join(lines).encode()
-        if self.overwrite:
-            # Retirement set = files the REPLACED manifest generation
-            # listed and the new one doesn't. Deleting "everything not in
-            # the new manifest" instead would destroy a concurrent job's
-            # spooled-but-uncommitted files (review r6). Computed inside
-            # the CAS transform so it matches the generation the winning
-            # put actually replaced; orphans from dead tasks stay
-            # vacuum()'s job.
-            retire: set[str] = set()
-
-            def transform(data: bytes | None) -> bytes:
-                nonlocal retire
-                retire = set()
-                if data:
-                    retire = {
-                        json.loads(line)["file"]
-                        for line in data.decode().splitlines()
-                        if line.strip()
-                    } - committed
-                return new_payload
-
-            # Manifest publishes ATOMICALLY (conditional put) before any
-            # spool file is retired: a crash mid-commit leaves either the
-            # old manifest (all its files still present) or the new one —
-            # never a manifest referencing deleted files.
-            cas_update(store, MANIFEST, transform)
-            spool = os.path.join(self.path, "_spool")
-            for fn in retire:
-                try:
-                    os.remove(os.path.join(spool, fn))
-                except FileNotFoundError:
-                    pass
-        else:
-            # append = CAS read-modify-write: concurrent appenders race on
-            # the conditional put and the loser re-applies onto the
-            # winner's manifest — no committed lines ever vanish, and a
-            # crash mid-put leaves the prior manifest intact (the put is
-            # atomic), never a truncated JSON line. Idempotent by spool
-            # filename: a lost-response retry (the put landed but reported
-            # failure) or a re-driven commit must not list a file twice —
-            # read_committed would read its rows twice.
-            def transform(data: bytes | None) -> bytes:
-                seen = {
-                    json.loads(line)["file"]
-                    for line in (data or b"").decode().splitlines()
-                    if line.strip()
-                }
-                add = [
-                    line
-                    for line in lines
-                    if json.loads(line)["file"] not in seen
-                ]
-                return (data or b"") + "".join(add).encode()
-
-            cas_update(store, MANIFEST, transform)
+        """Publish every task's staged segment in one CAS. ``store`` is the
+        commit-primitive binding; tests pass a ``MemoryConditionalStore``."""
+        entries = [{"dir": m.dir, "full": True} for m in messages if m and m.dir]
+        self._sink(store)._commit_staged(
+            entries, self.schema, replace=self.overwrite
+        )
 
     def abort(self, messages, store: ConditionalStore | None = None):
-        """Remove the failed job's spool files — EXCEPT any the manifest
-        already lists. Spark calls abort when commit() raises, and a
-        commit that exhausted its CAS retries can still have LANDED one
-        of its puts (lost response): deleting a manifest-listed file
-        here would break every read_committed, the same
-        reported-failure-destroys-committed-data class the manifest
-        sink's staging loops guard against. A listed file means that
-        part of the load IS committed — leave it; vacuum never touches
-        manifest-listed files either."""
-        committed: set[str] = set()
+        """Drop the failed job's staged dirs, except any the current
+        manifest references (a commit that raised may still have landed
+        a put). If the manifest can't be read, keep them all: an orphan
+        is garbage ``vacuum()`` reclaims, while a dropped referenced dir
+        breaks every read."""
+        staged = [m.dir for m in messages if m and m.dir]
+        if not staged:
+            return
         try:
-            cur = (store or self._store()).get(MANIFEST)
-            if cur is not None:
-                committed = {
-                    json.loads(line)["file"]
-                    for line in cur[0].decode().splitlines()
-                    if line.strip()
-                }
+            sink = self._sink(store)
+            manifest, _ = sink._get_manifest()
         except Exception:
-            pass  # manifest unreadable: keep abort best-effort
-        spool = os.path.join(self.path, "_spool")
-        for m in messages:
-            if m is None or m.filename in committed:
-                continue
-            try:
-                os.remove(os.path.join(spool, m.filename))
-            except FileNotFoundError:
-                pass
+            logging.getLogger(__name__).warning(
+                "vector_store abort at %s: manifest unreadable, keeping %d "
+                "staged segments for vacuum()",
+                self.path,
+                len(staged),
+                exc_info=True,
+            )
+            return
+        live = {s["dir"] for s in (manifest or {}).get("segments", [])}
+        for d in staged:
+            if d not in live:
+                sink._drop_segment({"dir": d})
 
 
 class VectorStoreDataSource(DataSource):
@@ -206,53 +124,13 @@ class VectorStoreDataSource(DataSource):
         return "vector_store"
 
     def writer(self, schema, overwrite: bool) -> VectorStoreWriter:
-        return VectorStoreWriter(self.options, overwrite)
-
-
-def vacuum(path: str, store: ConditionalStore | None = None) -> int:
-    """Remove spool files not listed in the manifest — the leftovers of
-    tasks that died before returning a commit message (abort can only
-    clean files it was TOLD about). Run only while no load is in flight
-    (an in-flight task's spool file is not yet in any manifest, exactly
-    like an orphan — and quiescence is also what makes the lock-free
-    read-then-delete safe). Returns the number of files removed."""
-    spool = os.path.join(path, "_spool")
-    if not os.path.isdir(spool):
-        return 0
-    store = store or _manifest_store(path)
-    cur = store.get(MANIFEST)
-    committed: set[str] = set()
-    if cur is not None:
-        committed = {
-            json.loads(line)["file"]
-            for line in cur[0].decode().splitlines()
-            if line.strip()
-        }
-    removed = 0
-    for fn in os.listdir(spool):
-        if fn not in committed:
-            try:
-                os.remove(os.path.join(spool, fn))
-                removed += 1
-            except FileNotFoundError:
-                pass
-    return removed
-
-
-def read_committed(path: str, store: ConditionalStore | None = None) -> list[dict]:
-    """The read side of the commit protocol: only spool files listed in the
-    manifest are visible; orphaned spool files (from aborted or in-flight
-    jobs) are ignored."""
-    store = store or _manifest_store(path)
-    cur = store.get(MANIFEST)
-    if cur is None:
-        return []
-    out: list[dict] = []
-    for line in cur[0].decode().splitlines():
-        if not line.strip():
-            continue
-        entry = json.loads(line)
-        fp = os.path.join(path, "_spool", entry["file"])
-        with open(fp) as f:
-            out.extend(json.loads(l) for l in f if l.strip())
-    return out
+        if set(self.options) != {"path"}:
+            raise ValueError(
+                "vector_store writer takes exactly one option, 'path'; got "
+                f"{sorted(self.options)}"
+            )
+        w = VectorStoreWriter(self.options["path"].rstrip("/"), schema, overwrite)
+        # opening the sink checks the stored layout, so a path built with
+        # another one fails here, before any task runs
+        w._sink(None)
+        return w

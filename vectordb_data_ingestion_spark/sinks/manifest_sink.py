@@ -179,14 +179,17 @@ class ManifestVectorSink:
       stored key type before hashing (xxhash64 is type-sensitive);
     - the manifest records the layout config; reopening with a different
       one fails loudly (the mixed-layout hazard, caught at open not at
-      first delete).
+      first delete);
+    - ``spark=None`` opens a commit-only handle (the ``vector_store``
+      writer commits from a Python worker with no session): it commits
+      staged segments whose schema needs no analyzer merge.
     """
 
     BUCKET_COL = "pbucket"
 
     def __init__(
         self,
-        spark: SparkSession,
+        spark: SparkSession | None,
         base_path: str,
         partition_col: str | None = "load_dt",
         key_col: str | None = None,
@@ -214,10 +217,7 @@ class ManifestVectorSink:
     # -- manifest plumbing -------------------------------------------------
 
     def _get_manifest(self) -> tuple[dict | None, object]:
-        cur = self._get_state(_MANIFEST_KEY)
-        if cur is None:
-            return None, None
-        return cur
+        return self._get_state(_MANIFEST_KEY) or (None, None)
 
     def _get_state(self, key: str) -> tuple[dict, object] | None:
         """Manifest-or-history read through the parsed-handle seam when
@@ -283,6 +283,12 @@ class ManifestVectorSink:
             for f in writer.fields
         ):
             return table
+        if self.spark is None:  # a commit-only handle (class docstring)
+            raise RuntimeError(
+                f"can't merge {writer.simpleString()} into the table schema "
+                f"{table.simpleString()} without a SparkSession: append it "
+                "with ManifestVectorSink.upsert"
+            )
         empty = self.spark.createDataFrame
         return (
             empty([], table)
@@ -638,7 +644,28 @@ class ManifestVectorSink:
         if self.n_buckets:
             # recompute, never trust a caller-supplied bucket column
             df = df.withColumn(self.BUCKET_COL, self._bucket_expr(self.key_col))
-        entry = self._write_segment(df)
+        self._commit_staged([self._write_segment(df)], df.schema, txn=txn)
+
+    def _commit_staged(
+        self,
+        entries: list[dict],
+        schema: T.StructType,
+        txn: tuple[str, int] | None = None,
+        replace: bool = False,
+    ) -> None:
+        """Publish already-written segment ``entries`` (rows of ``schema``)
+        in ONE CAS: appended to the current segment list, or with
+        ``replace`` as the whole new list (an overwrite; the replaced
+        segments stay readable through :meth:`read_at` until
+        :meth:`vacuum`). The commit path of :meth:`upsert` and of the
+        ``vector_store`` DataSource writer. Entries the commit does not
+        publish are dropped; entries a manifest may reference never are."""
+        if not entries and not replace:
+            return
+
+        def drop_all() -> None:
+            for e in entries:
+                self._drop_segment(e)
 
         first_seen: int | None = None
         for attempt in range(self.max_cas_retries + 1):
@@ -650,49 +677,53 @@ class ManifestVectorSink:
                 manifest is not None
                 and manifest.get("layout") != self._layout()
             ):
-                self._drop_segment(entry)
+                drop_all()
                 raise RuntimeError(
                     f"sink at {self.base_path} layout changed concurrently"
                 )
             existing = (manifest or {}).get("segments", [])
             # lost-response guard: a conditional put that LANDED but
             # reported failure (network retry against a real store) would
-            # otherwise re-append this entry on the next loop — duplicate
-            # rows. The segment dir is a uuid, so finding it in the
-            # manifest proves our own put won. If a concurrent delete or
-            # compaction already dereferenced the whole segment (its
-            # entry filtered out when the file list emptied), the current
-            # manifest won't show it — so on retries also scan the
-            # retained history between the generation we first read and
-            # now: our put can only have landed in that range, and
-            # _commit's healing guarantees every superseded generation in
-            # it has its history key. Found there = it landed and a later
-            # mutation legitimately removed the rows — re-appending would
-            # resurrect deleted rows. (Deletes and compactions don't need
-            # any of this: their retry re-derives against the current
-            # manifest, which already reflects them.)
-            if any(s["dir"] == entry["dir"] for s in existing):
+            # otherwise re-append these entries on the next loop —
+            # duplicate rows. Segment dirs are uuids and all entries land
+            # in one CAS, so finding the first one in the manifest proves
+            # our own put won. If a concurrent delete or compaction
+            # already dereferenced the whole segment (its entry filtered
+            # out when the file list emptied), the current manifest won't
+            # show it — so on retries also scan the retained history
+            # between the generation we first read and now: our put can
+            # only have landed in that range, and _commit's healing
+            # guarantees every superseded generation in it has its history
+            # key. Found there = it landed and a later mutation
+            # legitimately removed the rows — re-appending would resurrect
+            # deleted rows. (Deletes and compactions don't need any of
+            # this: their retry re-derives against the current manifest,
+            # which already reflects them.)
+            if entries and any(s["dir"] == entries[0]["dir"] for s in existing):
                 return
-            if attempt and self._dir_in_history(
-                entry["dir"], first_seen + 1, cur_id
+            if entries and attempt and self._dir_in_history(
+                entries[0]["dir"], first_seen + 1, cur_id
             ):
                 return
             # replayed batch: this writer's batch id is already committed
             # (checked after the lost-response guards, so the staged
-            # segment dropped here is never one a manifest references)
+            # segments dropped here are never ones a manifest references)
             if txn is not None and int(
                 ((manifest or {}).get("txns") or {}).get(txn[0], -1)
             ) >= int(txn[1]):
-                self._drop_segment(entry)
+                drop_all()
                 return
             try:
-                table = self._next_table_schema(manifest, df.schema)
+                # an overwrite replaces the table, schema included
+                table = self._next_table_schema(
+                    None if replace else manifest, schema
+                )
             except Exception:
                 # a type conflict unionByName rejects: refuse the append
-                # (after the guards above, so the segment is unreferenced)
-                self._drop_segment(entry)
+                # (after the guards above, so the segments are unreferenced)
+                drop_all()
                 raise
-            segments = [*existing, entry]
+            segments = [*([] if replace else existing), *entries]
             if self._commit(
                 manifest, segments, token, table=table, txn=txn
             ) is not None:
@@ -700,23 +731,20 @@ class ManifestVectorSink:
             self._cas_backoff(attempt)
         # exhaustion: the LAST attempt may itself have landed with a lost
         # response — never drop a segment the manifest references
-        if self._lost_response_landed(entry, first_seen or 0):
+        if entries and self._lost_response_landed(entries[0], first_seen or 0):
             return
-        self._drop_segment(entry)
+        drop_all()
         raise RuntimeError(
-            f"upsert on {self.base_path} lost {self.max_cas_retries} CAS races"
+            f"commit on {self.base_path} lost {self.max_cas_retries} CAS races"
         )
 
-    def _read_raw(self) -> DataFrame:
+    def read(self) -> DataFrame:
         manifest, _ = self._get_manifest()
         if manifest is None:
             raise FileNotFoundError(
                 f"sink at {self.base_path} is empty or does not exist"
             )
-        return self._read_entries(manifest)
-
-    def read(self) -> DataFrame:
-        df = self._read_raw()
+        df = self._read_entries(manifest)
         return df.drop(self.BUCKET_COL) if self.n_buckets else df
 
     def delete_where(self, col: str, values: list[Any]) -> None:
@@ -1054,40 +1082,14 @@ class ManifestVectorSink:
         )
 
     def compact(self) -> int:
-        """Fold every visible segment into one (object-store compaction:
-        read visible rows, write a single fresh segment, CAS-swap). A
-        FULL-corpus rewrite — explicit opt-in only; the maintenance
-        cadence uses :meth:`compact_small` via :meth:`maybe_compact`.
-        Returns the number of segments merged away; concurrent mutations
-        win the race and the compaction simply retries."""
-        first_seen: int | None = None
-        for attempt in range(self.max_cas_retries + 1):
-            manifest, token = self._get_manifest()
-            if manifest is None or len(manifest["segments"]) <= 1:
-                return 0
-            if first_seen is None:
-                first_seen = int(manifest.get("commit_id", 0))
-            n = len(manifest["segments"])
-            visible = [
-                s for s in manifest["segments"] if self._seg_visible(s)
-            ]
-            if not visible:
-                # only invisible husks: a pure manifest edit folds them
-                if self._commit(manifest, [], token) is not None:
-                    return n
-                self._cas_backoff(attempt)
-                continue
-            entry = self._write_segment(
-                self._compaction_shape(self._read_entries(manifest, visible))
-            )
-            if self._commit(manifest, [entry], token) is not None:
-                return n
-            if self._lost_response_landed(entry, first_seen):
-                return n
-            self._drop_segment(entry)
-            self._cas_backoff(attempt)
-        raise RuntimeError(
-            f"compact on {self.base_path} lost {self.max_cas_retries} CAS races"
+        """Fold every visible segment into one: :meth:`compact_small` with
+        no size threshold and one bin. A FULL-corpus rewrite — explicit
+        opt-in only; the maintenance cadence uses :meth:`compact_small`
+        via :meth:`maybe_compact`. Returns the number of segments merged
+        away; concurrent mutations win the race and the compaction simply
+        retries."""
+        return self.compact_small(
+            small_bytes=float("inf"), target_bytes=float("inf")
         )
 
     # -- snapshots -----------------------------------------------------------
@@ -1164,10 +1166,10 @@ class ManifestVectorSink:
         ``retain_versions=N`` keeps the last N historical generations
         snapshot-readable (their history keys, segments, and files
         survive); older history keys are deleted so ``read_at`` fails
-        loudly rather than dangling on reclaimed data. Quiescent-only,
-        like the datasource writer's vacuum: an in-flight mutation's
-        staged segment is indistinguishable from an orphan. Returns
-        dirs + files removed."""
+        loudly rather than dangling on reclaimed data. Quiescent-only:
+        an in-flight mutation's (or ``vector_store`` write task's) staged
+        segment is indistinguishable from an orphan. Returns dirs + files
+        removed."""
         import shutil
 
         data_root = os.path.join(self.base_path, "_data")
