@@ -284,10 +284,9 @@ def test_commit_primitives_stay_in_the_conditional_store():
 
 # the manifest CAS is the package's one commit protocol: only the store
 # implementations and the manifest sink call the conditional-put primitives
-_CAS_PRIMITIVES = {"cas_update", "put_if", "put_state_if"}
+_CAS_PRIMITIVES = {"cas_update", "put_if"}
 _CAS_ALLOWED = {
     "sinks/commit_store.py",
-    "sinks/log_store.py",
     "sinks/manifest_sink.py",
 }
 
@@ -320,9 +319,9 @@ def _cas_calls(tree):
 
 
 def test_one_commit_protocol():
-    """CI guard: no package module other than the conditional store, its
-    log adapter and the manifest sink calls ``cas_update``, ``put_if`` or
-    ``put_state_if``. Every other writer commits through
+    """CI guard: no package module other than the conditional store and
+    the manifest sink calls ``cas_update`` or ``put_if``. Every other
+    writer commits through
     ``ManifestVectorSink``; a second CAS loop elsewhere is a second
     commit protocol, with its own manifest format and guards."""
     import ast
@@ -346,11 +345,48 @@ def test_one_commit_protocol():
     probe = ast.parse(
         "from x import cas_update as cu\n"
         "def f(s):\n    s.put_if('k', b'', None)\n    cu(s, 'k', g)\n"
-        "    s.put_state_if('k', {}, None)\n"
     )
-    assert [c[0] for c in _cas_calls(probe)] == [
-        "put_if", "cas_update", "put_state_if",
+    assert [c[0] for c in _cas_calls(probe)] == ["put_if", "cas_update"]
+
+
+def _store_probes(tree):
+    """Lines of ``getattr(self.store, ...)`` / ``hasattr(self.store, ...)``
+    calls: a sink probing its store for optional methods."""
+    import ast
+
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("getattr", "hasattr")
+        and node.args
+        and ast.unparse(node.args[0]) == "self.store"
     ]
+
+
+def test_sinks_speak_only_the_conditional_store_protocol():
+    """CI guard: no module under ``sinks/`` probes ``self.store`` with
+    ``getattr``/``hasattr``. A sink calls only the ``ConditionalStore``
+    Protocol's ``get`` / ``put_if`` / ``delete_if``, so a store can't
+    grow a duck-typed side channel that only some sinks take."""
+    import ast
+    import pathlib
+
+    sinks = pathlib.Path(__file__).resolve().parents[1] / (
+        "vectordb_data_ingestion_spark/sinks"
+    )
+    offenders = [
+        f"{path.name}:{line}"
+        for path in sorted(sinks.glob("*.py"))
+        for line in _store_probes(ast.parse(path.read_text()))
+    ]
+    assert not offenders, offenders
+    probe = ast.parse(
+        "def f(self):\n    getattr(self.store, 'x', None)\n"
+        "    hasattr(self.store, 'y')\n    getattr(self.other, 'x')\n"
+    )
+    assert _store_probes(probe) == [2, 3]
 
 
 # Kernels allowed to keep a JVM form X beside an Arrow-batched

@@ -104,26 +104,13 @@ def test_file_store_adopts_pre_cas_files(tmp_path):
 
 
 def _sink(spark, tmp_path, binding, name="msink", **kw):
-    if binding == "memory":
-        store = MemoryConditionalStore()
-    elif binding == "log":
-        # chunked commit log over the in-memory binding, with a small
-        # checkpoint cadence so the tests cross boundaries constantly
-        from vectordb_data_ingestion_spark.sinks.log_store import (
-            LogConditionalStore,
-        )
-
-        store = LogConditionalStore(
-            MemoryConditionalStore(), checkpoint_every=3
-        )
-    else:
-        store = None
+    store = MemoryConditionalStore() if binding == "memory" else None
     return ManifestVectorSink(
         spark, str(tmp_path / name), partition_col=None, store=store, **kw
     )
 
 
-@pytest.fixture(params=["file", "memory", "log"])
+@pytest.fixture(params=["file", "memory"])
 def binding(request):
     return request.param
 
@@ -632,6 +619,39 @@ def test_manifest_sink_table_schema_merges_writers(spark, tmp_path, binding):
     assert rows(sink.read()) == before
 
 
+def test_add_column_merge_equals_the_analyzer(spark):
+    """The session-free merge of an add-column writer is the schema
+    ``unionByName(allowMissingColumns=True)`` computes; a type change or
+    a case-only name match is left to the analyzer."""
+    from pyspark.sql import types as T
+
+    from vectordb_data_ingestion_spark.sinks.manifest_sink import _add_columns
+
+    def ddl(s):
+        return T.StructType.fromDDL(s)
+
+    table = ddl("chunk_id string not null, v double, tags array<string>")
+    shapes = [
+        ddl("chunk_id string, vector array<float>"),  # b missing, a nullable
+        ddl("lang string not null, chunk_id string not null, x int"),
+        ddl("z bigint not null"),  # only new columns
+        ddl(
+            "tags array<string>, v double, chunk_id string not null,"
+            " w map<string,int>"
+        ),
+    ]
+    empty = spark.createDataFrame
+    for writer in shapes:
+        want = (
+            empty([], table)
+            .unionByName(empty([], writer), allowMissingColumns=True)
+            .schema
+        )
+        assert _add_columns(table, writer) == want, writer.simpleString()
+    assert _add_columns(table, ddl("chunk_id string, v float")) is None
+    assert _add_columns(table, ddl("Chunk_ID string, x int")) is None
+
+
 def test_manifest_sink_widening_a_pinned_scan_cannot_read(
     spark, tmp_path, binding
 ):
@@ -676,14 +696,8 @@ def test_manifest_sink_schemaless_manifest_reads_and_is_seeded(
     }
     if binding == "file":
         store = FileConditionalStore(str(tmp_path / "old_ctrl"))
-    elif binding == "memory":
-        store = MemoryConditionalStore()
     else:
-        from vectordb_data_ingestion_spark.sinks.log_store import (
-            LogConditionalStore,
-        )
-
-        store = LogConditionalStore(MemoryConditionalStore())
+        store = MemoryConditionalStore()
     assert store.put_if("MANIFEST", json.dumps(old).encode(), None)
     sink = ManifestVectorSink(
         spark, str(tmp_path / "old"), partition_col=None, store=store
@@ -781,7 +795,7 @@ def test_manifest_sink_maybe_compact_threshold(spark, tmp_path):
     assert sink.read().count() == 5
 
 
-@pytest.mark.parametrize("substrate", ["file", "log"])
+@pytest.mark.parametrize("substrate", ["file"])
 def test_manifest_sink_randomized_against_model(spark, tmp_path, substrate):
     """Model-based drill: a seeded random sequence of upserts / key
     deletes / compactions / vacuums runs against both the sink and a
@@ -789,9 +803,7 @@ def test_manifest_sink_randomized_against_model(spark, tmp_path, substrate):
     visible rows equal the model, and at the end every retained snapshot
     equals the model's state as of that commit. Catches whole classes of
     manifest-bookkeeping bugs (dropped refs, double refs, wrong-bucket
-    pruning) that example tests can miss. Runs over the monolithic CAS
-    manifest AND the chunked commit log (whose 3-commit checkpoint
-    cadence the 18-step sequence crosses repeatedly)."""
+    pruning) that example tests can miss."""
     import random
 
     rng = random.Random(20260816)
@@ -1045,61 +1057,33 @@ def test_vacuum_reclaims_dead_files_inside_live_segments(spark, tmp_path):
 
 
 class _LostResponseOnce(MemoryConditionalStore):
-    """First successful manifest-commit put LANDS but reports failure —
-    the lost-response behavior of real object stores under network
-    retry. ``commit_keys`` names the key class that carries a commit:
-    the monolithic CAS key, or the chunked store's MLOG record creates
-    (the same event one protocol layer down)."""
+    """First successful MANIFEST put LANDS but reports failure — the
+    lost-response behavior of real object stores under network retry."""
 
-    def __init__(self, commit_keys=("MANIFEST",)):
-        super().__init__()
-        self.commit_keys = commit_keys
-        self.lied = False
-
-    def _is_commit(self, key):
-        return any(
-            key == k or (k.endswith(".") and key.startswith(k))
-            for k in self.commit_keys
-        )
+    lied = False
 
     def put_if(self, key, data, token):
         ok = super().put_if(key, data, token)
-        if ok and self._is_commit(key) and not self.lied:
+        if ok and key == "MANIFEST" and not self.lied:
             self.lied = True
             return False  # it LANDED, but the caller hears failure
         return ok
 
 
-def _lying_store(substrate, cls=_LostResponseOnce):
-    """(store_for_sink, flags) for the lost-response drills: 'mono' lies
-    on the MANIFEST CAS itself; 'log' wraps the lying inner store in the
-    chunked LogConditionalStore, lying on its MLOG record create."""
-    if substrate == "mono":
-        inner = cls()
-        return inner, inner
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = cls(commit_keys=("MLOG.",))
-    return LogConditionalStore(inner, checkpoint_every=3), inner
-
-
-@pytest.mark.parametrize("substrate", ["mono", "log"])
+@pytest.mark.parametrize("substrate", ["mono"])
 def test_upsert_lost_response_does_not_duplicate(spark, tmp_path, substrate):
     """Real conditional-put stores can apply a put and still report
     failure (lost response / internal retry). upsert's CAS retry must
     detect that its own segment already landed and stop — never append
-    the entry twice. Runs over BOTH commit substrates: the monolithic
-    CAS manifest and the chunked log (VERDICT r8 item 2)."""
-    store, flags = _lying_store(substrate)
+    the entry twice."""
+    store = _LostResponseOnce()
     sink = ManifestVectorSink(
         spark, str(tmp_path / "lost"), partition_col=None, store=store
     )
     sink.upsert(
         spark.createDataFrame([("a", 1), ("b", 2)], "chunk_id string, v long")
     )
-    assert flags.lied
+    assert store.lied
     got = [r["chunk_id"] for r in sink.read().collect()]
     assert sorted(got) == ["a", "b"]  # exactly once, no duplicates
     manifest, _ = sink._get_manifest()
@@ -1190,16 +1174,7 @@ def test_commit_heals_missing_history_key(spark, tmp_path, binding):
     manifest CAS and writing its MANIFEST.v<id> history key. The next
     commit re-publishes the generation it read, so the history chain has
     no permanent gaps (and vacuum / the upsert lost-response guard can
-    rely on it).
-
-    Monolithic bindings only: under the chunked log store a generation's
-    history object IS its commit record — written atomically by the
-    commit itself, so the crash window this test simulates (history key
-    missing while the generation exists) cannot occur and deleting the
-    head's "history key" means pruning the head, which is protocol
-    misuse the store refuses loudly."""
-    if binding == "log":
-        pytest.skip("log store has no separate history object to lose")
+    rely on it)."""
     sink = _sink(spark, tmp_path, binding, name="heal")
     for i in range(3):
         sink.upsert(
@@ -1304,7 +1279,7 @@ def test_history_is_bounded_by_retained_floor(spark, tmp_path):
     assert store.gets <= 10
 
 
-@pytest.mark.parametrize("substrate", ["mono", "log"])
+@pytest.mark.parametrize("substrate", ["mono"])
 def test_upsert_lost_response_with_concurrent_dereference(
     spark, tmp_path, substrate
 ):
@@ -1312,8 +1287,7 @@ def test_upsert_lost_response_with_concurrent_dereference(
     hold even when a concurrent delete dereferenced the just-landed
     segment before the retry — re-appending it would silently resurrect
     the deleted rows. The retry scans retained history (healed by the
-    delete's own commit; under the chunked log, reconstructed from the
-    record chain) for its segment dir and stops."""
+    delete's own commit) for its segment dir and stops."""
     deletes = {}
 
     class LostResponseThenDelete(_LostResponseOnce):
@@ -1321,13 +1295,12 @@ def test_upsert_lost_response_with_concurrent_dereference(
 
         def get(self, key):
             # fire the concurrent delete on the first manifest-read
-            # after the lie: the monolithic store reads MANIFEST, the
-            # chunked store starts every head probe at MLOG_HINT
+            # after the lie
             if (
                 self.lied
                 and deletes.get("fn")
                 and not self.in_hook
-                and key in ("MANIFEST", "MLOG_HINT")
+                and key == "MANIFEST"
             ):
                 self.in_hook = True
                 fn = deletes.pop("fn")
@@ -1335,7 +1308,7 @@ def test_upsert_lost_response_with_concurrent_dereference(
                 self.in_hook = False
             return super().get(key)
 
-    store, flags = _lying_store(substrate, cls=LostResponseThenDelete)
+    store = LostResponseThenDelete()
     sink = ManifestVectorSink(
         spark, str(tmp_path / "lostdel"), partition_col=None, store=store
     )
@@ -1350,7 +1323,7 @@ def test_upsert_lost_response_with_concurrent_dereference(
     sink.upsert(
         spark.createDataFrame([("a", 1), ("b", 2)], "chunk_id string, v long")
     )
-    assert flags.lied and not deletes  # both the lie and the delete ran
+    assert store.lied and not deletes  # both the lie and the delete ran
     # the delete's verdict stands: the retry must NOT resurrect the rows
     assert sink.read().count() == 0
 
@@ -1450,7 +1423,7 @@ def _assert_no_dangling_segments(sink):
             ), f"manifest references deleted dir {s['dir']}"
 
 
-@pytest.mark.parametrize("substrate", ["mono", "log"])
+@pytest.mark.parametrize("substrate", ["mono"])
 @pytest.mark.parametrize("op", ["delete", "delete_bucketed", "compact",
                                 "compact_small"])
 def test_staging_mutations_survive_lost_response(
@@ -1461,8 +1434,8 @@ def test_staging_mutations_survive_lost_response(
     reported failure — but a lost response means the commit LANDED and
     the new manifest references those files; dropping them breaks every
     reader. Each loop now re-checks before dropping and returns success
-    when its commit in fact landed. Runs over BOTH commit substrates."""
-    store, flags = _lying_store(substrate)
+    when its commit in fact landed."""
+    store = _LostResponseOnce()
     kw = (
         {"key_col": "chunk_id", "n_buckets": 4}
         if op == "delete_bucketed"
@@ -1475,14 +1448,14 @@ def test_staging_mutations_survive_lost_response(
         [(f"c{i}", i) for i in range(12)], "chunk_id string, v long"
     )
     sink.upsert(df)
-    assert flags.lied  # the upsert's own commit already absorbed the lie
-    flags.lied = False  # re-arm: the NEXT mutation gets the lie
+    assert store.lied  # the upsert's own commit already absorbed the lie
+    store.lied = False  # re-arm: the NEXT mutation gets the lie
 
     if op in ("delete", "delete_bucketed"):
         sink.delete_where_df(
             "chunk_id", spark.createDataFrame([("c3",), ("c7",)], ["chunk_id"])
         )
-        assert flags.lied
+        assert store.lied
         got = sorted(r["chunk_id"] for r in sink.read().collect())
         assert got == sorted(f"c{i}" for i in range(12) if i not in (3, 7))
     elif op == "compact":
@@ -1490,9 +1463,9 @@ def test_staging_mutations_survive_lost_response(
         sink.upsert(
             spark.createDataFrame([("x", 99)], "chunk_id string, v long")
         )
-        flags.lied = False
+        store.lied = False
         assert sink.compact() >= 2
-        assert flags.lied
+        assert store.lied
         got = sink.read().count()
         assert got == 13
     else:
@@ -1502,9 +1475,9 @@ def test_staging_mutations_survive_lost_response(
                     [(f"s{i}", i)], "chunk_id string, v long"
                 )
             )
-        flags.lied = False
+        store.lied = False
         assert sink.compact_small(small_bytes=1 << 30) >= 2
-        assert flags.lied
+        assert store.lied
         assert sink.read().count() == 15
 
     _assert_no_dangling_segments(sink)
@@ -1644,751 +1617,30 @@ def test_history_walk_is_bounded(spark, tmp_path):
     assert sink._dir_in_history(real_dir, 1, 1) is True
 
 
-# ---------------------------------------------------------------------------
-# chunked commit log (VERDICT r8 item 2)
-# ---------------------------------------------------------------------------
-
-
-class _ByteMeterStore(MemoryConditionalStore):
-    """Counts bytes written per put_if (landed or not) by key prefix."""
-
-    def __init__(self):
-        super().__init__()
-        self.put_bytes: list[tuple[str, int]] = []
-
-    def put_if(self, key, data, token):
-        self.put_bytes.append((key, len(data)))
-        return super().put_if(key, data, token)
-
-
-def _log_sink(spark, tmp_path, name, ckpt=8, **kw):
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    meter = _ByteMeterStore()
-    store = LogConditionalStore(meter, checkpoint_every=ckpt)
-    sink = ManifestVectorSink(
-        spark, str(tmp_path / name), partition_col=None, store=store, **kw
-    )
-    return sink, store, meter
-
-
-def test_log_store_commit_bytes_are_o_of_mutation(spark, tmp_path):
-    """THE boundary this store removes (SCALE.md r8 / VERDICT r8 item 2):
-    the monolithic manifest rewrites the full segment list on every
-    commit, so commit bytes grow with sink metadata; the chunked log's
-    delta records stay flat as segments accumulate. Non-checkpoint
-    record sizes must not grow with the segment count."""
-    sink, store, meter = _log_sink(spark, tmp_path, "obytes", ckpt=1000)
-    df1 = spark.createDataFrame([("x", 1)], "chunk_id string, v long")
-    rec_sizes = []
-    for i in range(24):
-        sink.upsert(df1)
-        rec_sizes.append(
-            next(
-                n for k, n in reversed(meter.put_bytes)
-                if k.startswith("MLOG.")
-            )
-        )
-    # 24 segments in the manifest, but the 24th record is no bigger than
-    # the 2nd (both carry exactly one added entry; the 1st also carries
-    # layout+schema)
-    assert len(sink._get_manifest()[0]["segments"]) == 24
-    assert max(rec_sizes[1:]) <= rec_sizes[1] + 8
-
-
-def test_log_store_retention_and_gc(spark, tmp_path):
-    """vacuum's history pruning maps onto the log: pruned generations
-    read as gone (read_at fails with the retention error), retained ones
-    snapshot-read, and delta records below a covering checkpoint are
-    PHYSICALLY deleted — the log does not grow forever."""
-    sink, store, meter = _log_sink(spark, tmp_path, "ogc", ckpt=4)
-    for i in range(10):
-        sink.upsert(
-            spark.createDataFrame([(f"c{i}", i)], "chunk_id string, v long")
-        )
-    assert sink.current_commit_id() == 10
-    assert sink.read_at(3).count() == 3
-
-    sink.vacuum(retain_versions=2)  # keep v8..v10 readable
-    for cid in (1, 2, 3, 7):
-        with pytest.raises(FileNotFoundError, match="no retained"):
-            sink.read_at(cid)
-    assert sink.read_at(9).count() == 9
-    assert sink.read_at(10).count() == 10
-    assert sink.history() == [10, 9, 8]
-
-    # physical GC: records at/below the covering checkpoint (v8, the
-    # boundary <= pruned+1=8) are gone from the inner store
-    inner = store.inner
-    assert inner.get("MLOG_CKPT.8") is not None
-    for g in range(1, 9):
-        assert inner.get(f"MLOG.{g}") is None, g
-    for g in (9, 10):
-        assert inner.get(f"MLOG.{g}") is not None, g
-
-    # the sink stays fully readable and mutable after GC
-    assert sink.read().count() == 10
-    sink.upsert(
-        spark.createDataFrame([("post", 99)], "chunk_id string, v long")
-    )
-    assert sink.read().count() == 11
-    assert sink.current_commit_id() == 11
-
-
-def test_log_store_vacuum_at_boundary_head(spark, tmp_path):
-    """The nastiest retention edge: retain_versions=0 with the HEAD at a
-    checkpoint boundary lets GC delete the head's own delta record (its
-    checkpoint covers it). The next commit must still accept the head
-    token — the checkpoint proves chain membership — and reads must keep
-    working."""
-    sink, store, meter = _log_sink(spark, tmp_path, "obound", ckpt=4)
-    for i in range(4):  # head lands exactly on the ckpt=4 boundary
-        sink.upsert(
-            spark.createDataFrame([(f"c{i}", i)], "chunk_id string, v long")
-        )
-    sink.vacuum(retain_versions=0)
-    assert store.inner.get("MLOG.4") is None  # head record GC'd
-    assert store.inner.get("MLOG_CKPT.4") is not None
-    assert sink.read().count() == 4  # head reconstructs from the ckpt
-    sink.upsert(  # commit 5 chains off the checkpointed head
-        spark.createDataFrame([("c4", 4)], "chunk_id string, v long")
-    )
-    assert sink.current_commit_id() == 5
-    assert sink.read().count() == 5
-
-
-def test_log_store_concurrent_committers_lossless(spark, tmp_path):
-    """N threads upsert through SEPARATE sink objects sharing one inner
-    store (separate delta caches, same chain): the record-create arbiter
-    must serialize them losslessly — every row lands exactly once and
-    the chain is dense."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    path = str(tmp_path / "oconc")
-    N = 6
-
-    def writer(i):
-        sink = ManifestVectorSink(
-            spark, path, partition_col=None,
-            store=LogConditionalStore(inner, checkpoint_every=3),
-        )
-        sink.upsert(
-            spark.createDataFrame(
-                [(f"w{i}-{j}", j) for j in range(3)],
-                "chunk_id string, v long",
-            )
-        )
-
-    threads = [threading.Thread(target=writer, args=(i,)) for i in range(N)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    sink = ManifestVectorSink(
-        spark, path, partition_col=None,
-        store=LogConditionalStore(inner, checkpoint_every=3),
-    )
-    got = sorted(r["chunk_id"] for r in sink.read().collect())
-    assert got == sorted(f"w{i}-{j}" for i in range(N) for j in range(3))
-    assert sink.current_commit_id() == N
-    for g in range(1, N + 1):  # dense chain, one record per commit
-        assert inner.get(f"MLOG.{g}") is not None, g
-
-
-def _chain_commit(store, segments, base_token=None, base=None, extra=None):
-    """Drive the adapter's MANIFEST protocol directly (no sink): commit
-    the given segments list on top of the ``base`` manifest."""
-    m = {
-        "layout": {"partition_col": None, "key_col": None, "n_buckets": 0},
-        "segments": segments,
-        "commit_id": (int(base["commit_id"]) if base else 0) + 1,
-        "schema": None,
-    }
-    if extra:
-        m.update(extra)
-    ok = store.put_if("MANIFEST", json.dumps(m).encode(), base_token)
-    return ok, m
-
-
-def test_log_store_survives_missing_checkpoints(tmp_path):
-    """Checkpoints are a pure optimization: reconstruction (head AND any
-    retained generation) must survive EVERY checkpoint being absent — a
-    committer crash between its record create and its checkpoint write
-    loses replay length, never correctness."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    store = LogConditionalStore(inner, checkpoint_every=4)
-    cur = None
-    m = None
-    for i in range(10):
-        tok = None if cur is None else cur[1]
-        ok, m = _chain_commit(store, [{"dir": f"s{j}", "full": True}
-                                      for j in range(i + 1)],
-                              base_token=tok, base=m)
-        assert ok
-        cur = store.get("MANIFEST")
-
-    # nuke every checkpoint AND the hint, and use a FRESH adapter so its
-    # replay memo is cold — the chain alone must reconstruct everything
-    for key in ("MLOG_CKPT.4", "MLOG_CKPT.8", "MLOG_HINT"):
-        k = inner.get(key)
-        if k is not None:
-            assert inner.delete_if(key, k[1])
-    cold = LogConditionalStore(inner, checkpoint_every=4)
-    data, tok = cold.get("MANIFEST")
-    head = json.loads(data.decode())
-    assert head["commit_id"] == 10
-    assert len(head["segments"]) == 10
-    for gen in (1, 5, 9):
-        g = json.loads(cold.get(f"MANIFEST.v{gen}")[0].decode())
-        assert g["commit_id"] == gen and len(g["segments"]) == gen
-
-    # and the chain stays committable from the cold head
-    ok, _ = _chain_commit(cold, head["segments"][:3], base_token=tok,
-                          base=head)
-    assert ok
-    assert json.loads(cold.get("MANIFEST")[0].decode())["commit_id"] == 11
-
-
-def test_log_store_rejects_stale_and_fabricated_tokens(tmp_path):
-    """The commit arbiter: a stale token (another commit won) and a
-    fabricated token (generation never on the chain) must both fail; a
-    commit_id that disagrees with the token's chain position refuses
-    loudly rather than forking the log."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    store = LogConditionalStore(MemoryConditionalStore(), checkpoint_every=8)
-    ok, m1 = _chain_commit(store, [{"dir": "a", "full": True}])
-    assert ok
-    data, tok1 = store.get("MANIFEST")
-
-    ok, m2 = _chain_commit(store, [{"dir": "b", "full": True}],
-                           base_token=tok1, base=m1)
-    assert ok
-    # stale: tok1 again (gen 2 exists) -> create-only MLOG.2 collides
-    ok, _ = _chain_commit(store, [{"dir": "c", "full": True}],
-                          base_token=tok1, base=m1)
-    assert not ok
-    # fabricated: token far beyond the chain
-    ok, _ = _chain_commit(store, [{"dir": "d", "full": True}],
-                          base_token=99, base={"commit_id": 99})
-    assert not ok
-    # None token on a non-empty chain = create-expectation fails
-    ok, _ = _chain_commit(store, [{"dir": "e", "full": True}])
-    assert not ok
-    # commit_id/token mismatch is a protocol breach, refused loudly
-    data, tok = store.get("MANIFEST")
-    bad = json.dumps({"layout": {}, "segments": [], "commit_id": 7,
-                      "schema": None}).encode()
-    with pytest.raises(RuntimeError, match="fork"):
-        store.put_if("MANIFEST", bad, tok)
-    # the failures left the chain intact
-    assert json.loads(store.get("MANIFEST")[0].decode())["commit_id"] == 2
-
-
-def test_log_store_stale_token_at_surviving_checkpoint_refused(tmp_path):
-    """ADVICE r9 (low): a long-idle handle retrying a VERY stale token
-    whose generation sits at a checkpoint boundary — record and
-    successor both GC'd by retention, the CKPT itself surviving (a
-    best-effort checkpoint crash above it stops the checkpoint-deletion
-    walk) — used to pass the existence check, skip the pruned-watermark
-    check via a replay-cache hit, win the MLOG create of a GC'd slot,
-    and report success for a commit no reader can reconstruct. The
-    watermark check must run unconditionally, before the cache."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    store = LogConditionalStore(inner, checkpoint_every=3)
-    cur = None
-    m = None
-    for i in range(1, 10):  # commits 1..9; CKPTs at 3, 6, 9
-        tok = None if cur is None else cur[1]
-        ok, m = _chain_commit(
-            store,
-            [{"dir": f"s{j}", "full": True} for j in range(i)],
-            base_token=tok,
-            base=m,
-        )
-        assert ok
-        cur = store.get("MANIFEST")
-
-    # the gen-6 committer "crashed" between record and checkpoint:
-    # checkpoints are best-effort, so the chain is unaffected
-    k6 = inner.get("MLOG_CKPT.6")
-    assert k6 is not None and inner.delete_if("MLOG_CKPT.6", k6[1])
-
-    # retention (vacuum's contract: contiguous prefix) prunes v1..v8;
-    # GC deletes records <= the covering boundary (9) but its
-    # checkpoint-deletion walk stops at the missing CKPT.6 — CKPT.3
-    # SURVIVES with its record and successor gone
-    for v in range(1, 9):
-        assert store.delete_if(f"MANIFEST.v{v}", None)
-    assert inner.get("MLOG.3") is None
-    assert inner.get("MLOG.4") is None
-    assert inner.get("MLOG_CKPT.3") is not None
-    assert int(inner.get("MLOG_PRUNED")[0].decode()) == 8
-
-    # warm replay cache: this adapter committed gen 3 itself, so the
-    # cache hit would have skipped _state_at's pruned check pre-fix
-    stale = {
-        "layout": {"partition_col": None, "key_col": None, "n_buckets": 0},
-        "segments": [{"dir": "rogue", "full": True}],
-        "commit_id": 4,
-        "schema": None,
-    }
-    assert not store.put_if("MANIFEST", json.dumps(stale).encode(), 3)
-    # no orphan record materialized in the GC'd slot
-    assert inner.get("MLOG.4") is None
-    # the head is untouched and still reconstructs
-    data, tok = store.get("MANIFEST")
-    assert json.loads(data.decode())["commit_id"] == 9 and tok == 9
-
-    # a COLD adapter (no cache) refuses the same stale token too
-    cold = LogConditionalStore(inner, checkpoint_every=3)
-    assert not cold.put_if("MANIFEST", json.dumps(stale).encode(), 3)
-
-
-def test_parsed_seam_never_corrupts_the_replay_cache(spark, tmp_path):
-    """r10 parsed-handle seam: the sink receives the adapter's CACHED
-    manifest dict zero-copy and commits new manifests by reference. The
-    soundness contract is that the sink never mutates a manifest it read
-    — if it ever did, the warm adapter's cache would diverge from what
-    the durable chain reconstructs. Drill: run a mixed mutation sequence
-    (upserts, delete, partial-file delete, compact) through the parsed
-    seam, then compare the WARM adapter's head against a COLD adapter
-    rebuilt purely from the inner store's records — and against the byte
-    seam's own get() — at every step. Any in-place mutation shows up as
-    a mismatch."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    path = str(tmp_path / "pseam")
-    sink = ManifestVectorSink(
-        spark, path, partition_col=None, key_col="chunk_id",
-        store=LogConditionalStore(inner, checkpoint_every=3),
-    )
-    assert hasattr(sink.store, "get_state")  # the seam under test
-    # byte-seam twin: identical op sequence through the plain store
-    twin = ManifestVectorSink(
-        spark, str(tmp_path / "twin"), partition_col=None,
-        key_col="chunk_id", store=MemoryConditionalStore(),
-    )
-
-    def check():
-        warm_bytes, warm_tok = sink.store.get("MANIFEST")
-        cold = LogConditionalStore(inner, checkpoint_every=3)
-        cold_bytes, cold_tok = cold.get("MANIFEST")
-        assert warm_tok == cold_tok
-        assert json.loads(warm_bytes.decode()) == json.loads(
-            cold_bytes.decode()
-        )
-        # and the visible rows equal the byte-seam twin's
-        assert sorted(
-            (r["chunk_id"], r["v"]) for r in sink.read().collect()
-        ) == sorted((r["chunk_id"], r["v"]) for r in twin.read().collect())
-
-    def batch(ids):
-        return spark.createDataFrame(
-            [(f"c{i}", i) for i in ids], "chunk_id string, v long"
-        )
-
-    for op in (
-        lambda s: s.upsert(batch(range(6))),
-        lambda s: s.upsert(batch(range(6, 9))),
-        lambda s: s.delete_where("v", [7]),
-        lambda s: s.delete_where("chunk_id", ["c1"]),
-        lambda s: s.compact(),
-    ):
-        op(sink)
-        op(twin)
-        check()
-    # snapshot reads through the parsed seam agree with history replay
-    assert sink.read_at(1).count() == 6
-
-
-def test_mixed_seam_writers_interoperate(spark, tmp_path):
-    """Rolling-upgrade shape for the r10 parsed seam: a deployment
-    upgrades writers one at a time, so an OLD binary (which sees only
-    the byte get/put_if surface) and a NEW one (parsed
-    get_state/put_state_if) share the same chain mid-upgrade. Interleave
-    mutations from both through one adapter — every commit must land,
-    the chain stay dense, and both writers (plus a cold reconstruction)
-    agree on the visible rows after every step."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    class ByteOnly:
-        """The store surface an old binary compiles against."""
-
-        def __init__(self, s):
-            self._s = s
-
-        def get(self, key):
-            return self._s.get(key)
-
-        def put_if(self, key, data, token):
-            return self._s.put_if(key, data, token)
-
-        def delete_if(self, key, token):
-            return self._s.delete_if(key, token)
-
-    inner = MemoryConditionalStore()
-    adapter = LogConditionalStore(inner, checkpoint_every=3)
-    path = str(tmp_path / "mixed")
-    new_sink = ManifestVectorSink(
-        spark, path, partition_col=None, key_col="chunk_id", store=adapter
-    )
-    old_sink = ManifestVectorSink(
-        spark, path, partition_col=None, key_col="chunk_id",
-        store=ByteOnly(adapter),
-    )
-    assert hasattr(new_sink.store, "get_state")
-    assert not hasattr(old_sink.store, "get_state")
-
-    def batch(tag, ids):
-        return spark.createDataFrame(
-            [(f"{tag}{i}", i) for i in ids], "chunk_id string, v long"
-        )
-
-    def check():
-        a = sorted(r["chunk_id"] for r in new_sink.read().collect())
-        b = sorted(r["chunk_id"] for r in old_sink.read().collect())
-        assert a == b
-        cold = ManifestVectorSink(
-            spark, path, partition_col=None, key_col="chunk_id",
-            store=LogConditionalStore(inner, checkpoint_every=3),
-        )
-        assert sorted(r["chunk_id"] for r in cold.read().collect()) == a
-        return a
-
-    new_sink.upsert(batch("n", range(3)))
-    check()
-    old_sink.upsert(batch("o", range(3)))
-    check()
-    new_sink.delete_where("chunk_id", ["o1"])
-    check()
-    old_sink.delete_where("chunk_id", ["n0"])
-    check()
-    old_sink.compact()
-    rows = check()
-    assert rows == ["n1", "n2", "o0", "o2"]
-    # dense chain across both writer generations
-    gens = {
-        int(k[len("MLOG."):])
-        for k in getattr(inner, "_data", {})
-        if k.startswith("MLOG.") and not k.startswith("MLOG_")
-    }
-    if gens:  # MemoryConditionalStore internals, best-effort shape check
-        assert gens == set(range(1, max(gens) + 1))
-    """VERDICT r9 minor: the adapter's MANIFEST.v* delete advances a
-    monotonic-MAX watermark, so it silently widens the store contract
-    for any caller that isn't pruning a contiguous prefix below the
-    head (vacuum's contract). The observable bound — a delete at or
-    above the live head, which would wedge every reader — must refuse
-    loudly instead."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    store = LogConditionalStore(inner, checkpoint_every=4)
-    cur = None
-    m = None
-    for i in range(1, 6):  # commits 1..5
-        tok = None if cur is None else cur[1]
-        ok, m = _chain_commit(
-            store,
-            [{"dir": f"s{j}", "full": True} for j in range(i)],
-            base_token=tok,
-            base=m,
-        )
-        assert ok
-        cur = store.get("MANIFEST")
-
-    with pytest.raises(RuntimeError, match="contiguous prefix"):
-        store.delete_if("MANIFEST.v5", None)  # the head itself
-    with pytest.raises(RuntimeError, match="contiguous prefix"):
-        store.delete_if("MANIFEST.v9", None)  # beyond the head
-    # an empty chain has no history to prune — refuse there too
-    empty = LogConditionalStore(MemoryConditionalStore(), checkpoint_every=4)
-    with pytest.raises(RuntimeError, match="contiguous prefix"):
-        empty.delete_if("MANIFEST.v1", None)
-
-    # the refusals advanced nothing: everything is still readable and
-    # legitimate prefix pruning (vacuum's descending walk) still works
-    assert json.loads(store.get("MANIFEST")[0].decode())["commit_id"] == 5
-    assert json.loads(store.get("MANIFEST.v2")[0].decode())["commit_id"] == 2
-    for v in (3, 2, 1):  # vacuum deletes descending
-        assert store.delete_if(f"MANIFEST.v{v}", None)
-    assert store.get("MANIFEST.v3") is None
-    assert json.loads(store.get("MANIFEST.v4")[0].decode())["commit_id"] == 4
-    assert json.loads(store.get("MANIFEST")[0].decode())["commit_id"] == 5
-
-
-def test_log_store_delta_semantics_roundtrip(tmp_path):
-    """Entry-level delta coverage: add, partial-dereference (files-list
-    update), remove, and a top-level schema change each reconstruct
-    exactly — on a COLD adapter, forcing full replay."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    store = LogConditionalStore(inner, checkpoint_every=100)
-    ok, m1 = _chain_commit(
-        store,
-        [{"dir": "a", "full": True}, {"dir": "b", "full": True}],
-        extra={"schema": "s1"},
-    )
-    assert ok
-    _, tok = store.get("MANIFEST")
-    # commit 2: partially dereference a, drop b, add c, evolve schema
-    ok, m2 = _chain_commit(
-        store,
-        [{"dir": "a", "files": ["p1.parquet"]}, {"dir": "c", "full": True}],
-        base_token=tok, base=m1, extra={"schema": "s2"},
-    )
-    assert ok
-    # the delta record carried only the touched entries
-    rec = json.loads(inner.get("MLOG.2")[0].decode())
-    assert {e["dir"] for e in rec.get("add", [])} == {"c"}
-    assert {e["dir"] for e in rec.get("update", [])} == {"a"}
-    assert rec.get("remove") == ["b"]
-    assert rec["top"]["schema"] == "s2"
-
-    cold = LogConditionalStore(inner, checkpoint_every=100)
-    head = json.loads(cold.get("MANIFEST")[0].decode())
-    assert head["schema"] == "s2"
-    assert head["segments"] == [
-        {"dir": "a", "files": ["p1.parquet"]},
-        {"dir": "c", "full": True},
-    ]
-    v1 = json.loads(cold.get("MANIFEST.v1")[0].decode())
-    assert v1["schema"] == "s1" and len(v1["segments"]) == 2
-
-
-def test_log_store_head_probe_retries_across_gc_race(tmp_path):
-    """A reader whose forward probe started from a pre-GC hint can watch
-    records vanish under it (vacuum GC on another actor): the probe ends
-    inside the pruned zone, must NOT return that stale prefix as the
-    head, and retries from the fresh hint. Deterministic interleaving: a
-    hook store fires the GC on the reader's first touch of MLOG.3."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    class GcOnGet(MemoryConditionalStore):
-        armed = False
-        fired = False
-        gc = None  # set below: runs the REAL retention pass
-
-        def get(self, key):
-            if self.armed and not self.fired and key == "MLOG.3":
-                self.fired = True
-                self.gc()
-            return super().get(key)
-
-    inner = GcOnGet()
-    store = LogConditionalStore(inner, checkpoint_every=2)
-    cur = None
-    m = None
-    for i in range(5):  # auto-checkpoints at 2 and 4; hint ends at 4
-        tok = None if cur is None else cur[1]
-        ok, m = _chain_commit(store, [{"dir": f"s{j}", "full": True}
-                                      for j in range(i + 1)],
-                              base_token=tok, base=m)
-        assert ok
-        cur = store.get("MANIFEST")
-
-    def run_gc():
-        # another actor's vacuum: prune generations 1-3 (REAL protocol —
-        # watermark bump + GC, which checkpoints only at boundaries)
-        other = LogConditionalStore(inner, checkpoint_every=2)
-        for g in (1, 2, 3):
-            assert other.delete_if(f"MANIFEST.v{g}", g)
-
-    inner.gc = run_gc
-    # the racing reader probes from a PRE-GC base: rewind the hint to
-    # the gen-2 checkpoint (a reader that loaded it before the GC ran)
-    cur_hint = inner.get("MLOG_HINT")
-    assert inner.put_if("MLOG_HINT", b"2", cur_hint[1])
-    cold = LogConditionalStore(inner, checkpoint_every=2)
-    inner.armed = True
-    data, tok = cold.get("MANIFEST")
-    assert inner.fired
-    # the GC really ran mid-probe: records through the covering
-    # checkpoint (4 <= pruned+1) are physically gone
-    assert inner.get("MLOG.3") is None and inner.get("MLOG.4") is None
-    head = json.loads(data.decode())
-    # the retry landed on the REAL head (gen 5), not the stale prefix
-    assert head["commit_id"] == 5 and tok == 5
-    assert len(head["segments"]) == 5
-    # pruned generations read as gone; the head keeps committing
-    assert cold.get("MANIFEST.v2") is None
-    ok, _ = _chain_commit(cold, head["segments"], base_token=tok, base=head)
-    assert ok
-
-
-def test_log_store_corrupt_retention_state_fails_loudly(tmp_path):
-    """If the watermark claims generations are pruned but no hint or
-    checkpoint lets a reader reach anything above it (a state the GC
-    ordering makes unreachable), the head probe must raise loudly rather
-    than return an empty or stale head."""
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
-
-    inner = MemoryConditionalStore()
-    assert inner.put_if("MLOG_PRUNED", b"3", None)  # watermark, no chain
-    store = LogConditionalStore(inner, checkpoint_every=4)
-    with pytest.raises(RuntimeError, match="pruned"):
-        store.get("MANIFEST")
-
-
-def test_log_store_delta_roundtrip_property():
-    """Property: for ANY pair of manifest states, applying the diff to
-    the old state reproduces the new state's segments (as a dir-keyed
-    mapping; the sink's semantics are order-independent) and top-level
-    fields exactly. This is the invariant every commit, checkpoint, and
-    replay rests on — pinned against arbitrary entry shapes, not just
-    the mutation shapes today's sink emits."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from vectordb_data_ingestion_spark.sinks.log_store import _apply, _diff
-
-    dirs = st.text(alphabet="abcdef0123", min_size=1, max_size=6)
-    entry = st.builds(
-        lambda d, full, files: (
-            {"dir": d, "full": True}
-            if full
-            else {"dir": d, "files": files}
-        ),
-        dirs,
-        st.booleans(),
-        st.lists(st.text(alphabet="xyz/._-01", min_size=1, max_size=8),
-                 max_size=4),
-    )
-
-    def manifest(segs, schema, extra):
-        m = {
-            "layout": {"partition_col": None, "key_col": None,
-                       "n_buckets": 0},
-            "segments": list({s["dir"]: s for s in segs}.values()),
-            "commit_id": 1,
-            "schema": schema,
-        }
-        m.update(extra)
-        return m
-
-    manifests = st.builds(
-        manifest,
-        st.lists(entry, max_size=8),
-        st.one_of(st.none(), st.text(max_size=6)),
-        st.dictionaries(st.sampled_from(["opt_a", "opt_b"]),
-                        st.integers(-5, 5), max_size=2),
-    )
-
-    @settings(max_examples=300, deadline=None,
-              suppress_health_check=[HealthCheck.too_slow])
-    @given(old=st.one_of(st.none(), manifests), new=manifests)
-    def roundtrip(old, new):
-        rec = json.loads(json.dumps(_diff(old, new)))  # as stored
-        got = _apply(old, rec, gen=7)
-        assert {s["dir"]: s for s in got["segments"]} == {
-            s["dir"]: s for s in new["segments"]
-        }
-        assert got["commit_id"] == 7
-        for k, v in new.items():
-            if k not in ("segments", "commit_id"):
-                assert got[k] == v, k
-
-    roundtrip()
-
-
-def test_log_store_gc_collects_superseded_checkpoints(spark, tmp_path):
-    """Control-plane storage is bounded by the retained window: once GC
-    establishes a covering checkpoint B, checkpoints BELOW B are
-    unreachable by any live reconstruction and are collected with the
-    records — while B itself and the live tail keep every retained
-    generation readable and the chain committable."""
-    sink, store, meter = _log_sink(spark, tmp_path, "ockpt", ckpt=2)
-    for i in range(9):
-        sink.upsert(
-            spark.createDataFrame([(f"c{i}", i)], "chunk_id string, v long")
-        )
-    inner = store.inner
-    assert all(
-        inner.get(f"MLOG_CKPT.{b}") is not None for b in (2, 4, 6, 8)
-    )
-    sink.vacuum(retain_versions=1)  # retain v8..v9; pruned <= 7, B = 8
-    assert inner.get("MLOG_CKPT.8") is not None  # covering: kept
-    for b in (2, 4, 6):
-        assert inner.get(f"MLOG_CKPT.{b}") is None, b  # superseded: gone
-    for g in range(1, 9):
-        assert inner.get(f"MLOG.{g}") is None, g
-    assert sink.read().count() == 9
-    assert sink.read_at(8).count() == 8
-    sink.upsert(
-        spark.createDataFrame([("post", 9)], "chunk_id string, v long")
-    )
-    assert sink.current_commit_id() == 10 and sink.read().count() == 10
-
-
-@pytest.mark.parametrize("substrate", ["mono", "log"])
+@pytest.mark.parametrize("substrate", ["mono"])
 def test_manifest_sink_model_under_sustained_lies(spark, tmp_path, substrate):
     """The lost-response guards claim to survive ARBITRARY lost
     responses, not one: re-run a seeded mutation sequence against the
     multiset model with a store that lies on every second successful
-    manifest commit (landed, reported failure), on both substrates. The
+    manifest commit (landed, reported failure). The
     visible rows must equal the model after every mutation — no
     duplicate, no loss, no resurrection."""
     import random
 
-    class LiesEveryThird(MemoryConditionalStore):
-        def __init__(self, commit_keys=("MANIFEST",)):
-            super().__init__()
-            self.commit_keys = commit_keys
-            self.successes = 0
-            self.lies = 0
+    class LiesEverySecond(MemoryConditionalStore):
+        successes = 0
+        lies = 0
 
         def put_if(self, key, data, token):
             ok = super().put_if(key, data, token)
-            if ok and any(
-                key == k or (k.endswith(".") and key.startswith(k))
-                for k in self.commit_keys
-            ):
+            if ok and key == "MANIFEST":
                 self.successes += 1
                 if self.successes % 2 == 0:
                     self.lies += 1
                     return False  # landed, caller hears failure
             return ok
 
-    if substrate == "mono":
-        store = flags = LiesEveryThird()
-    else:
-        from vectordb_data_ingestion_spark.sinks.log_store import (
-            LogConditionalStore,
-        )
-
-        flags = LiesEveryThird(commit_keys=("MLOG.",))
-        store = LogConditionalStore(flags, checkpoint_every=3)
+    store = LiesEverySecond()
 
     sink = ManifestVectorSink(
         spark, str(tmp_path / "chaos"), partition_col=None,
@@ -2414,28 +1666,17 @@ def test_manifest_sink_model_under_sustained_lies(spark, tmp_path, substrate):
         if model:
             got = sorted((r["k"], r["v"]) for r in sink.read().collect())
             assert got == sorted(model), f"diverged at step {step} ({op})"
-    assert flags.lies >= 4  # the chaos actually ran
+    assert store.lies >= 4  # the chaos actually ran
 
 
-@pytest.mark.parametrize("substrate", ["mono", "log"])
+@pytest.mark.parametrize("substrate", ["mono"])
 def test_readers_see_consistent_generations_during_commits(
     spark, tmp_path, substrate
 ):
     """Snapshot isolation under concurrency: while a writer commits rows
     one at a time, every concurrent read must observe a complete
-    committed prefix — never a torn manifest, a gap, or a duplicate. On
-    the chunked log this exercises the head probe racing live record
-    creates."""
-    if substrate == "mono":
-        store = MemoryConditionalStore()
-    else:
-        from vectordb_data_ingestion_spark.sinks.log_store import (
-            LogConditionalStore,
-        )
-
-        store = LogConditionalStore(
-            MemoryConditionalStore(), checkpoint_every=3
-        )
+    committed prefix — never a torn manifest, a gap, or a duplicate."""
+    store = MemoryConditionalStore()
     path = str(tmp_path / "snap")
     sink = ManifestVectorSink(spark, path, partition_col=None, store=store)
     sink.upsert(spark.createDataFrame([(0,)], "v int"))
@@ -2467,25 +1708,18 @@ def test_readers_see_consistent_generations_during_commits(
     ) == list(range(9))
 
 
-def test_log_store_model_under_tight_retention(spark, tmp_path):
+def test_manifest_sink_model_under_tight_retention(spark, tmp_path):
     """Randomized mutations with AGGRESSIVE retention (retain_versions
-    0-2) on the chunked log: every vacuum prunes most history and GCs
-    records/checkpoints, repeatedly committing on heads whose own records
-    may have been collected (the boundary edge) — visible rows must track
-    the model throughout, retained snapshots must read, pruned ones must
-    fail with the retention error."""
+    0-2): every vacuum prunes most history, repeatedly committing on
+    heads whose older generations were just pruned — visible rows must
+    track the model throughout, retained snapshots must read, pruned
+    ones must fail with the retention error."""
     import random
-
-    from vectordb_data_ingestion_spark.sinks.log_store import (
-        LogConditionalStore,
-    )
 
     rng = random.Random(20260816 + 99)
     sink = ManifestVectorSink(
         spark, str(tmp_path / "tight"), partition_col=None,
-        key_col="k", n_buckets=4,
-        store=LogConditionalStore(MemoryConditionalStore(),
-                                  checkpoint_every=2),
+        key_col="k", n_buckets=4, store=MemoryConditionalStore(),
     )
     model: list[tuple[str, int]] = []
     snapshots: dict[int, list[tuple[str, int]]] = {}

@@ -215,6 +215,38 @@ def test_vector_store_writer_overwrite_retires_spool_and_vacuum(spark, tmp_path)
         sink.read()
 
 
+def test_vector_store_append_adds_a_column(spark, tmp_path):
+    """Spark runs a Python data source's commit with no SparkSession, so
+    the writer's commit merges an add-column writer schema without the
+    analyzer: the append lands, and older rows read NULL for the new
+    column. A type widening still needs the analyzer and still fails."""
+    from vectordb_data_ingestion_spark.sinks.datasource_writer import (
+        VectorStoreDataSource,
+    )
+
+    spark.dataSource.register(VectorStoreDataSource)
+    path = str(tmp_path / "store3")
+
+    def append(rows, ddl):
+        spark.createDataFrame(rows, ddl).write.format("vector_store").option(
+            "path", path
+        ).mode("append").save()
+
+    append([("a", 1), ("b", 2)], "chunk_id string, v int")
+    append(
+        [("c", 3, [1.0, 0.5])], "chunk_id string, v int, vector array<double>"
+    )
+    sink = ManifestVectorSink(spark, path, partition_col=None)
+    got = sink.read()
+    assert got.columns == ["chunk_id", "v", "vector"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        ("a", 1, None), ("b", 2, None), ("c", 3, [1.0, 0.5]),
+    ]
+    with pytest.raises(Exception, match="without a SparkSession"):
+        append([("d", 4)], "chunk_id string, v bigint")
+    assert sink.read().count() == 3
+
+
 def test_vector_store_concurrent_append_commits_lossless(spark, tmp_path):
     # concurrent append commits to one sink path must lose no committed
     # segment, and vacuum() must then reclaim nothing. The commit is one
@@ -659,15 +691,3 @@ def test_none_in_delete_values_never_mass_deletes(
     with pytest.warns(RuntimeWarning, match="falling back"):
         mpsink.delete_where("pcol", ["x", None])
     assert {r["chunk_id"] for r in mpsink.read().collect()} == {"b", "c"}
-
-
-def test_make_vector_sink_kinds(spark, tmp_path):
-    """The factory builds the manifest sink over either store and refuses
-    any other substrate name."""
-    from vectordb_data_ingestion_spark.sinks import make_vector_sink
-
-    for kind in ("manifest", "manifest-log"):
-        sink = make_vector_sink(spark, kind, str(tmp_path / kind))
-        assert isinstance(sink, ManifestVectorSink)
-    with pytest.raises(ValueError, match="unknown sink kind"):
-        make_vector_sink(spark, "posix", str(tmp_path / "posix"))

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from vectordb_data_ingestion_spark.session import load_tables
-from vectordb_data_ingestion_spark.sinks import make_vector_sink
 from vectordb_data_ingestion_spark.sinks.manifest_sink import ManifestVectorSink
 from vectordb_data_ingestion_spark.streaming.incremental import (
     foreach_batch_refresh,
@@ -20,12 +19,10 @@ from tests.conftest import SF_SMALL
 import pytest as _pt
 
 
-@_pt.fixture(params=["manifest", "manifest-log"])
+@_pt.fixture(params=["manifest"])
 def sink_kind(request):
-    """Every sink store carries the refresh contract (VERDICT r7 item 6):
-    the composed delete-then-insert flows must run unchanged on the
-    manifest sink over one CAS manifest and over the chunked commit log
-    (VERDICT r8 item 2)."""
+    """The sink the composed delete-then-insert flows refresh: the
+    manifest sink over its file-backed CAS manifest (VERDICT r7 item 6)."""
     return request.param
 
 
@@ -52,7 +49,7 @@ def test_incremental_refresh_delete_then_insert(spark, tmp_path, sink_kind):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(stream_dir)
 
-    sink = make_vector_sink(spark, sink_kind, sink_dir, partition_col=None)
+    sink = ManifestVectorSink(spark, sink_dir, partition_col=None)
 
     def transform(batch_df):
         return batch_df.select(
@@ -742,8 +739,8 @@ def test_refresh_replay_same_batch_id_no_dupes(spark, tmp_path, sink_kind):
         refresh_batch_fn,
     )
 
-    sink = make_vector_sink(
-        spark, sink_kind, str(tmp_path / "vectors"), partition_col=None
+    sink = ManifestVectorSink(
+        spark, str(tmp_path / "vectors"), partition_col=None
     )
 
     def transform(batch_df):
@@ -969,7 +966,7 @@ def test_incremental_refresh_with_distributed_delete(spark, tmp_path, sink_kind)
     sink_dir = str(tmp_path / "vectors")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(stream_dir)
-    sink = make_vector_sink(spark, sink_kind, sink_dir, partition_col=None)
+    sink = ManifestVectorSink(spark, sink_dir, partition_col=None)
 
     def transform(batch_df):
         return batch_df.select(

@@ -39,12 +39,6 @@ def main() -> int:
             sink = ManifestVectorSink(
                 spark, path, partition_col=None, **layout
             )
-        elif base_kind == "manifest-log":
-            from vectordb_data_ingestion_spark.sinks import make_vector_sink
-
-            sink = make_vector_sink(
-                spark, "manifest-log", path, partition_col=None, **layout
-            )
         else:
             raise SystemExit(f"unknown sink kind {kind!r}")
 

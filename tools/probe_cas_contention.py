@@ -60,27 +60,16 @@ def main() -> None:
 
         def put_if(self, key, data, token):
             ok = super().put_if(key, data, token)
-            if not ok and (key == "MANIFEST" or key.startswith("MLOG.")):
+            if not ok and key == "MANIFEST":
                 with self.lock:
                     self.conflicts += 1
             return ok
 
-    def build_store(td: str, substrate: str):
-        counting = CountingStore(os.path.join(td, "_ctrl"))
-        if substrate == "mono":
-            return counting, counting
-        from vectordb_data_ingestion_spark.sinks.log_store import (
-            LogConditionalStore,
-        )
-
-        return LogConditionalStore(counting, checkpoint_every=32), counting
-
-    substrate = os.environ.get("SPARK_GRAFT_CAS_SUBSTRATE", "mono")
     per_writer = 6
     results = []
     for n in (1, 2, 4, 8, 16):
         with tempfile.TemporaryDirectory() as td:
-            store, counting = build_store(td, substrate)
+            store = CountingStore(os.path.join(td, "_ctrl"))
             sink = ManifestVectorSink(
                 spark,
                 os.path.join(td, "sink"),
@@ -121,9 +110,9 @@ def main() -> None:
                     "lossless": visible == commits,
                     "secs": round(dt, 2),
                     "commits_per_sec": round(commits / dt, 2),
-                    "cas_conflicts": counting.conflicts,
+                    "cas_conflicts": store.conflicts,
                     "conflicts_per_commit": round(
-                        counting.conflicts / commits, 2
+                        store.conflicts / commits, 2
                     ),
                     "errors": errs,
                 }
@@ -171,8 +160,7 @@ def main() -> None:
             )
             print(json.dumps(raw[-1]))
 
-    out = {"probe": "cas_contention", "substrate": substrate,
-       "per_writer_upserts": per_writer,
+    out = {"probe": "cas_contention", "per_writer_upserts": per_writer,
            "results": results, "raw_commit_loop": raw}
     path = sys.argv[1] if len(sys.argv) > 1 else None
     if path:

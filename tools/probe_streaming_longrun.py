@@ -56,12 +56,7 @@ def near_copy(doc: int) -> str:
 
 
 def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
-             cadence: int = 10, sink_kind: str | None = None) -> dict:
-    """``sink_kind`` (VERDICT r9 item 6): additionally upsert every
-    batch into a vector sink of that substrate, so the per-batch curve
-    includes the commit path — on ``manifest-log`` each batch appends a
-    delta record to the chain (plus periodic checkpoints), the
-    high-commit-rate deployment shape the r9 curve never measured."""
+             cadence: int = 10) -> dict:
     from vectordb_data_ingestion_spark.sinks.manifest_sink import (
         ManifestVectorSink,
     )
@@ -74,14 +69,6 @@ def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
     index_dir = os.path.join(root, "index")
     out_dir = os.path.join(root, "out")
     run_batch = near_dup_batch_fn(index_dir, out_dir)
-    sink = None
-    if sink_kind:
-        from vectordb_data_ingestion_spark.sinks import make_vector_sink
-
-        sink = make_vector_sink(
-            spark, sink_kind, os.path.join(root, "sink"),
-            partition_col=None,
-        )
     times = []
     fresh_base = 0
     try:
@@ -101,8 +88,6 @@ def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
             df = spark.createDataFrame(rows, "doc_id string, text string")
             t0 = time.perf_counter()
             run_batch(df, b)
-            if sink is not None:
-                sink.upsert(df.withColumnRenamed("doc_id", "chunk_id"))
             times.append(time.perf_counter() - t0)
             if mode == "on" and b and b % cadence == 0:
                 compact_near_dup_index(spark, index_dir)
@@ -122,7 +107,6 @@ def run_mode(spark, mode: str, n_batches: int, batch_docs: int,
     return {
         "probe": "streaming_longrun",
         "mode": mode,
-        "sink": sink_kind,
         "n_batches": n_batches,
         "batch_docs": batch_docs,
         "cadence": cadence if mode == "on" else None,
@@ -147,19 +131,9 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sink_kind = os.environ.get("SINK")  # e.g. SINK=manifest-log
-    if sink_kind:
-        print(
-            json.dumps(
-                run_mode(spark, "on", n_batches, batch_docs,
-                         sink_kind=sink_kind)
-            ),
-            flush=True,
-        )
-    else:
-        for mode in ("on", "off"):
-            print(json.dumps(run_mode(spark, mode, n_batches, batch_docs)),
-                  flush=True)
+    for mode in ("on", "off"):
+        print(json.dumps(run_mode(spark, mode, n_batches, batch_docs)),
+              flush=True)
 
 
 if __name__ == "__main__":

@@ -131,6 +131,42 @@ def _table_schema(manifest: dict) -> T.StructType | None:
     return T.StructType.fromJson(json.loads(sj)) if sj else None
 
 
+def _add_columns(
+    table: T.StructType, writer: T.StructType
+) -> T.StructType | None:
+    """``unionByName(allowMissingColumns=True)``'s merge of ``writer`` into
+    ``table`` without an analyzer, for a writer that only ADDS columns:
+    each writer column the table holds has the same name and type. Table
+    fields keep their order and type, and are nullable if nullable on
+    either side or missing from the writer; new writer columns follow in
+    writer order, nullable. None when a type differs or a name matches
+    only up to case — those need the analyzer."""
+    mine = {f.name: f for f in writer.fields}
+    lower = {f.name.lower(): f.name for f in table.fields}
+    if any(
+        lower.get(f.name.lower(), f.name) != f.name
+        or (f.name in table.names and table[f.name].dataType != f.dataType)
+        for f in writer.fields
+    ):
+        return None
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                f.dataType,
+                f.nullable or f.name not in mine or mine[f.name].nullable,
+                f.metadata,
+            )
+            for f in table.fields
+        ]
+        + [
+            T.StructField(f.name, f.dataType, True)
+            for f in writer.fields
+            if f.name not in table.names
+        ]
+    )
+
+
 def hive_unescape(s: str) -> str:
     """Decode Spark/Hive partition-dir escaping (%XX per special char)
     back to the value's string rendering — the path is the authoritative
@@ -220,37 +256,12 @@ class ManifestVectorSink:
         return self._get_state(_MANIFEST_KEY) or (None, None)
 
     def _get_state(self, key: str) -> tuple[dict, object] | None:
-        """Manifest-or-history read through the parsed-handle seam when
-        the store offers one (``LogConditionalStore.get_state`` — skips
-        the O(sink-metadata) JSON render+parse round trip per commit),
-        else the plain byte seam. Parsed-seam dicts are SHARED with the
-        store's cache: this sink never mutates a manifest it read (every
-        mutation builds new lists/entries), which is the contract that
-        makes the zero-copy handoff sound."""
-        gs = getattr(self.store, "get_state", None)
-        if gs is not None:
-            return gs(key)
+        """The parsed manifest (or history generation) at ``key`` with its
+        CAS token, or None if the key doesn't exist."""
         cur = self.store.get(key)
         if cur is None:
             return None
         return json.loads(cur[0].decode("utf-8")), cur[1]
-
-    def _put_state(self, key: str, manifest: dict, payload: bytes | None,
-                   token: object) -> bool:
-        """Manifest-or-history write through the parsed-handle seam when
-        available (``put_state_if`` — the store computes its delta on
-        the dict and only serializes full state at checkpoint
-        boundaries), else the byte seam. After a parsed-seam put the
-        dict may live in the store's cache — callers must not mutate it
-        afterwards (they don't: committed manifests are discarded)."""
-        ps = getattr(self.store, "put_state_if", None)
-        if ps is not None:
-            return ps(key, manifest, token)
-        return self.store.put_if(
-            key,
-            payload if payload is not None else json.dumps(manifest).encode(),
-            token,
-        )
 
     def _layout(self) -> dict:
         return {
@@ -276,13 +287,17 @@ class ManifestVectorSink:
         (it IS the analyzer's union of two empty frames — no job), and a
         type conflict it rejects raises. A writer whose columns the table
         already holds at the same types — every batch of a steady
-        pipeline — skips the analyzer."""
+        pipeline — skips the analyzer, and so does a writer that only
+        adds columns (:func:`_add_columns`)."""
         have = {f.name: f.dataType.simpleString() for f in table.fields}
         if all(
             have.get(f.name) == f.dataType.simpleString()
             for f in writer.fields
         ):
             return table
+        added = _add_columns(table, writer)
+        if added is not None:
+            return added
         if self.spark is None:  # a commit-only handle (class docstring)
             raise RuntimeError(
                 f"can't merge {writer.simpleString()} into the table schema "
@@ -371,10 +386,9 @@ class ManifestVectorSink:
         mutation dereferenced the just-landed segment (the guard scans
         history for the segment dir — see :meth:`_dir_in_history`)."""
         if manifest is not None and int(manifest.get("commit_id", 0)) >= 1:
-            self._put_state(
+            self.store.put_if(
                 f"{_MANIFEST_KEY}.v{int(manifest['commit_id'])}",
-                manifest,
-                None,
+                json.dumps(manifest).encode(),
                 None,  # create-only; exists already in the common case
             )
         commit_id = int((manifest or {}).get("commit_id", 0)) + 1
@@ -393,17 +407,10 @@ class ManifestVectorSink:
             txns = {**(txns or {}), txn[0]: int(txn[1])}
         if txns:
             new["txns"] = txns
-        # byte seam: serialize once, reuse for the history publish;
-        # parsed seam: no full-state serialize at all (the store diffs
-        # the dict and history is implicit in the log)
-        payload = (
-            None
-            if hasattr(self.store, "put_state_if")
-            else json.dumps(new).encode()
-        )
-        if not self._put_state(_MANIFEST_KEY, new, payload, token):
+        payload = json.dumps(new).encode()  # reused for the history key
+        if not self.store.put_if(_MANIFEST_KEY, payload, token):
             return None
-        self._put_state(f"{_MANIFEST_KEY}.v{commit_id}", new, payload, None)
+        self.store.put_if(f"{_MANIFEST_KEY}.v{commit_id}", payload, None)
         return commit_id
 
     def _stored_col_type(self, manifest: dict, col: str):
