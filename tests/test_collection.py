@@ -3,9 +3,10 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_during
 from vectordb_data_ingestion_spark.collection import VectorCollection
 from vectordb_data_ingestion_spark.config import VectorClassConfig
 from vectordb_data_ingestion_spark.operators.search import (
@@ -241,3 +242,175 @@ def test_aggregate_counts_and_means(spark):
     assert total["count"] == corpus.count()
     filtered = col.aggregate(where=F.col("lang") == "en").collect()[0]
     assert filtered["count"] == corpus.filter("lang = 'en'").count()
+
+
+# ---------------------------------------------------------------------------
+# bm25 / hybrid: query-time statistics, one scan, fusion in the driver
+# ---------------------------------------------------------------------------
+
+_TIE_VEC = [1.0, 0.0, 0.0, 0.0]
+
+
+def _retrieval_corpus(spark, string_ids=False):
+    """60 docs over 4 partitions: 20 identical vectors (dense ties across
+    the top-2k boundary), 4 zero-norm vectors, 20 identical texts
+    (keyword ties), mixed-case text and one empty text."""
+    rows = []
+    for i in range(60):
+        if i < 20:
+            vec = list(_TIE_VEC)
+        elif i < 24:
+            vec = [0.0] * 4
+        else:
+            vec = [float((i * 7) % 5 - 2), float((i * 3) % 4), 1.0,
+                   float(i % 3)]
+        if 30 <= i < 50:
+            text = "alpha beta"
+        elif i % 7 == 0:
+            text = "Gamma rare Alpha delta"
+        elif i == 59:
+            text = ""
+        else:
+            text = " ".join(["delta", "eps"][: 1 + i % 2] + ["zeta"] * (i % 4))
+        rows.append((f"doc-{i:03d}" if string_ids else i, i % 2, text, vec))
+    id_type = "string" if string_ids else "long"
+    return spark.createDataFrame(
+        rows, f"id {id_type}, grp int, text string, vec array<double>"
+    ).repartition(4)
+
+
+def _lazy_bm25(corpus, query, k, where=None):
+    from vectordb_data_ingestion_spark.operators.search import bm25_topk
+
+    base = corpus.filter(where) if where is not None else corpus
+    terms = [t for t in query.lower().split() if t]
+    return bm25_topk(base, [(0, terms)], k=k, id_col="id").drop("q_id")
+
+
+def _lazy_hybrid(corpus, query, vector, k, alpha, where=None):
+    """The composition hybrid replaces: vectorized dense top-2k plus a
+    rank window, bm25_topk's top-2k, rrf_fuse."""
+    from pyspark.sql.window import Window
+
+    from vectordb_data_ingestion_spark.operators.search import (
+        bm25_topk,
+        rrf_fuse,
+    )
+    from vectordb_data_ingestion_spark.operators.similarity import (
+        topk_by_certainty_vectorized,
+    )
+
+    base = corpus.filter(where) if where is not None else corpus
+    dense = topk_by_certainty_vectorized(
+        base, [(0, vector)], k=2 * k, threshold=0.0, corpus_vec="vec",
+        corpus_id="id",
+    ).withColumn(
+        "rank",
+        F.row_number().over(
+            Window.partitionBy("q_id").orderBy(F.desc("certainty"), F.asc("id"))
+        ),
+    )
+    terms = [t for t in query.lower().split() if t]
+    keyword = bm25_topk(base, [(0, terms)], k=2 * k, id_col="id")
+    return rrf_fuse(
+        dense, keyword, id_col="id", weight_a=alpha, weight_b=1.0 - alpha,
+        k=k,
+    ).drop("q_id")
+
+
+def _ranked(df):
+    return [tuple(r) for r in df.orderBy("rank").collect()]
+
+
+_SOME_VEC = [0.5, 1.0, 1.0, 0.0]
+
+
+@pytest.mark.parametrize(
+    "query,vector,k,alpha,where,string_ids",
+    [
+        ("alpha beta", _TIE_VEC, 3, 0.5, None, False),  # ties at 2k, both legs
+        ("alpha beta", _TIE_VEC, 3, 0.5, None, True),   # string ids
+        ("ALPHA gamma", [0.0] * 4, 3, 0.5, None, False),  # zero-norm query
+        ("", _TIE_VEC, 3, 0.5, None, False),            # empty query
+        ("absent", _SOME_VEC, 3, 0.5, None, False),      # term not in corpus
+        ("rare", _SOME_VEC, 5, 0.0, None, False),        # zero dense weight
+        ("rare", _SOME_VEC, 5, 1.0, None, False),        # zero keyword weight
+        ("alpha delta", _SOME_VEC, 4, 0.5, "grp = 0", False),  # where
+        ("rare eps", _SOME_VEC, 50, 0.5, None, False),   # k > matching docs
+    ],
+)
+def test_hybrid_and_bm25_match_the_lazy_composition(
+    spark, query, vector, k, alpha, where, string_ids
+):
+    corpus = _retrieval_corpus(spark, string_ids)
+    col = VectorCollection(corpus, id_col="id", text_col="text", vec_col="vec")
+    cond = F.expr(where) if where else None
+
+    got = col.hybrid(query, vector, k=k, alpha=alpha, where=cond)
+    want = _lazy_hybrid(corpus, query, vector, k, alpha, cond)
+    assert got.dtypes == want.dtypes
+    assert _ranked(got) == _ranked(want)
+
+    got = col.bm25(query, k=k, where=cond)
+    want = _lazy_bm25(corpus, query, k, cond)
+    assert got.dtypes == want.dtypes
+    assert _ranked(got) == _ranked(want)
+
+
+def test_hybrid_parity_cases_are_not_vacuous(spark):
+    """The parity cases above exercise what they claim: ties straddle the
+    2k cut, zero-weight rows fill a list, k outruns the matches, and a
+    where filter changes the statistics (so a score) rather than only
+    the candidate set."""
+    corpus = _retrieval_corpus(spark)
+    col = VectorCollection(corpus, id_col="id", text_col="text", vec_col="vec")
+    # 20 docs tie on certainty 1.0 and 20 on score, over 4 partitions:
+    # each 2k=6 list cuts its ties by id, and the two legs interleave
+    fused = _ranked(col.hybrid("alpha beta", _TIE_VEC, k=3))
+    assert [r[0] for r in fused] == [0, 30, 1]
+    assert len(_ranked(col.bm25("alpha beta", k=6))) == 6
+    # alpha=0: the rare term matches 6 docs, zero-contribution rows follow
+    fused = _ranked(col.hybrid("rare", _SOME_VEC, k=12, alpha=0.0))
+    assert len(fused) == 12 and fused[-1][1] == 0 and fused[0][1] > 0
+    # k past the matches: every matched doc, no more
+    assert len(_ranked(col.bm25("rare", k=50))) == 6
+    # the where filter halves N and changes df/avgdl: doc 0's score moves
+    full = dict((r[0], r[1]) for r in _ranked(col.bm25("alpha delta", k=60)))
+    part = dict(
+        (r[0], r[1])
+        for r in _ranked(col.bm25("alpha delta", k=60, where=F.col("grp") == 0))
+    )
+    assert part and all(part[i] != full[i] for i in part)
+    assert _ranked(col.bm25("", k=5)) == []
+    assert _ranked(col.hybrid("x", [0.0] * 4, k=5)) == []
+
+
+def test_retrieval_job_budget_over_a_sink(spark, tmp_path):
+    """Over an opened manifest sink: hybrid is the statistics aggregate
+    (two jobs), one scan (one) and the caller's rank sort (one); bm25 is
+    the aggregate plus one top-k job; near_vector stays one scan plus
+    its merge."""
+    from vectordb_data_ingestion_spark.sinks.manifest_sink import (
+        ManifestVectorSink,
+    )
+
+    path = str(tmp_path / "sink")
+    corpus = _retrieval_corpus(spark)
+    writer = ManifestVectorSink(spark, path, partition_col=None)
+    for g in (0, 1):
+        writer.upsert(corpus.filter(F.col("grp") == g))
+    col = VectorCollection(
+        ManifestVectorSink(spark, path, partition_col=None).read(),
+        id_col="id", text_col="text", vec_col="vec",
+    )
+    rows, jobs = jobs_during(
+        spark,
+        lambda: col.hybrid("alpha beta", _SOME_VEC, k=5).orderBy("rank").collect(),
+    )
+    assert len(rows) == 5 and jobs <= 4, jobs
+    rows, jobs = jobs_during(spark, lambda: col.bm25("alpha beta", k=5).collect())
+    assert len(rows) == 5 and jobs <= 3, jobs
+    rows, jobs = jobs_during(
+        spark, lambda: col.near_vector(_SOME_VEC, k=5, certainty=0.0).collect()
+    )
+    assert len(rows) == 5 and jobs <= 2, jobs

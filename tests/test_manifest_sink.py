@@ -1197,6 +1197,29 @@ def test_commit_heals_missing_history_key(spark, tmp_path, binding):
     assert sink.read_at(3).count() == 3
 
 
+def test_commit_heals_history_with_the_bytes_it_read(spark, tmp_path, binding):
+    """The heal re-publishes the generation's bytes exactly as the
+    committer read them, not a second serialization of the parsed
+    manifest: a head written in another JSON layout heals byte for
+    byte."""
+    sink = _sink(spark, tmp_path, binding, name="heal_bytes")
+    for i in range(2):
+        sink.upsert(
+            spark.createDataFrame([(f"c{i}", i)], "chunk_id string, v long")
+        )
+    raw, token = sink.store.get("MANIFEST")
+    relaid = json.dumps(json.loads(raw), indent=2, sort_keys=True).encode()
+    assert relaid != raw
+    assert sink.store.put_if("MANIFEST", relaid, token)
+    cur = sink.store.get("MANIFEST.v2")
+    assert sink.store.delete_if("MANIFEST.v2", cur[1])
+
+    sink.upsert(spark.createDataFrame([("c2", 2)], "chunk_id string, v long"))
+    assert sink.store.get("MANIFEST.v2")[0] == relaid
+    assert sink.history() == [3, 2, 1]
+    assert sink.read_at(2).count() == 2
+
+
 def test_vacuum_walks_through_history_gaps(spark, tmp_path):
     """ADVICE r7: vacuum must not stop at the first missing key below the
     retention floor — a lost history put leaves a gap, and breaking there

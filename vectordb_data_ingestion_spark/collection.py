@@ -14,9 +14,14 @@ config consumed by a chatbot. This facade makes them executable:
     col.hybrid("reset password", qvec, k=10, alpha=0.5)         # fusion
     col.rerank("reset password", candidates, transport, k=3)    # precision
 
-Every method returns a lazy DataFrame - composition with the rest of a plan
-(joins, writes) stays in Catalyst's hands; nothing collects except the tiny
-query-side inputs the operators broadcast anyway.
+Every method returns a DataFrame that composes with the rest of a plan
+(joins, writes). Most are lazy: nothing collects except the tiny
+query-side inputs the operators broadcast anyway. The two keyword modes
+execute part of their work when called. ``bm25`` runs the query's BM25
+statistics aggregate and returns a lazy top-k that scores with them as
+literals. ``hybrid`` also runs one scan that ranks both legs, fuses them
+in the driver and returns the ``k`` fused rows as a one-partition local
+relation.
 """
 
 from __future__ import annotations
@@ -161,17 +166,36 @@ class VectorCollection:
     def bm25(
         self, query: str, k: int = 10, where: Column | None = None
     ) -> DataFrame:
-        """Weaviate bm25 keyword mode: Okapi BM25 over the text column."""
-        from vectordb_data_ingestion_spark.operators.search import bm25_topk
+        """Weaviate bm25 keyword mode: Okapi BM25 over the text column,
+        ``(id, score_micro, rank)`` for the ``k`` best docs holding a
+        query term (score desc, id asc) - the rows
+        :func:`~vectordb_data_ingestion_spark.operators.search.bm25_topk`
+        gives.
 
-        terms = [t for t in query.lower().split() if t]
-        return bm25_topk(
-            self._filtered(where),
-            [(0, terms)],
-            k=k,
+        Runs the query's statistics aggregate here (two jobs, see
+        :func:`~vectordb_data_ingestion_spark.operators.search.with_bm25_micro`);
+        the returned frame scores with them as literals and keeps each
+        partition's top ``k`` before one merge, so collecting it, sorted
+        by rank or not, is one more job."""
+        from vectordb_data_ingestion_spark.operators.search import (
+            with_bm25_micro,
+        )
+
+        scored = with_bm25_micro(
+            self._filtered(where), query.split(), [self.id_col],
             text_col=self.text_col,
-            id_col=self.id_col,
-        ).drop("q_id")
+        )
+        # the limit's output is ONE partition in rank order, so the row's
+        # position there is its rank; filtering after the limit keeps
+        # the filter from re-scoring every row below the projection
+        return (
+            scored.orderBy(F.desc("score_micro"), F.asc(self.id_col))
+            .limit(k)
+            .filter(F.col("score_micro").isNotNull())
+            .withColumn(
+                "rank", (F.monotonically_increasing_id() + 1).cast("int")
+            )
+        )
 
     def hybrid(
         self,
@@ -182,48 +206,91 @@ class VectorCollection:
         where: Column | None = None,
         k_rrf: int = 60,
     ) -> DataFrame:
-        """Weaviate hybrid mode: dense + BM25 lists fused with weighted
-        reciprocal rank (``alpha`` weights the dense list, ``1 - alpha``
-        the keyword list, both recall stages bounded to 2k candidates)."""
+        """Weaviate hybrid mode: the dense top ``2k`` (certainty desc, id
+        asc, threshold 0) and the BM25 top ``2k`` fused with weighted
+        reciprocal rank - ``alpha`` weights the dense list, ``1 - alpha``
+        the keyword list - as ``(id, rrf_micro, rank)`` for ranks
+        ``1..k``: the rows the lazy composition of
+        :func:`~vectordb_data_ingestion_spark.operators.similarity.topk_by_certainty_vectorized`,
+        :func:`~vectordb_data_ingestion_spark.operators.search.bm25_topk`
+        and :func:`~vectordb_data_ingestion_spark.operators.search.rrf_fuse`
+        gives.
+
+        Executes here, in three Spark jobs: the BM25 statistics aggregate
+        (two), then ONE scan that scores both legs - certainty in numpy,
+        BM25 in Catalyst with the statistics as literals - and keeps each
+        partition's top ``2k`` per leg (one). Fusion runs in the driver
+        over at most ``2k`` ids per list. The result is a one-partition
+        local relation, so a caller's rank sort is one more job."""
         from vectordb_data_ingestion_spark.operators.search import (
-            bm25_topk,
-            rrf_fuse,
+            rrf_fuse_lists,
+            with_bm25_micro,
         )
-        from vectordb_data_ingestion_spark.operators.similarity import (
-            topk_by_certainty_vectorized,
-        )
-        from pyspark.sql.window import Window
+        from vectordb_data_ingestion_spark.session import values_df
 
         base = self._filtered(where)
-        dense = topk_by_certainty_vectorized(
-            base,
-            [(0, list(vector))],
-            k=2 * k,
-            threshold=0.0,
-            corpus_vec=self.vec_col,
-            corpus_id=self.id_col,
-        ).withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.desc("certainty"), F.asc(self.id_col)
-                )
-            ),
+        scored = with_bm25_micro(
+            base, query.split(), [self.id_col, self.vec_col],
+            text_col=self.text_col,
         )
-        terms = [t for t in query.lower().split() if t]
-        keyword = bm25_topk(
-            base, [(0, terms)], k=2 * k, text_col=self.text_col,
-            id_col=self.id_col,
+        dense, keyword = self._top_per_leg(scored, vector, 2 * k)
+        rows = rrf_fuse_lists(
+            dense, keyword, k_rrf=k_rrf, weight_a=alpha,
+            weight_b=1.0 - alpha, k=k,
         )
-        return rrf_fuse(
-            dense,
-            keyword,
-            id_col=self.id_col,
-            k_rrf=k_rrf,
-            weight_a=alpha,
-            weight_b=1.0 - alpha,
-            k=k,
-        ).drop("q_id")
+        id_type = base.schema[self.id_col].dataType.simpleString()
+        return values_df(
+            base.sparkSession, rows,
+            f"`{self.id_col}` {id_type}, rrf_micro bigint, rank int",
+        ).coalesce(1)
+
+    def _top_per_leg(
+        self, scored: DataFrame, vector: list[float], k: int
+    ) -> tuple[list, list]:
+        """The dense and keyword ranked id lists (best first, ``k`` each)
+        of ``scored`` ``(id, vector, score_micro)``, from one collected
+        scan: every partition keeps its own top ``k`` per leg -
+        certainty desc / id asc over all rows, score desc / id asc over
+        matched rows - and the driver merges them."""
+        import pandas as pd
+        from pyspark.sql.types import (
+            DoubleType,
+            IntegerType,
+            StructField,
+            StructType,
+        )
+
+        from vectordb_data_ingestion_spark.operators.similarity import (
+            CertaintyTopK,
+            push_topk,
+        )
+
+        id_col, vec_col = self.id_col, self.vec_col
+        query = [(0, list(vector))]
+        schema = StructType([
+            StructField("leg", IntegerType()),
+            StructField(id_col, scored.schema[id_col].dataType),
+            StructField("score", DoubleType()),
+        ])
+
+        def scan(batches):
+            dense, keyword = CertaintyTopK(query, k, 0.0), []
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                ids = pdf[id_col].to_numpy()
+                dense.add(ids, pdf[vec_col])
+                hit = pdf["score_micro"].notna().to_numpy()
+                micro = pdf["score_micro"][hit].to_numpy(dtype="float64")
+                push_topk(keyword, ids[hit], micro, k)
+            rows = [(0, i, c) for _, i, c in dense.rows()]
+            rows += [(1, rid.v, s) for s, rid in keyword]
+            yield pd.DataFrame(rows, columns=["leg", id_col, "score"])
+
+        legs: tuple[list, list] = ([], [])
+        for leg, i, s in scored.mapInPandas(scan, schema).collect():
+            legs[leg].append((-s, i))
+        return tuple([i for _, i in sorted(rows)[:k]] for rows in legs)
 
     def rerank(
         self,

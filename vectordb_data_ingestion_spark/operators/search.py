@@ -9,6 +9,10 @@ This module provides both as distributed operators:
   against the corpus in ONE plan.
 - :func:`rrf_fuse`   - reciprocal-rank fusion of two ranked lists (the
   fusion rule Weaviate/OpenSearch hybrid search uses), weighted.
+- :func:`with_bm25_micro` / :func:`rrf_fuse_lists` - the single-query
+  forms the collection facade runs: BM25 statistics computed once per
+  query and scored as literals (no explode, no join), and the same fusion
+  over two short id lists in the driver.
 
 Scale posture (100 TB / 1000 executors):
 
@@ -30,7 +34,10 @@ Scale posture (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
@@ -57,6 +64,92 @@ def _norm_queries(
 def _sql_str(t: str) -> str:
     """Escape a term for embedding in a single-quoted SQL literal."""
     return t.replace("'", "''")
+
+
+def lexical_tokens(text: Column) -> Column:
+    """Lowercased whitespace tokens with empties dropped: the one
+    tokenizer every lexical scorer here indexes and scores."""
+    return F.filter(word_split(F.lower(text)), lambda w: w != "")
+
+
+def bm25_idf(n: Column, df: Column) -> Column:
+    """Lucene's non-negative idf, ``ln(1 + (N - df + 0.5) / (df + 0.5))``."""
+    return F.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+
+def bm25_term_micro(
+    idf: Column, tf: Column, dl: Column, avgdl: Column, k1: float, b: float
+) -> Column:
+    """One (query term, doc) Okapi BM25 contribution in integer
+    millionths (Spark's HALF_UP ``round``) - the ONE per-term formula:
+    the indexed scorer feeds it columns, :func:`with_bm25_micro` feeds it
+    the query's statistics as literals, so both score bit-identically."""
+    denom = tf + k1 * (1.0 - b + b * dl / avgdl)
+    return F.round(idf * (tf * (k1 + 1.0)) / denom * 1e6).cast("long")
+
+
+def with_bm25_micro(
+    corpus: DataFrame, terms: list[str], cols: list[str], text_col: str = "text"
+) -> DataFrame:
+    """``cols`` of ``corpus`` plus ``score_micro``: each doc's BM25 score
+    for the query ``terms`` in integer millionths, NULL when the doc holds
+    none of them - the score :func:`bm25_topk` ranks, computed without an
+    explode or a join.
+
+    Query-time statistics: ONE aggregate over ``corpus`` (two jobs under
+    AQE) yields ``N``, ``avgdl`` and each term's ``df`` and idf, with
+    ``bm25_topk``'s defaults ``k1=1.2, b=0.75``. The returned frame is
+    lazy and scores every doc with those values as literals, its
+    tokenizing in the JVM. With no terms the aggregate is skipped; with
+    no terms or an empty corpus every doc scores NULL."""
+    k1, b = 1.2, 0.75
+    terms = sorted({t.lower() for t in terms})
+    toks = corpus.select(
+        *cols, lexical_tokens(F.col(text_col)).alias("__toks")
+    )
+    none = F.lit(None).cast("long").alias("score_micro")
+    if not terms:
+        return corpus.select(*cols, none)
+    stats = (
+        toks.agg(
+            F.count("*").alias("n"),
+            F.avg(F.size("__toks")).alias("avgdl"),
+            *[
+                F.count_if(F.array_contains("__toks", t)).alias(f"df{i}")
+                for i, t in enumerate(terms)
+            ],
+        )
+        .select(
+            "avgdl",
+            *[
+                bm25_idf(F.col("n"), F.col(f"df{i}")).alias(f"idf{i}")
+                for i in range(len(terms))
+            ],
+        )
+        .first()
+    )
+    if stats["avgdl"] is None:  # no rows
+        return corpus.select(*cols, none)
+    # tokens, then (dl, tf per term), then the score: each projection
+    # reads the one below several times, so none is inlined twice
+    tf = [f"__tf{i}" for i in range(len(terms))]
+    counts = toks.select(
+        *cols,
+        F.size("__toks").alias("__dl"),
+        *[
+            F.size(F.filter("__toks", lambda w: w == t)).alias(c)
+            for t, c in zip(terms, tf)
+        ],
+    )
+    avgdl = F.lit(stats["avgdl"])
+    micro = reduce(operator.add, [
+        bm25_term_micro(
+            F.lit(stats[f"idf{i}"]), F.col(c), F.col("__dl"), avgdl, k1, b
+        )
+        for i, c in enumerate(tf)
+    ])
+    matched = reduce(operator.or_, [F.col(c) > 0 for c in tf])
+    return counts.select(*cols, F.when(matched, micro).alias("score_micro"))
 
 
 def bm25_topk(
@@ -192,6 +285,34 @@ def rrf_fuse(
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
     )
+
+
+def rrf_fuse_lists(
+    ranked_a: list,
+    ranked_b: list,
+    k_rrf: int = 60,
+    weight_a: float = 1.0,
+    weight_b: float = 1.0,
+    k: int = 10,
+) -> list[tuple]:
+    """:func:`rrf_fuse` for two ranked id lists already in the driver
+    (best first; each at most a few thousand ids): the same weighted
+    contributions, each rounded as Spark's ``round`` rounds the double -
+    HALF_UP on its exact value - and the same order. Returns
+    ``[(id, rrf_micro, rank)]`` for ranks ``1..k``."""
+    from collections import defaultdict
+    from decimal import ROUND_HALF_UP, Decimal
+
+    fused: dict = defaultdict(int)
+    for w, ranked in ((weight_a, ranked_a), (weight_b, ranked_b)):
+        for rank, i in enumerate(ranked, start=1):
+            fused[i] += int(
+                Decimal(w * 1e6 / (k_rrf + rank)).quantize(
+                    Decimal(1), rounding=ROUND_HALF_UP
+                )
+            )
+    best = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    return [(i, micro, rank) for rank, (i, micro) in enumerate(best, start=1)]
 
 
 def rrf_sql(
@@ -344,7 +465,7 @@ def build_bm25_index(
     where only query terms survive to the groupBy.
 
     ``id_col`` must be unique: ``df`` is a plain row count per term."""
-    toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+    toks = lexical_tokens(F.col(text_col))
     docs = corpus.select(
         F.col(id_col), F.size(toks).alias("dl"), toks.alias("__toks")
     )
@@ -391,13 +512,10 @@ def bm25_topk_indexed(
         [(qid, t) for qid, qterms in queries for t in sorted(set(qterms))],
         "q_id long, term string",
     )
-    idf = F.log(
-        1.0 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    term_micro = bm25_term_micro(
+        bm25_idf(F.col("n"), F.col("df")),
+        F.col("tf"), F.col("dl"), F.col("avgdl"), k1, b,
     )
-    denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    term_micro = F.round(
-        idf * (F.col("tf") * (k1 + 1.0)) / denom * 1e6
-    ).cast("long")
     agg = (
         postings.join(broadcast(qdf), "term")
         .join(broadcast(terms), "term")
@@ -438,7 +556,7 @@ def doc_postings(
     """Postings rows for a (micro-)batch of documents - the transform an
     incremental index refresh runs per batch (same tokenization as
     :func:`build_bm25_index`)."""
-    toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+    toks = lexical_tokens(F.col(text_col))
     return (
         corpus.select(F.col(id_col), F.size(toks).alias("dl"),
                       F.explode(toks).alias("term"))
@@ -475,7 +593,7 @@ def tfidf_topk(
     before the final sum - no float-summation-order ties against the
     oracle (same convention as :func:`bm25_topk`)."""
     queries = _norm_queries(queries)
-    toks = F.filter(word_split(F.lower(F.col(text_col))), lambda w: w != "")
+    toks = lexical_tokens(F.col(text_col))
     docs = corpus.select(F.col(id_col), toks.alias("__toks"))
     n_docs = docs.agg(F.count("*").alias("__n"))
 

@@ -74,6 +74,99 @@ def topk_by_certainty(
     )
 
 
+class _RevId:
+    """Inverts id ordering inside the min-heap so the heap root is the
+    WORST candidate (lowest score, then highest id) for any comparable id
+    type — numeric or string — replacing the old ``-int(id)`` trick that
+    crashed on non-numeric ids."""
+
+    __slots__ = ("v",)
+
+    def __init__(self, v):
+        self.v = v
+
+    def __lt__(self, other):
+        return self.v > other.v
+
+    def __eq__(self, other):
+        return self.v == other.v
+
+
+def push_topk(heap: list, ids, scores, k: int) -> None:
+    """Fold one batch into ``heap``, a min-heap of the best ``k``
+    ``(score, _RevId(id))`` items by score desc, id asc. numpy ranks the
+    batch first (``lexsort`` on ``(id, -score)``), so at most its own top
+    ``k`` rows reach the Python heap, best first, and the fold stops at
+    the first row the heap's current worst beats."""
+    import heapq
+
+    import numpy as np
+
+    if k <= 0 or not len(ids):
+        return
+    order = np.lexsort((ids, -scores))[:k]
+    for cid, cv in zip(ids[order], scores[order]):
+        item = (cv, _RevId(cid))
+        if len(heap) < k:
+            heapq.heappush(heap, item)
+        elif item > heap[0]:
+            heapq.heapreplace(heap, item)
+        else:
+            break
+
+
+class CertaintyTopK:
+    """One partition's top-``k`` corpus rows by certainty ``(1+cos)/2``
+    meeting ``threshold``, for each of a few ``(q_id, vector)`` queries,
+    fed one Arrow batch at a time: one numpy matmul per batch, then
+    :func:`push_topk` per query. The per-batch kernel of
+    :func:`topk_by_certainty_vectorized` and of the collection's hybrid
+    scan."""
+
+    def __init__(self, query_rows: list[tuple], k: int, threshold: float):
+        import numpy as np
+
+        self.q_ids = [q for q, _ in query_rows]
+        self.qm = np.asarray([v for _, v in query_rows], dtype=np.float64)
+        self.qn = np.linalg.norm(self.qm, axis=1)
+        # JVM parity on degenerate vectors: cosine_similarity returns NULL
+        # when either norm is 0 and the threshold filter drops NULL, so a
+        # zero-norm QUERY matches nothing and zero-norm CORPUS rows never
+        # rank (scoring them 0.5 would displace real neighbors).
+        self.q_zero = self.qn == 0
+        self.qn[self.q_zero] = 1.0
+        self.k, self.threshold = k, threshold
+        self.heaps: dict = {q: [] for q in self.q_ids}
+
+    def add(self, ids, vectors) -> None:
+        """Score one batch: ``ids`` a numpy array, ``vectors`` its
+        embedding cells."""
+        import numpy as np
+
+        m = np.stack(np.asarray(vectors)).astype(np.float64)
+        norms = np.linalg.norm(m, axis=1)
+        nonzero = norms != 0
+        if not nonzero.all():
+            ids, m, norms = ids[nonzero], m[nonzero], norms[nonzero]
+        if not len(ids):
+            return
+        cert = np.round(
+            (1.0 + (m @ self.qm.T) / np.outer(norms, self.qn)) / 2.0, 6
+        )
+        for j, q in enumerate(self.q_ids):
+            if self.q_zero[j]:
+                continue
+            col = cert[:, j]
+            keep = col >= self.threshold
+            push_topk(self.heaps[q], ids[keep], col[keep], self.k)
+
+    def rows(self) -> list[tuple]:
+        """``(q_id, id, certainty)`` for every kept row, unordered."""
+        return [
+            (q, rid.v, cv) for q, h in self.heaps.items() for cv, rid in h
+        ]
+
+
 def topk_by_certainty_vectorized(
     corpus: DataFrame,
     query_rows: list[tuple],
@@ -92,7 +185,6 @@ def topk_by_certainty_vectorized(
     local top-k per query; the final exact top-k merges
     ``partitions x k`` candidates through the same window, so the
     shuffle input is tiny regardless of corpus size."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
         DoubleType,
@@ -103,15 +195,6 @@ def topk_by_certainty_vectorized(
     )
 
     q_ids = [q for q, _ in query_rows]
-    qm = np.asarray([v for _, v in query_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    # JVM parity on degenerate vectors: cosine_similarity returns NULL
-    # when either norm is 0 and the threshold filter drops NULL, so a
-    # zero-norm QUERY matches nothing and zero-norm CORPUS rows never
-    # rank (scoring them 0.5 would displace real neighbors).
-    q_zero = qn == 0
-    qn[q_zero] = 1.0
-
     # Preserve id dtypes instead of assuming bigint: the collection facade
     # routes arbitrary (string/UUID) chunk ids through here, exactly like
     # pq_encode_vectorized keeps the source id type.
@@ -126,55 +209,12 @@ def topk_by_certainty_vectorized(
         ]
     )
 
-    class _RevId:
-        """Inverts id ordering inside the min-heap so the heap root is the
-        WORST candidate (lowest certainty, then highest id) for any
-        comparable id type — numeric or string — replacing the old
-        ``-int(id)`` trick that crashed on non-numeric ids."""
-
-        __slots__ = ("v",)
-
-        def __init__(self, v):
-            self.v = v
-
-        def __lt__(self, other):
-            return self.v > other.v
-
-        def __eq__(self, other):
-            return self.v == other.v
-
     def score(batches):
-        import heapq
-
-        heaps: dict = {q: [] for q in q_ids}
+        topk = CertaintyTopK(query_rows, k, threshold)
         for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf[corpus_id].to_numpy()
-            m = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            nonzero = norms != 0
-            if not nonzero.all():
-                ids, m, norms = ids[nonzero], m[nonzero], norms[nonzero]
-            if not len(ids):
-                continue
-            cert = np.round((1.0 + (m @ qm.T) / np.outer(norms, qn)) / 2.0, 6)
-            for j, q in enumerate(q_ids):
-                if q_zero[j]:
-                    continue
-                col = cert[:, j]
-                keep = col >= threshold
-                for cid, cv in zip(ids[keep], col[keep]):
-                    item = (cv, _RevId(cid))
-                    h = heaps[q]
-                    if len(h) < k:
-                        heapq.heappush(h, item)
-                    elif item > h[0]:
-                        heapq.heapreplace(h, item)
-        rows = [
-            (q, rid.v, cv) for q, h in heaps.items() for cv, rid in h
-        ]
-        yield pd.DataFrame(rows, columns=["q_id", corpus_id, "certainty"])
+            if not pdf.empty:
+                topk.add(pdf[corpus_id].to_numpy(), pdf[corpus_vec])
+        yield pd.DataFrame(topk.rows(), columns=["q_id", corpus_id, "certainty"])
 
     candidates = corpus.select(corpus_id, corpus_vec).mapInPandas(
         score, schema=mid_schema

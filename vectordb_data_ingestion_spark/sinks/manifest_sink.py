@@ -126,6 +126,17 @@ def _struct_reads_as(
     )
 
 
+class _ReadManifest(dict):
+    """A manifest generation parsed from the store, holding the exact
+    bytes it was read from: the commit that supersedes it re-publishes
+    those bytes to its ``MANIFEST.v<id>`` history key instead of
+    serializing the whole manifest a second time."""
+
+    def __init__(self, raw: bytes):
+        super().__init__(json.loads(raw.decode("utf-8")))
+        self.raw = raw
+
+
 def _table_schema(manifest: dict) -> T.StructType | None:
     sj = manifest.get(_TABLE_SCHEMA)
     return T.StructType.fromJson(json.loads(sj)) if sj else None
@@ -252,16 +263,16 @@ class ManifestVectorSink:
 
     # -- manifest plumbing -------------------------------------------------
 
-    def _get_manifest(self) -> tuple[dict | None, object]:
+    def _get_manifest(self) -> tuple[_ReadManifest | None, object]:
         return self._get_state(_MANIFEST_KEY) or (None, None)
 
-    def _get_state(self, key: str) -> tuple[dict, object] | None:
+    def _get_state(self, key: str) -> tuple[_ReadManifest, object] | None:
         """The parsed manifest (or history generation) at ``key`` with its
         CAS token, or None if the key doesn't exist."""
         cur = self.store.get(key)
         if cur is None:
             return None
-        return json.loads(cur[0].decode("utf-8")), cur[1]
+        return _ReadManifest(cur[0]), cur[1]
 
     def _layout(self) -> dict:
         return {
@@ -358,7 +369,7 @@ class ManifestVectorSink:
             out[_PER_SEGMENT] = True
         return out
 
-    def _commit(self, manifest: dict | None, segments: list[dict],
+    def _commit(self, manifest: _ReadManifest | None, segments: list[dict],
                 token: object, table: dict | None = None,
                 txn: tuple[str, int] | None = None) -> int | None:
         """One commit attempt: stamp the next ``commit_id``, CAS the
@@ -388,7 +399,7 @@ class ManifestVectorSink:
         if manifest is not None and int(manifest.get("commit_id", 0)) >= 1:
             self.store.put_if(
                 f"{_MANIFEST_KEY}.v{int(manifest['commit_id'])}",
-                json.dumps(manifest).encode(),
+                manifest.raw,  # the bytes read: no second serialization
                 None,  # create-only; exists already in the common case
             )
         commit_id = int((manifest or {}).get("commit_id", 0)) + 1
