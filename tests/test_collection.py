@@ -297,11 +297,11 @@ def _lazy_hybrid(corpus, query, vector, k, alpha, where=None):
         rrf_fuse,
     )
     from vectordb_data_ingestion_spark.operators.similarity import (
-        topk_by_certainty_vectorized,
+        topk_by_certainty,
     )
 
     base = corpus.filter(where) if where is not None else corpus
-    dense = topk_by_certainty_vectorized(
+    dense = topk_by_certainty(
         base, [(0, vector)], k=2 * k, threshold=0.0, corpus_vec="vec",
         corpus_id="id",
     ).withColumn(
@@ -388,8 +388,8 @@ def test_hybrid_parity_cases_are_not_vacuous(spark):
 def test_retrieval_job_budget_over_a_sink(spark, tmp_path):
     """Over an opened manifest sink: hybrid is the statistics aggregate
     (two jobs), one scan (one) and the caller's rank sort (one); bm25 is
-    the aggregate plus one top-k job; near_vector stays one scan plus
-    its merge."""
+    the aggregate plus one top-k job; near_vector is one scan, with hits
+    and with none."""
     from vectordb_data_ingestion_spark.sinks.manifest_sink import (
         ManifestVectorSink,
     )
@@ -413,4 +413,8 @@ def test_retrieval_job_budget_over_a_sink(spark, tmp_path):
     rows, jobs = jobs_during(
         spark, lambda: col.near_vector(_SOME_VEC, k=5, certainty=0.0).collect()
     )
-    assert len(rows) == 5 and jobs <= 2, jobs
+    assert len(rows) == 5 and jobs <= 1, jobs
+    rows, jobs = jobs_during(
+        spark, lambda: col.near_vector(_SOME_VEC, k=5, certainty=1.0).collect()
+    )
+    assert rows == [] and jobs <= 1, jobs

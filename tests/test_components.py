@@ -389,13 +389,6 @@ def test_sinks_speak_only_the_conditional_store_protocol():
     assert _store_probes(probe) == [2, 3]
 
 
-# Kernels allowed to keep a JVM form X beside an Arrow-batched
-# X_vectorized. Each other kernel has exactly one implementation. The
-# registry and the collection facade still run different forms of
-# topk_by_certainty; settling the retrieval path empties this list.
-_TWIN_KERNELS_ALLOWED = {"topk_by_certainty"}
-
-
 def _public_functions(tree):
     """Names of the module's top-level public functions."""
     import ast
@@ -410,9 +403,9 @@ def _public_functions(tree):
 
 def test_no_twin_kernel_forms():
     """CI guard: across operators/ and functions/, a public
-    ``X_vectorized`` must not have a public ``X`` beside it (unless X is
-    allow-listed). A second form of one kernel is code that only parity
-    tests run; keep the form the callers use and test it directly."""
+    ``X_vectorized`` must not have a public ``X`` beside it. A second
+    form of one kernel is code that only parity tests run; keep the form
+    the callers use and test it directly."""
     import ast
     import pathlib
 
@@ -428,9 +421,7 @@ def test_no_twin_kernel_forms():
         for n in names
         if n.endswith("_vectorized") and n[: -len("_vectorized")] in names
     }
-    assert twins - _TWIN_KERNELS_ALLOWED == set(), sorted(twins)
-    # the allow-list names live pairs, not stale entries
-    assert _TWIN_KERNELS_ALLOWED <= twins
+    assert twins == set(), sorted(twins)
     # the scanner sees only top-level public defs
     probe = ast.parse(
         "def a():\n    def b(): pass\ndef _c(): pass\nclass D: pass\n"

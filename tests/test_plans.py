@@ -16,15 +16,28 @@ from vectordb_data_ingestion_spark.plans import (
 )
 
 
-def test_topk_certainty_plan(spark):
+def test_topk_certainty_job_budget(spark):
+    """Top-k by certainty is one scan job while the frame is built and a
+    local relation after it: collecting the hits launches no job."""
+    from tests.conftest import jobs_during
+    from vectordb_data_ingestion_spark.operators.similarity import (
+        topk_by_certainty,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    qrows = [
+        (r["vec_id"], list(r["embedding"]))
+        for r in emb.filter(F.col("vec_id") < 5).collect()
+    ]
+    df, jobs = jobs_during(
+        spark, lambda: topk_by_certainty(emb, qrows, k=3, threshold=0.5)
+    )
+    assert jobs == 1, jobs
+    rows, jobs = jobs_during(spark, df.collect)
+    assert jobs == 0 and len(rows) == 15, (jobs, len(rows))
+    # the registry entry returns the same local relation
     df = qc.SPARK_QUERIES["topk_certainty"](spark, SF_SMALL)
-    # map-side top-k (WindowGroupLimit Partial) before the single exchange
-    assert has_node(df, "WindowGroupLimit")
-    # queries broadcast; the corpus is never shuffled pre-limit
-    assert has_node(df, "BroadcastExchange")
-    assert count_exchanges(df) <= 1
-    # scans read only (vec_id, embedding)
-    assert all(set(c) <= {"vec_id", "embedding"} for c in scan_columns(df))
+    assert jobs_during(spark, df.collect) == (rows, 0)
 
 
 def test_chunk_pipeline_plan(spark):
@@ -131,32 +144,6 @@ def test_seqno_distributed_matches_global_window(spark):
     plan = physical_plan(df)
     assert "SinglePartition" not in plan
     assert "ExistingRDD" in plan  # checkpoint-pinned input
-
-
-def test_topk_vectorized_matches_jvm_fold(spark):
-    from vectordb_data_ingestion_spark.operators.similarity import (
-        topk_by_certainty,
-        topk_by_certainty_vectorized,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
-    )
-    qrows = [(r["q_id"], list(r["q_embedding"])) for r in queries.collect()]
-    slow = {
-        (r["q_id"], r["vec_id"]): r["certainty"]
-        for r in topk_by_certainty(
-            emb, queries, k=7, threshold=0.5, corpus_id="vec_id"
-        ).collect()
-    }
-    fast = {
-        (r["q_id"], r["vec_id"]): r["certainty"]
-        for r in topk_by_certainty_vectorized(
-            emb, qrows, k=7, threshold=0.5
-        ).collect()
-    }
-    assert slow == fast and slow
 
 
 def test_lsh_partitioned_layout_prunes(spark, tmp_path):

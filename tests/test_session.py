@@ -125,3 +125,52 @@ def test_spread_memo_follows_split_confs(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def test_empty_values_df_is_a_local_relation(spark):
+    """An empty ``values_df`` has the DDL's schema and collects with no
+    Spark job, like a non-empty one."""
+    from tests.conftest import jobs_during
+    from vectordb_data_ingestion_spark.session import values_df
+
+    ddl = "q_id bigint, `chunk id` string, certainty double, v array<float>"
+    df = values_df(spark, [], ddl)
+    assert df.schema == spark.createDataFrame([], ddl).schema
+    assert jobs_during(spark, df.collect) == ([], 0)
+    assert jobs_during(spark, df.drop("q_id").collect) == ([], 0)
+
+
+def test_workers_import_the_package_from_any_directory(tmp_path):
+    """A driver that imports the package from outside its directory, with
+    no PYTHONPATH, still runs scans whose Python workers unpickle the
+    package's classes: get_spark puts the package on the workers' path,
+    and load_tables does so for a plain session a driver built itself."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from vectordb_data_ingestion_spark import queries_catalog as qc\n"
+        "from vectordb_data_ingestion_spark.collection import VectorCollection\n"
+        "from vectordb_data_ingestion_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "corpus = spark.createDataFrame(\n"
+        "    [(1, [1.0, 0.0]), (2, [0.0, 1.0])], 'id long, vec array<double>')\n"
+        "col = VectorCollection(corpus, id_col='id', vec_col='vec')\n"
+        "print([tuple(r) for r in col.near_vector([1.0, 0.1], k=1).collect()])\n"
+        "spark.stop()\n"
+        "spark = SparkSession.builder.master('local[1]').getOrCreate()\n"
+        f"top = qc.SPARK_QUERIES['topk_certainty'](spark, {SF_SMALL!r})\n"
+        "print(top.count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-2:] == ["[(1, 0.997519)]", "15"]

@@ -161,12 +161,11 @@ def test_zero_norm_parity_jvm_vs_vectorized(spark):
     scoring zero-norm vectors certainty 0.5 (top-k) or similarity 0
     (IVF assign) while the JVM forms give cosine NULL — dropped by the
     threshold filter / never winning under NULLS LAST. Zero-norm corpus
-    rows never rank in either top-k form, and a zero-norm centroid never
-    captures a vector."""
+    rows never rank in top-k, and a zero-norm centroid never captures a
+    vector."""
     from vectordb_data_ingestion_spark.operators.similarity import (
         assign_ivf_cells_vectorized,
         topk_by_certainty,
-        topk_by_certainty_vectorized,
     )
 
     corpus = spark.createDataFrame(
@@ -177,16 +176,8 @@ def test_zero_norm_parity_jvm_vs_vectorized(spark):
         ],
         "vec_id long, embedding array<double>",
     )
-    queries = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "q_id long, q_embedding array<double>"
-    )
-    jvm = topk_by_certainty(corpus, queries, k=3, threshold=0.0)
-    ids_jvm = sorted(r["vec_id"] for r in jvm.collect())
-    vec = topk_by_certainty_vectorized(
-        corpus, [(0, [1.0, 0.0])], k=3, threshold=0.0
-    )
-    ids_vec = sorted(r["vec_id"] for r in vec.collect())
-    assert ids_jvm == ids_vec == [1, 3]
+    top = topk_by_certainty(corpus, [(0, [1.0, 0.0])], k=3, threshold=0.0)
+    assert [r["vec_id"] for r in top.collect()] == [1, 3]
 
     cents = spark.createDataFrame(
         [(5, [0.0, 1.0]), (7, [1.0, 0.0]), (9, [0.0, 0.0])],
@@ -209,6 +200,29 @@ def test_zero_norm_parity_jvm_vs_vectorized(spark):
         for r in assign_ivf_cells_vectorized(probe, cents).collect()
     }
     assert cells == {10: 5, 11: 7, 12: 5}
+
+
+def test_topk_by_certainty_with_no_queries_is_empty(spark):
+    """No query rows: no scan, and an empty relation with the corpus's
+    id type (the per-partition kernel cannot score an empty query set)."""
+    from tests.conftest import jobs_during
+    from vectordb_data_ingestion_spark.operators.similarity import (
+        topk_by_certainty,
+    )
+
+    corpus = spark.createDataFrame(
+        [("a", [1.0, 0.0])], "chunk_id string, vector array<double>"
+    )
+    top, jobs = jobs_during(
+        spark,
+        lambda: topk_by_certainty(
+            corpus, [], corpus_vec="vector", corpus_id="chunk_id"
+        ),
+    )
+    assert jobs == 0 and top.collect() == []
+    assert top.dtypes == [
+        ("q_id", "bigint"), ("chunk_id", "string"), ("certainty", "double")
+    ]
 
 
 def test_bitext_mine_union_checkpoint_and_fallback(spark):

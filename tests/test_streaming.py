@@ -364,13 +364,9 @@ def test_streaming_ingestion_pipeline_end_to_end(spark, tmp_path):
     # the sink is a similarity-search substrate: querying with a chunk's own
     # vector must return that chunk as the top hit at certainty 1.0
     target = first[sorted(first)[0]]
-    queries = spark.createDataFrame(
-        [(0, [float(x) for x in target["vector"]])],
-        "q_id int, q_embedding array<double>",
-    )
-    corpus = sink.read().select("chunk_id", F.col("vector").alias("embedding"))
     hits = topk_by_certainty(
-        corpus, queries, k=1, threshold=0.5, corpus_id="chunk_id"
+        sink.read(), [(0, [float(x) for x in target["vector"]])], k=1,
+        threshold=0.5, corpus_vec="vector", corpus_id="chunk_id",
     ).collect()
     assert hits[0]["chunk_id"] == target["chunk_id"]
 

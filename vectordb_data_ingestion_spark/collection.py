@@ -15,13 +15,14 @@ config consumed by a chatbot. This facade makes them executable:
     col.rerank("reset password", candidates, transport, k=3)    # precision
 
 Every method returns a DataFrame that composes with the rest of a plan
-(joins, writes). Most are lazy: nothing collects except the tiny
-query-side inputs the operators broadcast anyway. The two keyword modes
-execute part of their work when called. ``bm25`` runs the query's BM25
-statistics aggregate and returns a lazy top-k that scores with them as
-literals. ``hybrid`` also runs one scan that ranks both legs, fuses them
-in the driver and returns the ``k`` fused rows as a one-partition local
-relation.
+(joins, writes). The retrieval modes execute their scans when called.
+``near_vector`` (and ``near_text`` / ``near_object`` / ``retrieve_context``
+through it) runs one scan that keeps each partition's top-k and returns
+the driver-merged hits as a local relation. ``bm25`` runs the query's
+BM25 statistics aggregate and returns a lazy top-k that scores with them
+as literals. ``hybrid`` also runs one scan that ranks both legs, fuses
+them in the driver and returns the ``k`` fused rows as a one-partition
+local relation.
 """
 
 from __future__ import annotations
@@ -86,14 +87,16 @@ class VectorCollection:
         where: Column | None = None,
     ) -> DataFrame:
         """Weaviate nearVector (+ optional where): top-k by certainty
-        ``(1+cos)/2`` meeting the threshold. Single corpus scan, broadcast
-        query, map-side top-k."""
+        ``(1+cos)/2`` meeting the threshold, as ``(id, certainty)`` in
+        rank order. Executes here: one Spark job scans the corpus and keeps
+        each partition's top-k, the driver merges them, and the hits come
+        back as a local relation that reads with no further job."""
         from vectordb_data_ingestion_spark.operators.similarity import (
-            topk_by_certainty_vectorized,
+            topk_by_certainty,
         )
 
         t = certainty if certainty is not None else (self.certainty or 0.0)
-        return topk_by_certainty_vectorized(
+        return topk_by_certainty(
             self._filtered(where),
             [(0, list(vector))],
             k=k,
@@ -210,8 +213,8 @@ class VectorCollection:
         asc, threshold 0) and the BM25 top ``2k`` fused with weighted
         reciprocal rank - ``alpha`` weights the dense list, ``1 - alpha``
         the keyword list - as ``(id, rrf_micro, rank)`` for ranks
-        ``1..k``: the rows the lazy composition of
-        :func:`~vectordb_data_ingestion_spark.operators.similarity.topk_by_certainty_vectorized`,
+        ``1..k``: the rows that composing
+        :func:`~vectordb_data_ingestion_spark.operators.similarity.topk_by_certainty`,
         :func:`~vectordb_data_ingestion_spark.operators.search.bm25_topk`
         and :func:`~vectordb_data_ingestion_spark.operators.search.rrf_fuse`
         gives.
@@ -262,6 +265,7 @@ class VectorCollection:
 
         from vectordb_data_ingestion_spark.operators.similarity import (
             CertaintyTopK,
+            merge_topk,
             push_topk,
         )
 
@@ -287,10 +291,8 @@ class VectorCollection:
             rows += [(1, rid.v, s) for s, rid in keyword]
             yield pd.DataFrame(rows, columns=["leg", id_col, "score"])
 
-        legs: tuple[list, list] = ([], [])
-        for leg, i, s in scored.mapInPandas(scan, schema).collect():
-            legs[leg].append((-s, i))
-        return tuple([i for _, i in sorted(rows)[:k]] for rows in legs)
+        merged = merge_topk(scored.mapInPandas(scan, schema).collect(), k)
+        return tuple([i for g, i, _ in merged if g == leg] for leg in (0, 1))
 
     def rerank(
         self,

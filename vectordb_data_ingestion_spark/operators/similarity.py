@@ -4,9 +4,10 @@ The reference's query side is declarative config only: top-k by certainty
 with a threshold (cfg.toml:23-25,48 - ``context_top_n=3``,
 ``top_by_certainty=0.9``). Here it is a real distributed operator family:
 
-- :func:`topk_by_certainty`  - small query set vs. huge corpus: queries are
-  broadcast (cross join, no shuffle of the corpus), score JVM-side, top-k via
-  window. This is the exact Weaviate semantics the reference configures.
+- :func:`topk_by_certainty`  - small query set vs. huge corpus: the queries
+  ship to every partition, which keeps its own top-k per query from one
+  numpy matmul per Arrow batch; the driver merges those few candidates.
+  This is the exact Weaviate semantics the reference configures.
 - :func:`brute_force_topk`   - same, parameterized by plain vectors.
 - :func:`ivf_topk`           - the 100 TB path: corpus pre-assigned to the
   nearest of K centroids (one narrow pass); a query probes only its
@@ -24,7 +25,7 @@ with a threshold (cfg.toml:23-25,48 - ``context_top_n=3``,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
@@ -37,41 +38,6 @@ from vectordb_data_ingestion_spark.functions.vectors import (
     l2_norm,
     to_double_array,
 )
-
-
-def topk_by_certainty(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    threshold: float = 0.0,
-    corpus_vec: str = "embedding",
-    query_vec: str = "q_embedding",
-    query_id: str = "q_id",
-    corpus_id: str = "vec_id",
-) -> DataFrame:
-    """For each query row, the top-``k`` corpus rows by certainty
-    ``(1+cos)/2`` meeting ``threshold`` (cfg.toml:48 semantics).
-
-    Queries are broadcast; the corpus is scanned once with no shuffle before
-    the (tiny) top-k window, whose partition key is the query id - AQE
-    coalesces the window input. Ties broken by corpus id for determinism.
-    """
-    c = to_double_array(F.col(corpus_vec))
-    q = to_double_array(F.col(query_vec))
-    scored = corpus.crossJoin(broadcast(queries)).select(
-        F.col(query_id),
-        F.col(corpus_id),
-        F.round(certainty(c, q), 6).alias("certainty"),
-    )
-    scored = scored.filter(F.col("certainty") >= F.lit(threshold))
-    w = Window.partitionBy(query_id).orderBy(
-        F.desc("certainty"), F.asc(corpus_id)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
 
 
 class _RevId:
@@ -120,8 +86,7 @@ class CertaintyTopK:
     meeting ``threshold``, for each of a few ``(q_id, vector)`` queries,
     fed one Arrow batch at a time: one numpy matmul per batch, then
     :func:`push_topk` per query. The per-batch kernel of
-    :func:`topk_by_certainty_vectorized` and of the collection's hybrid
-    scan."""
+    :func:`topk_by_certainty` and of the collection's hybrid scan."""
 
     def __init__(self, query_rows: list[tuple], k: int, threshold: float):
         import numpy as np
@@ -167,7 +132,18 @@ class CertaintyTopK:
         ]
 
 
-def topk_by_certainty_vectorized(
+def merge_topk(rows, k: int) -> list[tuple]:
+    """The exact top-``k`` per key of ``(key, id, score)`` candidates,
+    ordered by key, then score desc, id asc: the driver-side merge of the
+    per-partition top-``k`` lists a :class:`CertaintyTopK` scan emits."""
+    from itertools import groupby, islice
+
+    ranked = sorted(rows, key=lambda r: (r[0], -r[2], r[1]))
+    by_key = groupby(ranked, key=lambda r: r[0])
+    return [r for _, group in by_key for r in islice(group, k)]
+
+
+def topk_by_certainty(
     corpus: DataFrame,
     query_rows: list[tuple],
     k: int = 3,
@@ -175,39 +151,26 @@ def topk_by_certainty_vectorized(
     corpus_vec: str = "embedding",
     corpus_id: str = "vec_id",
 ) -> DataFrame:
-    """SIMD scale path for :func:`topk_by_certainty`: identical semantics,
-    executed as one numpy matmul per Arrow batch instead of a per-element
-    Catalyst fold (measured ~50x on 1M x 64-d: the fold interprets an
-    expression tree per element; BLAS does the whole batch at once).
+    """For each ``(q_id, vector)`` of ``query_rows``, the top-``k`` corpus
+    rows by certainty ``(1+cos)/2`` meeting ``threshold`` (cfg.toml:48
+    semantics), ties broken by corpus id, as ``(q_id, <corpus_id>,
+    certainty)``.
 
-    ``query_rows`` is a small list of ``(q_id, vector)`` - it ships inside
-    the UDF closure (the broadcast side). Each partition emits only its
-    local top-k per query; the final exact top-k merges
-    ``partitions x k`` candidates through the same window, so the
-    shuffle input is tiny regardless of corpus size."""
+    Executes here, in one Spark job: each partition scores its Arrow
+    batches with one numpy matmul per batch (:class:`CertaintyTopK`; the
+    few query rows ship inside the closure) and emits only its local
+    top-``k`` per query. The driver collects those ``partitions x k``
+    candidates per query and merges them exactly (:func:`merge_topk`).
+    The result is a local relation in ``q_id``, certainty desc, id asc
+    order, with the id type of the corpus; reading it launches no job.
+    With no query rows nothing is scanned and the relation is empty."""
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    q_ids = [q for q, _ in query_rows]
-    # Preserve id dtypes instead of assuming bigint: the collection facade
-    # routes arbitrary (string/UUID) chunk ids through here, exactly like
-    # pq_encode_vectorized keeps the source id type.
     q_id_type = (
-        LongType() if all(isinstance(q, int) for q in q_ids) else StringType()
+        "bigint" if all(isinstance(q, int) for q, _ in query_rows) else "string"
     )
-    mid_schema = StructType(
-        [
-            StructField("q_id", q_id_type),
-            StructField(corpus_id, corpus.schema[corpus_id].dataType),
-            StructField("certainty", DoubleType()),
-        ]
-    )
+    id_type = corpus.schema[corpus_id].dataType.simpleString()
+    ddl = f"q_id {q_id_type}, `{corpus_id}` {id_type}, certainty double"
 
     def score(batches):
         topk = CertaintyTopK(query_rows, k, threshold)
@@ -216,15 +179,12 @@ def topk_by_certainty_vectorized(
                 topk.add(pdf[corpus_id].to_numpy(), pdf[corpus_vec])
         yield pd.DataFrame(topk.rows(), columns=["q_id", corpus_id, "certainty"])
 
-    candidates = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score, schema=mid_schema
+    candidates = (
+        corpus.select(corpus_id, corpus_vec).mapInPandas(score, ddl).collect()
+        if query_rows
+        else []
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("certainty"), F.asc(corpus_id))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return values_df(corpus.sparkSession, merge_topk(candidates, k), ddl)
 
 
 def brute_force_topk(

@@ -610,27 +610,23 @@ def q_topk_certainty(spark, sf_dir):
     """Top-k by certainty with threshold - the reference's query-side
     semantics (cfg.toml: context_top_n=3, top_by_certainty)."""
     (emb,) = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
-    )
-    return topk_by_certainty(spread(emb), queries, k=3, threshold=0.5)
+    return topk_by_certainty(emb, _query_rows(emb, 5), k=3, threshold=0.5)
 
 
 @register("topk_certainty_vectorized", ORACLE_SQL["topk_certainty"])
 def q_topk_certainty_vectorized(spark, sf_dir):
-    """The SIMD scale path: same semantics as topk_certainty (same oracle),
-    executed as numpy matmul over Arrow batches with per-partition top-k
-    (~7x faster at 1M x 64-d; the JVM fold interprets per element)."""
-    from vectordb_data_ingestion_spark.operators.similarity import (
-        topk_by_certainty_vectorized,
-    )
+    """Registry alias of topk_certainty (same oracle, same kernel: numpy
+    matmul per Arrow batch, per-partition top-k, driver merge)."""
+    return q_topk_certainty(spark, sf_dir)
 
-    (emb,) = _t(spark, sf_dir, "embeddings")
-    qrows = [
+
+def _query_rows(emb: DataFrame, n: int) -> list[tuple]:
+    """The first ``n`` embeddings (``vec_id < n``) as ``(q_id, vector)``
+    query rows, collected for :func:`topk_by_certainty`."""
+    return [
         (r["vec_id"], list(r["embedding"]))
-        for r in emb.filter(F.col("vec_id") < 5).collect()
+        for r in emb.filter(F.col("vec_id") < n).collect()
     ]
-    return topk_by_certainty_vectorized(emb, qrows, k=3, threshold=0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -2103,14 +2099,9 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, emb = tables["documents"], tables["embeddings"]
     chunks = build_chunk_table(docs, chunk_size=32, overlap_fraction=0.25)
     chunks = attach_embeddings(chunks, emb, broadcast_embeddings=True)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
-    )
-    corpus = chunks.select(
-        F.col("chunk_id"), F.col("vector").alias("embedding"), "n_tokens"
-    )
     return topk_by_certainty(
-        corpus, queries, k=3, threshold=0.0, corpus_id="chunk_id"
+        chunks, _query_rows(emb, 3), k=3, threshold=0.0,
+        corpus_vec="vector", corpus_id="chunk_id",
     )
 
 
@@ -2499,10 +2490,7 @@ def q_hybrid_rrf_search(spark, sf_dir):
     reciprocal-rank fusion. Both ranked lists are k rows per query, so the
     fusion join is trivially broadcastable regardless of corpus size."""
     docs, emb = _t(spark, sf_dir, "documents", "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
-    )
-    dense = topk_by_certainty(spread(emb), queries, k=10, threshold=0.0)
+    dense = topk_by_certainty(emb, _query_rows(emb, 3), k=10, threshold=0.0)
     dw = Window.partitionBy("q_id").orderBy(
         F.desc("certainty"), F.asc("vec_id")
     )
@@ -3582,10 +3570,7 @@ def q_rag_context(spark, sf_dir):
 
     (emb,) = _t(spark, sf_dir, "embeddings")
     (docs,) = _t(spark, sf_dir, "documents")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_embedding")
-    )
-    hits = topk_by_certainty(spread(emb), queries, k=5, threshold=0.0)
+    hits = topk_by_certainty(emb, _query_rows(emb, 5), k=5, threshold=0.0)
     chunks = spread(docs).select(
         F.col("doc_id").alias("chunk_id"),
         "text",

@@ -21,6 +21,20 @@ from pyspark.sql import functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Put the package's parent directory first on the Python workers'
+    path, ahead of any ``PYTHONPATH`` the caller gave them through
+    ``spark.executorEnv``. Workers unpickle the package's classes by
+    reference (e.g. the CertaintyTopK a top-k scan ships), so they must
+    import it whatever the working directory; Spark passes this
+    environment to every Python function created afterwards."""
+    env = spark.sparkContext.environment
+    paths = [_PACKAGE_PARENT, *env.get("PYTHONPATH", "").split(os.pathsep)]
+    env["PYTHONPATH"] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+
 
 def get_spark(
     app_name: str = "vectordb-ingestion-spark",
@@ -28,7 +42,8 @@ def get_spark(
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's tuned defaults."""
+    """Build (or reuse) a SparkSession with the engine's tuned defaults;
+    its Python workers can import the package from any directory."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
@@ -62,7 +77,9 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark)
+    return spark
 
 
 # THE canonical driver-table list: conftest, scale_probe, and driver_sim
@@ -172,7 +189,12 @@ def load_tables(
     Session confs are left exactly as found: the nanos flag the events
     read needs is scoped via :func:`nanos_as_long`, so a caller's own
     later parquet reads keep stock semantics (TIMESTAMP(NANOS) raises
-    unless THEY opt in)."""
+    unless THEY opt in).
+
+    The session's Python workers get the package on their path, as
+    :func:`get_spark` gives them, since a caller may build its session
+    without it."""
+    _ship_package(spark)
     out = {}
     for name in names or ALL_TABLE_NAMES:
         if name == "events":
@@ -216,13 +238,13 @@ def values_df(spark: SparkSession, rows, ddl: str):
     ``rows`` is a list of tuples; ``ddl`` a schema string like
     ``"q_id long, term string"``. Supported cell types: None, bool, int,
     float (IEEE-exact via a string cast), str, datetime, and (nested) lists
-    of these. Falls back to ``createDataFrame`` for empty input (VALUES
-    cannot be empty)."""
+    of these. VALUES cannot be empty, so empty input is one all-NULL row
+    limited away: still a local relation, with the DDL's schema."""
     from pyspark.sql.types import _parse_datatype_string
 
-    if not rows:
-        return spark.createDataFrame(rows, ddl)
     schema = _parse_datatype_string(ddl)
+    if not rows:
+        return values_df(spark, [(None,) * len(schema.fields)], ddl).limit(0)
 
     # ADVICE r10: the backslash escape scheme below is only correct while
     # spark.sql.parser.escapedStringLiterals is false (the default). If a
